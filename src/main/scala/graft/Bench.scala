@@ -5,23 +5,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the app-lifetime memos store SERIALIZED (see GraphBuilder
-      // .fromTpch); UnsafeRow is KryoSerializable, and Kryo reads a
-      // block as straight byte copies where JavaSerializer pays an
-      // ObjectInputStream state machine per row (measured: the sf10
-      // graph memo scan sat in readObject0 on all threads)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism
     // untimed JVM/session warm-up: one trivial shuffle job so the first
     // measured query doesn't absorb classloading + codegen compiler
     // startup (~4 s) — standard latency-bench hygiene; wall-clock still

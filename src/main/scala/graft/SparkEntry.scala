@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.catalog.{Analytics, GraphML, Relational, ScaleOps, Strategies, TextSim}
+import graft.catalog.{Analytics, CatalogModule, GraphML, Relational, ScaleOps, Strategies, TextSim}
+import graft.catalog.CatalogEntry.Q
+import scala.collection.immutable.SortedMap
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,6 +21,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Strategies.queries("rec_q1_diverse")(spark, "/root/testdata/sf0.001")
 
+  /** The catalog objects; every view below is derived from their
+    * `entries`. */
+  val modules: Seq[CatalogModule] =
+    Seq(Relational, Analytics, TextSim, Strategies, GraphML, ScaleOps)
+
+  // a repeated id would otherwise be silently shadowed by the map views
+  locally {
+    val ids = modules.flatMap(_.entries.map(_.id))
+    require(ids.distinct.size == ids.size, "duplicate catalog ids: " +
+      ids.diff(ids.distinct).distinct.sorted.mkString(", "))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * SortedMap, deliberately: an unordered HashMap gave Verify,
@@ -27,14 +41,10 @@ object SparkEntry {
     * a different victim set in every artifact. One deterministic
     * name-ascending order everywhere makes such bugs reproduce
     * identically across all three consumers. */
-  def queries: scala.collection.immutable.SortedMap[String, (SparkSession, String) => DataFrame] =
-    scala.collection.immutable.SortedMap.empty[String, (SparkSession, String) => DataFrame] ++
-      Relational.queries ++ Analytics.queries ++ TextSim.queries ++
-      Strategies.queries ++ GraphML.queries ++ ScaleOps.queries
+  val queries: SortedMap[String, Q] = SortedMap.from(modules.flatMap(_.queries))
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on the
     * same parquet tables. Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Analytics.oracles ++ TextSim.oracles ++
-      Strategies.oracles ++ GraphML.oracles ++ ScaleOps.oracles
+  val oracleSql: Map[String, String] =
+    modules.flatMap(_.entries).flatMap(e => e.oracle.map(e.id -> _)).toMap
 }

@@ -11,8 +11,7 @@ import graft.graph.{DegreeFeatures, GraphBuilder, GraphSql, Links}
   * functions (F), sampling (R), event/stream-shaped queries —
   * SURVEY §2.4, §2.5, §2.7, §2.8.
   */
-object Analytics {
-  type Q = (SparkSession, String) => DataFrame
+object Analytics extends CatalogModule {
 
   private def graphPrelude(body: String): String =
     s"WITH ${GraphSql.nodesCte},\n${GraphSql.edgesCte},\n$body"
@@ -1050,112 +1049,167 @@ object Analytics {
       .orderBy("user_id", "session_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "a1_label_counts" -> (a1LabelCounts(_, _)),
-    "a2_degree" -> (a2Degree(_, _)),
-    "a7_log_degree" -> (a7LogDegree(_, _)),
-    "a3_degree_moments" -> (a3DegreeMoments(_, _)),
-    "a4_degree_percentile" -> (a4DegreePercentile(_, _)),
-    "a4b_percentileofscore_mean" -> (a4bPercentileOfScore(_, _)),
-    "a5_perlabel_zscore" -> (a5PerLabelZScore(_, _)),
-    "a6_percommunity_stats" -> (a6PerCommunityStats(_, _)),
-    "a8_recency_frequency" -> (a8RecencyFrequency(_, _)),
-    "a9_preferred_category" -> (a9PreferredCategory(_, _)),
-    "a11_target_encoding" -> (a11TargetEncoding(_, _)),
-    "a12_class_distribution" -> (a12ClassDistribution(_, _)),
-    "a13_community_summary" -> (a13CommunitySummary(_, _)),
-    "a14_timestamp_diagnostics" -> (a14TimestampDiagnostics(_, _)),
-    "w2_topn_by_score" -> (w2TopNByScore(_, _)),
-    "w7_rolling_window" -> (w7RollingWindow(_, _)),
-    "e9_funnel" -> (e9Funnel(_, _)),
-    "w3_category_cap" -> (w3CategoryCap(_, _)),
-    "f1_string_normalize" -> (f1StringNormalize(_, _)),
-    "f5_multiformat_dates" -> (f5MultiFormatDates(_, _)),
-    "f7_f8_date_math" -> (f7F8DateMath(_, _)),
-    "f11_interactions" -> (f11Interactions(_, _)),
-    "f12_f14_guards" -> (f12F14Guards(_, _)),
-    "f13_softmax" -> (f13Softmax(_, _)),
-    "f15_category_codes" -> (f15CategoryCodes(_, _)),
-    "r1_seeded_sample" -> (r1SeededSample(_, _)),
-    "r3_edge_dropout" -> (r3EdgeDropout(_, _)),
-    "r4_stratified_split" -> (r4StratifiedSplit(_, _)),
-    "r5_feature_noise" -> (r5FeatureNoise(_, _)),
-    "r6_oversample" -> (r6Oversample(_, _)),
-    "r6b_smote_interp" -> (r6bSmoteInterp(_, _)),
-    "r7_weighted_pick" -> (r7WeightedPick(_, _)),
-    "r8_temperature_mix" -> (r8TemperatureMix(_, _)),
-    "r11_groupk_sample" -> (r11GroupSample(_, _)),
-    "e1_event_windows" -> (e1EventWindows(_, _)),
-    "e13_session_windows" -> (e13SessionWindows(_, _)),
-    "e2_sessionize" -> (e2Sessionize(_, _)),
-    "e3_stream_windows" -> (e3StreamWindows(_, _)),
-    "e4_stream_sessionize" -> (e4StreamSessionize(_, _)),
-    "e5_stream_dedup" -> (e5StreamDedup(_, _)),
-    "e6_stream_static_join" -> (e6StreamStaticJoin(_, _)),
-    "e8_stream_interval_join" -> (e8StreamIntervalJoin(_, _)),
-    "e14_stream_outer_join" -> (e14StreamOuterJoin(_, _)),
-    "a25_observed_audit" -> (a25ObservedAudit(_, _)),
-    "a26_constraint_audit" -> (a26ConstraintAudit(_, _)),
-    "a27_feature_correlation" -> (a27FeatureCorrelation(_, _)),
-    "w9_gapfill" -> (w9GapFill(_, _)),
-    "a15_rollup" -> (a15Rollup(_, _)),
-    "a17_pivot" -> (a17Pivot(_, _)),
-    "a19_exact_percentiles" -> (a19ExactPercentiles(_, _)),
-    "a20_cohort_retention" -> (a20CohortRetention(_, _)),
-    "f17_date_trunc" -> (f17DateTrunc(_, _)),
-    "a22_robust_stats" -> (a22RobustStats(_, _)),
-    "w8_lag_lead" -> (w8LagLead(_, _)),
-    "a18_unpivot" -> (a18Unpivot(_, _)),
-    "f16_json_extract" -> (f16JsonExtract(_, _)),
-    "a16_approx_sketches" -> (a16ApproxSketches(_, _)),
-    "a16b_sketch_bounds" -> (a16bSketchBounds(_, _)),
-    "p6_inactive_prune" -> (p6InactivePrune(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "a22_robust_stats" ->
-      """WITH med AS (
-        |  SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS median_qty
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_returnflag, min(m.median_qty) AS median_qty,
-        |  quantile_cont(abs(l.l_quantity - m.median_qty), 0.5) AS mad_qty,
-        |  count(*) AS n
-        |FROM lineitem l JOIN med m ON m.l_returnflag = l.l_returnflag
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-    "f17_date_trunc" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-        |       count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin,
-    "a20_cohort_retention" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS wk
-        |  FROM events),
-        |f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id)
-        |SELECT f.cohort, e.wk - f.cohort AS week_offset,
-        |       count(DISTINCT e.user_id) AS n_active
-        |FROM e JOIN f USING (user_id)
-        |GROUP BY f.cohort, e.wk - f.cohort
-        |ORDER BY cohort, week_offset""".stripMargin,
-    "a19_exact_percentiles" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.5) AS median_qty,
-        |  quantile_cont(l_quantity, 0.9) AS p90_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "w8_lag_lead" ->
-      """WITH o AS (
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q1_agg", q1Agg,
+      "flagship TPC-H Q1-style pricing-summary aggregate",
+      Some("""SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
+        |  round(sum(l_extendedprice),2) AS sum_base_price,
+        |  CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |    CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0)
+        |    / 100.0) AS DOUBLE) / 100.0 AS sum_disc_price,
+        |  round(avg(l_quantity),6) AS avg_qty, count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    CatalogEntry("a1_label_counts", a1LabelCounts,
+      "group-by label counts",
+      Some(graphPrelude(
+      """h AS (
+        |  SELECT 'node' AS kind, label AS name, count(*) AS cnt FROM nodes GROUP BY label
+        |  UNION ALL
+        |  SELECT 'edge', type, count(*) FROM edges GROUP BY type)
+        |SELECT kind, name, cnt FROM h ORDER BY kind, name""".stripMargin))),
+    CatalogEntry("a2_degree", a2Degree,
+      "node degree aggregation (ref degree_analysis.py)",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)
+        |SELECT id, count(*) AS degree FROM ends GROUP BY id ORDER BY id""".stripMargin))),
+    CatalogEntry("a7_log_degree", a7LogDegree,
+      "log-transformed degree feature",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
+        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
+        |SELECT id, degree, round(ln(1 + degree), 6) AS log_degree
+        |FROM deg ORDER BY id""".stripMargin))),
+    CatalogEntry("a3_degree_moments", a3DegreeMoments,
+      "degree mean/stddev/skewness moments",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
+        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
+        |SELECT round(avg(degree),6) AS mean_degree, round(stddev_pop(degree),6) AS std_degree,
+        |       count(*) AS n_nodes FROM deg""".stripMargin))),
+    CatalogEntry("a4_degree_percentile", a4DegreePercentile,
+      "percent_rank over node degrees",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
+        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
+        |SELECT id, degree, round(percent_rank() OVER (ORDER BY degree), 6) AS degree_pct
+        |FROM deg ORDER BY id""".stripMargin))),
+    CatalogEntry("a4b_percentileofscore_mean", a4bPercentileOfScore,
+      "scipy percentileofscore tie-semantics twin of a4",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
+        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id),
+        |hist AS (SELECT degree, count(*) AS n FROM deg GROUP BY degree),
+        |r AS (SELECT degree, n,
+        |        coalesce(sum(n) OVER (ORDER BY degree
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_lt
+        |      FROM hist),
+        |tot AS (SELECT sum(n) AS t FROM hist)
+        |SELECT d.id, d.degree,
+        |  round(CAST(r.cnt_lt * 2 + r.n AS DOUBLE) / CAST(2 * tot.t AS DOUBLE), 6) AS pos_mean
+        |FROM deg d JOIN r USING (degree) CROSS JOIN tot ORDER BY id""".stripMargin))),
+    CatalogEntry("a5_perlabel_zscore", a5PerLabelZScore,
+      "per-label z-score standardization",
+      Some(graphPrelude(
+      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
+        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id),
+        |j AS (SELECT d.id, n.label, d.degree FROM deg d JOIN nodes n ON d.id = n.id),
+        |s AS (SELECT *, avg(degree) OVER (PARTITION BY label) AS m,
+        |             stddev_pop(degree) OVER (PARTITION BY label) AS sd FROM j)
+        |SELECT id, label, degree,
+        |  round(CASE WHEN sd IS NULL OR sd = 0 THEN 0.0 ELSE (degree - m) / sd END, 6) AS degree_z,
+        |  round(ln(1.0 + degree), 6) AS log_degree
+        |FROM s ORDER BY id""".stripMargin))),
+    CatalogEntry("a6_percommunity_stats", a6PerCommunityStats,
+      "per-community aggregate statistics",
+      Some("""WITH purch AS (SELECT o_custkey AS c_custkey, count(*) AS degree FROM orders GROUP BY o_custkey),
+        |cust AS (SELECT c.c_custkey, c.c_nationkey, coalesce(p.degree, 0) AS degree
+        |         FROM customer c LEFT JOIN purch p USING (c_custkey)),
+        |s AS (SELECT *, avg(degree) OVER (PARTITION BY c_nationkey) AS m,
+        |             stddev_pop(degree) OVER (PARTITION BY c_nationkey) AS sd,
+        |             percent_rank() OVER (PARTITION BY c_nationkey ORDER BY degree) AS pct
+        |      FROM cust)
+        |SELECT c_custkey, c_nationkey, degree,
+        |  round(CASE WHEN sd IS NULL OR sd = 0 THEN 0.0 ELSE (degree - m) / sd END, 6) AS degree_z,
+        |  round(pct, 6) AS degree_pct
+        |FROM s ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("a8_recency_frequency", a8RecencyFrequency,
+      "recency/frequency (RFM) customer aggregates",
+      Some("""WITH acts AS (
+        |  SELECT concat('cust_', o_custkey) AS id, max(o_orderdate) AS latest, count(*) AS frequency
+        |  FROM orders WHERE o_orderdate <= TIMESTAMP '2002-01-01 00:00:00'
+        |  GROUP BY o_custkey)
+        |SELECT n.id,
+        |  coalesce(date_diff('day', CAST(latest AS DATE), DATE '2002-01-01'), 999) AS recency_days,
+        |  coalesce(frequency, 0) AS frequency
+        |FROM (SELECT concat('cust_', c_custkey) AS id FROM customer) n
+        |LEFT JOIN acts USING (id) ORDER BY id""".stripMargin)),
+    CatalogEntry("a9_preferred_category", a9PreferredCategory,
+      "per-customer preferred category by purchase mode",
+      Some("""WITH counts AS (
+        |  SELECT o_custkey AS customer, p_brand AS brand, count(*) AS cnt
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  JOIN part ON l_partkey = p_partkey
+        |  GROUP BY o_custkey, p_brand),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY customer ORDER BY cnt DESC, brand ASC) AS rn
+        |      FROM counts)
+        |SELECT customer, brand AS preferred_brand, cnt FROM r WHERE rn = 1 ORDER BY customer""".stripMargin)),
+    CatalogEntry("a11_target_encoding", a11TargetEncoding,
+      "target encoding with global-mean smoothing",
+      Some("""WITH rows_ AS (
+        |  SELECT c_mktsegment AS segment, o_orderkey % 5 AS fold,
+        |         CASE WHEN o_totalprice > 250000.0 THEN 1 ELSE 0 END AS target
+        |  FROM orders JOIN customer ON o_custkey = c_custkey),
+        |pf AS (SELECT segment, fold, count(*) AS cnt,
+        |              CAST(sum(target) AS BIGINT) AS pos
+        |       FROM rows_ GROUP BY segment, fold),
+        |s AS (SELECT *, sum(cnt) OVER (PARTITION BY segment) AS seg_cnt,
+        |             sum(pos) OVER (PARTITION BY segment) AS seg_pos,
+        |             sum(cnt) OVER () AS glob_cnt, sum(pos) OVER () AS glob_pos
+        |      FROM pf)
+        |SELECT segment, fold, cnt, pos,
+        |  round(CASE WHEN seg_cnt = cnt THEN CAST(glob_pos AS DOUBLE) / glob_cnt
+        |        ELSE CAST(seg_pos - pos AS DOUBLE) / (seg_cnt - cnt) END, 6) AS te_oof
+        |FROM s ORDER BY segment, fold""".stripMargin)),
+    CatalogEntry("a12_class_distribution", a12ClassDistribution,
+      "label class distribution audit",
+      Some("""WITH labeled AS (
+        |  SELECT CASE WHEN o_totalprice > 250000.0 THEN 1 ELSE 0 END AS label FROM orders),
+        |g AS (SELECT label, count(*) AS cnt FROM labeled GROUP BY label)
+        |SELECT label, cnt, round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (), 6) AS ratio
+        |FROM g ORDER BY label""".stripMargin)),
+    CatalogEntry("a13_community_summary", a13CommunitySummary,
+      "community size/composition summary",
+      Some("""SELECT count(DISTINCT c_nationkey) AS n_communities,
+        |  round(CAST(count(*) AS DOUBLE) / count(DISTINCT c_nationkey), 6) AS avg_community_size
+        |FROM customer""".stripMargin)),
+    CatalogEntry("a14_timestamp_diagnostics", a14TimestampDiagnostics,
+      "timestamp coverage/gap diagnostics",
+      Some("""SELECT min(l_shipdate) AS min_ts, max(l_shipdate) AS max_ts, count(*) AS n_edges,
+        |  count(DISTINCT CAST(l_shipdate AS DATE)) AS n_distinct_days
+        |FROM lineitem""".stripMargin)),
+    CatalogEntry("w2_topn_by_score", w2TopNByScore,
+      "per-group top-N by score",
+      Some("""WITH scored AS (
+        |  SELECT p_partkey, 1.0/(1.0 + exp(-(p_retailprice/1000.0 - 1.0))) AS score FROM part),
+        |r AS (SELECT *, row_number() OVER (ORDER BY score DESC, p_partkey ASC) AS rank FROM scored)
+        |SELECT rank, p_partkey, round(score, 6) AS score FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin)),
+    CatalogEntry("w7_rolling_window", w7RollingWindow,
+      "rolling window aggregate",
+      Some("""WITH o AS (
         |  SELECT o_orderkey, o_custkey,
-        |    date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS d
+        |    date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS d,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |  FROM orders)
         |SELECT o_orderkey, o_custkey,
-        |  coalesce(d - lag(d) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey), -1)
-        |    AS days_since_prev,
-        |  coalesce(lead(d) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey) - d, -1)
-        |    AS days_to_next
-        |FROM o ORDER BY o_orderkey""".stripMargin,
-    "e9_funnel" ->
-      """WITH e AS (
+        |  count(*) OVER (PARTITION BY o_custkey ORDER BY d
+        |    RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS n_90d,
+        |  CAST(sum(cents) OVER (PARTITION BY o_custkey ORDER BY d
+        |    RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS BIGINT) AS rev_cents_90d
+        |FROM o ORDER BY o_orderkey""".stripMargin)),
+    CatalogEntry("e9_funnel", e9Funnel,
+      "click-to-purchase funnel",
+      Some("""WITH e AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
         |v AS (SELECT user_id, min(t) AS vt FROM e
         |      WHERE event_type = 'view' GROUP BY user_id),
@@ -1168,55 +1222,268 @@ object Analytics {
         |SELECT (SELECT count(*) FROM v) AS n_view,
         |       (SELECT count(*) FROM c) AS n_click_after,
         |       (SELECT count(*) FROM p) AS n_purchase_after,
-        |       (SELECT CAST(sum(pt - ct) AS BIGINT) FROM p) AS sum_purchase_delay_us""".stripMargin,
-    "a17_pivot" ->
-      """SELECT n_name AS nation,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-    "a18_unpivot" ->
-      """WITH p AS (
-        |  SELECT n_name AS nation, o_orderstatus AS s, count(*) AS n
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY n_name, o_orderstatus),
-        |w AS (
-        |  SELECT nation, 'n_f' AS status,
-        |    CAST(coalesce(max(CASE WHEN s = 'F' THEN n END), 0) AS BIGINT) AS n
-        |  FROM p GROUP BY nation
-        |  UNION ALL
-        |  SELECT nation, 'n_o',
-        |    CAST(coalesce(max(CASE WHEN s = 'O' THEN n END), 0) AS BIGINT)
-        |  FROM p GROUP BY nation
-        |  UNION ALL
-        |  SELECT nation, 'n_p',
-        |    CAST(coalesce(max(CASE WHEN s = 'P' THEN n END), 0) AS BIGINT)
-        |  FROM p GROUP BY nation)
-        |SELECT nation, status, n FROM w ORDER BY nation, status""".stripMargin,
-    "f16_json_extract" ->
-      """SELECT event_type,
-        |  count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_with_k,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "w7_rolling_window" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS d,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |       (SELECT CAST(sum(pt - ct) AS BIGINT) FROM p) AS sum_purchase_delay_us""".stripMargin)),
+    CatalogEntry("w3_category_cap", w3CategoryCap,
+      "per-category cap re-rank (ref topk_recommandations_diverse_nodiscounts.py)",
+      Some("""WITH r AS (
+        |  SELECT p_brand, p_partkey, p_retailprice,
+        |         row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
+        |  FROM part)
+        |SELECT p_brand, rn, p_partkey, p_retailprice FROM r WHERE rn <= 2 ORDER BY p_brand, rn""".stripMargin)),
+    CatalogEntry("f1_string_normalize", f1StringNormalize,
+      "string normalization (trim/case/diacritics)",
+      Some("""SELECT p_partkey, lower(trim(p_name)) AS name_norm,
+        |  regexp_replace(p_name, ' ', '_', 'g') AS name_snake,
+        |  upper(trim(p_type)) AS type_key,
+        |  upper(substr(lower(p_brand),1,1)) || substr(lower(p_brand),2) AS brand_title,
+        |  concat_ws('_', 'part', p_partkey, p_brand) AS node_id
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    CatalogEntry("f5_multiformat_dates", f5MultiFormatDates,
+      "multi-format date parsing",
+      Some("""WITH t AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN strftime(o_orderdate, '%m/%d/%Y')
+        |         WHEN o_orderkey % 3 = 1 THEN strftime(o_orderdate, '%m-%d-%Y')
+        |         ELSE strftime(o_orderdate, '%Y-%m-%d') END AS date_text
         |  FROM orders)
-        |SELECT o_orderkey, o_custkey,
-        |  count(*) OVER (PARTITION BY o_custkey ORDER BY d
-        |    RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS n_90d,
-        |  CAST(sum(cents) OVER (PARTITION BY o_custkey ORDER BY d
-        |    RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS BIGINT) AS rev_cents_90d
-        |FROM o ORDER BY o_orderkey""".stripMargin,
-    "e8_stream_interval_join" ->
-      """WITH clicks AS (
+        |SELECT o_orderkey, date_text,
+        |  coalesce(try_strptime(date_text, '%m/%d/%Y'), try_strptime(date_text, '%m-%d-%Y'),
+        |           try_strptime(date_text, '%Y-%m-%d'), TIMESTAMP '2022-06-01 00:00:00') AS parsed
+        |FROM t ORDER BY o_orderkey""".stripMargin)),
+    CatalogEntry("f7_f8_date_math", f7F8DateMath,
+      "date add/diff calendar math",
+      Some {
+        val disc = {
+          val u = ColFns.pseudoUniformSql("o_orderkey * 12 + month(o_orderdate)", 11L)
+          s"""CASE WHEN month(o_orderdate) = 12 THEN round(0.30 + $u * 0.20, 2)
+             |     WHEN month(o_orderdate) IN (6,7,11) THEN round(0.15 + $u * 0.15, 2)
+             |     WHEN month(o_orderdate) IN (1,2,8) THEN round(0.05 + $u * 0.10, 2)
+             |     ELSE round($u * 0.05, 2) END""".stripMargin
+        }
+        s"""SELECT o_orderkey, month(o_orderdate) AS order_month,
+           |  CASE WHEN month(o_orderdate) = 12 THEN 'holiday_peak'
+           |       WHEN month(o_orderdate) IN (6,7,11) THEN 'high_season'
+           |       WHEN month(o_orderdate) IN (1,2,8) THEN 'low_season'
+           |       ELSE 'regular' END AS season_band,
+           |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-06-01') AS days_before_ref,
+           |  $disc AS discount
+           |FROM orders ORDER BY o_orderkey""".stripMargin
+      }),
+    CatalogEntry("f11_interactions", f11Interactions,
+      "feature interaction terms",
+      Some("""SELECT c_custkey, round(c_acctbal * c_nationkey, 6) + 0.0 AS bal_x_nation,
+        |  round(c_acctbal / (c_nationkey + 1.0), 6) AS bal_per_nation,
+        |  round(power(c_acctbal / 1000.0, 2), 6) AS bal_sq
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("f12_f14_guards", f12F14Guards,
+      "divide-by-zero / null guards matching both engines",
+      Some("""WITH g AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |    least(greatest(l_discount, 0.02), 0.08) AS discount_clipped,
+        |    CASE WHEN (l_orderkey + l_linenumber) % 7 = 0 THEN CAST('NaN' AS DOUBLE)
+        |         ELSE l_extendedprice / l_quantity END AS ratio,
+        |    coalesce(nullif(l_returnflag, 'N'), 'Unknown') AS flag_filled
+        |  FROM lineitem)
+        |SELECT l_orderkey, l_linenumber, discount_clipped,
+        |  CASE WHEN isnan(ratio) THEN 0.0 ELSE ratio END AS unit_price,
+        |  flag_filled
+        |FROM g ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    CatalogEntry("f13_softmax", f13Softmax,
+      "numerically-stable per-group softmax",
+      Some("""WITH w AS (SELECT c_custkey, c_mktsegment, exp(c_acctbal / 1000.0 / 2.5) AS wt FROM customer)
+        |SELECT c_custkey, c_mktsegment,
+        |  round(wt / sum(wt) OVER (PARTITION BY c_mktsegment), 6) AS prob
+        |FROM w ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("f15_category_codes", f15CategoryCodes,
+      "stable integer category codes",
+      Some("""WITH freq AS (SELECT p_brand, count(*) AS c FROM part GROUP BY p_brand),
+        |codes AS (
+        |  SELECT p_brand,
+        |    CAST(dense_rank() OVER (ORDER BY c DESC, p_brand ASC) - 1 AS INTEGER)
+        |      AS brand_code
+        |  FROM freq)
+        |SELECT p.p_partkey, p.p_brand, c.brand_code
+        |FROM part p JOIN codes c USING (p_brand) ORDER BY p.p_partkey""".stripMargin)),
+    CatalogEntry("r1_seeded_sample", r1SeededSample,
+      "deterministic seeded sample via pseudo-uniform hash",
+      Some(s"""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+         |WHERE ${ColFns.pseudoUniformSql("o_orderkey", 42L)} < 0.05
+         |ORDER BY o_orderkey""".stripMargin)),
+    CatalogEntry("r3_edge_dropout", r3EdgeDropout,
+      "deterministic edge dropout",
+      Some(s"""WITH e AS (SELECT o_orderkey AS key, o_orderkey % 5 + 1 AS dvid FROM orders)
+         |SELECT dvid, count(*) AS kept FROM e
+         |WHERE dvid <> 1 OR ${ColFns.pseudoUniformSql("key", 13L)} > 0.15
+         |GROUP BY dvid ORDER BY dvid""".stripMargin)),
+    CatalogEntry("r4_stratified_split", r4StratifiedSplit,
+      "stratified train/validation split",
+      Some(s"""WITH s AS (
+         |  SELECT o_orderstatus,
+         |    CASE WHEN ${ColFns.pseudoUniformSql("o_orderkey", 17L)} < 0.8 THEN 'train' ELSE 'test' END AS split
+         |  FROM orders)
+         |SELECT o_orderstatus, split, count(*) AS n FROM s
+         |GROUP BY o_orderstatus, split ORDER BY o_orderstatus, split""".stripMargin)),
+    CatalogEntry("r5_feature_noise", r5FeatureNoise,
+      "hash-derived deterministic feature noise",
+      Some(s"""SELECT c_custkey,
+         |  round(c_acctbal + (${ColFns.pseudoUniformSql("c_custkey", 19L)} - 0.5) * 0.01, 6) AS acctbal_noisy
+         |FROM customer ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("r6_oversample", r6Oversample,
+      "minority-class oversampling",
+      Some(s"""WITH labeled AS (
+         |  SELECT o_orderkey, CASE WHEN o_totalprice > 450000.0 THEN 1 ELSE 0 END AS label FROM orders),
+         |aug AS (
+         |  SELECT label FROM labeled
+         |  UNION ALL
+         |  SELECT label FROM labeled
+         |  WHERE label = 1 AND ${ColFns.pseudoUniformSql("o_orderkey", 29L)} < 0.5)
+         |SELECT label, count(*) AS n FROM aug GROUP BY label ORDER BY label""".stripMargin)),
+    CatalogEntry("r6b_smote_interp", r6bSmoteInterp,
+      "SMOTE-style neighbor interpolation twin",
+      Some {
+        val lam = ColFns.pseudoUniformSql("okey * 3 + copy_no", 59L)
+        val pick = ColFns.pseudoUniformSql("okey", 53L)
+        s"""WITH labeled AS (
+           |  SELECT o_orderkey AS okey,
+           |    CASE WHEN o_totalprice > 450000.0 THEN 1 ELSE 0 END AS label,
+           |    CAST(o_totalprice AS DOUBLE) AS f1,
+           |    CAST(EXTRACT(day FROM o_orderdate) AS DOUBLE) AS f2
+           |  FROM orders),
+           |c AS (SELECT
+           |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS npos,
+           |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS nneg
+           |  FROM labeled),
+           |o AS (SELECT okey, f1, f2,
+           |    lead(f1) OVER (PARTITION BY ((okey % 64) + 64) % 64 ORDER BY f1, okey) AS f1_nb,
+           |    lead(f2) OVER (PARTITION BY ((okey % 64) + 64) % 64 ORDER BY f1, okey) AS f2_nb
+           |  FROM labeled WHERE label = 1),
+           |s AS (SELECT o.*,
+           |    CAST(least(nneg - npos, 3 * npos) AS DOUBLE) / CAST(npos AS DOUBLE) AS frac
+           |  FROM o, c WHERE f1_nb IS NOT NULL AND nneg > 5 * npos),
+           |e AS (SELECT s.*,
+           |    unnest(range(0, CAST(ceil(frac) AS BIGINT))) AS copy_no FROM s)
+           |SELECT okey, copy_no,
+           |  round(f1 + $lam * (f1_nb - f1), 6) AS f1_synth,
+           |  round(f2 + $lam * (f2_nb - f2), 6) AS f2_synth
+           |FROM e
+           |WHERE copy_no < floor(frac)
+           |   OR (copy_no = floor(frac) AND $pick < frac - floor(frac))
+           |ORDER BY okey, copy_no""".stripMargin
+      }),
+    CatalogEntry("r7_weighted_pick", r7WeightedPick,
+      "weighted sampling (ref took_recommandations_adamsampling_discount.py)",
+      Some {
+        val u = ColFns.pseudoUniformSql("seed", 23L)
+        s"""WITH c AS (SELECT c_custkey AS ck, c_mktsegment AS segment,
+           |                  greatest(c_acctbal, 1.0) AS w FROM customer),
+           |x AS (SELECT *, sum(w) OVER (PARTITION BY segment ORDER BY ck ROWS UNBOUNDED PRECEDING) AS cumw,
+           |             sum(w) OVER (PARTITION BY segment) AS tot,
+           |             min(ck) OVER (PARTITION BY segment) AS seed
+           |      FROM c),
+           |y AS (SELECT *, row_number() OVER (PARTITION BY segment ORDER BY cumw) AS rn
+           |      FROM x WHERE cumw >= $u * tot)
+           |SELECT segment, ck AS picked FROM y WHERE rn = 1 ORDER BY segment""".stripMargin
+      }),
+    CatalogEntry("r8_temperature_mix", r8TemperatureMix,
+      "temperature-weighted corpus mixing plan",
+      Some("""WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
+        |w AS (SELECT lang, n_docs, pow(CAST(n_docs AS DOUBLE), 0.5) AS wgt FROM c),
+        |p AS (SELECT lang, n_docs, round(wgt / sum(wgt) OVER (), 6) AS p FROM w)
+        |SELECT lang, n_docs, p, CAST(round(p * 200, 0) AS BIGINT) AS n_target
+        |FROM p ORDER BY lang""".stripMargin)),
+    // the aggregate's draw order is ascending (hash, key) — exactly the
+    // window oracle's row_number order on the shared pseudo-uniform
+    CatalogEntry("r11_groupk_sample", r11GroupSample,
+      "native BottomKByHash per-group k-sample aggregate",
+      Some(s"""WITH h AS (
+         |  SELECT c_mktsegment, c_custkey,
+         |    ${ColFns.pseudoUniformSql("c_custkey", 7L)} AS u
+         |  FROM customer),
+         |r AS (
+         |  SELECT c_mktsegment, c_custkey,
+         |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY u, c_custkey) - 1 AS rank
+         |  FROM h)
+         |SELECT c_mktsegment, rank, c_custkey FROM r WHERE rank < 8
+         |ORDER BY c_mktsegment, rank""".stripMargin)),
+    CatalogEntry("e1_event_windows", e1EventWindows,
+      "hourly tumbling windows (batch formulation)",
+      Some("""SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
+        |  round(sum(value), 4) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)),
+    // native session_window re-derived as lag-gap islands: break when
+    // the gap is ≥ 30 min (Spark merges only a STRICT overlap with the
+    // previous window's end = last ts + gap); session end = last + gap
+    CatalogEntry("e13_session_windows", e13SessionWindows,
+      "native session_window aggregation",
+      Some("""WITH g AS (
+        |  SELECT user_id, ts, value,
+        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |  FROM events),
+        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
+        |      OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000 THEN 1 ELSE 0 END AS brk
+        |  FROM g),
+        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+        |        ROWS UNBOUNDED PRECEDING) AS sid FROM f)
+        |SELECT user_id, min(ts) AS session_start,
+        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
+        |  count(*) AS n_events, round(sum(value), 4) AS total_value
+        |FROM s GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""".stripMargin)),
+    CatalogEntry("e2_sessionize", e2Sessionize,
+      "gap-based sessionization via lag + running sum",
+      Some("""WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |  FROM events),
+        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
+        |                     OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS new_session
+        |      FROM g),
+        |s AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+        |      FROM f)
+        |SELECT user_id, session_id, count(*) AS n_events,
+        |  date_diff('second', min(ts), max(ts)) AS duration_sec
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin)),
+    CatalogEntry("e3_stream_windows", e3StreamWindows,
+      "streamed tumbling windows equal the batch truth",
+      Some("""SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
+        |  round(sum(value), 4) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)),
+    CatalogEntry("e4_stream_sessionize", e4StreamSessionize,
+      "streamed sessionization",
+      Some("""WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |  FROM events),
+        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
+        |                     OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS new_session
+        |      FROM g),
+        |s AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+        |      FROM f),
+        |agg AS (
+        |  SELECT user_id, session_id,
+        |    date_trunc('second', min(ts)) AS session_start,
+        |    CAST(count(*) AS INT) AS n_events,
+        |    date_diff('second', min(ts), max(ts)) AS duration_sec
+        |  FROM s GROUP BY user_id, session_id),
+        |a2 AS (SELECT *, max(session_id) OVER (PARTITION BY user_id) AS last_id FROM agg)
+        |SELECT user_id, session_start, n_events, duration_sec
+        |FROM a2 WHERE session_id < last_id
+        |ORDER BY user_id, session_start""".stripMargin)),
+    CatalogEntry("e5_stream_dedup", e5StreamDedup,
+      "streaming dropDuplicates under a watermark",
+      Some("""SELECT DISTINCT user_id, event_type FROM events
+        |ORDER BY user_id, event_type""".stripMargin)),
+    CatalogEntry("e6_stream_static_join", e6StreamStaticJoin,
+      "stream-static broadcast enrichment",
+      Some("""SELECT c_nationkey, count(*) AS n, round(sum(value), 4) AS total_value
+        |FROM events JOIN customer ON user_id = c_custkey
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
+    CatalogEntry("e8_stream_interval_join", e8StreamIntervalJoin,
+      "stream-stream interval join",
+      Some("""WITH clicks AS (
         |  SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
         |purch AS (
         |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
@@ -1225,45 +1492,45 @@ object Analytics {
         |FROM purch p JOIN clicks c ON c.user_id = p.user_id
         | AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
         | AND epoch_us(c.ts) < epoch_us(p.ts)
-        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin,
-    // the dense spine re-derived via generate_series; zero-filled hours
-    // must appear with n = 0
-    "w9_gapfill" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS h, count(*) AS n FROM events
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM hourly),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b)
-        |SELECT spine.h AS hour, coalesce(hourly.n, 0) AS n
-        |FROM spine LEFT JOIN hourly USING (h)
-        |ORDER BY hour""".stripMargin,
-    // the observed counters re-derived relationally (HUGEINT sums cast
-    // back to BIGINT so the schemas agree)
-    // same exact-integer moments, same closed-form expression — the
-    // doubles agree because the integers do
-    "a27_feature_correlation" ->
-      """WITH m AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sx,
-        |    CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS sy,
-        |    CAST(sum(CAST(l_quantity AS BIGINT) *
-        |             CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS sxy,
-        |    CAST(sum(CAST(l_quantity AS BIGINT) *
-        |             CAST(l_quantity AS BIGINT)) AS BIGINT) AS sxx,
-        |    CAST(sum(CAST(round(l_discount * 100) AS BIGINT) *
-        |             CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS syy
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, n, sxy,
-        |  CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-        |    round(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |      (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-        |       sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-        |  END AS corr_qty_disc
-        |FROM m ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin)),
+    // the outer join's batch truth: every cutoff purchase, matched or
+    // not — n_clicks counts non-null band clicks, 0 when none. The
+    // cutoff is the SAME data-derived expression the entry computes:
+    // day-truncated (max(ts) − 2 h watermark delay), so the gate holds
+    // on any dataset span, not just Jan 2024
+    CatalogEntry("e14_stream_outer_join", e14StreamOuterJoin,
+      "stream-stream outer join with a derived watermark cutoff",
+      Some("""WITH cut AS (
+        |  SELECT date_trunc('day', max(ts) - INTERVAL 2 HOUR) AS c FROM events),
+        |clicks AS (
+        |  SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
+        |purch AS (
+        |  SELECT event_id, user_id, ts FROM events
+        |  WHERE event_type = 'purchase' AND ts < (SELECT c FROM cut))
+        |SELECT p.event_id AS purchase_id, count(c.ts) AS n_clicks,
+        |       round(sum(coalesce(c.value, 0.0)), 2) AS click_value
+        |FROM purch p LEFT JOIN clicks c ON c.user_id = p.user_id
+        | AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
+        | AND epoch_us(c.ts) < epoch_us(p.ts)
+        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin)),
+    CatalogEntry("a25_observed_audit", a25ObservedAudit,
+      "Dataset.observe metric audit (isolated session; serialization-safe)",
+      Some("""WITH f AS (
+        |  SELECT CASE WHEN length(text) < 200 THEN 1 ELSE 0 END AS r_short,
+        |         CASE WHEN lang = 'zh' THEN 1 ELSE 0 END AS r_zh
+        |  FROM documents)
+        |SELECT metric, n FROM (
+        |  SELECT 'n_total' AS metric, count(*) AS n FROM f
+        |  UNION ALL SELECT 'n_short', CAST(sum(r_short) AS BIGINT) FROM f
+        |  UNION ALL SELECT 'n_zh', CAST(sum(r_zh) AS BIGINT) FROM f
+        |  UNION ALL SELECT 'n_pass',
+        |    CAST(sum(CASE WHEN r_short = 0 AND r_zh = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM f)
+        |ORDER BY metric""".stripMargin)),
     // the declared contract restated rule by rule; the acctbal rule has
     // real violations in the data, so the failing channel is gated too
-    "a26_constraint_audit" ->
-      """SELECT * FROM (
+    CatalogEntry("a26_constraint_audit", a26ConstraintAudit,
+      "declarative constraint audit: nulls, ranges, FK domains",
+      Some("""SELECT * FROM (
         |  SELECT 'orders_pk_unique' AS rule, count(*) AS checked,
         |    CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS violations
         |  FROM orders
@@ -1287,315 +1554,138 @@ object Analytics {
         |  SELECT 'customer_acctbal_nonneg', count(*),
         |    CAST(sum(CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END) AS BIGINT)
         |  FROM customer)
-        |ORDER BY rule""".stripMargin,
-    "a25_observed_audit" ->
-      """WITH f AS (
-        |  SELECT CASE WHEN length(text) < 200 THEN 1 ELSE 0 END AS r_short,
-        |         CASE WHEN lang = 'zh' THEN 1 ELSE 0 END AS r_zh
-        |  FROM documents)
-        |SELECT metric, n FROM (
-        |  SELECT 'n_total' AS metric, count(*) AS n FROM f
-        |  UNION ALL SELECT 'n_short', CAST(sum(r_short) AS BIGINT) FROM f
-        |  UNION ALL SELECT 'n_zh', CAST(sum(r_zh) AS BIGINT) FROM f
-        |  UNION ALL SELECT 'n_pass',
-        |    CAST(sum(CASE WHEN r_short = 0 AND r_zh = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM f)
-        |ORDER BY metric""".stripMargin,
-    // the outer join's batch truth: every cutoff purchase, matched or
-    // not — n_clicks counts non-null band clicks, 0 when none. The
-    // cutoff is the SAME data-derived expression the entry computes:
-    // day-truncated (max(ts) − 2 h watermark delay), so the gate holds
-    // on any dataset span, not just Jan 2024
-    "e14_stream_outer_join" ->
-      """WITH cut AS (
-        |  SELECT date_trunc('day', max(ts) - INTERVAL 2 HOUR) AS c FROM events),
-        |clicks AS (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
-        |purch AS (
-        |  SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase' AND ts < (SELECT c FROM cut))
-        |SELECT p.event_id AS purchase_id, count(c.ts) AS n_clicks,
-        |       round(sum(coalesce(c.value, 0.0)), 2) AS click_value
-        |FROM purch p LEFT JOIN clicks c ON c.user_id = p.user_id
-        | AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        | AND epoch_us(c.ts) < epoch_us(p.ts)
-        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin,
-    "e6_stream_static_join" ->
-      """SELECT c_nationkey, count(*) AS n, round(sum(value), 4) AS total_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "a15_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+        |ORDER BY rule""".stripMargin)),
+    // the observed counters re-derived relationally (HUGEINT sums cast
+    // back to BIGINT so the schemas agree)
+    // same exact-integer moments, same closed-form expression — the
+    // doubles agree because the integers do
+    CatalogEntry("a27_feature_correlation", a27FeatureCorrelation,
+      "Pearson correlation matrix with zero-variance guard",
+      Some("""WITH m AS (
+        |  SELECT l_returnflag, count(*) AS n,
+        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sx,
+        |    CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS sy,
+        |    CAST(sum(CAST(l_quantity AS BIGINT) *
+        |             CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS sxy,
+        |    CAST(sum(CAST(l_quantity AS BIGINT) *
+        |             CAST(l_quantity AS BIGINT)) AS BIGINT) AS sxx,
+        |    CAST(sum(CAST(round(l_discount * 100) AS BIGINT) *
+        |             CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS syy
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, n, sxy,
+        |  CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
+        |    round(CAST(n * sxy - sx * sy AS DOUBLE) /
+        |      (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
+        |       sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
+        |  END AS corr_qty_disc
+        |FROM m ORDER BY l_returnflag""".stripMargin)),
+    // the dense spine re-derived via generate_series; zero-filled hours
+    // must appear with n = 0
+    CatalogEntry("w9_gapfill", w9GapFill,
+      "calendar gap-fill via sequence + explode",
+      Some("""WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS h, count(*) AS n FROM events
+        |  WHERE event_type = 'purchase' GROUP BY 1),
+        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM hourly),
+        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b)
+        |SELECT spine.h AS hour, coalesce(hourly.n, 0) AS n
+        |FROM spine LEFT JOIN hourly USING (h)
+        |ORDER BY hour""".stripMargin)),
+    CatalogEntry("a15_rollup", a15Rollup,
+      "hierarchical rollup (grouping sets) in one pass",
+      Some("""SELECT coalesce(l_returnflag, 'ALL') AS flag,
         |       coalesce(l_linestatus, 'ALL') AS status,
         |       count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
-        |  round(sum(l_extendedprice),2) AS sum_base_price,
-        |  CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |    CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0)
-        |    / 100.0) AS DOUBLE) / 100.0 AS sum_disc_price,
-        |  round(avg(l_quantity),6) AS avg_qty, count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "a1_label_counts" -> graphPrelude(
-      """h AS (
-        |  SELECT 'node' AS kind, label AS name, count(*) AS cnt FROM nodes GROUP BY label
-        |  UNION ALL
-        |  SELECT 'edge', type, count(*) FROM edges GROUP BY type)
-        |SELECT kind, name, cnt FROM h ORDER BY kind, name""".stripMargin),
-    "a2_degree" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)
-        |SELECT id, count(*) AS degree FROM ends GROUP BY id ORDER BY id""".stripMargin),
-    "a7_log_degree" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
-        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
-        |SELECT id, degree, round(ln(1 + degree), 6) AS log_degree
-        |FROM deg ORDER BY id""".stripMargin),
-    "a3_degree_moments" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
-        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
-        |SELECT round(avg(degree),6) AS mean_degree, round(stddev_pop(degree),6) AS std_degree,
-        |       count(*) AS n_nodes FROM deg""".stripMargin),
-    "a4_degree_percentile" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
-        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id)
-        |SELECT id, degree, round(percent_rank() OVER (ORDER BY degree), 6) AS degree_pct
-        |FROM deg ORDER BY id""".stripMargin),
-    "a4b_percentileofscore_mean" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
-        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id),
-        |hist AS (SELECT degree, count(*) AS n FROM deg GROUP BY degree),
-        |r AS (SELECT degree, n,
-        |        coalesce(sum(n) OVER (ORDER BY degree
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_lt
-        |      FROM hist),
-        |tot AS (SELECT sum(n) AS t FROM hist)
-        |SELECT d.id, d.degree,
-        |  round(CAST(r.cnt_lt * 2 + r.n AS DOUBLE) / CAST(2 * tot.t AS DOUBLE), 6) AS pos_mean
-        |FROM deg d JOIN r USING (degree) CROSS JOIN tot ORDER BY id""".stripMargin),
-    "a5_perlabel_zscore" -> graphPrelude(
-      """ends AS (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges),
-        |deg AS (SELECT id, count(*) AS degree FROM ends GROUP BY id),
-        |j AS (SELECT d.id, n.label, d.degree FROM deg d JOIN nodes n ON d.id = n.id),
-        |s AS (SELECT *, avg(degree) OVER (PARTITION BY label) AS m,
-        |             stddev_pop(degree) OVER (PARTITION BY label) AS sd FROM j)
-        |SELECT id, label, degree,
-        |  round(CASE WHEN sd IS NULL OR sd = 0 THEN 0.0 ELSE (degree - m) / sd END, 6) AS degree_z,
-        |  round(ln(1.0 + degree), 6) AS log_degree
-        |FROM s ORDER BY id""".stripMargin),
-    "a6_percommunity_stats" ->
-      """WITH purch AS (SELECT o_custkey AS c_custkey, count(*) AS degree FROM orders GROUP BY o_custkey),
-        |cust AS (SELECT c.c_custkey, c.c_nationkey, coalesce(p.degree, 0) AS degree
-        |         FROM customer c LEFT JOIN purch p USING (c_custkey)),
-        |s AS (SELECT *, avg(degree) OVER (PARTITION BY c_nationkey) AS m,
-        |             stddev_pop(degree) OVER (PARTITION BY c_nationkey) AS sd,
-        |             percent_rank() OVER (PARTITION BY c_nationkey ORDER BY degree) AS pct
-        |      FROM cust)
-        |SELECT c_custkey, c_nationkey, degree,
-        |  round(CASE WHEN sd IS NULL OR sd = 0 THEN 0.0 ELSE (degree - m) / sd END, 6) AS degree_z,
-        |  round(pct, 6) AS degree_pct
-        |FROM s ORDER BY c_custkey""".stripMargin,
-    "a8_recency_frequency" ->
-      """WITH acts AS (
-        |  SELECT concat('cust_', o_custkey) AS id, max(o_orderdate) AS latest, count(*) AS frequency
-        |  FROM orders WHERE o_orderdate <= TIMESTAMP '2002-01-01 00:00:00'
-        |  GROUP BY o_custkey)
-        |SELECT n.id,
-        |  coalesce(date_diff('day', CAST(latest AS DATE), DATE '2002-01-01'), 999) AS recency_days,
-        |  coalesce(frequency, 0) AS frequency
-        |FROM (SELECT concat('cust_', c_custkey) AS id FROM customer) n
-        |LEFT JOIN acts USING (id) ORDER BY id""".stripMargin,
-    "a9_preferred_category" ->
-      """WITH counts AS (
-        |  SELECT o_custkey AS customer, p_brand AS brand, count(*) AS cnt
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  JOIN part ON l_partkey = p_partkey
-        |  GROUP BY o_custkey, p_brand),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY customer ORDER BY cnt DESC, brand ASC) AS rn
-        |      FROM counts)
-        |SELECT customer, brand AS preferred_brand, cnt FROM r WHERE rn = 1 ORDER BY customer""".stripMargin,
-    "a11_target_encoding" ->
-      """WITH rows_ AS (
-        |  SELECT c_mktsegment AS segment, o_orderkey % 5 AS fold,
-        |         CASE WHEN o_totalprice > 250000.0 THEN 1 ELSE 0 END AS target
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |pf AS (SELECT segment, fold, count(*) AS cnt,
-        |              CAST(sum(target) AS BIGINT) AS pos
-        |       FROM rows_ GROUP BY segment, fold),
-        |s AS (SELECT *, sum(cnt) OVER (PARTITION BY segment) AS seg_cnt,
-        |             sum(pos) OVER (PARTITION BY segment) AS seg_pos,
-        |             sum(cnt) OVER () AS glob_cnt, sum(pos) OVER () AS glob_pos
-        |      FROM pf)
-        |SELECT segment, fold, cnt, pos,
-        |  round(CASE WHEN seg_cnt = cnt THEN CAST(glob_pos AS DOUBLE) / glob_cnt
-        |        ELSE CAST(seg_pos - pos AS DOUBLE) / (seg_cnt - cnt) END, 6) AS te_oof
-        |FROM s ORDER BY segment, fold""".stripMargin,
-    "a12_class_distribution" ->
-      """WITH labeled AS (
-        |  SELECT CASE WHEN o_totalprice > 250000.0 THEN 1 ELSE 0 END AS label FROM orders),
-        |g AS (SELECT label, count(*) AS cnt FROM labeled GROUP BY label)
-        |SELECT label, cnt, round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (), 6) AS ratio
-        |FROM g ORDER BY label""".stripMargin,
-    "a13_community_summary" ->
-      """SELECT count(DISTINCT c_nationkey) AS n_communities,
-        |  round(CAST(count(*) AS DOUBLE) / count(DISTINCT c_nationkey), 6) AS avg_community_size
-        |FROM customer""".stripMargin,
-    "a14_timestamp_diagnostics" ->
-      """SELECT min(l_shipdate) AS min_ts, max(l_shipdate) AS max_ts, count(*) AS n_edges,
-        |  count(DISTINCT CAST(l_shipdate AS DATE)) AS n_distinct_days
-        |FROM lineitem""".stripMargin,
-    "w2_topn_by_score" ->
-      """WITH scored AS (
-        |  SELECT p_partkey, 1.0/(1.0 + exp(-(p_retailprice/1000.0 - 1.0))) AS score FROM part),
-        |r AS (SELECT *, row_number() OVER (ORDER BY score DESC, p_partkey ASC) AS rank FROM scored)
-        |SELECT rank, p_partkey, round(score, 6) AS score FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin,
-    "w3_category_cap" ->
-      """WITH r AS (
-        |  SELECT p_brand, p_partkey, p_retailprice,
-        |         row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
-        |  FROM part)
-        |SELECT p_brand, rn, p_partkey, p_retailprice FROM r WHERE rn <= 2 ORDER BY p_brand, rn""".stripMargin,
-    "f1_string_normalize" ->
-      """SELECT p_partkey, lower(trim(p_name)) AS name_norm,
-        |  regexp_replace(p_name, ' ', '_', 'g') AS name_snake,
-        |  upper(trim(p_type)) AS type_key,
-        |  upper(substr(lower(p_brand),1,1)) || substr(lower(p_brand),2) AS brand_title,
-        |  concat_ws('_', 'part', p_partkey, p_brand) AS node_id
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f5_multiformat_dates" ->
-      """WITH t AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN strftime(o_orderdate, '%m/%d/%Y')
-        |         WHEN o_orderkey % 3 = 1 THEN strftime(o_orderdate, '%m-%d-%Y')
-        |         ELSE strftime(o_orderdate, '%Y-%m-%d') END AS date_text
+        |ORDER BY flag, status""".stripMargin)),
+    CatalogEntry("a17_pivot", a17Pivot,
+      "pivot to wide per-category columns",
+      Some("""SELECT n_name AS nation,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY nation""".stripMargin)),
+    CatalogEntry("a19_exact_percentiles", a19ExactPercentiles,
+      "exact percentile aggregation",
+      Some("""SELECT l_returnflag,
+        |  quantile_cont(l_quantity, 0.5) AS median_qty,
+        |  quantile_cont(l_quantity, 0.9) AS p90_qty,
+        |  count(*) AS n
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    CatalogEntry("a20_cohort_retention", a20CohortRetention,
+      "cohort retention matrix",
+      Some("""WITH e AS (
+        |  SELECT DISTINCT user_id,
+        |    CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS wk
+        |  FROM events),
+        |f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id)
+        |SELECT f.cohort, e.wk - f.cohort AS week_offset,
+        |       count(DISTINCT e.user_id) AS n_active
+        |FROM e JOIN f USING (user_id)
+        |GROUP BY f.cohort, e.wk - f.cohort
+        |ORDER BY cohort, week_offset""".stripMargin)),
+    CatalogEntry("f17_date_trunc", f17DateTrunc,
+      "date_trunc calendar-bucket rollup",
+      Some("""SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
+        |       count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
+        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin)),
+    CatalogEntry("a22_robust_stats", a22RobustStats,
+      "median/MAD robust statistics",
+      Some("""WITH med AS (
+        |  SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS median_qty
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l.l_returnflag, min(m.median_qty) AS median_qty,
+        |  quantile_cont(abs(l.l_quantity - m.median_qty), 0.5) AS mad_qty,
+        |  count(*) AS n
+        |FROM lineitem l JOIN med m ON m.l_returnflag = l.l_returnflag
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin)),
+    CatalogEntry("w8_lag_lead", w8LagLead,
+      "lag/lead offset features",
+      Some("""WITH o AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS d
         |  FROM orders)
-        |SELECT o_orderkey, date_text,
-        |  coalesce(try_strptime(date_text, '%m/%d/%Y'), try_strptime(date_text, '%m-%d-%Y'),
-        |           try_strptime(date_text, '%Y-%m-%d'), TIMESTAMP '2022-06-01 00:00:00') AS parsed
-        |FROM t ORDER BY o_orderkey""".stripMargin,
-    "f7_f8_date_math" -> {
-      val disc = {
-        val u = ColFns.pseudoUniformSql("o_orderkey * 12 + month(o_orderdate)", 11L)
-        s"""CASE WHEN month(o_orderdate) = 12 THEN round(0.30 + $u * 0.20, 2)
-           |     WHEN month(o_orderdate) IN (6,7,11) THEN round(0.15 + $u * 0.15, 2)
-           |     WHEN month(o_orderdate) IN (1,2,8) THEN round(0.05 + $u * 0.10, 2)
-           |     ELSE round($u * 0.05, 2) END""".stripMargin
-      }
-      s"""SELECT o_orderkey, month(o_orderdate) AS order_month,
-         |  CASE WHEN month(o_orderdate) = 12 THEN 'holiday_peak'
-         |       WHEN month(o_orderdate) IN (6,7,11) THEN 'high_season'
-         |       WHEN month(o_orderdate) IN (1,2,8) THEN 'low_season'
-         |       ELSE 'regular' END AS season_band,
-         |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-06-01') AS days_before_ref,
-         |  $disc AS discount
-         |FROM orders ORDER BY o_orderkey""".stripMargin
-    },
-    "f11_interactions" ->
-      """SELECT c_custkey, round(c_acctbal * c_nationkey, 6) + 0.0 AS bal_x_nation,
-        |  round(c_acctbal / (c_nationkey + 1.0), 6) AS bal_per_nation,
-        |  round(power(c_acctbal / 1000.0, 2), 6) AS bal_sq
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY c_custkey""".stripMargin,
-    "f12_f14_guards" ->
-      """WITH g AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    least(greatest(l_discount, 0.02), 0.08) AS discount_clipped,
-        |    CASE WHEN (l_orderkey + l_linenumber) % 7 = 0 THEN CAST('NaN' AS DOUBLE)
-        |         ELSE l_extendedprice / l_quantity END AS ratio,
-        |    coalesce(nullif(l_returnflag, 'N'), 'Unknown') AS flag_filled
-        |  FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, discount_clipped,
-        |  CASE WHEN isnan(ratio) THEN 0.0 ELSE ratio END AS unit_price,
-        |  flag_filled
-        |FROM g ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "f13_softmax" ->
-      """WITH w AS (SELECT c_custkey, c_mktsegment, exp(c_acctbal / 1000.0 / 2.5) AS wt FROM customer)
-        |SELECT c_custkey, c_mktsegment,
-        |  round(wt / sum(wt) OVER (PARTITION BY c_mktsegment), 6) AS prob
-        |FROM w ORDER BY c_custkey""".stripMargin,
-    "f15_category_codes" ->
-      """WITH freq AS (SELECT p_brand, count(*) AS c FROM part GROUP BY p_brand),
-        |codes AS (
-        |  SELECT p_brand,
-        |    CAST(dense_rank() OVER (ORDER BY c DESC, p_brand ASC) - 1 AS INTEGER)
-        |      AS brand_code
-        |  FROM freq)
-        |SELECT p.p_partkey, p.p_brand, c.brand_code
-        |FROM part p JOIN codes c USING (p_brand) ORDER BY p.p_partkey""".stripMargin,
-    "r1_seeded_sample" ->
-      s"""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         |WHERE ${ColFns.pseudoUniformSql("o_orderkey", 42L)} < 0.05
-         |ORDER BY o_orderkey""".stripMargin,
-    "r3_edge_dropout" ->
-      s"""WITH e AS (SELECT o_orderkey AS key, o_orderkey % 5 + 1 AS dvid FROM orders)
-         |SELECT dvid, count(*) AS kept FROM e
-         |WHERE dvid <> 1 OR ${ColFns.pseudoUniformSql("key", 13L)} > 0.15
-         |GROUP BY dvid ORDER BY dvid""".stripMargin,
-    "r4_stratified_split" ->
-      s"""WITH s AS (
-         |  SELECT o_orderstatus,
-         |    CASE WHEN ${ColFns.pseudoUniformSql("o_orderkey", 17L)} < 0.8 THEN 'train' ELSE 'test' END AS split
-         |  FROM orders)
-         |SELECT o_orderstatus, split, count(*) AS n FROM s
-         |GROUP BY o_orderstatus, split ORDER BY o_orderstatus, split""".stripMargin,
-    "r5_feature_noise" ->
-      s"""SELECT c_custkey,
-         |  round(c_acctbal + (${ColFns.pseudoUniformSql("c_custkey", 19L)} - 0.5) * 0.01, 6) AS acctbal_noisy
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "r6_oversample" ->
-      s"""WITH labeled AS (
-         |  SELECT o_orderkey, CASE WHEN o_totalprice > 450000.0 THEN 1 ELSE 0 END AS label FROM orders),
-         |aug AS (
-         |  SELECT label FROM labeled
-         |  UNION ALL
-         |  SELECT label FROM labeled
-         |  WHERE label = 1 AND ${ColFns.pseudoUniformSql("o_orderkey", 29L)} < 0.5)
-         |SELECT label, count(*) AS n FROM aug GROUP BY label ORDER BY label""".stripMargin,
-    "r6b_smote_interp" -> {
-      val lam = ColFns.pseudoUniformSql("okey * 3 + copy_no", 59L)
-      val pick = ColFns.pseudoUniformSql("okey", 53L)
-      s"""WITH labeled AS (
-         |  SELECT o_orderkey AS okey,
-         |    CASE WHEN o_totalprice > 450000.0 THEN 1 ELSE 0 END AS label,
-         |    CAST(o_totalprice AS DOUBLE) AS f1,
-         |    CAST(EXTRACT(day FROM o_orderdate) AS DOUBLE) AS f2
-         |  FROM orders),
-         |c AS (SELECT
-         |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS npos,
-         |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS nneg
-         |  FROM labeled),
-         |o AS (SELECT okey, f1, f2,
-         |    lead(f1) OVER (PARTITION BY ((okey % 64) + 64) % 64 ORDER BY f1, okey) AS f1_nb,
-         |    lead(f2) OVER (PARTITION BY ((okey % 64) + 64) % 64 ORDER BY f1, okey) AS f2_nb
-         |  FROM labeled WHERE label = 1),
-         |s AS (SELECT o.*,
-         |    CAST(least(nneg - npos, 3 * npos) AS DOUBLE) / CAST(npos AS DOUBLE) AS frac
-         |  FROM o, c WHERE f1_nb IS NOT NULL AND nneg > 5 * npos),
-         |e AS (SELECT s.*,
-         |    unnest(range(0, CAST(ceil(frac) AS BIGINT))) AS copy_no FROM s)
-         |SELECT okey, copy_no,
-         |  round(f1 + $lam * (f1_nb - f1), 6) AS f1_synth,
-         |  round(f2 + $lam * (f2_nb - f2), 6) AS f2_synth
-         |FROM e
-         |WHERE copy_no < floor(frac)
-         |   OR (copy_no = floor(frac) AND $pick < frac - floor(frac))
-         |ORDER BY okey, copy_no""".stripMargin
-    },
-    "r7_weighted_pick" -> {
-      val u = ColFns.pseudoUniformSql("seed", 23L)
-      s"""WITH c AS (SELECT c_custkey AS ck, c_mktsegment AS segment,
-         |                  greatest(c_acctbal, 1.0) AS w FROM customer),
-         |x AS (SELECT *, sum(w) OVER (PARTITION BY segment ORDER BY ck ROWS UNBOUNDED PRECEDING) AS cumw,
-         |             sum(w) OVER (PARTITION BY segment) AS tot,
-         |             min(ck) OVER (PARTITION BY segment) AS seed
-         |      FROM c),
-         |y AS (SELECT *, row_number() OVER (PARTITION BY segment ORDER BY cumw) AS rn
-         |      FROM x WHERE cumw >= $u * tot)
-         |SELECT segment, ck AS picked FROM y WHERE rn = 1 ORDER BY segment""".stripMargin
-    },
-    "a16b_sketch_bounds" ->
-      """WITH s AS (
+        |SELECT o_orderkey, o_custkey,
+        |  coalesce(d - lag(d) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey), -1)
+        |    AS days_since_prev,
+        |  coalesce(lead(d) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey) - d, -1)
+        |    AS days_to_next
+        |FROM o ORDER BY o_orderkey""".stripMargin)),
+    CatalogEntry("a18_unpivot", a18Unpivot,
+      "unpivot/melt back to long form",
+      Some("""WITH p AS (
+        |  SELECT n_name AS nation, o_orderstatus AS s, count(*) AS n
+        |  FROM orders
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  GROUP BY n_name, o_orderstatus),
+        |w AS (
+        |  SELECT nation, 'n_f' AS status,
+        |    CAST(coalesce(max(CASE WHEN s = 'F' THEN n END), 0) AS BIGINT) AS n
+        |  FROM p GROUP BY nation
+        |  UNION ALL
+        |  SELECT nation, 'n_o',
+        |    CAST(coalesce(max(CASE WHEN s = 'O' THEN n END), 0) AS BIGINT)
+        |  FROM p GROUP BY nation
+        |  UNION ALL
+        |  SELECT nation, 'n_p',
+        |    CAST(coalesce(max(CASE WHEN s = 'P' THEN n END), 0) AS BIGINT)
+        |  FROM p GROUP BY nation)
+        |SELECT nation, status, n FROM w ORDER BY nation, status""".stripMargin)),
+    CatalogEntry("f16_json_extract", f16JsonExtract,
+      "JSON field extraction",
+      Some("""SELECT event_type,
+        |  count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_with_k,
+        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    CatalogEntry("a16_approx_sketches", a16ApproxSketches,
+      "HLL distinct + approx-percentile sketches (estimates; twin a16b carries the gate)", None),
+    CatalogEntry("a16b_sketch_bounds", a16bSketchBounds,
+      "sketch error bounds gated across two data scales, incl. a KMV estimator row",
+      Some("""WITH s AS (
         |  SELECT 'full' AS scale, l_partkey, l_orderkey FROM lineitem
         |  UNION ALL
         |  SELECT 'half', l_partkey, l_orderkey FROM lineitem
@@ -1605,96 +1695,14 @@ object Analytics {
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
         |  1 AS parts_within_10pct, 1 AS orders_within_10pct,
         |  1 AS p50_within_rank_band, 1 AS kmv_orders_within_bound
-        |FROM s GROUP BY scale ORDER BY scale""".stripMargin,
-    "r8_temperature_mix" ->
-      """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-        |w AS (SELECT lang, n_docs, pow(CAST(n_docs AS DOUBLE), 0.5) AS wgt FROM c),
-        |p AS (SELECT lang, n_docs, round(wgt / sum(wgt) OVER (), 6) AS p FROM w)
-        |SELECT lang, n_docs, p, CAST(round(p * 200, 0) AS BIGINT) AS n_target
-        |FROM p ORDER BY lang""".stripMargin,
-    // the aggregate's draw order is ascending (hash, key) — exactly the
-    // window oracle's row_number order on the shared pseudo-uniform
-    "r11_groupk_sample" ->
-      s"""WITH h AS (
-         |  SELECT c_mktsegment, c_custkey,
-         |    ${ColFns.pseudoUniformSql("c_custkey", 7L)} AS u
-         |  FROM customer),
-         |r AS (
-         |  SELECT c_mktsegment, c_custkey,
-         |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY u, c_custkey) - 1 AS rank
-         |  FROM h)
-         |SELECT c_mktsegment, rank, c_custkey FROM r WHERE rank < 8
-         |ORDER BY c_mktsegment, rank""".stripMargin,
-    "e1_event_windows" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
-        |  round(sum(value), 4) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "e3_stream_windows" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
-        |  round(sum(value), 4) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // native session_window re-derived as lag-gap islands: break when
-    // the gap is ≥ 30 min (Spark merges only a STRICT overlap with the
-    // previous window's end = last ts + gap); session end = last + gap
-    "e13_session_windows" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, value,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events),
-        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |      OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM g),
-        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |        ROWS UNBOUNDED PRECEDING) AS sid FROM f)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events, round(sum(value), 4) AS total_value
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "p6_inactive_prune" ->
-      """WITH last_act AS (
+        |FROM s GROUP BY scale ORDER BY scale""".stripMargin)),
+    CatalogEntry("p6_inactive_prune", p6InactivePrune,
+      "drop customers inactive for 730 days before the cutoff (ref Node2vec_algorithm_inscripton.py:57)",
+      Some("""WITH last_act AS (
         |  SELECT o_custkey, max(o_orderdate) AS latest FROM orders
         |  WHERE o_orderdate <= TIMESTAMP '1999-01-01 00:00:00'
         |  GROUP BY o_custkey)
         |SELECT o_custkey AS kept_customer, latest FROM last_act
         |WHERE date_diff('day', CAST(latest AS DATE), DATE '1999-01-01') <= 730
-        |ORDER BY kept_customer""".stripMargin,
-    "e2_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events),
-        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |                     OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS new_session
-        |      FROM g),
-        |s AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |      FROM f)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  date_diff('second', min(ts), max(ts)) AS duration_sec
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "e4_stream_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events),
-        |f AS (SELECT *, CASE WHEN prev_ts IS NULL
-        |                     OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS new_session
-        |      FROM g),
-        |s AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |      FROM f),
-        |agg AS (
-        |  SELECT user_id, session_id,
-        |    date_trunc('second', min(ts)) AS session_start,
-        |    CAST(count(*) AS INT) AS n_events,
-        |    date_diff('second', min(ts), max(ts)) AS duration_sec
-        |  FROM s GROUP BY user_id, session_id),
-        |a2 AS (SELECT *, max(session_id) OVER (PARTITION BY user_id) AS last_id FROM agg)
-        |SELECT user_id, session_start, n_events, duration_sec
-        |FROM a2 WHERE session_id < last_id
-        |ORDER BY user_id, session_start""".stripMargin,
-    "e5_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin)
+        |ORDER BY kept_customer""".stripMargin)))
 }

@@ -14,8 +14,7 @@ import graft.sim.Similarity
   * weaker check); their correctness is asserted by invariant specs in
   * src/test. g6 is fully relational and carries an oracle.
   */
-object GraphML {
-  type Q = (SparkSession, String) => DataFrame
+object GraphML extends CatalogModule {
 
   /** The similarity graph the reference runs Louvain on (KNN over
     * embeddings — knn_similarity.py:79-91). */
@@ -1007,48 +1006,6 @@ object GraphML {
       .orderBy("id", "valid_from")
   }
 
-  val queries: Map[String, Q] = Map(
-    "g2_louvain_communities" -> (g2Louvain(_, _)),
-    "g2b_modularity" -> (g2bModularity(_, _)),
-    "g3_node2vec_embeddings" -> (g3Node2Vec(_, _)),
-    "g6_dvid_versioning" -> (g6DvidVersioning(_, _)),
-    "gx_connected_components" -> (gxConnectedComponents(_, _)),
-    "gx_pagerank" -> (gxPageRank(_, _)),
-    "gx_triangles" -> (gxTriangles(_, _)),
-    "gx_label_propagation" -> (gxLabelPropagation(_, _)),
-    "gx_kcore" -> (gxKCore(_, _)),
-    "gx_shortest_paths" -> (gxShortestPaths(_, _)),
-    "m9_calibration" -> (m9Calibration(_, _)),
-    "g7_scd2_intervals" -> (g7Scd2Intervals(_, _)),
-    "g8_copurchase_projection" -> (g8CopurchaseProjection(_, _)),
-    "gx_ppr_recommend" -> (gxPprRecommend(_, _)),
-    "m0_training_corpus" -> (m0TrainingCorpus(_, _)),
-    "m1_gbt_link_metrics" -> (m1GbtMetrics(_, _)),
-    "m1b_gbt_deterministic" -> (m1bGbtDeterministic(_, _)),
-    "m2_multidate_discount" -> (m2MultiDateMetrics(_, _)),
-    "m2b_multidate_deterministic" -> (m2bMultidateDeterministic(_, _)),
-    "m4_confusion_matrix" -> (m4ConfusionMatrix(_, _)),
-    "m4b_metrics_deterministic" -> (m4bMetricsDeterministic(_, _)),
-    "m5_threshold_sweep" -> (m5ThresholdSweep(_, _)),
-    "m5b_sweep_deterministic" -> (m5bSweepDeterministic(_, _)),
-    "m7_mlp_metrics" -> (m7MlpMetrics(_, _)),
-    "m7b_mlp_deterministic" -> (m7bMlpDeterministic(_, _)),
-    "m11_feature_importance" -> (m11FeatureImportance(_, _)),
-    "m11b_importance_ranked" -> (m11bImportanceRanked(_, _)),
-    "m12_adamw_loop" -> (m12AdamwLoop(_, _)),
-    "m12b_adamw_deterministic" -> (m12bAdamwDeterministic(_, _)),
-    "m14_tower_loop" -> (m14TowerLoop(_, _)),
-    "m14b_tower_deterministic" -> (m14bTowerDeterministic(_, _)),
-    "m15_minibatch_loop" -> (m15MinibatchLoop(_, _)),
-    "m15b_minibatch_deterministic" -> (m15bMinibatchDeterministic(_, _)),
-    "m3b_incremental_policy" -> (m3bIncrementalPolicy(_, _)),
-    "m10_class_weights" -> (m10ClassWeights(_, _)),
-    "m13_minibatch_stream" -> (m13MinibatchStream(_, _)),
-    "m13b_minibatch_deterministic" -> (m13bMinibatchDeterministic(_, _)),
-    "s8_history_roundtrip" -> (s8HistoryRoundtrip(_, _)),
-    "m6_compat_probe" -> (m6CompatProbe(_, _)),
-    "m8_tower_scaling" -> (m8TowerScaling(_, _)))
-
   /** DuckDB mirror of GraphX staticPageRank(5): initial rank 1.0, five
     * unrolled `0.15 + 0.85·Σ(rank/outdeg)` passes over the raw edge
     * multiset (multi-edges each carry a message, exactly as
@@ -1325,127 +1282,57 @@ object GraphML {
        |  CAST(CASE WHEN prev.auc - neww.auc > 0.02 THEN 1 ELSE 0 END AS BIGINT) AS alert
        |FROM prev, neww""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "g2b_modularity" -> {
-      val DIM = 64
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |knn AS (
-         |  SELECT CAST(src AS VARCHAR) AS src, CAST(dst AS VARCHAR) AS dst,
-         |         CAST(round(round(cos, 6) * 1000000.0, 0) AS BIGINT) AS w
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |        FROM scored) WHERE rn <= 5),
-         |adj AS (SELECT src, dst, w FROM knn UNION ALL SELECT dst, src, w FROM knn),
-         |part AS (SELECT id, community
-         |         FROM read_parquet('/tmp/graft_artifacts/sf0.01/g2_partition/*.parquet')),
-         |ki AS (SELECT src, CAST(sum(w) AS BIGINT) AS k FROM adj GROUP BY src),
-         |bycomm AS (
-         |  SELECT p.community, count(*) AS size, CAST(sum(k.k) AS BIGINT) AS tot_w
-         |  FROM part p JOIN ki k ON k.src = p.id GROUP BY p.community),
-         |intra AS (
-         |  SELECT ps.community, CAST(sum(a.w) AS BIGINT) AS intra_w
-         |  FROM adj a JOIN part ps ON ps.id = a.src JOIN part pd ON pd.id = a.dst
-         |  WHERE ps.community = pd.community GROUP BY ps.community),
-         |g AS (SELECT b.community, b.size, b.tot_w,
-         |             CAST(coalesce(i.intra_w, 0) AS BIGINT) AS intra_w
-         |      FROM bycomm b LEFT JOIN intra i USING (community)),
-         |t AS (SELECT CAST(sum(tot_w) AS BIGINT) AS m2,
-         |             CAST(sum(intra_w) AS BIGINT) AS intra,
-         |             sum(CAST(tot_w AS HUGEINT) * tot_w) AS sumsq FROM g)
-         |SELECT g.community, g.size, g.tot_w, g.intra_w,
-         |       round((CAST(t.intra AS DOUBLE) * CAST(t.m2 AS DOUBLE)
-         |              - CAST(t.sumsq AS DOUBLE)) /
-         |             (CAST(t.m2 AS DOUBLE) * CAST(t.m2 AS DOUBLE)), 6) + 0.0 AS modularity
-         |FROM g CROSS JOIN t ORDER BY g.community""".stripMargin
-    },
-    "m0_training_corpus" -> {
-      import graft.functions.ColFns
-      val puPos = ColFns.pseudoUniformSql("customer * 131 + product", 31L)
-      val puNeg = ColFns.pseudoUniformSql("c.customer * 977 + p.product", 37L)
-      val puDisc = ColFns.pseudoUniformSql("product * 12 + 12", 11L)
-      s"""WITH pos AS (
-         |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |counts AS (
-         |  SELECT (SELECT count(*) FROM customer) AS ncust,
-         |         (SELECT count(*) FROM part) AS npart,
-         |         (SELECT count(*) FROM pos) AS posn),
-         |params AS (
-         |  SELECT
-         |    least(CAST(1.0 AS DOUBLE),
-         |      CAST(20000 AS DOUBLE) / greatest(posn, 1)) AS posfrac,
-         |    least(posn, 20000) AS negtarget,
-         |    CASE WHEN (ncust // 3) * (npart // 7) >= least(posn, 20000) * 4
-         |         THEN 1 ELSE 0 END AS thin
-         |  FROM counts),
-         |csel AS (
-         |  SELECT c_custkey AS customer FROM customer
-         |  WHERE (SELECT thin FROM params) = 1 AND c_custkey % 3 = 0
-         |  UNION ALL
-         |  SELECT c_custkey FROM customer WHERE (SELECT thin FROM params) = 0),
-         |psel AS (
-         |  SELECT p_partkey AS product FROM part
-         |  WHERE (SELECT thin FROM params) = 1 AND p_partkey % 7 = 0
-         |  UNION ALL
-         |  SELECT p_partkey FROM part WHERE (SELECT thin FROM params) = 0),
-         |negfrac AS (
-         |  SELECT least(CAST(1.0 AS DOUBLE),
-         |    CAST((SELECT negtarget FROM params) AS DOUBLE) /
-         |    greatest((SELECT count(*) FROM csel) * (SELECT count(*) FROM psel), 1)) AS f),
-         |poscap AS (
-         |  SELECT customer, product, CAST(1.0 AS DOUBLE) AS label FROM pos
-         |  WHERE $puPos < (SELECT posfrac FROM params)),
-         |neg AS (
-         |  SELECT c.customer, p.product, CAST(0.0 AS DOUBLE) AS label
-         |  FROM csel c CROSS JOIN psel p
-         |  WHERE $puNeg < (SELECT f FROM negfrac)
-         |    AND NOT EXISTS (SELECT 1 FROM pos
-         |                    WHERE pos.customer = c.customer AND pos.product = p.product)),
-         |pairs AS (SELECT * FROM poscap UNION ALL SELECT * FROM neg),
-         |custf AS (
-         |  SELECT o.o_custkey AS customer,
-         |    CAST(count(*) AS DOUBLE) AS cust_frequency,
-         |    CAST(date_diff('day', CAST(max(o.o_orderdate) AS DATE),
-         |      DATE '2002-01-01') AS DOUBLE) AS cust_recency
-         |  FROM orders o GROUP BY o.o_custkey),
-         |custf2 AS (
-         |  SELECT f.customer, f.cust_frequency, f.cust_recency, c.c_acctbal AS acctbal
-         |  FROM custf f JOIN customer c ON c.c_custkey = f.customer),
-         |partf AS (
-         |  SELECT l_partkey AS product, CAST(count(*) AS DOUBLE) AS part_popularity
-         |  FROM lineitem GROUP BY l_partkey),
-         |partf2 AS (
-         |  SELECT pf.product, pf.part_popularity, p.p_retailprice AS price
-         |  FROM partf pf JOIN part p ON p.p_partkey = pf.product),
-         |j AS (
-         |  SELECT pr.customer, pr.product, pr.label,
-         |    coalesce(cf.cust_frequency, 0.0) AS cust_frequency,
-         |    coalesce(cf.cust_recency, 999.0) AS cust_recency,
-         |    coalesce(cf.acctbal, 0.0) AS acctbal,
-         |    coalesce(pf.part_popularity, 0.0) AS part_popularity,
-         |    coalesce(pf.price, 0.0) AS price
-         |  FROM pairs pr
-         |  LEFT JOIN custf2 cf ON cf.customer = pr.customer
-         |  LEFT JOIN partf2 pf ON pf.product = pr.product)
-         |SELECT customer, product, label, cust_frequency, cust_recency, acctbal,
-         |  part_popularity, price,
-         |  round(0.30 + $puDisc * 0.20, 2) AS discount,
-         |  acctbal * price / 1000000.0 AS bal_x_price
-         |FROM j ORDER BY customer, product""".stripMargin
-    },
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("g2_louvain_communities", g2Louvain,
+      "Louvain community sizes (ref Louvain_community_algorithm.py; twin g2b carries the gate)", None),
+    CatalogEntry("g2b_modularity", g2bModularity,
+      "modularity gate over the shared Louvain partition",
+      Some {
+        val DIM = 64
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |knn AS (
+           |  SELECT CAST(src AS VARCHAR) AS src, CAST(dst AS VARCHAR) AS dst,
+           |         CAST(round(round(cos, 6) * 1000000.0, 0) AS BIGINT) AS w
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |        FROM scored) WHERE rn <= 5),
+           |adj AS (SELECT src, dst, w FROM knn UNION ALL SELECT dst, src, w FROM knn),
+           |part AS (SELECT id, community
+           |         FROM read_parquet('/tmp/graft_artifacts/sf0.01/g2_partition/*.parquet')),
+           |ki AS (SELECT src, CAST(sum(w) AS BIGINT) AS k FROM adj GROUP BY src),
+           |bycomm AS (
+           |  SELECT p.community, count(*) AS size, CAST(sum(k.k) AS BIGINT) AS tot_w
+           |  FROM part p JOIN ki k ON k.src = p.id GROUP BY p.community),
+           |intra AS (
+           |  SELECT ps.community, CAST(sum(a.w) AS BIGINT) AS intra_w
+           |  FROM adj a JOIN part ps ON ps.id = a.src JOIN part pd ON pd.id = a.dst
+           |  WHERE ps.community = pd.community GROUP BY ps.community),
+           |g AS (SELECT b.community, b.size, b.tot_w,
+           |             CAST(coalesce(i.intra_w, 0) AS BIGINT) AS intra_w
+           |      FROM bycomm b LEFT JOIN intra i USING (community)),
+           |t AS (SELECT CAST(sum(tot_w) AS BIGINT) AS m2,
+           |             CAST(sum(intra_w) AS BIGINT) AS intra,
+           |             sum(CAST(tot_w AS HUGEINT) * tot_w) AS sumsq FROM g)
+           |SELECT g.community, g.size, g.tot_w, g.intra_w,
+           |       round((CAST(t.intra AS DOUBLE) * CAST(t.m2 AS DOUBLE)
+           |              - CAST(t.sumsq AS DOUBLE)) /
+           |             (CAST(t.m2 AS DOUBLE) * CAST(t.m2 AS DOUBLE)), 6) + 0.0 AS modularity
+           |FROM g CROSS JOIN t ORDER BY g.community""".stripMargin
+      }),
     // g3's (id, dim) surface is fully determined by the walk graph:
     // every adjacency node starts numWalks walks, and minCount=0 keeps
     // every walked word in the Word2Vec vocabulary — so the id set is
     // exactly the distinct endpoints of the bipartite slice and dim is
     // the configured vector size. (The vector VALUES are model-coupled;
     // their invariants live in GraphAlgoSpec.)
-    "g3_node2vec_embeddings" ->
-      """WITH pp AS (
+    CatalogEntry("g3_node2vec_embeddings", g3Node2Vec,
+      "deterministic node2vec walks + embeddings (ref Node2vec_algorithm_inscripton.py)",
+      Some("""WITH pp AS (
         |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |  WHERE o_custkey % 10 = 1),
@@ -1453,129 +1340,136 @@ object GraphML {
         |  SELECT 'cust_' || customer AS id FROM (SELECT DISTINCT customer FROM pp)
         |  UNION ALL
         |  SELECT 'part_' || product FROM (SELECT DISTINCT product FROM pp))
-        |SELECT id, CAST(16 AS INTEGER) AS dim FROM n ORDER BY id""".stripMargin,
-    "s8_history_roundtrip" ->
-      """WITH m AS (
-        |  SELECT 'total_' || o_orderstatus AS metric, round(sum(o_totalprice), 2) AS v
-        |  FROM orders GROUP BY o_orderstatus)
-        |SELECT CAST(0 AS BIGINT) AS epoch, metric, v AS value FROM m
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), metric, v + 1.0 FROM m
-        |ORDER BY epoch, metric""".stripMargin,
-    "m6_compat_probe" -> m6Sql,
-    "m8_tower_scaling" ->
-      """WITH degt AS (
-        |  SELECT o_custkey AS ck, CAST(count(*) AS DOUBLE) AS n_orders
-        |  FROM orders GROUP BY o_custkey),
-        |linet AS (
-        |  SELECT o_custkey AS ck, CAST(count(*) AS DOUBLE) AS n_lines,
-        |         sum(l_quantity) AS total_qty
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey GROUP BY o_custkey),
-        |f AS (SELECT d.ck, d.n_orders, l.n_lines, l.total_qty
-        |      FROM degt d JOIN linet l USING (ck)),
-        |s AS (SELECT *,
-        |  avg(n_orders) OVER () AS m1, stddev_samp(n_orders) OVER () AS s1,
-        |  avg(n_lines) OVER () AS m2, stddev_samp(n_lines) OVER () AS s2,
-        |  avg(total_qty) OVER () AS m3, stddev_samp(total_qty) OVER () AS s3
-        |  FROM f)
-        |SELECT ck AS c_custkey,
-        |  round((n_orders - m1) / s1, 4) + 0.0 AS z_orders,
-        |  round((n_lines - m2) / s2, 4) + 0.0 AS z_lines,
-        |  round((total_qty - m3) / s3, 4) + 0.0 AS z_qty
-        |FROM s ORDER BY c_custkey""".stripMargin,
-    "gx_pagerank" -> pageRankSql(iters = 5, k = 100),
-    "gx_triangles" -> {
-      val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |topk AS (SELECT src, dst FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |  FROM scored) WHERE rn <= 5),
-         |und AS MATERIALIZED (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM topk WHERE src <> dst),
-         |tri AS (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM und e1
-         |  JOIN und e2 ON e2.a = e1.b
-         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pv AS (SELECT x AS v FROM tri
-         |       UNION ALL SELECT y FROM tri
-         |       UNION ALL SELECT z FROM tri),
-         |cnt AS (SELECT v, count(*) AS t FROM pv GROUP BY v),
-         |verts AS (SELECT DISTINCT a AS v FROM und UNION SELECT b FROM und)
-         |SELECT v AS vec_id, coalesce(t, 0) AS triangles
-         |FROM verts LEFT JOIN cnt USING (v) ORDER BY vec_id""".stripMargin
-    },
-    "gx_label_propagation" -> {
-      val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
-      val steps = (1 to 4).map { i =>
-        s"""l$i AS MATERIALIZED (
-           |  SELECT id, lbl FROM (
-           |    SELECT u.dst AS id, q.lbl,
-           |      row_number() OVER (PARTITION BY u.dst
-           |        ORDER BY count(*) DESC, q.lbl ASC) AS rn
-           |    FROM und u JOIN l${i - 1} q ON q.id = u.src
-           |    GROUP BY u.dst, q.lbl) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |topk AS (SELECT src, dst FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |  FROM scored) WHERE rn <= 5),
-         |und AS MATERIALIZED (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT src, dst FROM topk UNION ALL SELECT dst, src FROM topk)),
-         |verts AS (SELECT DISTINCT src AS id FROM und),
-         |l0 AS MATERIALIZED (SELECT id, id AS lbl FROM verts),
-         |$steps
-         |SELECT id AS vec_id, lbl AS label FROM l4 ORDER BY vec_id""".stripMargin
-    },
-    "gx_kcore" -> {
-      val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
-      val steps = (1 to 2).map { i =>
-        s"""u$i AS MATERIALIZED (
-           |  SELECT e.src, e.dst FROM u${i - 1} e
-           |  JOIN (SELECT src AS id FROM u${i - 1} GROUP BY src HAVING count(*) >= 6) ka
-           |    ON ka.id = e.src
-           |  JOIN (SELECT src AS id FROM u${i - 1} GROUP BY src HAVING count(*) >= 6) kb
-           |    ON kb.id = e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |topk AS (SELECT src, dst FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |  FROM scored) WHERE rn <= 5),
-         |u0 AS MATERIALIZED (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT src, dst FROM topk UNION ALL SELECT dst, src FROM topk)),
-         |$steps
-         |SELECT src AS vec_id, count(*) AS core_degree
-         |FROM u2 GROUP BY src ORDER BY vec_id""".stripMargin
-    },
-    "m9_calibration" ->
-      s"""WITH $detScoredCte,
+        |SELECT id, CAST(16 AS INTEGER) AS dim FROM n ORDER BY id""".stripMargin)),
+    CatalogEntry("g6_dvid_versioning", g6DvidVersioning,
+      "graph mutation with dvid versioning",
+      Some(s"""WITH ${GraphSql.nodesCte},
+         |${GraphSql.edgesCte},
+         |h AS (
+         |  SELECT 'node' AS kind, dvid, count(*) AS cnt FROM nodes GROUP BY dvid
+         |  UNION ALL
+         |  SELECT 'edge', dvid, count(*) FROM edges GROUP BY dvid)
+         |SELECT kind, dvid, cnt FROM h ORDER BY kind, dvid""".stripMargin)),
+    CatalogEntry("gx_connected_components", gxConnectedComponents,
+      "connected components, hybrid dense-kernel/GraphX",
+      Some(ccSql(rounds = 24))),
+    CatalogEntry("gx_pagerank", gxPageRank,
+      "PageRank, hybrid dense-kernel/GraphX",
+      Some(pageRankSql(iters = 5, k = 100))),
+    CatalogEntry("gx_triangles", gxTriangles,
+      "per-vertex triangle counts, hybrid dense-kernel/GraphX",
+      Some {
+        val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |topk AS (SELECT src, dst FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |  FROM scored) WHERE rn <= 5),
+           |und AS MATERIALIZED (
+           |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+           |  FROM topk WHERE src <> dst),
+           |tri AS (
+           |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+           |  FROM und e1
+           |  JOIN und e2 ON e2.a = e1.b
+           |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+           |pv AS (SELECT x AS v FROM tri
+           |       UNION ALL SELECT y FROM tri
+           |       UNION ALL SELECT z FROM tri),
+           |cnt AS (SELECT v, count(*) AS t FROM pv GROUP BY v),
+           |verts AS (SELECT DISTINCT a AS v FROM und UNION SELECT b FROM und)
+           |SELECT v AS vec_id, coalesce(t, 0) AS triangles
+           |FROM verts LEFT JOIN cnt USING (v) ORDER BY vec_id""".stripMargin
+      }),
+    CatalogEntry("gx_label_propagation", gxLabelPropagation,
+      "deterministic synchronous label propagation",
+      Some {
+        val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
+        val steps = (1 to 4).map { i =>
+          s"""l$i AS MATERIALIZED (
+             |  SELECT id, lbl FROM (
+             |    SELECT u.dst AS id, q.lbl,
+             |      row_number() OVER (PARTITION BY u.dst
+             |        ORDER BY count(*) DESC, q.lbl ASC) AS rn
+             |    FROM und u JOIN l${i - 1} q ON q.id = u.src
+             |    GROUP BY u.dst, q.lbl) WHERE rn = 1)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |topk AS (SELECT src, dst FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |  FROM scored) WHERE rn <= 5),
+           |und AS MATERIALIZED (
+           |  SELECT DISTINCT src, dst FROM (
+           |    SELECT src, dst FROM topk UNION ALL SELECT dst, src FROM topk)),
+           |verts AS (SELECT DISTINCT src AS id FROM und),
+           |l0 AS MATERIALIZED (SELECT id, id AS lbl FROM verts),
+           |$steps
+           |SELECT id AS vec_id, lbl AS label FROM l4 ORDER BY vec_id""".stripMargin
+      }),
+    CatalogEntry("gx_kcore", gxKCore,
+      "k-core peeling, fixed synchronous rounds",
+      Some {
+        val dotAB = graft.sim.Similarity.dotSql("a.embedding", "b.embedding", 64)
+        val steps = (1 to 2).map { i =>
+          s"""u$i AS MATERIALIZED (
+             |  SELECT e.src, e.dst FROM u${i - 1} e
+             |  JOIN (SELECT src AS id FROM u${i - 1} GROUP BY src HAVING count(*) >= 6) ka
+             |    ON ka.id = e.src
+             |  JOIN (SELECT src AS id FROM u${i - 1} GROUP BY src HAVING count(*) >= 6) kb
+             |    ON kb.id = e.dst)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${graft.sim.Similarity.dotSql("embedding", "embedding", 64)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |topk AS (SELECT src, dst FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |  FROM scored) WHERE rn <= 5),
+           |u0 AS MATERIALIZED (
+           |  SELECT DISTINCT src, dst FROM (
+           |    SELECT src, dst FROM topk UNION ALL SELECT dst, src FROM topk)),
+           |$steps
+           |SELECT src AS vec_id, count(*) AS core_degree
+           |FROM u2 GROUP BY src ORDER BY vec_id""".stripMargin
+      }),
+    CatalogEntry("gx_shortest_paths", gxShortestPaths,
+      "landmark BFS shortest paths",
+      Some(shortestPathsSql(rounds = 8))),
+    CatalogEntry("m9_calibration", m9Calibration,
+      "probability calibration bins",
+      Some(s"""WITH $detScoredCte,
          |b AS (SELECT label,
          |        least(CAST(9 AS BIGINT), CAST(floor(p / 60000.0) AS BIGINT)) AS bucket
          |      FROM scored)
          |SELECT bucket, count(*) AS n,
          |  CAST(sum(CAST(label AS BIGINT)) AS BIGINT) AS n_pos,
          |  CAST(sum(CAST(label AS BIGINT)) AS DOUBLE) / count(*) AS pos_rate
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "g8_copurchase_projection" ->
-      """WITH pp AS (
+         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    CatalogEntry("g7_scd2_intervals", g7Scd2Intervals,
+      "SCD2 validity intervals from the change history",
+      Some("""WITH inj AS (
+        |  SELECT o_orderkey AS id, o_orderstatus AS status, o_totalprice AS price, 1 AS dvid
+        |  FROM orders WHERE o_orderkey % 5 IN (0,1)
+        |  UNION ALL
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice * 1.1, 2
+        |  FROM orders WHERE o_orderkey % 5 IN (1,2))
+        |SELECT id, status, price, dvid AS valid_from,
+        |  coalesce(lead(dvid) OVER (PARTITION BY id ORDER BY dvid) - 1, 9999) AS valid_to
+        |FROM inj ORDER BY id, valid_from""".stripMargin)),
+    CatalogEntry("g8_copurchase_projection", g8CopurchaseProjection,
+      "bipartite-to-co-purchase graph projection",
+      Some("""WITH pp AS (
         |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |small AS (
@@ -1586,68 +1480,208 @@ object GraphML {
         |FROM p a JOIN p b ON a.product = b.product AND a.customer < b.customer
         |GROUP BY a.customer, b.customer
         |HAVING count(*) >= 3
-        |ORDER BY cust_a, cust_b""".stripMargin,
-    "gx_ppr_recommend" -> {
-      val steps = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT v.id,
-           |    (CASE WHEN v.id = (SELECT seed_id FROM seed) THEN 0.15 ELSE 0.0 END)
-           |      + 0.85 * coalesce(m.s, 0.0) AS rank
-           |  FROM verts v LEFT JOIN (
-           |    SELECT e.dst AS id, sum(p.rank / d.od) AS s
-           |    FROM edges e JOIN pr${i - 1} p ON p.id = e.src
-           |    JOIN deg d ON d.id = e.src
-           |    GROUP BY e.dst) m ON m.id = v.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pp AS (
-         |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT concat('c', customer) AS src, concat('p', product) AS dst FROM pp
-         |  UNION ALL
-         |  SELECT concat('p', product), concat('c', customer) FROM pp),
-         |verts AS (SELECT DISTINCT src AS id FROM edges),
-         |deg AS (SELECT src AS id, count(*) AS od FROM edges GROUP BY src),
-         |seed AS (
-         |  SELECT concat('c', customer) AS seed_id FROM pp GROUP BY customer
-         |  ORDER BY count(DISTINCT product) DESC, concat('c', customer) ASC
-         |  LIMIT 1),
-         |pr0 AS (
-         |  SELECT id, CASE WHEN id = (SELECT seed_id FROM seed)
-         |    THEN CAST(1.0 AS DOUBLE) ELSE 0.0 END AS rank FROM verts),
-         |$steps,
-         |purch AS (
-         |  SELECT concat('p', product) AS id FROM pp
-         |  WHERE concat('c', customer) = (SELECT seed_id FROM seed)),
-         |fin AS (
-         |  SELECT CAST(substr(id, 2) AS BIGINT) AS product,
-         |    round(rank, 6) AS rank
-         |  FROM pr5
-         |  WHERE id LIKE 'p%' AND id NOT IN (SELECT id FROM purch))
-         |SELECT product, rank FROM fin
-         |ORDER BY rank DESC, product ASC LIMIT 20""".stripMargin
-    },
-    "g7_scd2_intervals" ->
-      """WITH inj AS (
-        |  SELECT o_orderkey AS id, o_orderstatus AS status, o_totalprice AS price, 1 AS dvid
-        |  FROM orders WHERE o_orderkey % 5 IN (0,1)
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice * 1.1, 2
-        |  FROM orders WHERE o_orderkey % 5 IN (1,2))
-        |SELECT id, status, price, dvid AS valid_from,
-        |  coalesce(lead(dvid) OVER (PARTITION BY id ORDER BY dvid) - 1, 9999) AS valid_to
-        |FROM inj ORDER BY id, valid_from""".stripMargin,
-    "gx_connected_components" -> ccSql(rounds = 24),
-    "gx_shortest_paths" -> shortestPathsSql(rounds = 8),
-    "m4b_metrics_deterministic" -> m4bSql,
-    "m5b_sweep_deterministic" -> m5bSql,
-    "m1b_gbt_deterministic" -> m1bSql,
-    "m11b_importance_ranked" ->
-      s"""SELECT CAST(row_number() OVER (ORDER BY importance DESC, feature ASC) AS INT) AS rank,
+        |ORDER BY cust_a, cust_b""".stripMargin)),
+    CatalogEntry("gx_ppr_recommend", gxPprRecommend,
+      "personalized-PageRank recommendations",
+      Some {
+        val steps = (1 to 5).map { i =>
+          s"""pr$i AS (
+             |  SELECT v.id,
+             |    (CASE WHEN v.id = (SELECT seed_id FROM seed) THEN 0.15 ELSE 0.0 END)
+             |      + 0.85 * coalesce(m.s, 0.0) AS rank
+             |  FROM verts v LEFT JOIN (
+             |    SELECT e.dst AS id, sum(p.rank / d.od) AS s
+             |    FROM edges e JOIN pr${i - 1} p ON p.id = e.src
+             |    JOIN deg d ON d.id = e.src
+             |    GROUP BY e.dst) m ON m.id = v.id)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH pp AS (
+           |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
+           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+           |edges AS (
+           |  SELECT concat('c', customer) AS src, concat('p', product) AS dst FROM pp
+           |  UNION ALL
+           |  SELECT concat('p', product), concat('c', customer) FROM pp),
+           |verts AS (SELECT DISTINCT src AS id FROM edges),
+           |deg AS (SELECT src AS id, count(*) AS od FROM edges GROUP BY src),
+           |seed AS (
+           |  SELECT concat('c', customer) AS seed_id FROM pp GROUP BY customer
+           |  ORDER BY count(DISTINCT product) DESC, concat('c', customer) ASC
+           |  LIMIT 1),
+           |pr0 AS (
+           |  SELECT id, CASE WHEN id = (SELECT seed_id FROM seed)
+           |    THEN CAST(1.0 AS DOUBLE) ELSE 0.0 END AS rank FROM verts),
+           |$steps,
+           |purch AS (
+           |  SELECT concat('p', product) AS id FROM pp
+           |  WHERE concat('c', customer) = (SELECT seed_id FROM seed)),
+           |fin AS (
+           |  SELECT CAST(substr(id, 2) AS BIGINT) AS product,
+           |    round(rank, 6) AS rank
+           |  FROM pr5
+           |  WHERE id LIKE 'p%' AND id NOT IN (SELECT id FROM purch))
+           |SELECT product, rank FROM fin
+           |ORDER BY rank DESC, product ASC LIMIT 20""".stripMargin
+      }),
+    CatalogEntry("m0_training_corpus", m0TrainingCorpus,
+      "shared pair+feature training corpus builder",
+      Some {
+        import graft.functions.ColFns
+        val puPos = ColFns.pseudoUniformSql("customer * 131 + product", 31L)
+        val puNeg = ColFns.pseudoUniformSql("c.customer * 977 + p.product", 37L)
+        val puDisc = ColFns.pseudoUniformSql("product * 12 + 12", 11L)
+        s"""WITH pos AS (
+           |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
+           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+           |counts AS (
+           |  SELECT (SELECT count(*) FROM customer) AS ncust,
+           |         (SELECT count(*) FROM part) AS npart,
+           |         (SELECT count(*) FROM pos) AS posn),
+           |params AS (
+           |  SELECT
+           |    least(CAST(1.0 AS DOUBLE),
+           |      CAST(20000 AS DOUBLE) / greatest(posn, 1)) AS posfrac,
+           |    least(posn, 20000) AS negtarget,
+           |    CASE WHEN (ncust // 3) * (npart // 7) >= least(posn, 20000) * 4
+           |         THEN 1 ELSE 0 END AS thin
+           |  FROM counts),
+           |csel AS (
+           |  SELECT c_custkey AS customer FROM customer
+           |  WHERE (SELECT thin FROM params) = 1 AND c_custkey % 3 = 0
+           |  UNION ALL
+           |  SELECT c_custkey FROM customer WHERE (SELECT thin FROM params) = 0),
+           |psel AS (
+           |  SELECT p_partkey AS product FROM part
+           |  WHERE (SELECT thin FROM params) = 1 AND p_partkey % 7 = 0
+           |  UNION ALL
+           |  SELECT p_partkey FROM part WHERE (SELECT thin FROM params) = 0),
+           |negfrac AS (
+           |  SELECT least(CAST(1.0 AS DOUBLE),
+           |    CAST((SELECT negtarget FROM params) AS DOUBLE) /
+           |    greatest((SELECT count(*) FROM csel) * (SELECT count(*) FROM psel), 1)) AS f),
+           |poscap AS (
+           |  SELECT customer, product, CAST(1.0 AS DOUBLE) AS label FROM pos
+           |  WHERE $puPos < (SELECT posfrac FROM params)),
+           |neg AS (
+           |  SELECT c.customer, p.product, CAST(0.0 AS DOUBLE) AS label
+           |  FROM csel c CROSS JOIN psel p
+           |  WHERE $puNeg < (SELECT f FROM negfrac)
+           |    AND NOT EXISTS (SELECT 1 FROM pos
+           |                    WHERE pos.customer = c.customer AND pos.product = p.product)),
+           |pairs AS (SELECT * FROM poscap UNION ALL SELECT * FROM neg),
+           |custf AS (
+           |  SELECT o.o_custkey AS customer,
+           |    CAST(count(*) AS DOUBLE) AS cust_frequency,
+           |    CAST(date_diff('day', CAST(max(o.o_orderdate) AS DATE),
+           |      DATE '2002-01-01') AS DOUBLE) AS cust_recency
+           |  FROM orders o GROUP BY o.o_custkey),
+           |custf2 AS (
+           |  SELECT f.customer, f.cust_frequency, f.cust_recency, c.c_acctbal AS acctbal
+           |  FROM custf f JOIN customer c ON c.c_custkey = f.customer),
+           |partf AS (
+           |  SELECT l_partkey AS product, CAST(count(*) AS DOUBLE) AS part_popularity
+           |  FROM lineitem GROUP BY l_partkey),
+           |partf2 AS (
+           |  SELECT pf.product, pf.part_popularity, p.p_retailprice AS price
+           |  FROM partf pf JOIN part p ON p.p_partkey = pf.product),
+           |j AS (
+           |  SELECT pr.customer, pr.product, pr.label,
+           |    coalesce(cf.cust_frequency, 0.0) AS cust_frequency,
+           |    coalesce(cf.cust_recency, 999.0) AS cust_recency,
+           |    coalesce(cf.acctbal, 0.0) AS acctbal,
+           |    coalesce(pf.part_popularity, 0.0) AS part_popularity,
+           |    coalesce(pf.price, 0.0) AS price
+           |  FROM pairs pr
+           |  LEFT JOIN custf2 cf ON cf.customer = pr.customer
+           |  LEFT JOIN partf2 pf ON pf.product = pr.product)
+           |SELECT customer, product, label, cust_frequency, cust_recency, acctbal,
+           |  part_popularity, price,
+           |  round(0.30 + $puDisc * 0.20, 2) AS discount,
+           |  acctbal * price / 1000000.0 AS bal_x_price
+           |FROM j ORDER BY customer, product""".stripMargin
+      }),
+    CatalogEntry("m1_gbt_link_metrics", m1GbtMetrics,
+      "GBT link-prediction metrics (ref xgboost_model_training.py; twin m1b carries the gate)", None),
+    CatalogEntry("m1b_gbt_deterministic", m1bGbtDeterministic,
+      "GBT validation scores persisted; confusion + AUC recomputed from the bits",
+      Some(m1bSql)),
+    CatalogEntry("m2_multidate_discount", m2MultiDateMetrics,
+      "discount vs no-discount LR over 4 simulated dates (ref xgboost_mode_training_plus_dynamic_discount.py)", None),
+    CatalogEntry("m2b_multidate_deterministic", m2bMultidateDeterministic,
+      "both m2 models' scores persisted; per-model AUC recomputed relationally",
+      Some(m2bSql)),
+    CatalogEntry("m4_confusion_matrix", m4ConfusionMatrix,
+      "confusion-matrix metric suite (twin m4b carries the gate)", None),
+    CatalogEntry("m4b_metrics_deterministic", m4bMetricsDeterministic,
+      "metric math recomputed from persisted scores",
+      Some(m4bSql)),
+    CatalogEntry("m5_threshold_sweep", m5ThresholdSweep,
+      "decision-threshold sweep (twin m5b carries the gate)", None),
+    CatalogEntry("m5b_sweep_deterministic", m5bSweepDeterministic,
+      "threshold sweep recomputed from persisted scores",
+      Some(m5bSql)),
+    CatalogEntry("m7_mlp_metrics", m7MlpMetrics,
+      "multi-tower MLP metrics (ref Neural_network_multi_towered_training.py; twin m7b)", None),
+    CatalogEntry("m7b_mlp_deterministic", m7bMlpDeterministic,
+      "MLP validation scores persisted; AUC + accuracy recomputed from the bits",
+      Some(m7bSql)),
+    CatalogEntry("m11_feature_importance", m11FeatureImportance,
+      "feature importances (twin m11b carries the gate)", None),
+    CatalogEntry("m11b_importance_ranked", m11bImportanceRanked,
+      "importance ranking recomputed under the hash gate",
+      Some(s"""SELECT CAST(row_number() OVER (ORDER BY importance DESC, feature ASC) AS INT) AS rank,
          |  feature, round(importance, 6) AS importance
-         |FROM ${artifactSql("m11_importances")} ORDER BY rank""".stripMargin,
-    "m13b_minibatch_deterministic" ->
-      s"""WITH t AS (SELECT * FROM ${artifactSql("m13_steps")}),
+         |FROM ${artifactSql("m11_importances")} ORDER BY rank""".stripMargin)),
+    CatalogEntry("m12_adamw_loop", m12AdamwLoop,
+      "AdamW training loop (twin m12b carries the gate)", None),
+    CatalogEntry("m12b_adamw_deterministic", m12bAdamwDeterministic,
+      "AdamW loop state recomputed deterministically",
+      Some(trajectoryGateSql("m12_trajectory"))),
+    CatalogEntry("m14_tower_loop", m14TowerLoop,
+      "joint tower-net training loop (twin m14b carries the gate)", None),
+    CatalogEntry("m14b_tower_deterministic", m14bTowerDeterministic,
+      "tower-net loop recomputed deterministically",
+      Some(trajectoryGateSql("m14_trajectory"))),
+    CatalogEntry("m15_minibatch_loop", m15MinibatchLoop,
+      "batch-512 minibatch loop (twin m15b carries the gate)", None),
+    CatalogEntry("m15b_minibatch_deterministic", m15bMinibatchDeterministic,
+      "batch-512 loop recomputed deterministically",
+      Some(trajectoryGateSql("m15_trajectory"))),
+    CatalogEntry("m3b_incremental_policy", m3bIncrementalPolicy,
+      "incremental refit policy with model-registry roundtrip",
+      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m3_policy")}),
+         |w AS (SELECT t.*,
+         |    coalesce(sum(accepted) OVER (ORDER BY run
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS accepted_before,
+         |    sum(accepted) OVER (ORDER BY run
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_accepted
+         |  FROM t)
+         |SELECT run, prev_exists, n_pos, n_neg,
+         |  round(imb_ratio, 6) AS imb_ratio, smote_applied,
+         |  round(auc_val, 6) AS auc_val, round(overfit_gap, 6) AS overfit_gap,
+         |  gate_pass, accepted, reverted, history_len,
+         |  CAST(smote_applied = (CASE WHEN imb_ratio > 5.0 THEN 1 ELSE 0 END) AS INT) AS smote_ok,
+         |  CAST(gate_pass = (CASE WHEN overfit_gap <= 0.06 THEN 1 ELSE 0 END) AS INT) AS gate_ok,
+         |  CAST(accepted = gate_pass AS INT) AS accept_ok,
+         |  CAST(reverted = 1 - accepted AS INT) AS revert_ok,
+         |  CAST(prev_exists = (CASE WHEN accepted_before > 0 THEN 1 ELSE 0 END) AS INT) AS warm_ok,
+         |  CAST(probe_alert = (CASE WHEN probe_drop > 0.02 THEN 1 ELSE 0 END) AS INT) AS probe_ok,
+         |  CAST(history_len = cum_accepted AS INT) AS hist_ok,
+         |  CAST(imb_ratio = CAST(n_neg AS DOUBLE) / n_pos AS INT) AS ratio_ok
+         |FROM w ORDER BY run""".stripMargin)),
+    CatalogEntry("m10_class_weights", m10ClassWeights,
+      "class-weighted training comparison",
+      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m10_class_counts")}),
+         |s AS (SELECT CAST(sum(n_c) AS BIGINT) AS total FROM t)
+         |SELECT label, n_c,
+         |  round(CAST(total AS DOUBLE) / (2.0 * n_c), 6) AS weight,
+         |  round(CAST(n_c AS DOUBLE) / total, 6) AS frac
+         |FROM t, s ORDER BY label""".stripMargin)),
+    CatalogEntry("m13_minibatch_stream", m13MinibatchStream,
+      "streaming minibatch trainer (twin m13b carries the gate)", None),
+    CatalogEntry("m13b_minibatch_deterministic", m13bMinibatchDeterministic,
+      "streamed minibatch math recomputed deterministically",
+      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m13_steps")}),
          |w AS (SELECT t.*,
          |    row_number() OVER (ORDER BY epoch, step) AS ord,
          |    min(n) OVER (PARTITION BY step) AS n_min,
@@ -1668,46 +1702,38 @@ object GraphML {
          |  CAST(clipped = (CASE WHEN grad_norm > 1.0 THEN 1 ELSE 0 END) AS INT) AS clip_ok,
          |  CAST(n_min = n_max AND fp_min = fp_max AS INT) AS replay_ok,
          |  CAST(min_steps = max_steps AS INT) AS steps_ok
-         |FROM w2 ORDER BY epoch, step""".stripMargin,
-    "m12b_adamw_deterministic" -> trajectoryGateSql("m12_trajectory"),
-    "m14b_tower_deterministic" -> trajectoryGateSql("m14_trajectory"),
-    "m15b_minibatch_deterministic" -> trajectoryGateSql("m15_trajectory"),
-    "m3b_incremental_policy" ->
-      s"""WITH t AS (SELECT * FROM ${artifactSql("m3_policy")}),
-         |w AS (SELECT t.*,
-         |    coalesce(sum(accepted) OVER (ORDER BY run
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS accepted_before,
-         |    sum(accepted) OVER (ORDER BY run
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_accepted
-         |  FROM t)
-         |SELECT run, prev_exists, n_pos, n_neg,
-         |  round(imb_ratio, 6) AS imb_ratio, smote_applied,
-         |  round(auc_val, 6) AS auc_val, round(overfit_gap, 6) AS overfit_gap,
-         |  gate_pass, accepted, reverted, history_len,
-         |  CAST(smote_applied = (CASE WHEN imb_ratio > 5.0 THEN 1 ELSE 0 END) AS INT) AS smote_ok,
-         |  CAST(gate_pass = (CASE WHEN overfit_gap <= 0.06 THEN 1 ELSE 0 END) AS INT) AS gate_ok,
-         |  CAST(accepted = gate_pass AS INT) AS accept_ok,
-         |  CAST(reverted = 1 - accepted AS INT) AS revert_ok,
-         |  CAST(prev_exists = (CASE WHEN accepted_before > 0 THEN 1 ELSE 0 END) AS INT) AS warm_ok,
-         |  CAST(probe_alert = (CASE WHEN probe_drop > 0.02 THEN 1 ELSE 0 END) AS INT) AS probe_ok,
-         |  CAST(history_len = cum_accepted AS INT) AS hist_ok,
-         |  CAST(imb_ratio = CAST(n_neg AS DOUBLE) / n_pos AS INT) AS ratio_ok
-         |FROM w ORDER BY run""".stripMargin,
-    "m10_class_weights" ->
-      s"""WITH t AS (SELECT * FROM ${artifactSql("m10_class_counts")}),
-         |s AS (SELECT CAST(sum(n_c) AS BIGINT) AS total FROM t)
-         |SELECT label, n_c,
-         |  round(CAST(total AS DOUBLE) / (2.0 * n_c), 6) AS weight,
-         |  round(CAST(n_c AS DOUBLE) / total, 6) AS frac
-         |FROM t, s ORDER BY label""".stripMargin,
-    "m2b_multidate_deterministic" -> m2bSql,
-    "m7b_mlp_deterministic" -> m7bSql,
-    "g6_dvid_versioning" ->
-      s"""WITH ${GraphSql.nodesCte},
-         |${GraphSql.edgesCte},
-         |h AS (
-         |  SELECT 'node' AS kind, dvid, count(*) AS cnt FROM nodes GROUP BY dvid
-         |  UNION ALL
-         |  SELECT 'edge', dvid, count(*) FROM edges GROUP BY dvid)
-         |SELECT kind, dvid, cnt FROM h ORDER BY kind, dvid""".stripMargin)
+         |FROM w2 ORDER BY epoch, step""".stripMargin)),
+    CatalogEntry("s8_history_roundtrip", s8HistoryRoundtrip,
+      "line-JSON metrics history sink/source roundtrip (model registry)",
+      Some("""WITH m AS (
+        |  SELECT 'total_' || o_orderstatus AS metric, round(sum(o_totalprice), 2) AS v
+        |  FROM orders GROUP BY o_orderstatus)
+        |SELECT CAST(0 AS BIGINT) AS epoch, metric, v AS value FROM m
+        |UNION ALL
+        |SELECT CAST(1 AS BIGINT), metric, v + 1.0 FROM m
+        |ORDER BY epoch, metric""".stripMargin)),
+    CatalogEntry("m6_compat_probe", m6CompatProbe,
+      "model artifact save/load compatibility probe",
+      Some(m6Sql)),
+    CatalogEntry("m8_tower_scaling", m8TowerScaling,
+      "per-tower feature standardization",
+      Some("""WITH degt AS (
+        |  SELECT o_custkey AS ck, CAST(count(*) AS DOUBLE) AS n_orders
+        |  FROM orders GROUP BY o_custkey),
+        |linet AS (
+        |  SELECT o_custkey AS ck, CAST(count(*) AS DOUBLE) AS n_lines,
+        |         sum(l_quantity) AS total_qty
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey GROUP BY o_custkey),
+        |f AS (SELECT d.ck, d.n_orders, l.n_lines, l.total_qty
+        |      FROM degt d JOIN linet l USING (ck)),
+        |s AS (SELECT *,
+        |  avg(n_orders) OVER () AS m1, stddev_samp(n_orders) OVER () AS s1,
+        |  avg(n_lines) OVER () AS m2, stddev_samp(n_lines) OVER () AS s2,
+        |  avg(total_qty) OVER () AS m3, stddev_samp(total_qty) OVER () AS s3
+        |  FROM f)
+        |SELECT ck AS c_custkey,
+        |  round((n_orders - m1) / s1, 4) + 0.0 AS z_orders,
+        |  round((n_lines - m2) / s2, 4) + 0.0 AS z_lines,
+        |  round((total_qty - m3) / s3, 4) + 0.0 AS z_qty
+        |FROM s ORDER BY c_custkey""".stripMargin)))
 }

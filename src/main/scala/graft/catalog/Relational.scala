@@ -14,8 +14,7 @@ import graft.graph.Links
   * deterministic (explicit ORDER BY, rounded float aggregates, hash-based
   * pseudo-randomness) so the driver's hash compare is stable.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends CatalogModule {
 
   /** Staging root keyed by (entry, applicationId, input dir) — the
     * stagingRoot discipline from ScaleOps: the s-family entries are
@@ -1557,76 +1556,6 @@ object Relational {
     spark.sql(sql)
   }
 
-  val queries: Map[String, Q] = Map(
-    "sql_q2_min_cost_supplier" -> (sqlMinCostSupplier(_, _)),
-    "sql_q21_waiting_supplier" -> (sqlWaitingSupplier(_, _)),
-    "sql_q8_market_share" -> (sharedSql(q8Sql)(_, _)),
-    "sql_q13_order_distribution" -> (sharedSql(q13Sql)(_, _)),
-    "sql_q15_top_supplier" -> (sharedSql(q15Sql)(_, _)),
-    "sql_q17_small_quantity" -> (sharedSql(q17Sql)(_, _)),
-    "sql_q22_dormant_customers" -> (sharedSql(q22Sql)(_, _)),
-    "sql_q9_product_profit" -> (sharedSql(q9Sql)(_, _)),
-    "sql_q11_important_stock" -> (sharedSql(q11Sql)(_, _)),
-    "sql_q16_supplier_relation" -> (sharedSql(q16Sql)(_, _)),
-    "sql_q20_part_promotion" -> (sharedSql(q20Sql)(_, _)),
-    "sql_q4_order_priority" -> (sqlOrderPriority(_, _)),
-    "sql_q12_priority_shipping" -> (sqlPriorityShipping(_, _)),
-    "sql_q19_disjunctive_revenue" -> (sqlDisjunctiveRevenue(_, _)),
-    "sql_q7_volume_shipping" -> (sqlVolumeShipping(_, _)),
-    "sql_q10_returned_items" -> (sqlReturnedItems(_, _)),
-    "sql_q6_forecast_revenue" -> (sqlForecastRevenue(_, _)),
-    "sql_q14_promo_revenue" -> (sqlPromoRevenue(_, _)),
-    "sql_extension_fns" -> (sqlExtensionFns(_, _)),
-    "sql_q5_local_supplier" -> (sqlLocalSupplierVolume(_, _)),
-    "sql_q3_shipping_priority" -> (sqlShippingPriority(_, _)),
-    "s10_schema_evolution" -> (s10SchemaEvolution(_, _)),
-    "sql_q18_large_orders" -> (sqlLargeOrders(_, _)),
-    "s1_csv_scan_normalize" -> (s1CsvScan(_, _)),
-    "s3_catalog_scan" -> (s3CatalogScan(_, _)),
-    "s6_graph_checkpoint" -> (s6GraphCheckpoint(_, _)),
-    "j9_feature_injection" -> (j9FeatureInjection(_, _)),
-    "r2_candidate_cap" -> (r2CandidateCap(_, _)),
-    "sql_revenue_rollup" -> (sqlRevenueByNation(_, _)),
-    "sql_graph_2hop" -> (sqlGraph2Hop(_, _)),
-    "p5_edge_time_filter" -> (p5EdgeTimeFilter(_, _)),
-    "p8_label_predicate" -> (p8LabelPredicate(_, _)),
-    "p9_dvid_predicate" -> (p9DvidPredicate(_, _)),
-    "s2_csv_badrow_filter" -> (s2CsvBadRows(_, _)),
-    "s4_parquet_sink_roundtrip" -> (s4ParquetRoundtrip(_, _)),
-    "s11_orc_roundtrip" -> (s11OrcRoundtrip(_, _)),
-    "s12_sorted_layout_pruning" -> (s12SortedLayout(_, _)),
-    "s13_small_file_compaction" -> (s13Compaction(_, _)),
-    "s14_corrupt_records" -> (s14CorruptRecords(_, _)),
-    "s15_zorder_layout" -> (s15ZorderLayout(_, _)),
-    "s16_cdc_merge" -> (s16CdcMerge(_, _)),
-    "s17_dynamic_pruning" -> (s17DynamicPruning(_, _)),
-    "s18_retention_vacuum" -> (s18RetentionVacuum(_, _)),
-    "s19_atomic_publish" -> (s19AtomicPublish(_, _)),
-    "s20_manifest_vacuum" -> (s20ManifestVacuum(_, _)),
-    "s21_time_travel" -> (s21TimeTravel(_, _)),
-    "s22_merge_on_read" -> (s22MergeOnRead(_, _)),
-    "s5_graphml_roundtrip" -> (s5GraphmlRoundtrip(_, _)),
-    "p1_dropna_any" -> (p1DropNa(_, _)),
-    "p2_dropna_subset" -> (p2DropNaSubset(_, _)),
-    "p3_notin_filter" -> (p3NotIn(_, _)),
-    "p4_temporal_cutoff" -> (p4TemporalCutoff(_, _)),
-    "p7_valid_products" -> (p7ValidProducts(_, _)),
-    "p10_projection_rename" -> (p10Projection(_, _)),
-    "j1_full_outer_enrich" -> (j1FullOuterEnrich(_, _)),
-    "j2_versioned_upsert" -> (j2Upsert(_, _)),
-    "j3_two_hop_links" -> (j3TwoHop(_, _)),
-    "j4_negative_sampling" -> (j4NegativeSampling(_, _)),
-    "j5_feature_lookup_join" -> (j5FeatureLookup(_, _)),
-    "j6_purchased_exclusion" -> (j6PurchasedExclusion(_, _)),
-    "j8_community_join" -> (j8CommunityJoin(_, _)),
-    "u1_union_missing_columns" -> (u1UnionMissing(_, _)),
-    "u2_set_difference" -> (u2SetDifference(_, _)),
-    "u3_distinct_dedup" -> (u3Distinct(_, _)),
-    "u4_intersect" -> (u4Intersect(_, _)),
-    "u5_except_all" -> (u5ExceptAll(_, _)),
-    "p11_null_safe_eq" -> (p11NullSafeEq(_, _)),
-    "w5_limit_head" -> (w5Limit(_, _)))
-
   private val pu7 = ColFns.pseudoUniformSql("ck * 131 + pk", 7L)
   private val pu47 = ColFns.pseudoUniformSql("product", 47L)
 
@@ -1656,19 +1585,10 @@ object Relational {
       |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
       |FROM merged GROUP BY o_month ORDER BY o_month""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    // the round-9 breadth queries run the SAME text on both engines
-    "sql_q8_market_share" -> q8Sql,
-    "sql_q13_order_distribution" -> q13Sql,
-    "sql_q15_top_supplier" -> q15Sql,
-    "sql_q17_small_quantity" -> q17Sql,
-    "sql_q22_dormant_customers" -> q22Sql,
-    "sql_q9_product_profit" -> q9Sql,
-    "sql_q11_important_stock" -> q11Sql,
-    "sql_q16_supplier_relation" -> q16Sql,
-    "sql_q20_part_promotion" -> q20Sql,
-    "sql_q2_min_cost_supplier" ->
-      """WITH supply AS (
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("sql_q2_min_cost_supplier", sqlMinCostSupplier,
+      "TPC-H Q2: minimum-cost supplier",
+      Some("""WITH supply AS (
         |  SELECT l_partkey AS partkey, l_suppkey AS suppkey,
         |    min(CAST(round(l_extendedprice * 100) AS BIGINT) * 1000
         |        // CAST(l_quantity AS BIGINT)) AS unit_millicents
@@ -1681,9 +1601,10 @@ object Relational {
         |  AND sp.unit_millicents = (
         |    SELECT min(unit_millicents) FROM supply s2
         |    WHERE s2.partkey = sp.partkey)
-        |ORDER BY s_acctbal DESC, p_partkey, s_name""".stripMargin,
-    "sql_q21_waiting_supplier" ->
-      """SELECT s_name, count(*) AS numwait
+        |ORDER BY s_acctbal DESC, p_partkey, s_name""".stripMargin)),
+    CatalogEntry("sql_q21_waiting_supplier", sqlWaitingSupplier,
+      "TPC-H Q21: suppliers who kept orders waiting",
+      Some("""SELECT s_name, count(*) AS numwait
         |FROM supplier
         |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
         |JOIN orders ON o_orderkey = l1.l_orderkey
@@ -1700,50 +1621,38 @@ object Relational {
         |      AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-    "s10_schema_evolution" ->
-      """WITH ev AS (
-        |  SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS priority, 1 AS dvid
-        |  FROM orders WHERE o_orderkey % 2 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, o_orderpriority, 2
-        |  FROM orders WHERE o_orderkey % 2 = 1)
-        |SELECT dvid, coalesce(priority, 'NONE') AS priority, count(*) AS n,
-        |       round(sum(o_totalprice), 2) AS total
-        |FROM ev GROUP BY dvid, coalesce(priority, 'NONE') ORDER BY dvid, priority""".stripMargin,
-    // l_quantity is integer-valued in this generator, so the HAVING
-    // threshold and the un-rounded qty sums are exact in any order
-    "sql_q3_shipping_priority" ->
-      """SELECT l_orderkey, CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
-        |       o_orderdate, o_orderpriority
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "sql_q18_large_orders" ->
-      """SELECT c_custkey, o_orderkey, o_orderdate, o_totalprice, sum(l_quantity) AS total_qty
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
-        |GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    "sql_extension_fns" -> {
-      val dot = graft.sim.Similarity.dotSql("embedding", "embedding", 64)
-      s"""SELECT e.vec_id, round($dot, 6) AS norm2,
-         |  CAST(len(list_distinct(list_transform(
-         |    generate_series(1, greatest(len(d.text) - 4, 1)),
-         |    i -> substr(d.text, i, 5)))) AS INTEGER) AS n_shingles
-         |FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
-         |ORDER BY e.vec_id""".stripMargin
-    },
-    "sql_q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
+        |LIMIT 20""".stripMargin)),
+    // the round-9 breadth queries run the SAME text on both engines
+    CatalogEntry("sql_q8_market_share", sharedSql(q8Sql),
+      "TPC-H Q8: national market share",
+      Some(q8Sql)),
+    CatalogEntry("sql_q13_order_distribution", sharedSql(q13Sql),
+      "TPC-H Q13: customer order-count distribution",
+      Some(q13Sql)),
+    CatalogEntry("sql_q15_top_supplier", sharedSql(q15Sql),
+      "TPC-H Q15: top supplier by revenue",
+      Some(q15Sql)),
+    CatalogEntry("sql_q17_small_quantity", sharedSql(q17Sql),
+      "TPC-H Q17: small-quantity-order revenue",
+      Some(q17Sql)),
+    CatalogEntry("sql_q22_dormant_customers", sharedSql(q22Sql),
+      "TPC-H Q22: dormant-customer accounts",
+      Some(q22Sql)),
+    CatalogEntry("sql_q9_product_profit", sharedSql(q9Sql),
+      "TPC-H Q9: product-type profit",
+      Some(q9Sql)),
+    CatalogEntry("sql_q11_important_stock", sharedSql(q11Sql),
+      "TPC-H Q11: important stock identification",
+      Some(q11Sql)),
+    CatalogEntry("sql_q16_supplier_relation", sharedSql(q16Sql),
+      "TPC-H Q16: parts/supplier relationship counts",
+      Some(q16Sql)),
+    CatalogEntry("sql_q20_part_promotion", sharedSql(q20Sql),
+      "TPC-H Q20: potential part promotion",
+      Some(q20Sql)),
+    CatalogEntry("sql_q4_order_priority", sqlOrderPriority,
+      "TPC-H Q4: order priority counts",
+      Some("""SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -1751,9 +1660,10 @@ object Relational {
         |    SELECT 1 FROM lineitem
         |    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "sql_q12_priority_shipping" ->
-      """SELECT l_linestatus,
+        |ORDER BY o_orderpriority""".stripMargin)),
+    CatalogEntry("sql_q12_priority_shipping", sqlPriorityShipping,
+      "TPC-H Q12: shipping modes vs priority",
+      Some("""SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1761,44 +1671,19 @@ object Relational {
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_shipdate > o_orderdate
         |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin,
-    "sql_q19_disjunctive_revenue" ->
-      """SELECT CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |ORDER BY l_linestatus""".stripMargin)),
+    CatalogEntry("sql_q19_disjunctive_revenue", sqlDisjunctiveRevenue,
+      "TPC-H Q19: disjunctive-predicate revenue",
+      Some("""SELECT CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
         |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
         |  count(*) AS n_lines
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
         |   OR (p_brand = 'Brand#15' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#18' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "sql_q6_forecast_revenue" ->
-      """SELECT CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |         CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) + 50.0)
-        |    / 100.0) AS DOUBLE) / 100.0 AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "sql_q14_promo_revenue" ->
-      """SELECT l_year, l_month,
-        |  round(CAST(promo_cents AS DOUBLE) * 100.0 / total_cents, 6) AS promo_pct,
-        |  CAST(floor((CAST(total_cents AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue
-        |FROM (
-        |  SELECT year(l_shipdate) AS l_year, month(l_shipdate) AS l_month,
-        |    sum(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END) AS promo_cents,
-        |    sum(cents) AS total_cents
-        |  FROM (
-        |    SELECT l_shipdate, p_type,
-        |      CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |        CAST(round((1.0 - l_discount) * 100) AS BIGINT) AS cents
-        |    FROM lineitem JOIN part ON p_partkey = l_partkey
-        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00') pl
-        |  GROUP BY 1, 2) m
-        |ORDER BY l_year, l_month""".stripMargin,
-    "sql_q7_volume_shipping" ->
-      """SELECT supp_nation, cust_nation, l_year, CAST(floor((CAST(sum(volume) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue
+        |   OR (p_brand = 'Brand#18' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    CatalogEntry("sql_q7_volume_shipping", sqlVolumeShipping,
+      "TPC-H Q7: volume shipping between nations",
+      Some("""SELECT supp_nation, cust_nation, l_year, CAST(floor((CAST(sum(volume) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue
         |FROM (
         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |         year(l_shipdate) AS l_year,
@@ -1815,9 +1700,10 @@ object Relational {
         |    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         |) shipping
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "sql_q10_returned_items" ->
-      """SELECT c_custkey, c_name, CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    CatalogEntry("sql_q10_returned_items", sqlReturnedItems,
+      "TPC-H Q10: returned-item reporting",
+      Some("""SELECT c_custkey, c_name, CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
         |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
         |       c_acctbal, n_name AS nation
         |FROM customer JOIN orders ON c_custkey = o_custkey
@@ -1828,9 +1714,50 @@ object Relational {
         |  AND l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "sql_q5_local_supplier" ->
-      """SELECT n_name AS nation,
+        |LIMIT 20""".stripMargin)),
+    CatalogEntry("sql_q6_forecast_revenue", sqlForecastRevenue,
+      "TPC-H Q6: forecast revenue change",
+      Some("""SELECT CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |         CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) + 50.0)
+        |    / 100.0) AS DOUBLE) / 100.0 AS revenue,
+        |  count(*) AS n_lines
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |  AND l_discount BETWEEN 0.05 AND 0.07
+        |  AND l_quantity < 24""".stripMargin)),
+    CatalogEntry("sql_q14_promo_revenue", sqlPromoRevenue,
+      "TPC-H Q14: promotion revenue share",
+      Some("""SELECT l_year, l_month,
+        |  round(CAST(promo_cents AS DOUBLE) * 100.0 / total_cents, 6) AS promo_pct,
+        |  CAST(floor((CAST(total_cents AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue
+        |FROM (
+        |  SELECT year(l_shipdate) AS l_year, month(l_shipdate) AS l_month,
+        |    sum(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END) AS promo_cents,
+        |    sum(cents) AS total_cents
+        |  FROM (
+        |    SELECT l_shipdate, p_type,
+        |      CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |        CAST(round((1.0 - l_discount) * 100) AS BIGINT) AS cents
+        |    FROM lineitem JOIN part ON p_partkey = l_partkey
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00') pl
+        |  GROUP BY 1, 2) m
+        |ORDER BY l_year, l_month""".stripMargin)),
+    CatalogEntry("sql_extension_fns", sqlExtensionFns,
+      "engine SQL functions registered via injected FunctionRegistry",
+      Some {
+        val dot = graft.sim.Similarity.dotSql("embedding", "embedding", 64)
+        s"""SELECT e.vec_id, round($dot, 6) AS norm2,
+           |  CAST(len(list_distinct(list_transform(
+           |    generate_series(1, greatest(len(d.text) - 4, 1)),
+           |    i -> substr(d.text, i, 5)))) AS INTEGER) AS n_shingles
+           |FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
+           |ORDER BY e.vec_id""".stripMargin
+      }),
+    CatalogEntry("sql_q5_local_supplier", sqlLocalSupplierVolume,
+      "TPC-H Q5: local supplier volume",
+      Some("""SELECT n_name AS nation,
         |       CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
         |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
         |       count(*) AS n_lines
@@ -1843,24 +1770,68 @@ object Relational {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, nation""".stripMargin,
-    "sql_revenue_rollup" ->
-      """SELECT n_name AS nation,
-        |       CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |ORDER BY revenue DESC, nation""".stripMargin)),
+    // l_quantity is integer-valued in this generator, so the HAVING
+    // threshold and the un-rounded qty sums are exact in any order
+    CatalogEntry("sql_q3_shipping_priority", sqlShippingPriority,
+      "TPC-H Q3: shipping priority",
+      Some("""SELECT l_orderkey, CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
         |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
-        |       count(*) AS n_lines
+        |       o_orderdate, o_orderpriority
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+        |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, o_orderdate, l_orderkey
+        |LIMIT 10""".stripMargin)),
+    CatalogEntry("s10_schema_evolution", s10SchemaEvolution,
+      "mergeSchema read across writer generations that added a column",
+      Some("""WITH ev AS (
+        |  SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS priority, 1 AS dvid
+        |  FROM orders WHERE o_orderkey % 2 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, o_totalprice, o_orderpriority, 2
+        |  FROM orders WHERE o_orderkey % 2 = 1)
+        |SELECT dvid, coalesce(priority, 'NONE') AS priority, count(*) AS n,
+        |       round(sum(o_totalprice), 2) AS total
+        |FROM ev GROUP BY dvid, coalesce(priority, 'NONE') ORDER BY dvid, priority""".stripMargin)),
+    CatalogEntry("sql_q18_large_orders", sqlLargeOrders,
+      "TPC-H Q18: large-volume customers",
+      Some("""SELECT c_custkey, o_orderkey, o_orderdate, o_totalprice, sum(l_quantity) AS total_qty
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-    "sql_graph_2hop" ->
-      s"""WITH ${graft.graph.GraphSql.edgesCte}
-         |SELECT p.src AS customer, c.dst AS product, count(*) AS n_paths
-         |FROM edges p JOIN edges c ON p.dst = c.src
-         |WHERE p.type = 'PURCHASED' AND c.type = 'CONTAINS'
-         |GROUP BY p.src, c.dst ORDER BY customer, product""".stripMargin,
-    "j9_feature_injection" ->
-      """WITH acts AS (
+        |WHERE o_orderkey IN (
+        |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
+        |GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
+        |ORDER BY o_totalprice DESC, o_orderkey
+        |LIMIT 20""".stripMargin)),
+    CatalogEntry("s1_csv_scan_normalize", s1CsvScan,
+      "CSV scan: messy headers normalized to snake_case, cast to a declared schema (ref First_Data_injection.py:33)",
+      Some("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("s3_catalog_scan", s3CatalogScan,
+      "product-catalog ingest: header normalize, dropna, sku/design_no renames (ref First_Data_injection.py:84)",
+      Some("""SELECT p_partkey AS sku, p_name AS design_no, p_brand AS brand,
+        |       p_size AS size, p_type AS category
+        |FROM part
+        |WHERE p_partkey IS NOT NULL AND p_name IS NOT NULL AND p_brand IS NOT NULL
+        |  AND p_size IS NOT NULL AND p_type IS NOT NULL
+        |ORDER BY sku""".stripMargin)),
+    CatalogEntry("s6_graph_checkpoint", s6GraphCheckpoint,
+      "graph checkpoint: node+edge tables saved and restored as a version",
+      Some(s"""WITH ${graft.graph.GraphSql.nodesCte},
+         |${graft.graph.GraphSql.edgesCte},
+         |h AS (
+         |  SELECT 'node' AS kind, label AS name, dvid, count(*) AS cnt
+         |  FROM nodes GROUP BY label, dvid
+         |  UNION ALL
+         |  SELECT 'edge', type, dvid, count(*) FROM edges GROUP BY type, dvid)
+         |SELECT kind, name, CAST(dvid AS INTEGER) AS dvid, cnt
+         |FROM h ORDER BY kind, name, dvid""".stripMargin)),
+    CatalogEntry("j9_feature_injection", j9FeatureInjection,
+      "per-fold feature injection join (ref update_features_after_every_fold.py)",
+      Some("""WITH acts AS (
         |  SELECT o_custkey AS c_custkey, count(*) AS degree, max(o_orderdate) AS latest
         |  FROM orders GROUP BY o_custkey)
         |SELECT c.c_custkey,
@@ -1869,63 +1840,135 @@ object Relational {
         |       coalesce(c.c_mktsegment, 'Unknown') AS segment,
         |       coalesce(date_diff('day', CAST(a.latest AS DATE), DATE '2002-06-01'), 999) AS recency_days
         |FROM customer c LEFT JOIN acts a USING (c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "r2_candidate_cap" ->
-      s"""WITH valid AS (
+        |ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("r2_candidate_cap", r2CandidateCap,
+      "per-group candidate cap",
+      Some(s"""WITH valid AS (
          |  SELECT p_partkey AS product FROM part
          |  WHERE p_size > 0 AND p_retailprice > 0 AND p_brand IS NOT NULL
          |    AND p_brand NOT IN ('N/A','Unknown','')),
          |cap AS (SELECT product FROM valid ORDER BY $pu47, product LIMIT 1500)
-         |SELECT product FROM cap ORDER BY product""".stripMargin,
-    "s1_csv_scan_normalize" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "s3_catalog_scan" ->
-      """SELECT p_partkey AS sku, p_name AS design_no, p_brand AS brand,
-        |       p_size AS size, p_type AS category
-        |FROM part
-        |WHERE p_partkey IS NOT NULL AND p_name IS NOT NULL AND p_brand IS NOT NULL
-        |  AND p_size IS NOT NULL AND p_type IS NOT NULL
-        |ORDER BY sku""".stripMargin,
-    "s6_graph_checkpoint" ->
-      s"""WITH ${graft.graph.GraphSql.nodesCte},
-         |${graft.graph.GraphSql.edgesCte},
-         |h AS (
-         |  SELECT 'node' AS kind, label AS name, dvid, count(*) AS cnt
-         |  FROM nodes GROUP BY label, dvid
-         |  UNION ALL
-         |  SELECT 'edge', type, dvid, count(*) FROM edges GROUP BY type, dvid)
-         |SELECT kind, name, CAST(dvid AS INTEGER) AS dvid, cnt
-         |FROM h ORDER BY kind, name, dvid""".stripMargin,
-    "s2_csv_badrow_filter" ->
-      """SELECT p_partkey, p_name, p_brand, lower(p_type) AS type_norm, p_size, p_retailprice
-        |FROM part WHERE p_brand NOT IN ('Brand#1','Brand#2') ORDER BY p_partkey""".stripMargin,
-    "s4_parquet_sink_roundtrip" ->
-      """SELECT o_orderstatus, round(sum(o_totalprice), 2) AS total_price, count(*) AS n_orders
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+         |SELECT product FROM cap ORDER BY product""".stripMargin)),
+    CatalogEntry("sql_revenue_rollup", sqlRevenueByNation,
+      "revenue rollup in SQL",
+      Some("""SELECT n_name AS nation,
+        |       CAST(floor((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |         CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) + 50.0) / 100.0) AS DOUBLE) / 100.0 AS revenue,
+        |       count(*) AS n_lines
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY nation""".stripMargin)),
+    CatalogEntry("sql_graph_2hop", sqlGraph2Hop,
+      "two-hop graph traversal in pure SQL",
+      Some(s"""WITH ${graft.graph.GraphSql.edgesCte}
+         |SELECT p.src AS customer, c.dst AS product, count(*) AS n_paths
+         |FROM edges p JOIN edges c ON p.dst = c.src
+         |WHERE p.type = 'PURCHASED' AND c.type = 'CONTAINS'
+         |GROUP BY p.src, c.dst ORDER BY customer, product""".stripMargin)),
+    CatalogEntry("p5_edge_time_filter", p5EdgeTimeFilter,
+      "edge-table time-window filter",
+      Some(s"""WITH ${graft.graph.GraphSql.edgesCte}
+         |SELECT type, count(*) AS cnt FROM edges
+         |WHERE ts <= TIMESTAMP '1997-06-30 00:00:00'
+         |GROUP BY type ORDER BY type""".stripMargin)),
+    CatalogEntry("p8_label_predicate", p8LabelPredicate,
+      "label-valued predicate filter",
+      Some(s"""WITH ${graft.graph.GraphSql.nodesCte}
+         |SELECT id FROM nodes WHERE label = 'Customer' ORDER BY id""".stripMargin)),
+    CatalogEntry("p9_dvid_predicate", p9DvidPredicate,
+      "data-version (dvid) predicate scan of a versioned store",
+      Some(s"""WITH ${graft.graph.GraphSql.edgesCte}
+         |SELECT type, count(*) AS cnt FROM edges
+         |WHERE dvid = 3 GROUP BY type ORDER BY type""".stripMargin)),
+    CatalogEntry("s2_csv_badrow_filter", s2CsvBadRows,
+      "CSV ingest with NOT-IN bad-row filter and value lowercasing (ref First_Data_injection.py:55)",
+      Some("""SELECT p_partkey, p_name, p_brand, lower(p_type) AS type_norm, p_size, p_retailprice
+        |FROM part WHERE p_brand NOT IN ('Brand#1','Brand#2') ORDER BY p_partkey""".stripMargin)),
+    CatalogEntry("s4_parquet_sink_roundtrip", s4ParquetRoundtrip,
+      "parquet sink/source roundtrip preserves rows and schema exactly",
+      Some("""SELECT o_orderstatus, round(sum(o_totalprice), 2) AS total_price, count(*) AS n_orders
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
     // the ORC roundtrip must hand back exactly the relational aggregate
-    "s11_orc_roundtrip" ->
-      """SELECT l_returnflag, l_linestatus,
+    CatalogEntry("s11_orc_roundtrip", s11OrcRoundtrip,
+      "ORC sink/source roundtrip with aggregate parity",
+      Some("""SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,
         |  round(sum(l_extendedprice), 2) AS sum_price,
         |  count(*) AS n_lines
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
     // the layout probe's answer is layout-independent: the oracle runs
     // the same predicate + aggregate over the RAW lineitem table
-    "s12_sorted_layout_pruning" ->
-      """SELECT l_returnflag, count(*) AS n_lines,
+    CatalogEntry("s12_sorted_layout_pruning", s12SortedLayout,
+      "sorted file layout: min/max row-group stats prune a static predicate's scan",
+      Some("""SELECT l_returnflag, count(*) AS n_lines,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
         |FROM lineitem
         |WHERE year(l_shipdate) = 1997 AND l_orderkey BETWEEN 1000 AND 3000
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
+    // compaction is invisible to readers: the oracle is the RAW table
+    CatalogEntry("s13_small_file_compaction", s13Compaction,
+      "zero-shuffle coalesce compaction of micro-batch file debris, reader-invisible",
+      Some("""SELECT event_type, count(*) AS n, round(sum(value), 4) AS total_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // the good channel must aggregate to exactly the raw table; the 7
+    // staged malformed lines all land in the corrupt bucket
+    CatalogEntry("s14_corrupt_records", s14CorruptRecords,
+      "PERMISSIVE corrupt-record channel; full-row conversion so no bad line leaks",
+      Some("""SELECT k, n, key_sum, size_sum FROM (
+        |  SELECT p_brand AS k, count(*) AS n,
+        |    CAST(sum(p_partkey) AS BIGINT) AS key_sum,
+        |    CAST(sum(p_size) AS BIGINT) AS size_sum
+        |  FROM part GROUP BY p_brand
+        |  UNION ALL SELECT '__corrupt__', CAST(7 AS BIGINT),
+        |    CAST(0 AS BIGINT), CAST(0 AS BIGINT))
+        |ORDER BY k""".stripMargin)),
+    // z-order is invisible to the answer: the oracle runs the same
+    // two-predicate probe + aggregate over the RAW lineitem table
+    CatalogEntry("s15_zorder_layout", s15ZorderLayout,
+      "Morton/z-order layout quantized from observed min/max for multi-column skipping",
+      Some("""SELECT l_returnflag, count(*) AS n_lines,
+        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
+        |FROM lineitem
+        |WHERE l_orderkey BETWEEN 100 AND 400 AND l_suppkey BETWEEN 1 AND 3
+        |GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin)),
+    // the logical merge reconstructed relationally over the raw table:
+    // hash match proves the partition-scoped copy-on-write rewrite
+    // equals MERGE INTO semantics (delete wins over update on overlap)
+    CatalogEntry("s16_cdc_merge", s16CdcMerge,
+      "batch CDC MERGE (U/D/I) via copy-on-write dynamic partition overwrite",
+      Some(mergeOracleSql)),
+    // the dim rule restated statically over the raw table: pruning must
+    // be invisible to the answer
+    CatalogEntry("s17_dynamic_pruning", s17DynamicPruning,
+      "runtime dynamic partition pruning driven by a broadcast calendar-dim filter",
+      Some("""SELECT l_returnflag, count(*) AS n_lines,
+        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
+        |FROM lineitem
+        |WHERE year(l_shipdate) >= 1996
+        |GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin)),
+    // the retained window recomputed from the raw table: dvid = id%4+1,
+    // retention keeps dvids 3 and 4
+    CatalogEntry("s18_retention_vacuum", s18RetentionVacuum,
+      "TTL retention vacuum: expired dvid partitions dropped dir-by-dir",
+      Some("""SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+        |FROM events
+        |WHERE event_id % 4 IN (2, 3)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // v2's reconciliation recomputed from the raw table (cutoff
     // 1997-01-01); the match flags are literal TRUE in a consistent
     // read — a torn cross-version read would flip them
-    "s19_atomic_publish" ->
-      """WITH snap AS (
+    CatalogEntry("s19_atomic_publish", s19AtomicPublish,
+      "atomic multi-table publish behind one version pointer; consistency readout",
+      Some("""WITH snap AS (
         |  SELECT c_nationkey, c_custkey,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |  FROM orders JOIN customer ON o_custkey = c_custkey
@@ -1936,19 +1979,21 @@ object Relational {
         |  FROM snap GROUP BY c_nationkey)
         |SELECT c_nationkey, n_orders, cents,
         |  TRUE AS n_match, TRUE AS cents_match
-        |FROM by_nation ORDER BY c_nationkey""".stripMargin,
-    // the retained window recomputed from the raw table: dvid = id%4+1,
-    // retention keeps dvids 3 and 4
-    "s18_retention_vacuum" ->
-      """SELECT event_type, count(*) AS n,
+        |FROM by_nation ORDER BY c_nationkey""".stripMargin)),
+    // same retained window as s18 — manifest-fronting is commit-protocol
+    // physics only, the answer must be identical
+    CatalogEntry("s20_manifest_vacuum", s20ManifestVacuum,
+      "manifest-fronted vacuum: commit-then-reclaim, every crash point reader-invisible",
+      Some("""SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
         |FROM events
         |WHERE event_id % 4 IN (2, 3)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // the two snapshot windows recomputed over raw orders and diffed —
     // a snapshot that "moved" after commit would break either side
-    "s21_time_travel" ->
-      """WITH j AS (
+    CatalogEntry("s21_time_travel", s21TimeTravel,
+      "AS-OF reads of two committed snapshots plus their relational diff",
+      Some("""WITH j AS (
         |  SELECT c_nationkey, o_orderdate,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -1963,34 +2008,13 @@ object Relational {
         |  coalesce(n2, 0) - coalesce(n1, 0) AS orders_added,
         |  coalesce(c2, 0) - coalesce(c1, 0) AS cents_added
         |FROM v2 FULL OUTER JOIN v1 USING (c_nationkey)
-        |ORDER BY c_nationkey""".stripMargin,
-    // same retained window as s18 — manifest-fronting is commit-protocol
-    // physics only, the answer must be identical
-    "s20_manifest_vacuum" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events
-        |WHERE event_id % 4 IN (2, 3)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // the dim rule restated statically over the raw table: pruning must
-    // be invisible to the answer
-    "s17_dynamic_pruning" ->
-      """SELECT l_returnflag, count(*) AS n_lines,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-        |FROM lineitem
-        |WHERE year(l_shipdate) >= 1996
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    // the logical merge reconstructed relationally over the raw table:
-    // hash match proves the partition-scoped copy-on-write rewrite
-    // equals MERGE INTO semantics (delete wins over update on overlap)
-    "s16_cdc_merge" -> mergeOracleSql,
+        |ORDER BY c_nationkey""".stripMargin)),
     // ONE relational delete truth, emitted once per phase: the
     // tombstone-view ('mor') and rewritten-table ('materialized')
     // readouts must both equal it — a reader can't tell the phase
-    "s22_merge_on_read" ->
-      """WITH base AS (
+    CatalogEntry("s22_merge_on_read", s22MergeOnRead,
+      "merge-on-read deletion vectors: O(keys) tombstones anti-joined by readers, then materialized",
+      Some("""WITH base AS (
         |  SELECT o_orderkey, o_totalprice,
         |    strftime(o_orderdate, '%Y-%m') AS o_month FROM orders
         |  WHERE strftime(o_orderdate, '%Y') = '1996'),
@@ -2005,81 +2029,52 @@ object Relational {
         |SELECT o_month, n_orders, price_cents, key_sum, 'mor' AS phase FROM r
         |UNION ALL
         |SELECT o_month, n_orders, price_cents, key_sum, 'materialized' FROM r
-        |ORDER BY phase, o_month""".stripMargin,
-    // z-order is invisible to the answer: the oracle runs the same
-    // two-predicate probe + aggregate over the RAW lineitem table
-    "s15_zorder_layout" ->
-      """SELECT l_returnflag, count(*) AS n_lines,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-        |FROM lineitem
-        |WHERE l_orderkey BETWEEN 100 AND 400 AND l_suppkey BETWEEN 1 AND 3
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    // the good channel must aggregate to exactly the raw table; the 7
-    // staged malformed lines all land in the corrupt bucket
-    "s14_corrupt_records" ->
-      """SELECT k, n, key_sum, size_sum FROM (
-        |  SELECT p_brand AS k, count(*) AS n,
-        |    CAST(sum(p_partkey) AS BIGINT) AS key_sum,
-        |    CAST(sum(p_size) AS BIGINT) AS size_sum
-        |  FROM part GROUP BY p_brand
-        |  UNION ALL SELECT '__corrupt__', CAST(7 AS BIGINT),
-        |    CAST(0 AS BIGINT), CAST(0 AS BIGINT))
-        |ORDER BY k""".stripMargin,
-    // compaction is invisible to readers: the oracle is the RAW table
-    "s13_small_file_compaction" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 4) AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |ORDER BY phase, o_month""".stripMargin)),
     // the roundtrip must reproduce the dvid-1 subgraph's label counts
-    "s5_graphml_roundtrip" ->
-      s"""WITH ${graft.graph.GraphSql.nodesCte},
+    CatalogEntry("s5_graphml_roundtrip", s5GraphmlRoundtrip,
+      "GraphML sink + source roundtrip of the property graph",
+      Some(s"""WITH ${graft.graph.GraphSql.nodesCte},
          |${graft.graph.GraphSql.edgesCte},
          |h AS (
          |  SELECT 'node' AS kind, label AS name, count(*) AS cnt
          |  FROM nodes WHERE dvid = 1 GROUP BY label
          |  UNION ALL
          |  SELECT 'edge', type, count(*) FROM edges WHERE dvid = 1 GROUP BY type)
-         |SELECT kind, name, cnt FROM h ORDER BY kind, name""".stripMargin,
-    "p1_dropna_any" ->
-      """SELECT * FROM orders
+         |SELECT kind, name, cnt FROM h ORDER BY kind, name""".stripMargin)),
+    CatalogEntry("p1_dropna_any", p1DropNa,
+      "dropna(any): drop rows with any null",
+      Some("""SELECT * FROM orders
         |WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL AND o_orderstatus IS NOT NULL
         |  AND o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL AND o_orderpriority IS NOT NULL
-        |ORDER BY o_orderkey""".stripMargin,
-    "p2_dropna_subset" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |WHERE ts IS NOT NULL AND user_id IS NOT NULL ORDER BY event_id""".stripMargin,
-    "p3_notin_filter" ->
-      """SELECT event_id, lower(event_type) AS event_type FROM events
-        |WHERE lower(event_type) NOT IN ('error','signup') ORDER BY event_id""".stripMargin,
-    "p4_temporal_cutoff" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
+        |ORDER BY o_orderkey""".stripMargin)),
+    CatalogEntry("p2_dropna_subset", p2DropNaSubset,
+      "dropna restricted to a column subset",
+      Some("""SELECT event_id, user_id, event_type FROM events
+        |WHERE ts IS NOT NULL AND user_id IS NOT NULL ORDER BY event_id""".stripMargin)),
+    CatalogEntry("p3_notin_filter", p3NotIn,
+      "NOT-IN predicate filter",
+      Some("""SELECT event_id, lower(event_type) AS event_type FROM events
+        |WHERE lower(event_type) NOT IN ('error','signup') ORDER BY event_id""".stripMargin)),
+    CatalogEntry("p4_temporal_cutoff", p4TemporalCutoff,
+      "timestamp-cutoff predicate",
+      Some("""SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1997-06-30 00:00:00'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p5_edge_time_filter" ->
-      s"""WITH ${graft.graph.GraphSql.edgesCte}
-         |SELECT type, count(*) AS cnt FROM edges
-         |WHERE ts <= TIMESTAMP '1997-06-30 00:00:00'
-         |GROUP BY type ORDER BY type""".stripMargin,
-    "p8_label_predicate" ->
-      s"""WITH ${graft.graph.GraphSql.nodesCte}
-         |SELECT id FROM nodes WHERE label = 'Customer' ORDER BY id""".stripMargin,
-    "p9_dvid_predicate" ->
-      s"""WITH ${graft.graph.GraphSql.edgesCte}
-         |SELECT type, count(*) AS cnt FROM edges
-         |WHERE dvid = 3 GROUP BY type ORDER BY type""".stripMargin,
-    "p7_valid_products" ->
-      """SELECT p_partkey, p_brand, p_size, p_retailprice FROM part
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    CatalogEntry("p7_valid_products", p7ValidProducts,
+      "keep edges whose product exists in the catalog",
+      Some("""SELECT p_partkey, p_brand, p_size, p_retailprice FROM part
         |WHERE p_size > 0 AND p_retailprice > 0 AND p_brand IS NOT NULL
         |  AND p_brand NOT IN ('N/A','Unknown','')
-        |ORDER BY p_partkey""".stripMargin,
-    "p10_projection_rename" ->
-      """SELECT l_orderkey AS order_id, l_linenumber AS line_no,
+        |ORDER BY p_partkey""".stripMargin)),
+    CatalogEntry("p10_projection_rename", p10Projection,
+      "projection with column renames",
+      Some("""SELECT l_orderkey AS order_id, l_linenumber AS line_no,
         |       l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS revenue,
         |       lower(l_returnflag) AS flag
-        |FROM lineitem ORDER BY order_id, line_no""".stripMargin,
-    "j1_full_outer_enrich" ->
-      """WITH usage AS (
+        |FROM lineitem ORDER BY order_id, line_no""".stripMargin)),
+    CatalogEntry("j1_full_outer_enrich", j1FullOuterEnrich,
+      "full-outer join enrichment with coalesced sides",
+      Some("""WITH usage AS (
         |  SELECT l_partkey AS p_partkey, count(*) AS n_lines, round(sum(l_quantity),2) AS total_qty
         |  FROM lineitem GROUP BY l_partkey)
         |SELECT p.p_partkey,
@@ -2088,22 +2083,25 @@ object Relational {
         |       coalesce(u.total_qty, 0.0) AS total_qty
         |FROM (SELECT p_partkey, p_brand, p_retailprice FROM part) p
         |FULL OUTER JOIN usage u USING (p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
-    "j2_versioned_upsert" ->
-      """WITH inj AS (
+        |ORDER BY p_partkey""".stripMargin)),
+    CatalogEntry("j2_versioned_upsert", j2Upsert,
+      "last-writer-wins upsert via max-dvid window dedup",
+      Some("""WITH inj AS (
         |  SELECT o_orderkey AS id, o_orderstatus AS status, o_totalprice AS price, 1 AS dvid
         |  FROM orders WHERE o_orderkey % 5 IN (0,1)
         |  UNION ALL
         |  SELECT o_orderkey, o_orderstatus, o_totalprice * 1.1, 2
         |  FROM orders WHERE o_orderkey % 5 IN (1,2))
         |SELECT id, max_by(status, dvid) AS status, max_by(price, dvid) AS price, max(dvid) AS dvid
-        |FROM inj GROUP BY id ORDER BY id""".stripMargin,
-    "j3_two_hop_links" ->
-      """SELECT DISTINCT concat('cust_', o_custkey) AS customer, concat('part_', l_partkey) AS product
+        |FROM inj GROUP BY id ORDER BY id""".stripMargin)),
+    CatalogEntry("j3_two_hop_links", j3TwoHop,
+      "customer-product-customer two-hop link join (ref knowledge_graph_creation.py)",
+      Some("""SELECT DISTINCT concat('cust_', o_custkey) AS customer, concat('part_', l_partkey) AS product
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |ORDER BY customer, product""".stripMargin,
-    "j4_negative_sampling" ->
-      s"""WITH pos AS (
+        |ORDER BY customer, product""".stripMargin)),
+    CatalogEntry("j4_negative_sampling", j4NegativeSampling,
+      "anti-join negative sampling at ~1:1 class ratio (ref xgboost_model_training.py:124)",
+      Some(s"""WITH pos AS (
          |  SELECT DISTINCT o_custkey AS ck, l_partkey AS pk
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
          |cand AS (
@@ -2114,9 +2112,10 @@ object Relational {
          |SELECT concat('cust_', ck) AS customer, concat('part_', pk) AS product
          |FROM cand
          |WHERE NOT EXISTS (SELECT 1 FROM pos WHERE pos.ck = cand.ck AND pos.pk = cand.pk)
-         |ORDER BY customer, product""".stripMargin,
-    "j5_feature_lookup_join" ->
-      """WITH pairs AS (
+         |ORDER BY customer, product""".stripMargin)),
+    CatalogEntry("j5_feature_lookup_join", j5FeatureLookup,
+      "two-hop distinct pairs + broadcast feature-lookup joins on both sides",
+      Some("""WITH pairs AS (
         |  SELECT DISTINCT o_custkey AS customer, l_partkey AS product
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |  WHERE o_custkey % 20 = 1)
@@ -2125,9 +2124,10 @@ object Relational {
         |FROM pairs pr
         |JOIN customer c ON c.c_custkey = pr.customer
         |JOIN part p ON p.p_partkey = pr.product
-        |ORDER BY pr.customer, pr.product""".stripMargin,
-    "j6_purchased_exclusion" ->
-      """WITH cust AS (SELECT c_custkey AS customer FROM customer WHERE c_custkey % 100 = 1),
+        |ORDER BY pr.customer, pr.product""".stripMargin)),
+    CatalogEntry("j6_purchased_exclusion", j6PurchasedExclusion,
+      "anti-join exclusion of already-purchased products",
+      Some("""WITH cust AS (SELECT c_custkey AS customer FROM customer WHERE c_custkey % 100 = 1),
         |valid AS (SELECT p_partkey AS product FROM part
         |          WHERE p_size > 0 AND p_retailprice > 0 AND p_brand IS NOT NULL
         |            AND p_brand NOT IN ('N/A','Unknown','')),
@@ -2136,42 +2136,49 @@ object Relational {
         |SELECT c.customer, v.product FROM cust c CROSS JOIN valid v
         |WHERE NOT EXISTS (SELECT 1 FROM purchased p
         |                  WHERE p.customer = c.customer AND p.product = v.product)
-        |ORDER BY customer, product""".stripMargin,
-    "j8_community_join" ->
-      """SELECT c_custkey, n_name AS nation, r_name AS region
+        |ORDER BY customer, product""".stripMargin)),
+    CatalogEntry("j8_community_join", j8CommunityJoin,
+      "join node communities onto the edge table",
+      Some("""SELECT c_custkey, n_name AS nation, r_name AS region
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY c_custkey""".stripMargin,
-    "u1_union_missing_columns" ->
-      """SELECT o_orderkey AS id, o_totalprice AS amount, o_orderstatus AS status,
+        |ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("u1_union_missing_columns", u1UnionMissing,
+      "union with missing-column alignment (unionByName allowMissing)",
+      Some("""SELECT o_orderkey AS id, o_totalprice AS amount, o_orderstatus AS status,
         |       CAST(NULL AS VARCHAR) AS priority
         |FROM orders WHERE o_orderkey % 2 = 0
         |UNION ALL
         |SELECT o_orderkey, o_totalprice, NULL, o_orderpriority
         |FROM orders WHERE o_orderkey % 2 = 1
-        |ORDER BY id""".stripMargin,
-    "u2_set_difference" ->
-      """SELECT c_custkey FROM customer
+        |ORDER BY id""".stripMargin)),
+    CatalogEntry("u2_set_difference", u2SetDifference,
+      "set difference (EXCEPT)",
+      Some("""SELECT c_custkey FROM customer
         |EXCEPT SELECT user_id FROM events
-        |ORDER BY c_custkey""".stripMargin,
-    "u3_distinct_dedup" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "u4_intersect" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
+        |ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("u3_distinct_dedup", u3Distinct,
+      "distinct row dedup",
+      Some("""SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    CatalogEntry("u4_intersect", u4Intersect,
+      "set intersection",
+      Some("""SELECT user_id FROM events WHERE event_type = 'click'
         |INTERSECT
         |SELECT user_id FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id""".stripMargin,
-    "u5_except_all" ->
-      """WITH d AS (
+        |ORDER BY user_id""".stripMargin)),
+    CatalogEntry("u5_except_all", u5ExceptAll,
+      "bag-semantics EXCEPT ALL",
+      Some("""WITH d AS (
         |  SELECT user_id FROM events WHERE event_type = 'click'
         |  EXCEPT ALL
         |  SELECT user_id FROM events WHERE event_type = 'purchase')
         |SELECT user_id, count(*) AS excess_clicks
-        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "p11_null_safe_eq" ->
-      """WITH e AS (SELECT event_id, user_id FROM events),
+        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    CatalogEntry("p11_null_safe_eq", p11NullSafeEq,
+      "null-safe equality (<=>) predicate",
+      Some("""WITH e AS (SELECT event_id, user_id FROM events),
         |j AS (
         |  SELECT a.user_id AS ua
         |  FROM e a JOIN e b ON a.event_id = b.event_id - 1
@@ -2179,8 +2186,9 @@ object Relational {
         |SELECT coalesce(CAST(ua AS VARCHAR), 'NULL') AS user,
         |       count(*) AS n_consecutive
         |FROM j GROUP BY coalesce(CAST(ua AS VARCHAR), 'NULL')
-        |ORDER BY "user"""".stripMargin,
-    "w5_limit_head" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        |ORDER BY o_orderkey LIMIT 3""".stripMargin)
+        |ORDER BY "user"""".stripMargin)),
+    CatalogEntry("w5_limit_head", w5Limit,
+      "deterministic limit/head",
+      Some("""SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        |ORDER BY o_orderkey LIMIT 3""".stripMargin)))
 }

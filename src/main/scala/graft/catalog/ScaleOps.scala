@@ -29,8 +29,7 @@ import graft.sim.Similarity
   *  - e17/e18: exactly-once ingest — the idempotent overwrite-own-dvid
   *    sink (redelivery-proof) and checkpointed resume (restart-proof).
   */
-object ScaleOps {
-  type Q = (SparkSession, String) => DataFrame
+object ScaleOps extends CatalogModule {
 
   private val DIM = 64
 
@@ -1140,72 +1139,46 @@ object ScaleOps {
       .orderBy("window_start", "event_type")
   }
 
-  val queries: Map[String, Q] = Map(
-    "j10_salted_skew_join" -> (j10SaltedJoin(_, _)),
-    "j10b_aqe_skew_join" -> (j10bAqeSkewJoin(_, _)),
-    "j13_bucketed_join" -> (j13BucketedJoin(_, _)),
-    "j11_asof_join" -> (j11AsOfJoin(_, _)),
-    "j11b_asof_native" -> (j11bAsOfNative(_, _)),
-    "j11c_asof_sql" -> (j11cAsOfSql(_, _)),
-    "j12_range_join" -> (j12RangeJoin(_, _)),
-    "sim_recall_eval" -> (simRecallEval(_, _)),
-    "e7_incremental_ingest" -> (e7IncrementalIngest(_, _)),
-    "e15_incremental_agg_merge" -> (e15IncrementalAggMerge(_, _)),
-    "e16_incremental_distinct" -> (e16IncrementalDistinct(_, _)),
-    "e19_stream_cdc_merge" -> (e19StreamCdcMerge(_, _)),
-    "e20_cdc_compact_serve" -> (e20CdcCompactServe(_, _)),
-    "e21_stream_mor_deletes" -> (e21StreamMorDeletes(_, _)),
-    "s23_mor_fold_scheduler" -> (s23MorFoldScheduler(_, _)),
-    "e17_idempotent_replay" -> (e17IdempotentReplay(_, _)),
-    "e18_checkpoint_resume" -> (e18CheckpointResume(_, _)),
-    "e10_late_data_drop" -> (e10LateDataDrop(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    // emitted = on-time (later-half) rows in windows finalized by the
-    // watermark (window end STRICTLY < max(ts) − 2 h: Spark's append
-    // eviction predicate is attr ≤ watermarkMs − 1, so a window ending
-    // exactly at the watermark is never emitted); the late replay of
-    // the earlier half is entirely below the watermark and discarded
-    "e10_late_data_drop" ->
-      """WITH b AS (SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax
-        |           FROM events),
-        |ontime AS (
-        |  SELECT e.* FROM events e, b
-        |  WHERE epoch_us(e.ts) >= b.tmin + (b.tmax - b.tmin) // 2)
-        |SELECT date_trunc('hour', o.ts) AS window_start, o.event_type,
-        |  count(*) AS n, round(sum(o.value), 4) AS total_value
-        |FROM ontime o, b
-        |WHERE epoch_us(date_trunc('hour', o.ts)) + 3600000000 < b.tmax - 7200000000
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "j13_bucketed_join" ->
-      """SELECT o.o_custkey, count(*) AS n_items,
-        |  sum(l.l_quantity) AS total_qty,
-        |  max(o.o_totalprice) AS max_price
-        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |GROUP BY o.o_custkey ORDER BY o.o_custkey""".stripMargin,
-    "j10_salted_skew_join" ->
-      """WITH dim AS (
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("j10_salted_skew_join", j10SaltedJoin,
+      "hand-salted skew join: hot keys fanned across salt buckets",
+      Some("""WITH dim AS (
         |  SELECT DISTINCT l_returnflag, 'flag_' || l_returnflag AS flag_name FROM lineitem)
         |SELECT d.flag_name, count(*) AS n_lines, round(sum(l.l_quantity), 2) AS total_qty
         |FROM lineitem l JOIN dim d USING (l_returnflag)
-        |GROUP BY d.flag_name ORDER BY d.flag_name""".stripMargin,
+        |GROUP BY d.flag_name ORDER BY d.flag_name""".stripMargin)),
     // same relational truth as j10 — salting and AQE skew-splitting are
     // physical-plan physics only, the answers must be identical
-    "j10b_aqe_skew_join" ->
-      """WITH dim AS (
+    CatalogEntry("j10b_aqe_skew_join", j10bAqeSkewJoin,
+      "AQE OptimizeSkewedJoin twin: runtime skew split with its preconditions pinned",
+      Some("""WITH dim AS (
         |  SELECT DISTINCT l_returnflag, 'flag_' || l_returnflag AS flag_name FROM lineitem)
         |SELECT d.flag_name, count(*) AS n_lines, round(sum(l.l_quantity), 2) AS total_qty,
         |       CAST(count(*) * 64 AS BIGINT) AS payload_bytes
         |FROM lineitem l JOIN dim d USING (l_returnflag)
-        |GROUP BY d.flag_name ORDER BY d.flag_name""".stripMargin,
+        |GROUP BY d.flag_name ORDER BY d.flag_name""".stripMargin)),
+    CatalogEntry("j13_bucketed_join", j13BucketedJoin,
+      "bucketed co-located join planning with zero exchanges",
+      Some("""SELECT o.o_custkey, count(*) AS n_items,
+        |  sum(l.l_quantity) AS total_qty,
+        |  max(o.o_totalprice) AS max_price
+        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        |GROUP BY o.o_custkey ORDER BY o.o_custkey""".stripMargin)),
+    CatalogEntry("j11_asof_join", j11AsOfJoin,
+      "as-of join, window formulation: last click before each purchase",
+      Some(asOfOracleSql)),
     // j11b runs the native AsOfJoinExec; the oracle is the SAME relational
     // truth as j11 — the operator must be indistinguishable from the
     // window formulation
-    "j11b_asof_native" -> asOfOracleSql,
-    "j11c_asof_sql" -> asOfOracleSql,
-    "j11_asof_join" -> asOfOracleSql,
-    "j12_range_join" ->
-      """WITH clicks AS (
+    CatalogEntry("j11b_asof_native", j11bAsOfNative,
+      "native as-of join operator (custom LogicalPlan + Strategy + Exec)",
+      Some(asOfOracleSql)),
+    CatalogEntry("j11c_asof_sql", j11cAsOfSql,
+      "ASOF JOIN SQL syntax through the injected parser",
+      Some(asOfOracleSql)),
+    CatalogEntry("j12_range_join", j12RangeJoin,
+      "interval/range join banded to bucket keys (flat under scale-up)",
+      Some("""WITH clicks AS (
         |  SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
         |purch AS (
         |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -1218,80 +1191,111 @@ object ScaleOps {
         |SELECT p.event_id AS purchase_id, p.user_id,
         |       coalesce(a.n, 0) AS n_clicks, coalesce(a.v, 0.0) AS click_value
         |FROM purch p LEFT JOIN agg a USING (event_id)
-        |ORDER BY purchase_id""".stripMargin,
-    "sim_recall_eval" -> {
-      val bucket = Similarity.lshBucketSqlDynamic("embedding", DIM,
-        Similarity.scaleNPlanesSql("embeddings"))
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      val pu = graft.functions.ColFns.pseudoUniformSql("vec_id", 29L)
-      s"""WITH n AS (SELECT vec_id, embedding, $bucket AS bucket,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |probes AS (SELECT vec_id FROM (
-         |  SELECT vec_id, row_number() OVER (ORDER BY $pu ASC, vec_id ASC) AS pr
-         |  FROM embeddings) WHERE pr <= $RECALL_PANEL),
-         |bscored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN probes p ON p.vec_id = a.vec_id
-         |  JOIN n b ON a.vec_id <> b.vec_id),
-         |bt AS (SELECT src, dst FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst ASC) AS rn
-         |  FROM bscored) WHERE rn <= 5),
-         |lscored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN probes p ON p.vec_id = a.vec_id
-         |  JOIN n b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-         |ls AS (SELECT src, dst FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst ASC) AS rn
-         |  FROM lscored) WHERE rn <= 5),
-         |hits AS (
-         |  SELECT b.src, count(*) AS h FROM bt b JOIN ls l ON l.src = b.src AND l.dst = b.dst
-         |  GROUP BY b.src),
-         |per AS (
-         |  SELECT base.src, base.nt, coalesce(h.h, 0) AS h
-         |  FROM (SELECT src, count(*) AS nt FROM bt GROUP BY src) base
-         |  LEFT JOIN hits h USING (src))
-         |SELECT count(*) AS n_queries,
-         |       CAST(sum(h) AS BIGINT) AS hits, CAST(sum(nt) AS BIGINT) AS n_true,
-         |       CAST(sum(h) AS DOUBLE) / sum(nt) AS recall_micro,
-         |       min(h) AS min_hits,
-         |       CAST(sum(CASE WHEN h = nt THEN 1 ELSE 0 END) AS BIGINT) AS n_perfect
-         |FROM per""".stripMargin
-    },
-    "e7_incremental_ingest" ->
-      """SELECT CAST(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS dvid,
+        |ORDER BY purchase_id""".stripMargin)),
+    CatalogEntry("sim_recall_eval", simRecallEval,
+      "ANN recall@5 on a 1024-probe panel vs exact truth",
+      Some {
+        val bucket = Similarity.lshBucketSqlDynamic("embedding", DIM,
+          Similarity.scaleNPlanesSql("embeddings"))
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        val pu = graft.functions.ColFns.pseudoUniformSql("vec_id", 29L)
+        s"""WITH n AS (SELECT vec_id, embedding, $bucket AS bucket,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |probes AS (SELECT vec_id FROM (
+           |  SELECT vec_id, row_number() OVER (ORDER BY $pu ASC, vec_id ASC) AS pr
+           |  FROM embeddings) WHERE pr <= $RECALL_PANEL),
+           |bscored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN probes p ON p.vec_id = a.vec_id
+           |  JOIN n b ON a.vec_id <> b.vec_id),
+           |bt AS (SELECT src, dst FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst ASC) AS rn
+           |  FROM bscored) WHERE rn <= 5),
+           |lscored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN probes p ON p.vec_id = a.vec_id
+           |  JOIN n b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+           |ls AS (SELECT src, dst FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst ASC) AS rn
+           |  FROM lscored) WHERE rn <= 5),
+           |hits AS (
+           |  SELECT b.src, count(*) AS h FROM bt b JOIN ls l ON l.src = b.src AND l.dst = b.dst
+           |  GROUP BY b.src),
+           |per AS (
+           |  SELECT base.src, base.nt, coalesce(h.h, 0) AS h
+           |  FROM (SELECT src, count(*) AS nt FROM bt GROUP BY src) base
+           |  LEFT JOIN hits h USING (src))
+           |SELECT count(*) AS n_queries,
+           |       CAST(sum(h) AS BIGINT) AS hits, CAST(sum(nt) AS BIGINT) AS n_true,
+           |       CAST(sum(h) AS DOUBLE) / sum(nt) AS recall_micro,
+           |       min(h) AS min_hits,
+           |       CAST(sum(CASE WHEN h = nt THEN 1 ELSE 0 END) AS BIGINT) AS n_perfect
+           |FROM per""".stripMargin
+      }),
+    CatalogEntry("e7_incremental_ingest", e7IncrementalIngest,
+      "dvid-append micro-batch ingest",
+      Some("""SELECT CAST(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS dvid,
         |       event_type, count(*) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY dvid, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY dvid, event_type""".stripMargin)),
     // the FULL RECOMPUTE over the raw table: a hash match proves the
     // partial-merge refresh path equals the from-scratch aggregate
-    "e15_incremental_agg_merge" ->
-      """SELECT event_type, count(*) AS n_events,
+    CatalogEntry("e15_incremental_agg_merge", e15IncrementalAggMerge,
+      "materialized-view maintenance via partial-aggregate partitions",
+      Some("""SELECT event_type, count(*) AS n_events,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  min(CAST(round(value * 100) AS BIGINT)) AS min_cents,
         |  max(CAST(round(value * 100) AS BIGINT)) AS max_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // exact COUNT(DISTINCT) below the sketch's k (where the KMV
     // estimate IS the exact set size — bijective mix, no collisions);
     // saturated groups get NULL n_users + literal TRUE est_ok, which
     // Spark must EARN via its 4/sqrt(K) tolerance audit. K interpolated
     // from the one Scala constant (r14 ADVICE).
-    "e16_incremental_distinct" ->
-      s"""SELECT event_type,
+    CatalogEntry("e16_incremental_distinct", e16IncrementalDistinct,
+      "mergeable KMV distinct sketches per batch, unioned at read",
+      Some(s"""SELECT event_type,
         |  CASE WHEN count(DISTINCT user_id) >= $E16_K THEN 'estimate' ELSE 'exact' END AS regime,
         |  CASE WHEN count(DISTINCT user_id) >= $E16_K THEN NULL
         |       ELSE count(DISTINCT user_id) END AS n_users,
         |  TRUE AS est_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // s16's relational MERGE truth VERBATIM (one shared string): the
     // streamed ordered-batch application must reach exactly the state
     // the batch MERGE declares — stream/batch parity for maintenance
-    "e19_stream_cdc_merge" -> graft.catalog.Relational.mergeOracleSql,
+    CatalogEntry("e19_stream_cdc_merge", e19StreamCdcMerge,
+      "streamed CDC merge maintains the lakehouse table, restart-safe",
+      Some(graft.catalog.Relational.mergeOracleSql)),
     // the SAME merge truth: a compaction visible to readers flips the hash
-    "e20_cdc_compact_serve" -> graft.catalog.Relational.mergeOracleSql,
+    CatalogEntry("e20_cdc_compact_serve", e20CdcCompactServe,
+      "post-merge zero-shuffle compaction of touched partitions, reader-invisible",
+      Some(graft.catalog.Relational.mergeOracleSql)),
+    // ONE relational delete truth per phase: the streamed tombstone view
+    // and the materialized table must both equal it
+    CatalogEntry("e21_stream_mor_deletes", e21StreamMorDeletes,
+      "streamed merge-on-read deletes: O(keys) tombstones per micro-batch, restart-safe, one materialize",
+      Some("""WITH base AS (
+        |  SELECT o_orderkey, o_totalprice,
+        |    strftime(o_orderdate, '%Y-%m') AS o_month FROM orders
+        |  WHERE strftime(o_orderdate, '%Y') = '1996'),
+        |kept AS (
+        |  SELECT * FROM base
+        |  WHERE NOT (o_month IN ('1996-05', '1996-06') AND o_orderkey % 7 = 0)
+        |    AND NOT (o_month = '1996-07' AND o_orderkey % 11 = 0)),
+        |r AS (
+        |  SELECT o_month, count(*) AS n_orders,
+        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS price_cents,
+        |    CAST(sum(o_orderkey) AS BIGINT) AS key_sum
+        |  FROM kept GROUP BY o_month)
+        |SELECT o_month, n_orders, price_cents, key_sum, 'mor' AS phase FROM r
+        |UNION ALL
+        |SELECT o_month, n_orders, price_cents, key_sum, 'materialized' FROM r
+        |ORDER BY phase, o_month""".stripMargin)),
     // delete truth per scenario PLUS the decision recomputed from the
     // same counts: the hash gate pins branch AND result together
-    "s23_mor_fold_scheduler" ->
-      """WITH base AS (
+    CatalogEntry("s23_mor_fold_scheduler", s23MorFoldScheduler,
+      "MOR fold scheduler: tombstone mass vs foldFrac decides serve-vs-rewrite; both branches one delete-truth oracle",
+      Some("""WITH base AS (
         |  SELECT o_orderkey, o_totalprice,
         |    strftime(o_orderdate, '%Y-%m') AS o_month FROM orders
         |  WHERE strftime(o_orderdate, '%Y') = '1996'),
@@ -1316,39 +1320,38 @@ object ScaleOps {
         |FROM scen s JOIN dec d USING (scenario)
         |WHERE NOT s.del
         |GROUP BY s.o_month, s.scenario, d.branch
-        |ORDER BY s.scenario, s.o_month""".stripMargin,
-    // ONE relational delete truth per phase: the streamed tombstone view
-    // and the materialized table must both equal it
-    "e21_stream_mor_deletes" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_totalprice,
-        |    strftime(o_orderdate, '%Y-%m') AS o_month FROM orders
-        |  WHERE strftime(o_orderdate, '%Y') = '1996'),
-        |kept AS (
-        |  SELECT * FROM base
-        |  WHERE NOT (o_month IN ('1996-05', '1996-06') AND o_orderkey % 7 = 0)
-        |    AND NOT (o_month = '1996-07' AND o_orderkey % 11 = 0)),
-        |r AS (
-        |  SELECT o_month, count(*) AS n_orders,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS price_cents,
-        |    CAST(sum(o_orderkey) AS BIGINT) AS key_sum
-        |  FROM kept GROUP BY o_month)
-        |SELECT o_month, n_orders, price_cents, key_sum, 'mor' AS phase FROM r
-        |UNION ALL
-        |SELECT o_month, n_orders, price_cents, key_sum, 'materialized' FROM r
-        |ORDER BY phase, o_month""".stripMargin,
+        |ORDER BY s.scenario, s.o_month""".stripMargin)),
     // the raw table aggregated ONCE: a redelivered batch that appended
     // instead of overwriting would double its counts and flip the hash
-    "e17_idempotent_replay" ->
-      """SELECT event_type, count(*) AS n,
+    CatalogEntry("e17_idempotent_replay", e17IdempotentReplay,
+      "exactly-once under redelivery: partition-scoped overwrite keyed by batch",
+      Some("""SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // one aggregate over the raw table: a restart that re-read the
     // first drain's files would double them and flip the hash
-    "e18_checkpoint_resume" ->
-      """SELECT event_type, count(*) AS n,
+    CatalogEntry("e18_checkpoint_resume", e18CheckpointResume,
+      "checkpointed source resume reads only files that arrived while down",
+      Some("""SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // emitted = on-time (later-half) rows in windows finalized by the
+    // watermark (window end STRICTLY < max(ts) − 2 h: Spark's append
+    // eviction predicate is attr ≤ watermarkMs − 1, so a window ending
+    // exactly at the watermark is never emitted); the late replay of
+    // the earlier half is entirely below the watermark and discarded
+    CatalogEntry("e10_late_data_drop", e10LateDataDrop,
+      "watermark late-data drop accounting",
+      Some("""WITH b AS (SELECT min(epoch_us(ts)) AS tmin, max(epoch_us(ts)) AS tmax
+        |           FROM events),
+        |ontime AS (
+        |  SELECT e.* FROM events e, b
+        |  WHERE epoch_us(e.ts) >= b.tmin + (b.tmax - b.tmin) // 2)
+        |SELECT date_trunc('hour', o.ts) AS window_start, o.event_type,
+        |  count(*) AS n, round(sum(o.value), 4) AS total_value
+        |FROM ontime o, b
+        |WHERE epoch_us(date_trunc('hour', o.ts)) + 3600000000 < b.tmax - 7200000000
+        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)))
 
   /** Shared by j11 (window formulation) and j11b (native AsOfJoinExec):
     * the as-of truth stated relationally — tag both event kinds, order by

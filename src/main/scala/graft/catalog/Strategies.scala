@@ -10,8 +10,7 @@ import graft.recommend.Recommend
   * simulated December query date. Each runs the full candidate-gen →
   * score → strategy-transform → category-cap → softmax → top-3 pipeline.
   */
-object Strategies {
-  type Q = (SparkSession, String) => DataFrame
+object Strategies extends CatalogModule {
 
   private def run(name: String)(spark: SparkSession, dir: String): DataFrame =
     Recommend.topK(spark, dir, name,
@@ -51,15 +50,6 @@ object Strategies {
     Recommend.stageCandidates(spark, dir,
       customerFilter = pmod(col("c_custkey"), lit(50)) === 1,
       queryMonth = 12, candidateCap = 2000)
-
-  val queries: Map[String, Q] = Map(
-    "rec_q0_candidate_stage" -> (recQ0Stage(_, _)),
-    "rec_q6_discount_events" -> (recQ6DiscountEvents(_, _)),
-    "rec_q1_diverse" -> (run("diverse")(_, _)),
-    "rec_q2_softmax" -> (run("softmax")(_, _)),
-    "rec_q3_stochastic" -> (run("stochastic")(_, _)),
-    "rec_q4_adam" -> (run("adam")(_, _)),
-    "rec_q5_enriched" -> (recQ5Enriched(_, _)))
 
   /** DuckDB mirror of Recommend.topK for a given strategy. Every numeric
     * step reproduces the Scala pipeline exactly (same formulas, same
@@ -165,28 +155,42 @@ object Strategies {
        |FROM cand GROUP BY customer ORDER BY customer""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "rec_q0_candidate_stage" -> q0Oracle,
-    "rec_q6_discount_events" -> {
-      val u = ColFns.pseudoUniformSql("product * 12 + month", 11L)
-      s"""WITH valid AS (
-         |  SELECT p_partkey AS product FROM part
-         |  WHERE p_size > 0 AND p_retailprice > 0 AND p_brand IS NOT NULL
-         |    AND p_brand NOT IN ('N/A','Unknown','')),
-         |pm AS (SELECT product, CAST(unnest([3, 6, 9, 12]) AS INTEGER) AS month
-         |       FROM valid),
-         |d AS (SELECT product, month,
-         |  CASE WHEN month = 12 THEN round(0.30 + $u * 0.20, 2)
-         |       WHEN month IN (6, 7, 11) THEN round(0.15 + $u * 0.15, 2)
-         |       WHEN month IN (1, 2, 8) THEN round(0.05 + $u * 0.10, 2)
-         |       ELSE round($u * 0.05, 2) END AS discount
-         |  FROM pm)
-         |SELECT product, month, discount FROM d
-         |WHERE discount >= 0.2 ORDER BY product, month""".stripMargin
-    },
-    "rec_q1_diverse" -> oracle(Recommend.strategies("diverse")),
-    "rec_q2_softmax" -> oracle(Recommend.strategies("softmax")),
-    "rec_q3_stochastic" -> oracle(Recommend.strategies("stochastic")),
-    "rec_q4_adam" -> oracle(Recommend.strategies("adam")),
-    "rec_q5_enriched" -> q5Oracle)
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("rec_q0_candidate_stage", recQ0Stage,
+      "shared candidate-generation stage feeding every recommender",
+      Some(q0Oracle)),
+    CatalogEntry("rec_q6_discount_events", recQ6DiscountEvents,
+      "event-aware discount recommendations",
+      Some {
+        val u = ColFns.pseudoUniformSql("product * 12 + month", 11L)
+        s"""WITH valid AS (
+           |  SELECT p_partkey AS product FROM part
+           |  WHERE p_size > 0 AND p_retailprice > 0 AND p_brand IS NOT NULL
+           |    AND p_brand NOT IN ('N/A','Unknown','')),
+           |pm AS (SELECT product, CAST(unnest([3, 6, 9, 12]) AS INTEGER) AS month
+           |       FROM valid),
+           |d AS (SELECT product, month,
+           |  CASE WHEN month = 12 THEN round(0.30 + $u * 0.20, 2)
+           |       WHEN month IN (6, 7, 11) THEN round(0.15 + $u * 0.15, 2)
+           |       WHEN month IN (1, 2, 8) THEN round(0.05 + $u * 0.10, 2)
+           |       ELSE round($u * 0.05, 2) END AS discount
+           |  FROM pm)
+           |SELECT product, month, discount FROM d
+           |WHERE discount >= 0.2 ORDER BY product, month""".stripMargin
+      }),
+    CatalogEntry("rec_q1_diverse", run("diverse"),
+      "top-k diverse recs, category-capped, no discount (ref topk_recommandations_diverse_nodiscounts.py)",
+      Some(oracle(Recommend.strategies("diverse")))),
+    CatalogEntry("rec_q2_softmax", run("softmax"),
+      "softmax-sampled recs with discount (ref took_recommandations_softmaxsampling_discount.py)",
+      Some(oracle(Recommend.strategies("softmax")))),
+    CatalogEntry("rec_q3_stochastic", run("stochastic"),
+      "stochastic softmax sampling (ref topk_recommandations_stochasticsoftmaxsampling_discount.py)",
+      Some(oracle(Recommend.strategies("stochastic")))),
+    CatalogEntry("rec_q4_adam", run("adam"),
+      "Adam-sampling recs with discount (ref took_recommandations_adamsampling_discount.py)",
+      Some(oracle(Recommend.strategies("adam")))),
+    CatalogEntry("rec_q5_enriched", recQ5Enriched,
+      "recs enriched with catalog attributes (ref category_enrichement.py)",
+      Some(q5Oracle)))
 }

@@ -12,8 +12,7 @@ import graft.text.{Dedup, TextAnalysis}
   * (language-ID, quality, tokens, fingerprint) over the `documents` and
   * `embeddings` tables.
   */
-object TextSim {
-  type Q = (SparkSession, String) => DataFrame
+object TextSim extends CatalogModule {
 
   private val DIM = 64
 
@@ -2146,75 +2145,6 @@ object TextSim {
     graft.core.Artifacts.write(spark, dir, name, df)
   private def artifactSql(name: String): String = graft.core.Artifacts.sql(name)
 
-  val queries: Map[String, Q] = Map(
-    "sim_ann0_ivf_index" -> (simIvf0IndexBuild(_, _)),
-    "sim_ivf_persisted" -> (simIvfPersisted(_, _)),
-    "sim_ivf_deletes" -> (simIvfDeletes(_, _)),
-    "sim_ivf_compaction" -> (simIvfCompaction(_, _)),
-    "sim_ivf_trained" -> (simIvfTrained(_, _)),
-    "sim_filtered_ivf" -> (simFilteredIvf(_, _)),
-    "d1_exact_dedup" -> (d1ExactDedup(_, _)),
-    "d2_minhash_lsh" -> (d2MinhashLsh(_, _)),
-    "d3_simhash" -> (d3Simhash(_, _)),
-    "d4_ngram_jaccard" -> (d4NgramJaccard(_, _)),
-    "d5_embedding_neardup" -> (d5EmbeddingNearDup(_, _)),
-    "d13_semantic_dedup" -> (d13SemanticDedup(_, _)),
-    "d6_dedup_clusters" -> (d6DedupClusters(_, _)),
-    "r10_cluster_split" -> (r10ClusterSplit(_, _)),
-    "d11_quality_dedup" -> (d11QualityDedup(_, _)),
-    "d7_incremental_dedup" -> (d7IncrementalDedup(_, _)),
-    "r9_split_leakage" -> (r9SplitLeakage(_, _)),
-    "d8_fuzzy_match" -> (d8FuzzyMatch(_, _)),
-    "d9_entity_clusters" -> (d9EntityClusters(_, _)),
-    "j7_knn_topk" -> (simBruteTopK(_, _)),
-    "sim_lsh_topk" -> (simLshTopK(_, _)),
-    "sim_ivf_topk" -> (simIvfTopK(_, _)),
-    "a10_similarity_stats" -> (a10SimilarityStats(_, _)),
-    "t1_language_id" -> (t1LangId(_, _)),
-    "t2_quality_score" -> (t2Quality(_, _)),
-    "t3_token_count" -> (t3TokenCount(_, _)),
-    "t3b_bpe_tokens" -> (t3bBpeTokens(_, _)),
-    "t4_fingerprint" -> (t4Fingerprint(_, _)),
-    "t5_corpus_filter" -> (t5CorpusFilter(_, _)),
-    "t6_winnowing" -> (t6Winnowing(_, _)),
-    "t7_chunking" -> (t7Chunking(_, _)),
-    "t8_lang_confusion" -> (t8LangConfusion(_, _)),
-    "t9_top_bigrams" -> (t9TopBigrams(_, _)),
-    "t10_tfidf" -> (t10Tfidf(_, _)),
-    "t11_vocab_prune" -> (t11VocabPrune(_, _)),
-    "t12_pack_sequences" -> (t12PackSequences(_, _)),
-    "t12b_pack_sharded" -> (t12bPackSharded(_, _)),
-    "t17_shuffle_shards" -> (t17ShuffleShards(_, _)),
-    "t13_quality_rules" -> (t13QualityRules(_, _)),
-    "t24_dataset_card" -> (t24DatasetCard(_, _)),
-    "t14_pii_redact" -> (t14PiiRedact(_, _)),
-    "t15_repetition" -> (t15Repetition(_, _)),
-    "d14_span_dedup" -> (d14SpanDedup(_, _)),
-    "t19_boilerplate_spans" -> (t19BoilerplateSpans(_, _)),
-    "t20_lm_perplexity" -> (t20LmPerplexity(_, _)),
-    "t18_quality_nb" -> (t18QualityNb(_, _)),
-    "t21_token_budget" -> (t21TokenBudget(_, _)),
-    "t22_bpe_merges" -> (t22BpeMerges(_, _)),
-    "t22b_bpe_apply" -> (t22bBpeApply(_, _)),
-    "t23_curriculum_order" -> (t23CurriculumOrder(_, _)),
-    "e12_stream_quality_gate" -> (e12StreamQualityGate(_, _)),
-    "a23_countmin_ngrams" -> (a23CountminNgrams(_, _)),
-    "sim_mmr_rerank" -> (simMmrRerank(_, _)),
-    "d10_contamination" -> (d10Contamination(_, _)),
-    "d12_decontaminate" -> (d12Decontaminate(_, _)),
-    "e11_stream_ingest_dedup" -> (e11StreamIngestDedup(_, _)),
-    "t16_domain_mix" -> (t16DomainMix(_, _)),
-    "t17_training_order" -> (t17TrainingOrder(_, _)),
-    "sim_ivf_incremental" -> (simIvfIncremental(_, _)),
-    "mm1_binary_metadata" -> (mm1BinaryMetadata(_, _)),
-    "mm2_decode_features" -> (mm2DecodeFeatures(_, _)),
-    "mm3_resize_plan" -> (mm3ResizePlan(_, _)),
-    "mm4_frame_sample" -> (mm4FrameSample(_, _)),
-    "sim_quantize_int8" -> (simQuantizeInt8(_, _)),
-    "sim_pq_codes" -> (simPqCodes(_, _)),
-    "sim_pq_adc_topk" -> (simPqAdcTopK(_, _)),
-    "f10_dot_product" -> (f10DotProduct(_, _)))
-
   // ---- oracles ----
 
   private val shingleCte =
@@ -2338,12 +2268,178 @@ object TextSim {
        |$finalSelect""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "d1_exact_dedup" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
-        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin,
-    "d2_minhash_lsh" ->
-      s"""WITH $hashedShingleCte,
+  val entries: Seq[CatalogEntry] = Seq(
+    CatalogEntry("sim_ann0_ivf_index", simIvf0IndexBuild,
+      "the ONE shared IVF index build; oracle recomputes the build relationally",
+      Some {
+        // the build recomputed END-TO-END from the raw embeddings table:
+        // hash-pick centroids (same pseudo-uniform, same tie-break),
+        // argmin assignment, per-list inventory — a hash match proves the
+        // persisted ivf0_* artifacts ARE the declared function of the
+        // corpus, which is what lets every consumer read them blindly
+        import graft.functions.ColFns
+        val u = ColFns.pseudoUniformSql("vec_id", 13L)
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val vc = Similarity.dotSql("e.v", "c.cv", DIM)
+        val nn = Similarity.dotSql("e.v", "e.v", DIM)
+        s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+           |cents AS (
+           |  SELECT list, cv FROM (
+           |    SELECT v AS cv,
+           |      row_number() OVER (ORDER BY $u ASC, vec_id ASC) AS list
+           |    FROM e)
+           |  WHERE list <= ${Similarity.scaleNListsSql("e")}),
+           |ranked AS (
+           |  SELECT e.vec_id, c.list, ($cc - 2.0 * $vc) AS rank_d,
+           |         sqrt($nn) AS nrm
+           |  FROM e CROSS JOIN cents c),
+           |assigned AS (SELECT * FROM (
+           |    SELECT *, row_number() OVER (PARTITION BY vec_id
+           |      ORDER BY rank_d ASC, list ASC) AS arn FROM ranked)
+           |  WHERE arn = 1)
+           |SELECT list, count(*) AS n_vectors,
+           |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
+           |  round(sum(nrm), 4) AS norm_mass
+           |FROM assigned GROUP BY list ORDER BY list""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_persisted", simIvfPersisted,
+      "ANN served from the persisted shared index artifact",
+      Some {
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
+        val qd = Similarity.dotSql("p.qv", "l.v", DIM)
+        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}),
+           |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
+           |pr AS (
+           |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
+           |  FROM q CROSS JOIN cents c),
+           |probes AS (SELECT * FROM (
+           |    SELECT pr.*, row_number() OVER (PARTITION BY src
+           |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
+           |  WHERE prn <= 3),
+           |scored AS (
+           |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
+           |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src
+           |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
+           |ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_deletes", simIvfDeletes,
+      "tombstone anti-join BEFORE ranking",
+      Some {
+        // the persisted-serve oracle with the tombstone rule applied to
+        // the LIST rows (deleted ids neither query nor serve)
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
+        val qd = Similarity.dotSql("p.qv", "l.v", DIM)
+        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
+           |          WHERE vec_id % 13 <> 0),
+           |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
+           |pr AS (
+           |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
+           |  FROM q CROSS JOIN cents c),
+           |probes AS (SELECT * FROM (
+           |    SELECT pr.*, row_number() OVER (PARTITION BY src
+           |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
+           |  WHERE prn <= 3),
+           |scored AS (
+           |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
+           |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src
+           |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
+           |ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_compaction", simIvfCompaction,
+      "exactly-once index compaction, reader-invisible",
+      Some {
+        // deliberately reads the PRE-compaction v1 lists plus the
+        // tombstone rule — the Spark side serves from the compacted v2
+        // with no delete logic, so a hash match IS the proof that the
+        // nightly rewrite dropped exactly the tombstoned rows
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
+        val qd = Similarity.dotSql("p.qv", "l.v", DIM)
+        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
+           |          WHERE vec_id % 13 <> 0),
+           |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
+           |pr AS (
+           |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
+           |  FROM q CROSS JOIN cents c),
+           |probes AS (SELECT * FROM (
+           |    SELECT pr.*, row_number() OVER (PARTITION BY src
+           |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
+           |  WHERE prn <= 3),
+           |scored AS (
+           |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
+           |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src
+           |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
+           |ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_trained", simIvfTrained,
+      "k-means-trained IVF centroids",
+      Some {
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
+        val qd = Similarity.dotSql("p.qv", "l.v", DIM)
+        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf_t_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf_t_lists")}),
+           |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
+           |pr AS (
+           |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
+           |  FROM q CROSS JOIN cents c),
+           |probes AS (SELECT * FROM (
+           |    SELECT pr.*, row_number() OVER (PARTITION BY src
+           |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
+           |  WHERE prn <= 3),
+           |scored AS (
+           |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
+           |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src
+           |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
+           |ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_filtered_ivf", simFilteredIvf,
+      "filtered ANN: predicate applied before ranking",
+      Some {
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
+        val qd = Similarity.dotSql("p.qv", "l.v", DIM)
+        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm, label
+           |          FROM ${artifactSql("ivf0_lists")}),
+           |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn, label AS ql
+           |      FROM lists WHERE vec_id % 7 = 0),
+           |pr AS (
+           |  SELECT q.src, q.qv, q.qn, q.ql, c.list, ($cc - 2.0 * $qc) AS rank_d
+           |  FROM q CROSS JOIN cents c),
+           |probes AS (SELECT * FROM (
+           |    SELECT pr.*, row_number() OVER (PARTITION BY src
+           |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
+           |  WHERE prn <= 3),
+           |scored AS (
+           |  SELECT p.src, l.vec_id AS dst, l.label, $qd / (p.qn * l.nrm) AS cos
+           |  FROM probes p JOIN lists l USING (list)
+           |  WHERE p.src <> l.vec_id AND l.label = p.ql),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src
+           |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |SELECT src, rn, dst, label, round(cos, 6) AS cos FROM r WHERE rn <= 5
+           |ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("d1_exact_dedup", d1ExactDedup,
+      "exact dedup via content-hash groupBy",
+      Some("""SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
+        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin)),
+    CatalogEntry("d2_minhash_lsh", d2MinhashLsh,
+      "MinHash + banded LSH near-duplicate candidates",
+      Some(s"""WITH $hashedShingleCte,
          |signed AS (
          |  SELECT doc_id AS doc,
          |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
@@ -2355,20 +2451,23 @@ object TextSim {
          |  SELECT 1, band_1, doc FROM signed)
          |SELECT DISTINCT a.band AS band, a.sig AS sig, a.doc AS doc_a, b.doc AS doc_b
          |FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc < b.doc
-         |ORDER BY 1, 2, 3, 4""".stripMargin,
-    "d3_simhash" -> {
-      val bitTerms = (0 until 16).map { i =>
-        s"""(CASE WHEN list_sum(list_transform(toks, t ->
-           |  CASE WHEN substr(md5(t), ${i + 1}, 1) IN ('1','3','5','7','9','b','d','f')
-           |       THEN 1 ELSE -1 END)) > 0 THEN ${1L << i} ELSE 0 END)""".stripMargin
-      }.mkString(" + ")
-      s"""WITH t AS (
-         |  SELECT doc_id, list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS toks
-         |  FROM documents)
-         |SELECT doc_id, ($bitTerms) AS simhash FROM t ORDER BY doc_id""".stripMargin
-    },
-    "d4_ngram_jaccard" ->
-      s"""WITH $shingleCte,
+         |ORDER BY 1, 2, 3, 4""".stripMargin)),
+    CatalogEntry("d3_simhash", d3Simhash,
+      "SimHash hamming-band near-duplicates",
+      Some {
+        val bitTerms = (0 until 16).map { i =>
+          s"""(CASE WHEN list_sum(list_transform(toks, t ->
+             |  CASE WHEN substr(md5(t), ${i + 1}, 1) IN ('1','3','5','7','9','b','d','f')
+             |       THEN 1 ELSE -1 END)) > 0 THEN ${1L << i} ELSE 0 END)""".stripMargin
+        }.mkString(" + ")
+        s"""WITH t AS (
+           |  SELECT doc_id, list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS toks
+           |  FROM documents)
+           |SELECT doc_id, ($bitTerms) AS simhash FROM t ORDER BY doc_id""".stripMargin
+      }),
+    CatalogEntry("d4_ngram_jaccard", d4NgramJaccard,
+      "n-gram Jaccard candidate verification",
+      Some(s"""WITH $shingleCte,
          |base AS (SELECT s.doc_id AS doc, d.n_chars AS bucket, s.sh
          |         FROM sh s JOIN documents d ON s.doc_id = d.doc_id),
          |sizes AS (SELECT doc, bucket, len(sh) AS n_sh FROM base),
@@ -2383,65 +2482,66 @@ object TextSim {
          |JOIN sizes sa ON sa.doc = doc_a
          |JOIN sizes sb ON sb.doc = doc_b
          |WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.1
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "d5_embedding_neardup" -> {
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings)
-         |SELECT a.vec_id AS src, b.vec_id AS dst,
-         |  round($dotAB / (a.nrm * b.nrm), 6) AS cos
-         |FROM n a JOIN n b ON a.vec_id < b.vec_id
-         |WHERE $dotAB / (a.nrm * b.nrm) >= 0.4
-         |ORDER BY src, dst""".stripMargin
-    },
-    "d9_entity_clusters" -> {
-      // min-VARCHAR-label propagation unrolled over the fuzzy-pair graph
-      // (components are bounded by the d8 block, so 16 rounds carries a
-      // wide margin over the component diameter)
-      val steps = (1 to 16).map { i =>
-        s"""l$i AS MATERIALIZED (
-           |  SELECT p.id, least(p.lbl, coalesce(m.minn, p.lbl)) AS lbl
-           |  FROM l${i - 1} p LEFT JOIN (
-           |    SELECT u.dst AS id, min(q.lbl) AS minn
-           |    FROM und u JOIN l${i - 1} q ON q.id = u.src
-           |    GROUP BY u.dst) m ON m.id = p.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH a AS (
-         |  SELECT c_custkey AS id_a, c_name AS name_a, right(c_name, 2) AS blk
-         |  FROM customer),
-         |b AS (
-         |  SELECT c_custkey AS id_b, c_name AS name_b, right(c_name, 2) AS blk
-         |  FROM customer),
-         |pairs AS (
-         |  SELECT CAST(id_a AS VARCHAR) AS src, CAST(id_b AS VARCHAR) AS dst
-         |  FROM a JOIN b USING (blk)
-         |  WHERE id_a < id_b AND levenshtein(name_a, name_b) <= 2),
-         |und AS MATERIALIZED (
-         |  SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-         |verts AS (SELECT DISTINCT src AS id FROM und),
-         |l0 AS MATERIALIZED (SELECT id, id AS lbl FROM verts),
-         |$steps
-         |SELECT c.c_custkey,
-         |  coalesce(l16.lbl, CAST(c.c_custkey AS VARCHAR)) AS entity,
-         |  CAST(CAST(c.c_custkey AS VARCHAR) =
-         |    coalesce(l16.lbl, CAST(c.c_custkey AS VARCHAR)) AS INTEGER) AS is_canonical
-         |FROM customer c LEFT JOIN l16 ON l16.id = CAST(c.c_custkey AS VARCHAR)
-         |ORDER BY c.c_custkey""".stripMargin
-    },
-    "d8_fuzzy_match" ->
-      """WITH a AS (
-        |  SELECT c_custkey AS id_a, c_name AS name_a, right(c_name, 2) AS blk
-        |  FROM customer),
-        |b AS (
-        |  SELECT c_custkey AS id_b, c_name AS name_b, right(c_name, 2) AS blk
-        |  FROM customer)
-        |SELECT id_a, id_b, CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
-        |FROM a JOIN b USING (blk)
-        |WHERE id_a < id_b AND levenshtein(name_a, name_b) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "d7_incremental_dedup" ->
-      s"""WITH $hashedShingleCte,
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    CatalogEntry("d5_embedding_neardup", d5EmbeddingNearDup,
+      "embedding-cosine near-duplicates",
+      Some {
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings)
+           |SELECT a.vec_id AS src, b.vec_id AS dst,
+           |  round($dotAB / (a.nrm * b.nrm), 6) AS cos
+           |FROM n a JOIN n b ON a.vec_id < b.vec_id
+           |WHERE $dotAB / (a.nrm * b.nrm) >= 0.4
+           |ORDER BY src, dst""".stripMargin
+      }),
+    CatalogEntry("d13_semantic_dedup", d13SemanticDedup,
+      "semantic dedup bounded by trained IVF cells",
+      Some(Similarity.ivfNearDupPairsSql("embeddings", "vec_id", "embedding", DIM,
+        minCos = 0.4, nListsSql = Similarity.scaleNListsSql("embeddings"),
+        nProbe = 2))),
+    CatalogEntry("d6_dedup_clusters", d6DedupClusters,
+      "connected duplicate clusters with a canonical doc",
+      Some(s"""WITH $clusterCteSql
+         |SELECT e.vec_id,
+         |  coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical,
+         |  CAST(CAST(e.vec_id AS VARCHAR) = coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR))
+         |       AS INTEGER) AS kept
+         |FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR)
+         |ORDER BY e.vec_id""".stripMargin)),
+    CatalogEntry("r10_cluster_split", r10ClusterSplit,
+      "cluster-aware split: near-dups never straddle train/eval",
+      Some {
+        val u = graft.functions.ColFns.pseudoUniformSql(
+          "CAST(canonical AS BIGINT)", 83L)
+        s"""WITH $clusterCteSql,
+           |m AS (
+           |  SELECT e.vec_id,
+           |    coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical
+           |  FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR))
+           |SELECT vec_id, canonical,
+           |  CAST($u >= 0.9 AS INT) AS is_eval
+           |FROM m ORDER BY vec_id""".stripMargin
+      }),
+    CatalogEntry("d11_quality_dedup", d11QualityDedup,
+      "quality-aware keep-best dedup",
+      Some(s"""WITH $clusterCteSql,
+         |m AS (
+         |  SELECT e.vec_id,
+         |    coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical
+         |  FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR)),
+         |q AS (SELECT doc_id,
+         |        CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS BIGINT) AS quality
+         |      FROM documents)
+         |SELECT m.vec_id, m.canonical, q.quality,
+         |  CAST(row_number() OVER (PARTITION BY m.canonical
+         |    ORDER BY q.quality DESC, m.vec_id ASC) = 1 AS INT) AS kept_best
+         |FROM m JOIN q ON q.doc_id = m.vec_id
+         |ORDER BY m.vec_id""".stripMargin)),
+    CatalogEntry("d7_incremental_dedup", d7IncrementalDedup,
+      "incremental dedup against the prior accepted set",
+      Some(s"""WITH $hashedShingleCte,
          |signed AS (
          |  SELECT s.doc_id, s.sh,
          |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
@@ -2472,177 +2572,298 @@ object TextSim {
          |SELECT d.doc_id, coalesce(p.n_candidates, 0) AS n_candidates,
          |  coalesce(p.n_dups, 0) AS n_dups, coalesce(p.dup_of, -1) AS dup_of
          |FROM documents d LEFT JOIN per p USING (doc_id)
-         |WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id""".stripMargin,
-    // e11 = d7 streamed through foreachBatch — same relational truth,
-    // plus the kept flag the ingest sink records
-    "e11_stream_ingest_dedup" ->
-      s"""WITH $hashedShingleCte,
-         |signed AS (
-         |  SELECT s.doc_id, s.sh,
-         |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
-         |    concat_ws('_', ${minhashSql(2)}, ${minhashSql(3)}) AS band_1
-         |  FROM sh s JOIN hsh h ON s.doc_id = h.doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, band_0 AS sig FROM signed
-         |  UNION ALL
-         |  SELECT doc_id, 1, band_1 FROM signed),
-         |cand AS (
-         |  SELECT DISTINCT i.doc_id, s.doc_id AS store_doc
-         |  FROM bands i JOIN bands s ON i.band = s.band AND i.sig = s.sig
-         |  WHERE i.doc_id % 3 = 0 AND s.doc_id % 3 <> 0),
-         |pairs AS (
-         |  SELECT c.doc_id, c.store_doc,
-         |    len(list_intersect(a.sh, b.sh)) AS n_inter,
-         |    len(a.sh) AS na, len(b.sh) AS nb
-         |  FROM cand c
-         |  JOIN signed a ON a.doc_id = c.doc_id
-         |  JOIN signed b ON b.doc_id = c.store_doc),
-         |per AS (
-         |  SELECT doc_id, count(*) AS n_candidates,
-         |    CAST(sum(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
-         |    min(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
-         |        THEN store_doc END) AS dup_of
-         |  FROM pairs GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(p.n_candidates, 0) AS n_candidates,
-         |  coalesce(p.n_dups, 0) AS n_dups, coalesce(p.dup_of, -1) AS dup_of,
-         |  CAST(CASE WHEN coalesce(p.n_dups, 0) = 0 THEN 1 ELSE 0 END AS INT) AS kept
-         |FROM documents d LEFT JOIN per p USING (doc_id)
-         |WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id""".stripMargin,
-    "r9_split_leakage" -> {
-      import graft.functions.ColFns
-      def ev(e: String) = s"${ColFns.pseudoUniformSql(e, 71L)} >= 0.9"
-      s"""WITH $hashedShingleCte,
-         |signed AS (
-         |  SELECT s.doc_id, s.sh,
-         |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
-         |    concat_ws('_', ${minhashSql(2)}, ${minhashSql(3)}) AS band_1
-         |  FROM sh s JOIN hsh h ON s.doc_id = h.doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, band_0 AS sig FROM signed
-         |  UNION ALL
-         |  SELECT doc_id, 1, band_1 FROM signed),
-         |cand AS (
-         |  SELECT DISTINCT i.doc_id, s.doc_id AS train_doc
-         |  FROM bands i JOIN bands s ON i.band = s.band AND i.sig = s.sig
-         |  WHERE ${ev("i.doc_id")} AND NOT (${ev("s.doc_id")})),
-         |pairs AS (
-         |  SELECT c.doc_id, c.train_doc,
-         |    len(list_intersect(a.sh, b.sh)) AS n_inter,
-         |    len(a.sh) AS na, len(b.sh) AS nb
-         |  FROM cand c
-         |  JOIN signed a ON a.doc_id = c.doc_id
-         |  JOIN signed b ON b.doc_id = c.train_doc),
-         |per AS (
-         |  SELECT doc_id, count(*) AS n_candidates,
-         |    CAST(sum(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_leaks,
-         |    min(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
-         |        THEN train_doc END) AS leak_of
-         |  FROM pairs GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(p.n_candidates, 0) AS n_candidates,
-         |  coalesce(p.n_leaks, 0) AS n_leaks, coalesce(p.leak_of, -1) AS leak_of,
-         |  CAST(coalesce(p.n_leaks, 0) > 0 AS INT) AS leaked
-         |FROM documents d LEFT JOIN per p USING (doc_id)
-         |WHERE ${ev("d.doc_id")} ORDER BY d.doc_id""".stripMargin
-    },
-    "d6_dedup_clusters" ->
-      s"""WITH $clusterCteSql
-         |SELECT e.vec_id,
-         |  coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical,
-         |  CAST(CAST(e.vec_id AS VARCHAR) = coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR))
-         |       AS INTEGER) AS kept
-         |FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR)
-         |ORDER BY e.vec_id""".stripMargin,
-    "r10_cluster_split" -> {
-      val u = graft.functions.ColFns.pseudoUniformSql(
-        "CAST(canonical AS BIGINT)", 83L)
-      s"""WITH $clusterCteSql,
-         |m AS (
-         |  SELECT e.vec_id,
-         |    coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical
-         |  FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR))
-         |SELECT vec_id, canonical,
-         |  CAST($u >= 0.9 AS INT) AS is_eval
-         |FROM m ORDER BY vec_id""".stripMargin
-    },
-    "d11_quality_dedup" ->
-      s"""WITH $clusterCteSql,
-         |m AS (
-         |  SELECT e.vec_id,
-         |    coalesce(l16.lbl, CAST(e.vec_id AS VARCHAR)) AS canonical
-         |  FROM embeddings e LEFT JOIN l16 ON l16.id = CAST(e.vec_id AS VARCHAR)),
-         |q AS (SELECT doc_id,
-         |        CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS BIGINT) AS quality
-         |      FROM documents)
-         |SELECT m.vec_id, m.canonical, q.quality,
-         |  CAST(row_number() OVER (PARTITION BY m.canonical
-         |    ORDER BY q.quality DESC, m.vec_id ASC) = 1 AS INT) AS kept_best
-         |FROM m JOIN q ON q.doc_id = m.vec_id
-         |ORDER BY m.vec_id""".stripMargin,
-    "j7_knn_topk" -> {
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |      FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5 ORDER BY src, rn""".stripMargin
-    },
-    "sim_ivf_topk" ->
-      Similarity.ivfHashTopKSql("embeddings", "vec_id", "embedding", DIM,
-        k = 5, nListsSql = Similarity.scaleNListsSql("embeddings"), nProbe = 3),
-    "d13_semantic_dedup" ->
-      Similarity.ivfNearDupPairsSql("embeddings", "vec_id", "embedding", DIM,
-        minCos = 0.4, nListsSql = Similarity.scaleNListsSql("embeddings"),
-        nProbe = 2),
-    "sim_lsh_topk" -> {
-      val bucket = Similarity.lshBucketSqlDynamic("embedding", DIM,
-        Similarity.scaleNPlanesSql("embeddings"))
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding, $bucket AS bucket,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |      FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5 ORDER BY src, rn""".stripMargin
-    },
-    "f10_dot_product" -> {
-      val dotAB = Similarity.dotSql("ea", "eb", DIM)
-      val cosAB = Similarity.cosineSql("ea", "eb", DIM)
-      s"""WITH a AS (SELECT vec_id AS src, embedding AS ea FROM embeddings),
-         |b AS (SELECT vec_id - 1 AS src, embedding AS eb FROM embeddings),
-         |j AS (SELECT a.src, ea, eb FROM a JOIN b USING (src))
-         |SELECT src, round($dotAB, 6) AS dot, round($cosAB, 6) AS cos
-         |FROM j ORDER BY src""".stripMargin
-    },
-    "a10_similarity_stats" -> {
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |      FROM scored),
-         |topk AS (SELECT src, round(cos, 6) AS cos FROM r WHERE rn <= 5)
-         |SELECT src, round(avg(cos), 6) AS avg_sim, round(max(cos), 6) AS max_sim,
-         |  round(min(cos), 6) AS min_sim, count(*) AS n_sim
-         |FROM topk GROUP BY src ORDER BY src""".stripMargin
-    },
-    "t1_language_id" ->
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
+         |WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id""".stripMargin)),
+    CatalogEntry("r9_split_leakage", r9SplitLeakage,
+      "train/eval split leakage audit over dup clusters",
+      Some {
+        import graft.functions.ColFns
+        def ev(e: String) = s"${ColFns.pseudoUniformSql(e, 71L)} >= 0.9"
+        s"""WITH $hashedShingleCte,
+           |signed AS (
+           |  SELECT s.doc_id, s.sh,
+           |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
+           |    concat_ws('_', ${minhashSql(2)}, ${minhashSql(3)}) AS band_1
+           |  FROM sh s JOIN hsh h ON s.doc_id = h.doc_id),
+           |bands AS (
+           |  SELECT doc_id, 0 AS band, band_0 AS sig FROM signed
+           |  UNION ALL
+           |  SELECT doc_id, 1, band_1 FROM signed),
+           |cand AS (
+           |  SELECT DISTINCT i.doc_id, s.doc_id AS train_doc
+           |  FROM bands i JOIN bands s ON i.band = s.band AND i.sig = s.sig
+           |  WHERE ${ev("i.doc_id")} AND NOT (${ev("s.doc_id")})),
+           |pairs AS (
+           |  SELECT c.doc_id, c.train_doc,
+           |    len(list_intersect(a.sh, b.sh)) AS n_inter,
+           |    len(a.sh) AS na, len(b.sh) AS nb
+           |  FROM cand c
+           |  JOIN signed a ON a.doc_id = c.doc_id
+           |  JOIN signed b ON b.doc_id = c.train_doc),
+           |per AS (
+           |  SELECT doc_id, count(*) AS n_candidates,
+           |    CAST(sum(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
+           |             THEN 1 ELSE 0 END) AS BIGINT) AS n_leaks,
+           |    min(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
+           |        THEN train_doc END) AS leak_of
+           |  FROM pairs GROUP BY doc_id)
+           |SELECT d.doc_id, coalesce(p.n_candidates, 0) AS n_candidates,
+           |  coalesce(p.n_leaks, 0) AS n_leaks, coalesce(p.leak_of, -1) AS leak_of,
+           |  CAST(coalesce(p.n_leaks, 0) > 0 AS INT) AS leaked
+           |FROM documents d LEFT JOIN per p USING (doc_id)
+           |WHERE ${ev("d.doc_id")} ORDER BY d.doc_id""".stripMargin
+      }),
+    CatalogEntry("d8_fuzzy_match", d8FuzzyMatch,
+      "blocked fuzzy entity matching (block-bounded pair work)",
+      Some("""WITH a AS (
+        |  SELECT c_custkey AS id_a, c_name AS name_a, right(c_name, 2) AS blk
+        |  FROM customer),
+        |b AS (
+        |  SELECT c_custkey AS id_b, c_name AS name_b, right(c_name, 2) AS blk
+        |  FROM customer)
+        |SELECT id_a, id_b, CAST(levenshtein(name_a, name_b) AS INTEGER) AS dist
+        |FROM a JOIN b USING (blk)
+        |WHERE id_a < id_b AND levenshtein(name_a, name_b) <= 2
+        |ORDER BY id_a, id_b""".stripMargin)),
+    CatalogEntry("d9_entity_clusters", d9EntityClusters,
+      "entity resolution clusters",
+      Some {
+        // min-VARCHAR-label propagation unrolled over the fuzzy-pair graph
+        // (components are bounded by the d8 block, so 16 rounds carries a
+        // wide margin over the component diameter)
+        val steps = (1 to 16).map { i =>
+          s"""l$i AS MATERIALIZED (
+             |  SELECT p.id, least(p.lbl, coalesce(m.minn, p.lbl)) AS lbl
+             |  FROM l${i - 1} p LEFT JOIN (
+             |    SELECT u.dst AS id, min(q.lbl) AS minn
+             |    FROM und u JOIN l${i - 1} q ON q.id = u.src
+             |    GROUP BY u.dst) m ON m.id = p.id)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH a AS (
+           |  SELECT c_custkey AS id_a, c_name AS name_a, right(c_name, 2) AS blk
+           |  FROM customer),
+           |b AS (
+           |  SELECT c_custkey AS id_b, c_name AS name_b, right(c_name, 2) AS blk
+           |  FROM customer),
+           |pairs AS (
+           |  SELECT CAST(id_a AS VARCHAR) AS src, CAST(id_b AS VARCHAR) AS dst
+           |  FROM a JOIN b USING (blk)
+           |  WHERE id_a < id_b AND levenshtein(name_a, name_b) <= 2),
+           |und AS MATERIALIZED (
+           |  SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+           |verts AS (SELECT DISTINCT src AS id FROM und),
+           |l0 AS MATERIALIZED (SELECT id, id AS lbl FROM verts),
+           |$steps
+           |SELECT c.c_custkey,
+           |  coalesce(l16.lbl, CAST(c.c_custkey AS VARCHAR)) AS entity,
+           |  CAST(CAST(c.c_custkey AS VARCHAR) =
+           |    coalesce(l16.lbl, CAST(c.c_custkey AS VARCHAR)) AS INTEGER) AS is_canonical
+           |FROM customer c LEFT JOIN l16 ON l16.id = CAST(c.c_custkey AS VARCHAR)
+           |ORDER BY c.c_custkey""".stripMargin
+      }),
+    CatalogEntry("j7_knn_topk", simBruteTopK,
+      "exact brute-force cosine top-k KNN join (the ANN family's truth)",
+      Some {
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |      FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5 ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_lsh_topk", simLshTopK,
+      "LSH-bucketed ANN top-k",
+      Some {
+        val bucket = Similarity.lshBucketSqlDynamic("embedding", DIM,
+          Similarity.scaleNPlanesSql("embeddings"))
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding, $bucket AS bucket,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |      FROM scored)
+           |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5 ORDER BY src, rn""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_topk", simIvfTopK,
+      "IVF cell-bounded ANN top-k",
+      Some(Similarity.ivfHashTopKSql("embeddings", "vec_id", "embedding", DIM,
+        k = 5, nListsSql = Similarity.scaleNListsSql("embeddings"), nProbe = 3))),
+    CatalogEntry("a10_similarity_stats", a10SimilarityStats,
+      "similarity-score distribution statistics",
+      Some {
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
+           |      FROM scored),
+           |topk AS (SELECT src, round(cos, 6) AS cos FROM r WHERE rn <= 5)
+           |SELECT src, round(avg(cos), 6) AS avg_sim, round(max(cos), 6) AS max_sim,
+           |  round(min(cos), 6) AS min_sim, count(*) AS n_sim
+           |FROM topk GROUP BY src ORDER BY src""".stripMargin
+      }),
+    CatalogEntry("t1_language_id", t1LangId,
+      "n-gram heuristic language identification",
+      Some(s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
          |h AS (SELECT doc_id, $langHitCols FROM t)
-         |SELECT doc_id, $langArgmax AS lang_pred FROM h ORDER BY doc_id""".stripMargin,
-    "t11_vocab_prune" ->
-      """WITH terms AS (
+         |SELECT doc_id, $langArgmax AS lang_pred FROM h ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t2_quality_score", t2Quality,
+      "length/punctuation/stopword quality scoring",
+      Some("""WITH b AS (
+        |  SELECT doc_id, text,
+        |    CASE WHEN len(trim(text)) = 0 THEN 0
+        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
+        |    len(text) AS n_char,
+        |    len(text) - len(regexp_replace(text, '[\.,;:!\?]', '', 'g')) AS n_punct,
+        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+        |        x -> list_contains(['the','a','and','of','to','in','is','that'], x))) AS n_stop
+        |  FROM documents)
+        |SELECT doc_id, n_tokens,
+        |  round(CASE WHEN n_tokens = 0 THEN 0.0
+        |        ELSE CAST(len(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) / n_tokens END, 6) AS avg_token_len,
+        |  round(CASE WHEN n_char = 0 THEN 0.0 ELSE CAST(n_punct AS DOUBLE) / n_char END, 6) AS punct_ratio,
+        |  round(CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(n_stop AS DOUBLE) / n_tokens END, 6) AS stopword_ratio
+        |FROM b ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t3_token_count", t3TokenCount,
+      "whitespace token counting",
+      Some("""SELECT doc_id,
+        |  CASE WHEN len(trim(text)) = 0 THEN 0
+        |       ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ws_tokens,
+        |  len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS word_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t3b_bpe_tokens", t3bBpeTokens,
+      "GPT-2-style regex pretokenizer unit counts",
+      Some(s"""SELECT doc_id,
+         |  CAST(len(regexp_extract_all(text, '${bpePattern.replace("'", "''")}')) AS BIGINT) AS bpe_tokens,
+         |  CAST(CASE WHEN len(trim(text)) = 0 THEN 0
+         |       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS ws_tokens
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t4_fingerprint", t4Fingerprint,
+      "rolling-hash document fingerprints",
+      Some("""SELECT doc_id,
+        |  CAST(CASE WHEN len(text) = 0 THEN 0
+        |       ELSE list_sum(list_transform(generate_series(1, len(text)),
+        |              i -> i * ascii(substr(text, i, 1)))) % 1000000007 END AS BIGINT) AS fp,
+        |  md5(text) AS content_md5
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t5_corpus_filter", t5CorpusFilter,
+      "composed corpus filtering",
+      Some(s"""WITH b AS (
+         |  SELECT doc_id, text, source,
+         |    CASE WHEN len(trim(text)) = 0 THEN 0
+         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+         |    len(text) AS n_char,
+         |    len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS n_punct,
+         |    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+         |        x -> list_contains(['the','a','and','of','to','in','is','that'], x))) AS n_stop,
+         |    regexp_split_to_array(trim(text), '\\s+') AS toks
+         |  FROM documents),
+         |q AS (
+         |  SELECT doc_id, source, n_tokens,
+         |    round(CASE WHEN n_char = 0 THEN 0.0 ELSE CAST(n_punct AS DOUBLE) / n_char END, 6) AS punct_ratio,
+         |    round(CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(n_stop AS DOUBLE) / n_tokens END, 6) AS stopword_ratio,
+         |    $langHitCols
+         |  FROM b),
+         |l AS (SELECT *, $langArgmax AS lang_pred FROM q),
+         |canon AS (SELECT md5(text) AS h, min(doc_id) AS keep_id FROM documents GROUP BY md5(text))
+         |SELECT l.doc_id, l.n_tokens, l.punct_ratio, l.stopword_ratio, l.source
+         |FROM l JOIN documents d ON d.doc_id = l.doc_id
+         |JOIN canon c ON c.h = md5(d.text)
+         |WHERE l.doc_id = c.keep_id AND l.lang_pred = 'en'
+         |  AND l.n_tokens >= 10 AND l.punct_ratio < 0.2 AND l.stopword_ratio >= 0.02
+         |ORDER BY l.doc_id""".stripMargin)),
+    CatalogEntry("t6_winnowing", t6Winnowing,
+      "winnowing fingerprint selection",
+      Some("""WITH n AS (
+        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
+        |  FROM documents),
+        |g AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(norm) < 5 THEN CAST([] AS VARCHAR[])
+        |         ELSE list_transform(generate_series(1, len(norm) - 4),
+        |                i -> md5(substr(norm, i, 5))) END AS grams
+        |  FROM n),
+        |s AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(grams) = 0 THEN CAST([] AS VARCHAR[])
+        |         WHEN len(grams) - 3 < 1 THEN [list_min(grams)]
+        |         ELSE list_transform(generate_series(1, len(grams) - 3),
+        |                j -> list_min(grams[j:j+3])) END AS sel
+        |  FROM g),
+        |f AS (SELECT doc_id, list_distinct(sel) AS fps FROM s)
+        |SELECT doc_id, CAST(len(fps) AS INT) AS n_fp,
+        |       list_min(fps) AS fp_min, list_max(fps) AS fp_max
+        |FROM f ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t7_chunking", t7Chunking,
+      "token chunking with declared overlap",
+      Some("""WITH t AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks,
+        |    CASE WHEN len(trim(text)) = 0 THEN 0
+        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, toks, n,
+        |    CAST(unnest(generate_series(0,
+        |      CASE WHEN n <= 50 THEN 0
+        |           ELSE CAST(ceil(CAST(n - 10 AS DOUBLE) / 40) AS INTEGER) - 1 END)) AS INTEGER)
+        |      AS chunk_no
+        |  FROM t WHERE n > 0),
+        |s AS (
+        |  SELECT doc_id, chunk_no,
+        |    list_slice(toks, chunk_no * 40 + 1, least(chunk_no * 40 + 50, n)) AS ct
+        |  FROM c)
+        |SELECT doc_id, chunk_no, CAST(len(ct) AS INTEGER) AS n_chunk_tokens,
+        |       md5(array_to_string(ct, ' ')) AS chunk_hash
+        |FROM s ORDER BY doc_id, chunk_no""".stripMargin)),
+    CatalogEntry("t8_lang_confusion", t8LangConfusion,
+      "language-ID confusion audit",
+      Some(s"""WITH t AS (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
+         |h AS (SELECT doc_id, lang, $langHitCols FROM t),
+         |p AS (SELECT lang, $langArgmax AS lang_pred FROM h)
+         |SELECT lang, lang_pred, count(*) AS n FROM p
+         |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin)),
+    CatalogEntry("t9_top_bigrams", t9TopBigrams,
+      "top corpus bigrams",
+      Some("""WITH t AS (
+        |  SELECT regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+        |b AS (
+        |  SELECT unnest(CASE WHEN len(toks) >= 2 THEN
+        |    list_transform(generate_series(1, len(toks) - 1),
+        |      i -> toks[i] || ' ' || toks[i + 1])
+        |    ELSE [] END) AS bigram
+        |  FROM t)
+        |SELECT bigram, count(*) AS n FROM b
+        |GROUP BY bigram ORDER BY n DESC, bigram ASC LIMIT 20""".stripMargin)),
+    CatalogEntry("t10_tfidf", t10Tfidf,
+      "TF-IDF weighting",
+      Some("""WITH terms AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
+        |idf AS (
+        |  SELECT term,
+        |    ln((CAST((SELECT count(*) FROM documents) AS DOUBLE) + 1.0) /
+        |       (count(*) + CAST(1.0 AS DOUBLE))) + 1.0 AS idf
+        |  FROM tf GROUP BY term),
+        |r AS (
+        |  SELECT tf.doc_id, tf.term, tf.tf * idf.idf AS tfidf,
+        |    row_number() OVER (PARTITION BY tf.doc_id
+        |      ORDER BY tf.tf * idf.idf DESC, tf.term ASC) AS rank
+        |  FROM tf JOIN idf USING (term))
+        |SELECT doc_id, CAST(rank AS INTEGER) AS rank, term, round(tfidf, 6) AS tfidf
+        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)),
+    CatalogEntry("t11_vocab_prune", t11VocabPrune,
+      "vocabulary pruning by document frequency",
+      Some("""WITH terms AS (
         |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
         |  FROM documents),
         |kept AS (
@@ -2656,9 +2877,10 @@ object TextSim {
         |  GROUP BY t.doc_id),
         |tot AS (SELECT doc_id, count(*) AS total_tokens FROM terms GROUP BY doc_id)
         |SELECT tot.doc_id, coalesce(k.kept_tokens, 0) AS kept_tokens, tot.total_tokens
-        |FROM tot LEFT JOIN k USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "t12_pack_sequences" ->
-      """WITH tok AS (
+        |FROM tot LEFT JOIN k USING (doc_id) ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t12_pack_sequences", t12PackSequences,
+      "sequence packing to a context length",
+      Some("""WITH tok AS (
         |  SELECT doc_id,
         |    CASE WHEN len(trim(text)) = 0 THEN 0
         |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
@@ -2670,20 +2892,10 @@ object TextSim {
         |  FROM tok)
         |SELECT doc_id, n_tokens, "offset",
         |  "offset" // 256 AS pack_id, "offset" % 256 AS offset_in_pack
-        |FROM off ORDER BY doc_id""".stripMargin,
-    "t17_shuffle_shards" -> {
-      val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 97L)
-      val us = graft.functions.ColFns.pseudoUniformSql("doc_id", 131L)
-      s"""WITH d AS (
-         |  SELECT doc_id, $u AS u,
-         |    CAST(floor($us * 16) AS INT) AS shard
-         |  FROM documents)
-         |SELECT doc_id, shard,
-         |  row_number() OVER (PARTITION BY shard ORDER BY u ASC, doc_id ASC) - 1 AS pos
-         |FROM d ORDER BY doc_id""".stripMargin
-    },
-    "t12b_pack_sharded" ->
-      """WITH tok AS (
+        |FROM off ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t12b_pack_sharded", t12bPackSharded,
+      "sharded sequence packing twin",
+      Some("""WITH tok AS (
         |  SELECT doc_id,
         |    CASE WHEN len(trim(text)) = 0 THEN 0
         |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
@@ -2698,9 +2910,23 @@ object TextSim {
         |SELECT doc_id, shard, n_tokens, offset_in_shard,
         |  offset_in_shard // 256 AS pack_in_shard,
         |  offset_in_shard % 256 AS offset_in_pack
-        |FROM off ORDER BY doc_id""".stripMargin,
-    "t13_quality_rules" ->
-      s"""WITH $qualitySignalsSqlCte
+        |FROM off ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t17_shuffle_shards", t17ShuffleShards,
+      "deterministic shard shuffle",
+      Some {
+        val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 97L)
+        val us = graft.functions.ColFns.pseudoUniformSql("doc_id", 131L)
+        s"""WITH d AS (
+           |  SELECT doc_id, $u AS u,
+           |    CAST(floor($us * 16) AS INT) AS shard
+           |  FROM documents)
+           |SELECT doc_id, shard,
+           |  row_number() OVER (PARTITION BY shard ORDER BY u ASC, doc_id ASC) - 1 AS pos
+           |FROM d ORDER BY doc_id""".stripMargin
+      }),
+    CatalogEntry("t13_quality_rules", t13QualityRules,
+      "rule-based quality gate",
+      Some(s"""WITH $qualitySignalsSqlCte
         |SELECT doc_id, n_words, round(mean_word_len, 6) AS mean_word_len,
         |  round(symbol_ratio, 6) AS symbol_ratio, stop_hits,
         |  CAST(n_words BETWEEN 20 AND 500 AS INT) AS flag_word_count,
@@ -2709,11 +2935,12 @@ object TextSim {
         |  CAST(stop_hits >= 2 AS INT) AS flag_stopword,
         |  CAST(n_words BETWEEN 20 AND 500 AND mean_word_len BETWEEN 3.0 AND 10.0
         |    AND symbol_ratio < 0.1 AND stop_hits >= 2 AS INT) AS passes
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin)),
     // the same signal CTE, rolled up with d1's canonical-dup rule —
     // one shared text so card and per-doc gate can never drift
-    "t24_dataset_card" ->
-      s"""WITH $qualitySignalsSqlCte,
+    CatalogEntry("t24_dataset_card", t24DatasetCard,
+      "dataset-card snapshot report (lang x source, dup, token stats)",
+      Some(s"""WITH $qualitySignalsSqlCte,
         |d AS (
         |  SELECT lang, source, n_words,
         |    CAST(n_words BETWEEN 20 AND 500 AND mean_word_len BETWEEN 3.0 AND 10.0
@@ -2725,9 +2952,10 @@ object TextSim {
         |  CAST(sum(n_words) AS BIGINT) AS total_tokens,
         |  CAST(sum(passes) AS BIGINT) AS n_quality_pass,
         |  CAST(sum(is_dup) AS BIGINT) AS n_exact_dups
-        |FROM d GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "t14_pii_redact" ->
-      """WITH c AS (
+        |FROM d GROUP BY lang, source ORDER BY lang, source""".stripMargin)),
+    CatalogEntry("t14_pii_redact", t14PiiRedact,
+      "PII pattern redaction",
+      Some("""WITH c AS (
         |  SELECT c_custkey,
         |    c_name || ' <user' || c_custkey || '@example.com> ref '
         |      || CAST(c_custkey * 7919 + 104729 AS VARCHAR) AS contact
@@ -2745,9 +2973,10 @@ object TextSim {
         |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
         |      '[0-9]{4,}', '[NUM]', 'g'),
         |    '\[NUM\]')) AS INT) AS n_longnums
-        |FROM c ORDER BY c_custkey""".stripMargin,
-    "t15_repetition" ->
-      """WITH g AS (
+        |FROM c ORDER BY c_custkey""".stripMargin)),
+    CatalogEntry("t15_repetition", t15Repetition,
+      "repetition-ratio scoring",
+      Some("""WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) >= 3 THEN
         |      list_transform(generate_series(1, len(toks) - 2),
@@ -2763,9 +2992,10 @@ object TextSim {
         |  CAST(round(CASE WHEN len(grams) = 0 THEN 0.0
         |    ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END, 6)
         |    > 0.2 AS INT) AS flag_repetitive
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "d14_span_dedup" ->
-      """WITH toks AS (
+        |FROM g ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("d14_span_dedup", d14SpanDedup,
+      "k-token span dedup with rewrite payload",
+      Some("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |blocks AS (
@@ -2789,9 +3019,10 @@ object TextSim {
         |    AS drop_ratio,
         |  coalesce(kept_md5, md5('')) AS kept_md5
         |FROM documents d LEFT JOIN perdoc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "t19_boilerplate_spans" ->
-      """WITH toks AS (
+        |ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t19_boilerplate_spans", t19BoilerplateSpans,
+      "boilerplate span detection",
+      Some("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |blocks AS (
@@ -2818,9 +3049,10 @@ object TextSim {
         |    AS boiler_ratio,
         |  coalesce(clean_md5, md5('')) AS clean_md5
         |FROM documents d LEFT JOIN perdoc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "t20_lm_perplexity" ->
-      """WITH toks AS (
+        |ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t20_lm_perplexity", t20LmPerplexity,
+      "n-gram LM perplexity scoring (trained-on-half discipline)",
+      Some("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |pairs AS (
@@ -2852,422 +3084,267 @@ object TextSim {
         |  CASE WHEN nll <= p33 THEN 'head'
         |       WHEN nll <= p66 THEN 'middle' ELSE 'tail' END AS bucket
         |FROM perdoc CROSS JOIN cuts
-        |ORDER BY doc_id""".stripMargin,
-    "sim_mmr_rerank" -> {
-      val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
-      val dot12 = Similarity.dotSql("e1.embedding", "e2.embedding", DIM)
-      s"""WITH n AS (SELECT vec_id, embedding,
-         |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
-         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-         |cand AS MATERIALIZED (
-         |  SELECT src, dst, round(cos, 6) AS rel FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY src
-         |      ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |  WHERE rn <= 5),
-         |pair AS MATERIALIZED (
-         |  SELECT c1.src, c1.dst AS d1, c2.dst AS d2,
-         |    round($dot12 / (e1.nrm * e2.nrm), 6) AS cc
-         |  FROM cand c1 JOIN cand c2 ON c1.src = c2.src AND c1.dst <> c2.dst
-         |  JOIN n e1 ON e1.vec_id = c1.dst
-         |  JOIN n e2 ON e2.vec_id = c2.dst),
-         |candi AS MATERIALIZED (
-         |  SELECT src, dst, rel,
-         |    CAST(round(rel * 1000000) AS BIGINT) AS irel FROM cand),
-         |pairi AS MATERIALIZED (
-         |  SELECT src, d1, d2,
-         |    CAST(round(cc * 1000000) AS BIGINT) AS icc FROM pair),
-         |s1 AS MATERIALIZED (
-         |  SELECT src, dst AS s1, rel AS rel1 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY src
-         |      ORDER BY rel DESC, dst ASC) AS rk FROM candi)
-         |  WHERE rk = 1),
-         |r2 AS (
-         |  SELECT c.src, c.dst, 7 * c.irel - 3 * p.icc AS immr
-         |  FROM candi c
-         |  JOIN s1 ON c.src = s1.src AND c.dst <> s1.s1
-         |  JOIN pairi p ON p.src = c.src AND p.d1 = c.dst AND p.d2 = s1.s1),
-         |s2 AS MATERIALIZED (
-         |  SELECT src, dst AS s2, immr AS immr2 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY src
-         |      ORDER BY immr DESC, dst ASC) AS rk FROM r2)
-         |  WHERE rk = 1),
-         |r3 AS (
-         |  SELECT c.src, c.dst,
-         |    7 * c.irel - 3 * greatest(p1.icc, p2.icc) AS immr
-         |  FROM candi c
-         |  JOIN s1 ON c.src = s1.src
-         |  JOIN s2 ON c.src = s2.src
-         |  JOIN pairi p1 ON p1.src = c.src AND p1.d1 = c.dst AND p1.d2 = s1.s1
-         |  JOIN pairi p2 ON p2.src = c.src AND p2.d1 = c.dst AND p2.d2 = s2.s2
-         |  WHERE c.dst <> s1.s1 AND c.dst <> s2.s2),
-         |s3 AS MATERIALIZED (
-         |  SELECT src, dst AS s3, immr AS immr3 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY src
-         |      ORDER BY immr DESC, dst ASC) AS rk FROM r3)
-         |  WHERE rk = 1)
-         |SELECT src, 1 AS rnk, s1 AS dst, rel1 AS score FROM s1
-         |UNION ALL
-         |SELECT src, 2, s2, CAST(immr2 AS DOUBLE) / 10000000 FROM s2
-         |UNION ALL
-         |SELECT src, 3, s3, CAST(immr3 AS DOUBLE) / 10000000 FROM s3
-         |ORDER BY src, rnk""".stripMargin
-    },
-    "a23_countmin_ngrams" -> {
-      def hvSql(p: Int) =
-        s"(ascii(substr(m, $p, 1)) - CASE WHEN substr(m, $p, 1) >= 'a' THEN 87 ELSE 48 END)"
-      val jRows = (0 until 3).map { j =>
-        s"""SELECT g, exact_cnt, $j AS j,
-           |  ((${hvSql(8 * j + 1)}) * 16 + ${hvSql(8 * j + 2)}) % 64 AS bucket
-           |FROM grams""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH toks AS (
-         |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-         |  FROM documents),
-         |grams0 AS (
-         |  SELECT toks[i] || ' ' || toks[i+1] AS g
-         |  FROM toks, unnest(generate_series(1, len(toks) - 1)) AS gs(i)),
-         |grams AS (
-         |  SELECT g, CAST(count(*) AS BIGINT) AS exact_cnt, md5(g) AS m
-         |  FROM grams0 GROUP BY g),
-         |jrows AS (
-         |$jRows),
-         |cells AS (
-         |  SELECT j, bucket, CAST(sum(exact_cnt) AS BIGINT) AS cell
-         |  FROM jrows GROUP BY j, bucket),
-         |top AS (
-         |  SELECT g AS tg, exact_cnt FROM grams
-         |  ORDER BY exact_cnt DESC, g ASC LIMIT 10)
-         |SELECT t.tg AS gram, t.exact_cnt,
-         |  CAST(min(c.cell) AS BIGINT) AS est_cnt,
-         |  CAST(min(c.cell) = t.exact_cnt AS INT) AS tight
-         |FROM top t
-         |JOIN jrows r ON r.g = t.tg
-         |JOIN cells c ON c.j = r.j AND c.bucket = r.bucket
-         |GROUP BY t.tg, t.exact_cnt
-         |ORDER BY t.exact_cnt DESC, gram ASC""".stripMargin
-    },
-    "t23_curriculum_order" -> {
-      val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 229L)
-      val sh = graft.functions.ColFns.pseudoUniformSql("doc_id", 241L)
-      s"""WITH toks AS (
-         |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-         |  FROM documents),
-         |pairs AS (
-         |  SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-         |  FROM toks, unnest(generate_series(1, len(toks) - 1)) AS g(i)),
-         |big AS (
-         |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
-         |  FROM pairs WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-         |uni AS (
-         |  SELECT w1, CAST(count(*) AS BIGINT) AS c1
-         |  FROM pairs WHERE doc_id % 2 = 0 GROUP BY 1),
-         |voc AS (
-         |  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM (
-         |    SELECT w1 AS w FROM pairs WHERE doc_id % 2 = 0
-         |    UNION ALL SELECT w2 FROM pairs WHERE doc_id % 2 = 0)),
-         |perdoc AS (
-         |  SELECT p.doc_id,
-         |    round(-avg(ln((coalesce(b.c2, 0) + 1.0) /
-         |      (coalesce(u.c1, 0) + v.v))), 6) AS nll
-         |  FROM pairs p
-         |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-         |  LEFT JOIN uni u ON p.w1 = u.w1
-         |  CROSS JOIN voc v
-         |  GROUP BY p.doc_id),
-         |cuts AS (
-         |  SELECT quantile_cont(nll, 0.33) AS p33, quantile_cont(nll, 0.66) AS p66
-         |  FROM perdoc),
-         |ranked AS (
-         |  SELECT doc_id, nll,
-         |    CASE WHEN nll <= p33 THEN 'head'
-         |         WHEN nll <= p66 THEN 'middle' ELSE 'tail' END AS bucket,
-         |    $u AS u,
-         |    CAST(floor($sh * 8) AS INT) AS shard
-         |  FROM perdoc CROSS JOIN cuts)
-         |SELECT doc_id, bucket, shard,
-         |  CAST(row_number() OVER (PARTITION BY bucket, shard
-         |    ORDER BY u, doc_id) - 1 AS BIGINT) AS pos,
-         |  nll
-         |FROM ranked
-         |ORDER BY doc_id""".stripMargin
-    },
-    "t18_quality_nb" -> nbQualityOracle(
+        |ORDER BY doc_id""".stripMargin)),
+    CatalogEntry("t18_quality_nb", t18QualityNb,
+      "NB quality classifier: trained on half, served broadcast",
+      Some(nbQualityOracle(
       """SELECT doc_id, n_toks, nb_score,
         |  CAST(nb_score > 0 AS INT) AS pred_good, weak_label,
         |  CAST((nb_score > 0) = (weak_label = 1) AS INT) AS agree
-        |FROM perdoc ORDER BY doc_id""".stripMargin),
-    "e12_stream_quality_gate" -> nbQualityOracle(
+        |FROM perdoc ORDER BY doc_id""".stripMargin))),
+    CatalogEntry("t21_token_budget", t21TokenBudget,
+      "token-budget prefix fill without a corpus-sized window",
+      Some {
+        val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 173L)
+        val sh = graft.functions.ColFns.pseudoUniformSql("doc_id", 211L)
+        s"""WITH docs AS (
+           |  SELECT doc_id, lang,
+           |    CAST(CASE WHEN len(trim(text)) = 0 THEN 0
+           |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT)
+           |      AS n_toks,
+           |    $u AS u,
+           |    CAST(floor($sh * 8) AS INT) AS shard
+           |  FROM documents),
+           |bylang AS (
+           |  SELECT lang, CAST(sum(n_toks) AS BIGINT) AS lang_toks
+           |  FROM docs GROUP BY lang),
+           |tot AS (SELECT CAST(sum(lang_toks) AS DOUBLE) AS tot_toks FROM bylang),
+           |ws AS (
+           |  SELECT sum(sqrt(lang_toks / tot_toks)) AS wsum
+           |  FROM bylang CROSS JOIN tot),
+           |budgets AS (
+           |  SELECT lang,
+           |    CAST(floor(round(0.2 * tot_toks *
+           |      (sqrt(lang_toks / tot_toks) / wsum), 6)) AS BIGINT) AS budget
+           |  FROM bylang CROSS JOIN tot CROSS JOIN ws),
+           |shard_tots AS (
+           |  SELECT lang, shard, CAST(sum(n_toks) AS BIGINT) AS shard_toks
+           |  FROM docs GROUP BY lang, shard),
+           |offsets AS (
+           |  SELECT lang, shard,
+           |    CAST(coalesce(sum(shard_toks) OVER (PARTITION BY lang ORDER BY shard
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           |      AS shard_offset
+           |  FROM shard_tots),
+           |cums AS (
+           |  SELECT doc_id, lang, n_toks, shard,
+           |    CAST(coalesce(sum(n_toks) OVER (PARTITION BY lang, shard
+           |      ORDER BY u, doc_id
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           |      AS cum_in_shard
+           |  FROM docs)
+           |SELECT c.doc_id, c.lang, c.n_toks, c.shard,
+           |  o.shard_offset + c.cum_in_shard AS cum_before,
+           |  CAST(o.shard_offset + c.cum_in_shard + c.n_toks <= b.budget AS INT)
+           |    AS selected
+           |FROM cums c
+           |JOIN offsets o ON c.lang = o.lang AND c.shard = o.shard
+           |JOIN budgets b ON c.lang = b.lang
+           |ORDER BY doc_id""".stripMargin
+      }),
+    CatalogEntry("t22_bpe_merges", t22BpeMerges,
+      "BPE merge induction with vocab-size / min-pair-frequency stop rules",
+      Some {
+        val out = (1 to 8).map(i =>
+          s"SELECT $i AS step, a AS lhs, b AS rhs, cnt AS pair_count FROM t$i")
+          .mkString("\nUNION ALL\n")
+        s"""WITH $bpeStepsSql
+           |$out
+           |ORDER BY step""".stripMargin
+      }),
+    CatalogEntry("t22b_bpe_apply", t22bBpeApply,
+      "learned BPE merges applied back over the corpus",
+      Some {
+        // replay the learned merges over every word: nested literal
+        // replaces in merge order, each pattern read from its t_i argmax.
+        // coalesce to an impossible sentinel (chr(1) can't appear in a
+        // whitespace token's sentinel string): a corpus that exhausts its
+        // merges early leaves later t_i EMPTY, and a bare scalar subquery
+        // would then NULL-poison the whole replace chain — the Scala side
+        // gracefully applies the truncated merge list, so must the oracle
+        val applied = (1 to 8).foldLeft("s0.s") { (acc, i) =>
+          s"""replace($acc,
+             |  '_' || coalesce((SELECT a FROM t$i), chr(1)) || '__' || coalesce((SELECT b FROM t$i), chr(1)) || '_',
+             |  '_' || coalesce((SELECT a FROM t$i), chr(1)) || coalesce((SELECT b FROM t$i), chr(1)) || '_')""".stripMargin
+        }
+        s"""WITH $bpeStepsSql,
+           |dtoks AS (
+           |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
+           |  FROM documents),
+           |s0 AS MATERIALIZED (
+           |  SELECT doc_id, len(w) AS n_chars,
+           |    '_' || array_to_string(list_transform(
+           |      generate_series(1, len(w)), i -> substring(w, i, 1)), '__') || '_'
+           |      AS s
+           |  FROM dtoks),
+           |appl AS MATERIALIZED (
+           |  SELECT doc_id, n_chars,
+           |    len(string_split(regexp_replace($applied,
+           |      '^_|_$$', '', 'g'), '__')) AS n_sym
+           |  FROM s0)
+           |SELECT doc_id, CAST(count(*) AS BIGINT) AS ws_tokens,
+           |  CAST(sum(n_chars) AS BIGINT) AS char_tokens,
+           |  CAST(sum(n_sym) AS BIGINT) AS bpe_tokens,
+           |  round(CAST(sum(n_chars) AS DOUBLE) / sum(n_sym), 6) AS compression
+           |FROM appl GROUP BY doc_id
+           |ORDER BY doc_id""".stripMargin
+      }),
+    CatalogEntry("t23_curriculum_order", t23CurriculumOrder,
+      "curriculum ordering by quality band",
+      Some {
+        val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 229L)
+        val sh = graft.functions.ColFns.pseudoUniformSql("doc_id", 241L)
+        s"""WITH toks AS (
+           |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
+           |  FROM documents),
+           |pairs AS (
+           |  SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
+           |  FROM toks, unnest(generate_series(1, len(toks) - 1)) AS g(i)),
+           |big AS (
+           |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
+           |  FROM pairs WHERE doc_id % 2 = 0 GROUP BY 1, 2),
+           |uni AS (
+           |  SELECT w1, CAST(count(*) AS BIGINT) AS c1
+           |  FROM pairs WHERE doc_id % 2 = 0 GROUP BY 1),
+           |voc AS (
+           |  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM (
+           |    SELECT w1 AS w FROM pairs WHERE doc_id % 2 = 0
+           |    UNION ALL SELECT w2 FROM pairs WHERE doc_id % 2 = 0)),
+           |perdoc AS (
+           |  SELECT p.doc_id,
+           |    round(-avg(ln((coalesce(b.c2, 0) + 1.0) /
+           |      (coalesce(u.c1, 0) + v.v))), 6) AS nll
+           |  FROM pairs p
+           |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
+           |  LEFT JOIN uni u ON p.w1 = u.w1
+           |  CROSS JOIN voc v
+           |  GROUP BY p.doc_id),
+           |cuts AS (
+           |  SELECT quantile_cont(nll, 0.33) AS p33, quantile_cont(nll, 0.66) AS p66
+           |  FROM perdoc),
+           |ranked AS (
+           |  SELECT doc_id, nll,
+           |    CASE WHEN nll <= p33 THEN 'head'
+           |         WHEN nll <= p66 THEN 'middle' ELSE 'tail' END AS bucket,
+           |    $u AS u,
+           |    CAST(floor($sh * 8) AS INT) AS shard
+           |  FROM perdoc CROSS JOIN cuts)
+           |SELECT doc_id, bucket, shard,
+           |  CAST(row_number() OVER (PARTITION BY bucket, shard
+           |    ORDER BY u, doc_id) - 1 AS BIGINT) AS pos,
+           |  nll
+           |FROM ranked
+           |ORDER BY doc_id""".stripMargin
+      }),
+    CatalogEntry("e12_stream_quality_gate", e12StreamQualityGate,
+      "streamed quality gate equals the batch rules",
+      Some(nbQualityOracle(
       """SELECT doc_id, n_toks, nb_score,
         |  CAST(nb_score > 0 AS INT) AS admitted
-        |FROM perdoc WHERE doc_id % 3 = 0 ORDER BY doc_id""".stripMargin),
-    "t21_token_budget" -> {
-      val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 173L)
-      val sh = graft.functions.ColFns.pseudoUniformSql("doc_id", 211L)
-      s"""WITH docs AS (
-         |  SELECT doc_id, lang,
-         |    CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT)
-         |      AS n_toks,
-         |    $u AS u,
-         |    CAST(floor($sh * 8) AS INT) AS shard
-         |  FROM documents),
-         |bylang AS (
-         |  SELECT lang, CAST(sum(n_toks) AS BIGINT) AS lang_toks
-         |  FROM docs GROUP BY lang),
-         |tot AS (SELECT CAST(sum(lang_toks) AS DOUBLE) AS tot_toks FROM bylang),
-         |ws AS (
-         |  SELECT sum(sqrt(lang_toks / tot_toks)) AS wsum
-         |  FROM bylang CROSS JOIN tot),
-         |budgets AS (
-         |  SELECT lang,
-         |    CAST(floor(round(0.2 * tot_toks *
-         |      (sqrt(lang_toks / tot_toks) / wsum), 6)) AS BIGINT) AS budget
-         |  FROM bylang CROSS JOIN tot CROSS JOIN ws),
-         |shard_tots AS (
-         |  SELECT lang, shard, CAST(sum(n_toks) AS BIGINT) AS shard_toks
-         |  FROM docs GROUP BY lang, shard),
-         |offsets AS (
-         |  SELECT lang, shard,
-         |    CAST(coalesce(sum(shard_toks) OVER (PARTITION BY lang ORDER BY shard
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |      AS shard_offset
-         |  FROM shard_tots),
-         |cums AS (
-         |  SELECT doc_id, lang, n_toks, shard,
-         |    CAST(coalesce(sum(n_toks) OVER (PARTITION BY lang, shard
-         |      ORDER BY u, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |      AS cum_in_shard
-         |  FROM docs)
-         |SELECT c.doc_id, c.lang, c.n_toks, c.shard,
-         |  o.shard_offset + c.cum_in_shard AS cum_before,
-         |  CAST(o.shard_offset + c.cum_in_shard + c.n_toks <= b.budget AS INT)
-         |    AS selected
-         |FROM cums c
-         |JOIN offsets o ON c.lang = o.lang AND c.shard = o.shard
-         |JOIN budgets b ON c.lang = b.lang
-         |ORDER BY doc_id""".stripMargin
-    },
-    "t22_bpe_merges" -> {
-      val out = (1 to 8).map(i =>
-        s"SELECT $i AS step, a AS lhs, b AS rhs, cnt AS pair_count FROM t$i")
-        .mkString("\nUNION ALL\n")
-      s"""WITH $bpeStepsSql
-         |$out
-         |ORDER BY step""".stripMargin
-    },
-    "t22b_bpe_apply" -> {
-      // replay the learned merges over every word: nested literal
-      // replaces in merge order, each pattern read from its t_i argmax.
-      // coalesce to an impossible sentinel (chr(1) can't appear in a
-      // whitespace token's sentinel string): a corpus that exhausts its
-      // merges early leaves later t_i EMPTY, and a bare scalar subquery
-      // would then NULL-poison the whole replace chain — the Scala side
-      // gracefully applies the truncated merge list, so must the oracle
-      val applied = (1 to 8).foldLeft("s0.s") { (acc, i) =>
-        s"""replace($acc,
-           |  '_' || coalesce((SELECT a FROM t$i), chr(1)) || '__' || coalesce((SELECT b FROM t$i), chr(1)) || '_',
-           |  '_' || coalesce((SELECT a FROM t$i), chr(1)) || coalesce((SELECT b FROM t$i), chr(1)) || '_')""".stripMargin
-      }
-      s"""WITH $bpeStepsSql,
-         |dtoks AS (
-         |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-         |  FROM documents),
-         |s0 AS MATERIALIZED (
-         |  SELECT doc_id, len(w) AS n_chars,
-         |    '_' || array_to_string(list_transform(
-         |      generate_series(1, len(w)), i -> substring(w, i, 1)), '__') || '_'
-         |      AS s
-         |  FROM dtoks),
-         |appl AS MATERIALIZED (
-         |  SELECT doc_id, n_chars,
-         |    len(string_split(regexp_replace($applied,
-         |      '^_|_$$', '', 'g'), '__')) AS n_sym
-         |  FROM s0)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS ws_tokens,
-         |  CAST(sum(n_chars) AS BIGINT) AS char_tokens,
-         |  CAST(sum(n_sym) AS BIGINT) AS bpe_tokens,
-         |  round(CAST(sum(n_chars) AS DOUBLE) / sum(n_sym), 6) AS compression
-         |FROM appl GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin
-    },
-    "sim_ann0_ivf_index" -> {
-      // the build recomputed END-TO-END from the raw embeddings table:
-      // hash-pick centroids (same pseudo-uniform, same tie-break),
-      // argmin assignment, per-list inventory — a hash match proves the
-      // persisted ivf0_* artifacts ARE the declared function of the
-      // corpus, which is what lets every consumer read them blindly
-      import graft.functions.ColFns
-      val u = ColFns.pseudoUniformSql("vec_id", 13L)
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val vc = Similarity.dotSql("e.v", "c.cv", DIM)
-      val nn = Similarity.dotSql("e.v", "e.v", DIM)
-      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-         |cents AS (
-         |  SELECT list, cv FROM (
-         |    SELECT v AS cv,
-         |      row_number() OVER (ORDER BY $u ASC, vec_id ASC) AS list
-         |    FROM e)
-         |  WHERE list <= ${Similarity.scaleNListsSql("e")}),
-         |ranked AS (
-         |  SELECT e.vec_id, c.list, ($cc - 2.0 * $vc) AS rank_d,
-         |         sqrt($nn) AS nrm
-         |  FROM e CROSS JOIN cents c),
-         |assigned AS (SELECT * FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY rank_d ASC, list ASC) AS arn FROM ranked)
-         |  WHERE arn = 1)
-         |SELECT list, count(*) AS n_vectors,
-         |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
-         |  round(sum(nrm), 4) AS norm_mass
-         |FROM assigned GROUP BY list ORDER BY list""".stripMargin
-    },
-    "sim_ivf_persisted" -> {
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
-      val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-      s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-         |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}),
-         |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
-         |pr AS (
-         |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
-         |  FROM q CROSS JOIN cents c),
-         |probes AS (SELECT * FROM (
-         |    SELECT pr.*, row_number() OVER (PARTITION BY src
-         |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
-         |  WHERE prn <= 3),
-         |scored AS (
-         |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
-         |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src
-         |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
-         |ORDER BY src, rn""".stripMargin
-    },
-    "sim_ivf_deletes" -> {
-      // the persisted-serve oracle with the tombstone rule applied to
-      // the LIST rows (deleted ids neither query nor serve)
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
-      val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-      s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-         |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
-         |          WHERE vec_id % 13 <> 0),
-         |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
-         |pr AS (
-         |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
-         |  FROM q CROSS JOIN cents c),
-         |probes AS (SELECT * FROM (
-         |    SELECT pr.*, row_number() OVER (PARTITION BY src
-         |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
-         |  WHERE prn <= 3),
-         |scored AS (
-         |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
-         |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src
-         |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
-         |ORDER BY src, rn""".stripMargin
-    },
-    "sim_ivf_compaction" -> {
-      // deliberately reads the PRE-compaction v1 lists plus the
-      // tombstone rule — the Spark side serves from the compacted v2
-      // with no delete logic, so a hash match IS the proof that the
-      // nightly rewrite dropped exactly the tombstoned rows
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
-      val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-      s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-         |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
-         |          WHERE vec_id % 13 <> 0),
-         |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
-         |pr AS (
-         |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
-         |  FROM q CROSS JOIN cents c),
-         |probes AS (SELECT * FROM (
-         |    SELECT pr.*, row_number() OVER (PARTITION BY src
-         |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
-         |  WHERE prn <= 3),
-         |scored AS (
-         |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
-         |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src
-         |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
-         |ORDER BY src, rn""".stripMargin
-    },
-    "sim_ivf_trained" -> {
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
-      val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-      s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf_t_centroids")}),
-         |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf_t_lists")}),
-         |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
-         |pr AS (
-         |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
-         |  FROM q CROSS JOIN cents c),
-         |probes AS (SELECT * FROM (
-         |    SELECT pr.*, row_number() OVER (PARTITION BY src
-         |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
-         |  WHERE prn <= 3),
-         |scored AS (
-         |  SELECT p.src, l.vec_id AS dst, $qd / (p.qn * l.nrm) AS cos
-         |  FROM probes p JOIN lists l USING (list) WHERE p.src <> l.vec_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src
-         |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |SELECT src, rn, dst, round(cos, 6) AS cos FROM r WHERE rn <= 5
-         |ORDER BY src, rn""".stripMargin
-    },
-    "sim_filtered_ivf" -> {
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
-      val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-      s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-         |lists AS (SELECT list, vec_id, v, nrm, label
-         |          FROM ${artifactSql("ivf0_lists")}),
-         |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn, label AS ql
-         |      FROM lists WHERE vec_id % 7 = 0),
-         |pr AS (
-         |  SELECT q.src, q.qv, q.qn, q.ql, c.list, ($cc - 2.0 * $qc) AS rank_d
-         |  FROM q CROSS JOIN cents c),
-         |probes AS (SELECT * FROM (
-         |    SELECT pr.*, row_number() OVER (PARTITION BY src
-         |      ORDER BY rank_d ASC, list ASC) AS prn FROM pr)
-         |  WHERE prn <= 3),
-         |scored AS (
-         |  SELECT p.src, l.vec_id AS dst, l.label, $qd / (p.qn * l.nrm) AS cos
-         |  FROM probes p JOIN lists l USING (list)
-         |  WHERE p.src <> l.vec_id AND l.label = p.ql),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY src
-         |        ORDER BY cos DESC, dst ASC) AS rn FROM scored)
-         |SELECT src, rn, dst, label, round(cos, 6) AS cos FROM r WHERE rn <= 5
-         |ORDER BY src, rn""".stripMargin
-    },
-    "sim_ivf_incremental" -> {
-      import graft.functions.ColFns
-      val u = ColFns.pseudoUniformSql("vec_id", 13L)
-      val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
-      val vc = Similarity.dotSql("a.v", "c.cv", DIM)
-      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-         |cents AS (
-         |  SELECT list, cv FROM (
-         |    SELECT v AS cv,
-         |      row_number() OVER (ORDER BY $u ASC, vec_id ASC) AS list
-         |    FROM e WHERE vec_id % 5 <> 0)
-         |  WHERE list <= ${Similarity.scaleNListsSql("e WHERE vec_id % 5 <> 0")}),
-         |ranked AS (
-         |  SELECT a.vec_id, c.list, round(($cc - 2.0 * $vc), 6) AS rank_d
-         |  FROM (SELECT * FROM e WHERE vec_id % 5 = 0) a CROSS JOIN cents c),
-         |arn AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |          ORDER BY rank_d ASC, list ASC) AS arn FROM ranked)
-         |SELECT vec_id, list, rank_d FROM arn WHERE arn = 1
-         |ORDER BY vec_id""".stripMargin
-    },
-    "d10_contamination" ->
-      """WITH toks AS (
+        |FROM perdoc WHERE doc_id % 3 = 0 ORDER BY doc_id""".stripMargin))),
+    CatalogEntry("a23_countmin_ngrams", a23CountminNgrams,
+      "count-min sketch over corpus bigrams with the >=-exact guarantee gated",
+      Some {
+        def hvSql(p: Int) =
+          s"(ascii(substr(m, $p, 1)) - CASE WHEN substr(m, $p, 1) >= 'a' THEN 87 ELSE 48 END)"
+        val jRows = (0 until 3).map { j =>
+          s"""SELECT g, exact_cnt, $j AS j,
+             |  ((${hvSql(8 * j + 1)}) * 16 + ${hvSql(8 * j + 2)}) % 64 AS bucket
+             |FROM grams""".stripMargin
+        }.mkString("\nUNION ALL\n")
+        s"""WITH toks AS (
+           |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
+           |  FROM documents),
+           |grams0 AS (
+           |  SELECT toks[i] || ' ' || toks[i+1] AS g
+           |  FROM toks, unnest(generate_series(1, len(toks) - 1)) AS gs(i)),
+           |grams AS (
+           |  SELECT g, CAST(count(*) AS BIGINT) AS exact_cnt, md5(g) AS m
+           |  FROM grams0 GROUP BY g),
+           |jrows AS (
+           |$jRows),
+           |cells AS (
+           |  SELECT j, bucket, CAST(sum(exact_cnt) AS BIGINT) AS cell
+           |  FROM jrows GROUP BY j, bucket),
+           |top AS (
+           |  SELECT g AS tg, exact_cnt FROM grams
+           |  ORDER BY exact_cnt DESC, g ASC LIMIT 10)
+           |SELECT t.tg AS gram, t.exact_cnt,
+           |  CAST(min(c.cell) AS BIGINT) AS est_cnt,
+           |  CAST(min(c.cell) = t.exact_cnt AS INT) AS tight
+           |FROM top t
+           |JOIN jrows r ON r.g = t.tg
+           |JOIN cells c ON c.j = r.j AND c.bucket = r.bucket
+           |GROUP BY t.tg, t.exact_cnt
+           |ORDER BY t.exact_cnt DESC, gram ASC""".stripMargin
+      }),
+    CatalogEntry("sim_mmr_rerank", simMmrRerank,
+      "MMR diversity re-rank of the ANN top-k",
+      Some {
+        val dotAB = Similarity.dotSql("a.embedding", "b.embedding", DIM)
+        val dot12 = Similarity.dotSql("e1.embedding", "e2.embedding", DIM)
+        s"""WITH n AS (SELECT vec_id, embedding,
+           |            sqrt(${Similarity.dotSql("embedding", "embedding", DIM)}) AS nrm
+           |           FROM embeddings),
+           |scored AS (
+           |  SELECT a.vec_id AS src, b.vec_id AS dst, $dotAB / (a.nrm * b.nrm) AS cos
+           |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+           |cand AS MATERIALIZED (
+           |  SELECT src, dst, round(cos, 6) AS rel FROM (
+           |    SELECT *, row_number() OVER (PARTITION BY src
+           |      ORDER BY cos DESC, dst ASC) AS rn FROM scored)
+           |  WHERE rn <= 5),
+           |pair AS MATERIALIZED (
+           |  SELECT c1.src, c1.dst AS d1, c2.dst AS d2,
+           |    round($dot12 / (e1.nrm * e2.nrm), 6) AS cc
+           |  FROM cand c1 JOIN cand c2 ON c1.src = c2.src AND c1.dst <> c2.dst
+           |  JOIN n e1 ON e1.vec_id = c1.dst
+           |  JOIN n e2 ON e2.vec_id = c2.dst),
+           |candi AS MATERIALIZED (
+           |  SELECT src, dst, rel,
+           |    CAST(round(rel * 1000000) AS BIGINT) AS irel FROM cand),
+           |pairi AS MATERIALIZED (
+           |  SELECT src, d1, d2,
+           |    CAST(round(cc * 1000000) AS BIGINT) AS icc FROM pair),
+           |s1 AS MATERIALIZED (
+           |  SELECT src, dst AS s1, rel AS rel1 FROM (
+           |    SELECT *, row_number() OVER (PARTITION BY src
+           |      ORDER BY rel DESC, dst ASC) AS rk FROM candi)
+           |  WHERE rk = 1),
+           |r2 AS (
+           |  SELECT c.src, c.dst, 7 * c.irel - 3 * p.icc AS immr
+           |  FROM candi c
+           |  JOIN s1 ON c.src = s1.src AND c.dst <> s1.s1
+           |  JOIN pairi p ON p.src = c.src AND p.d1 = c.dst AND p.d2 = s1.s1),
+           |s2 AS MATERIALIZED (
+           |  SELECT src, dst AS s2, immr AS immr2 FROM (
+           |    SELECT *, row_number() OVER (PARTITION BY src
+           |      ORDER BY immr DESC, dst ASC) AS rk FROM r2)
+           |  WHERE rk = 1),
+           |r3 AS (
+           |  SELECT c.src, c.dst,
+           |    7 * c.irel - 3 * greatest(p1.icc, p2.icc) AS immr
+           |  FROM candi c
+           |  JOIN s1 ON c.src = s1.src
+           |  JOIN s2 ON c.src = s2.src
+           |  JOIN pairi p1 ON p1.src = c.src AND p1.d1 = c.dst AND p1.d2 = s1.s1
+           |  JOIN pairi p2 ON p2.src = c.src AND p2.d1 = c.dst AND p2.d2 = s2.s2
+           |  WHERE c.dst <> s1.s1 AND c.dst <> s2.s2),
+           |s3 AS MATERIALIZED (
+           |  SELECT src, dst AS s3, immr AS immr3 FROM (
+           |    SELECT *, row_number() OVER (PARTITION BY src
+           |      ORDER BY immr DESC, dst ASC) AS rk FROM r3)
+           |  WHERE rk = 1)
+           |SELECT src, 1 AS rnk, s1 AS dst, rel1 AS score FROM s1
+           |UNION ALL
+           |SELECT src, 2, s2, CAST(immr2 AS DOUBLE) / 10000000 FROM s2
+           |UNION ALL
+           |SELECT src, 3, s3, CAST(immr3 AS DOUBLE) / 10000000 FROM s3
+           |ORDER BY src, rnk""".stripMargin
+      }),
+    CatalogEntry("d10_contamination", d10Contamination,
+      "eval-set contamination scan",
+      Some("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |grams AS (
@@ -3282,9 +3359,10 @@ object TextSim {
         |FROM grams t JOIN grams b USING (gram)
         |WHERE t.doc_id % 10 <> 0 AND b.doc_id % 10 = 0
         |GROUP BY 1, 2 HAVING count(*) >= 3
-        |ORDER BY train_doc, bench_doc""".stripMargin,
-    "d12_decontaminate" ->
-      """WITH toks AS (
+        |ORDER BY train_doc, bench_doc""".stripMargin)),
+    CatalogEntry("d12_decontaminate", d12Decontaminate,
+      "remove eval-overlapping documents",
+      Some("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |grams AS (
@@ -3303,9 +3381,47 @@ object TextSim {
         |SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id % 10 <> 0
         |  AND doc_id NOT IN (SELECT train_doc FROM bad)
-        |ORDER BY doc_id""".stripMargin,
-    "t16_domain_mix" ->
-      """WITH t AS (
+        |ORDER BY doc_id""".stripMargin)),
+    // e11 = d7 streamed through foreachBatch — same relational truth,
+    // plus the kept flag the ingest sink records
+    CatalogEntry("e11_stream_ingest_dedup", e11StreamIngestDedup,
+      "streamed ingest + dedup equals the d7 batch computation",
+      Some(s"""WITH $hashedShingleCte,
+         |signed AS (
+         |  SELECT s.doc_id, s.sh,
+         |    concat_ws('_', ${minhashSql(0)}, ${minhashSql(1)}) AS band_0,
+         |    concat_ws('_', ${minhashSql(2)}, ${minhashSql(3)}) AS band_1
+         |  FROM sh s JOIN hsh h ON s.doc_id = h.doc_id),
+         |bands AS (
+         |  SELECT doc_id, 0 AS band, band_0 AS sig FROM signed
+         |  UNION ALL
+         |  SELECT doc_id, 1, band_1 FROM signed),
+         |cand AS (
+         |  SELECT DISTINCT i.doc_id, s.doc_id AS store_doc
+         |  FROM bands i JOIN bands s ON i.band = s.band AND i.sig = s.sig
+         |  WHERE i.doc_id % 3 = 0 AND s.doc_id % 3 <> 0),
+         |pairs AS (
+         |  SELECT c.doc_id, c.store_doc,
+         |    len(list_intersect(a.sh, b.sh)) AS n_inter,
+         |    len(a.sh) AS na, len(b.sh) AS nb
+         |  FROM cand c
+         |  JOIN signed a ON a.doc_id = c.doc_id
+         |  JOIN signed b ON b.doc_id = c.store_doc),
+         |per AS (
+         |  SELECT doc_id, count(*) AS n_candidates,
+         |    CAST(sum(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
+         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
+         |    min(CASE WHEN CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= 0.1
+         |        THEN store_doc END) AS dup_of
+         |  FROM pairs GROUP BY doc_id)
+         |SELECT d.doc_id, coalesce(p.n_candidates, 0) AS n_candidates,
+         |  coalesce(p.n_dups, 0) AS n_dups, coalesce(p.dup_of, -1) AS dup_of,
+         |  CAST(CASE WHEN coalesce(p.n_dups, 0) = 0 THEN 1 ELSE 0 END AS INT) AS kept
+         |FROM documents d LEFT JOIN per p USING (doc_id)
+         |WHERE d.doc_id % 3 = 0 ORDER BY d.doc_id""".stripMargin)),
+    CatalogEntry("t16_domain_mix", t16DomainMix,
+      "domain mixing plan",
+      Some("""WITH t AS (
         |  SELECT source,
         |    CASE WHEN len(trim(text)) = 0 THEN 0
         |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_toks
@@ -3321,163 +3437,54 @@ object TextSim {
         |SELECT source, n_docs, n_tokens,
         |  round(CAST(n_tokens AS DOUBLE) / tot_tokens, 6) AS token_share,
         |  round((tot_tokens / n_sources) / CAST(n_tokens AS DOUBLE), 6) AS mix_weight
-        |FROM agg, tot ORDER BY source""".stripMargin,
-    "t17_training_order" -> {
-      val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 17L)
-      s"""WITH d AS (SELECT doc_id, n_chars, $u AS u FROM documents),
-         |s AS (SELECT doc_id, n_chars, u,
-         |        CAST(least(7, floor(u * 8)) AS INTEGER) AS shard FROM d)
-         |SELECT shard, pos, doc_id, n_chars FROM (
-         |  SELECT shard, row_number() OVER (PARTITION BY shard
-         |           ORDER BY u ASC, doc_id ASC) AS pos, doc_id, n_chars
-         |  FROM s)
-         |ORDER BY shard, pos""".stripMargin
-    },
-    "t10_tfidf" ->
-      """WITH terms AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
-        |idf AS (
-        |  SELECT term,
-        |    ln((CAST((SELECT count(*) FROM documents) AS DOUBLE) + 1.0) /
-        |       (count(*) + CAST(1.0 AS DOUBLE))) + 1.0 AS idf
-        |  FROM tf GROUP BY term),
-        |r AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf * idf.idf AS tfidf,
-        |    row_number() OVER (PARTITION BY tf.doc_id
-        |      ORDER BY tf.tf * idf.idf DESC, tf.term ASC) AS rank
-        |  FROM tf JOIN idf USING (term))
-        |SELECT doc_id, CAST(rank AS INTEGER) AS rank, term, round(tfidf, 6) AS tfidf
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "t9_top_bigrams" ->
-      """WITH t AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |b AS (
-        |  SELECT unnest(CASE WHEN len(toks) >= 2 THEN
-        |    list_transform(generate_series(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i + 1])
-        |    ELSE [] END) AS bigram
-        |  FROM t)
-        |SELECT bigram, count(*) AS n FROM b
-        |GROUP BY bigram ORDER BY n DESC, bigram ASC LIMIT 20""".stripMargin,
-    "t8_lang_confusion" ->
-      s"""WITH t AS (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-         |h AS (SELECT doc_id, lang, $langHitCols FROM t),
-         |p AS (SELECT lang, $langArgmax AS lang_pred FROM h)
-         |SELECT lang, lang_pred, count(*) AS n FROM p
-         |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin,
-    "t2_quality_score" ->
-      """WITH b AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
-        |    len(text) AS n_char,
-        |    len(text) - len(regexp_replace(text, '[\.,;:!\?]', '', 'g')) AS n_punct,
-        |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        x -> list_contains(['the','a','and','of','to','in','is','that'], x))) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id, n_tokens,
-        |  round(CASE WHEN n_tokens = 0 THEN 0.0
-        |        ELSE CAST(len(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) / n_tokens END, 6) AS avg_token_len,
-        |  round(CASE WHEN n_char = 0 THEN 0.0 ELSE CAST(n_punct AS DOUBLE) / n_char END, 6) AS punct_ratio,
-        |  round(CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(n_stop AS DOUBLE) / n_tokens END, 6) AS stopword_ratio
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "t3_token_count" ->
-      """SELECT doc_id,
-        |  CASE WHEN len(trim(text)) = 0 THEN 0
-        |       ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ws_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS word_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "t3b_bpe_tokens" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${bpePattern.replace("'", "''")}')) AS BIGINT) AS bpe_tokens,
-         |  CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-         |       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS ws_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "t4_fingerprint" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN len(text) = 0 THEN 0
-        |       ELSE list_sum(list_transform(generate_series(1, len(text)),
-        |              i -> i * ascii(substr(text, i, 1)))) % 1000000007 END AS BIGINT) AS fp,
-        |  md5(text) AS content_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "t5_corpus_filter" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, text, source,
-         |    CASE WHEN len(trim(text)) = 0 THEN 0
-         |         ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-         |    len(text) AS n_char,
-         |    len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS n_punct,
-         |    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-         |        x -> list_contains(['the','a','and','of','to','in','is','that'], x))) AS n_stop,
-         |    regexp_split_to_array(trim(text), '\\s+') AS toks
-         |  FROM documents),
-         |q AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    round(CASE WHEN n_char = 0 THEN 0.0 ELSE CAST(n_punct AS DOUBLE) / n_char END, 6) AS punct_ratio,
-         |    round(CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(n_stop AS DOUBLE) / n_tokens END, 6) AS stopword_ratio,
-         |    $langHitCols
-         |  FROM b),
-         |l AS (SELECT *, $langArgmax AS lang_pred FROM q),
-         |canon AS (SELECT md5(text) AS h, min(doc_id) AS keep_id FROM documents GROUP BY md5(text))
-         |SELECT l.doc_id, l.n_tokens, l.punct_ratio, l.stopword_ratio, l.source
-         |FROM l JOIN documents d ON d.doc_id = l.doc_id
-         |JOIN canon c ON c.h = md5(d.text)
-         |WHERE l.doc_id = c.keep_id AND l.lang_pred = 'en'
-         |  AND l.n_tokens >= 10 AND l.punct_ratio < 0.2 AND l.stopword_ratio >= 0.02
-         |ORDER BY l.doc_id""".stripMargin,
-    "t7_chunking" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks,
-        |    CASE WHEN len(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks, n,
-        |    CAST(unnest(generate_series(0,
-        |      CASE WHEN n <= 50 THEN 0
-        |           ELSE CAST(ceil(CAST(n - 10 AS DOUBLE) / 40) AS INTEGER) - 1 END)) AS INTEGER)
-        |      AS chunk_no
-        |  FROM t WHERE n > 0),
-        |s AS (
-        |  SELECT doc_id, chunk_no,
-        |    list_slice(toks, chunk_no * 40 + 1, least(chunk_no * 40 + 50, n)) AS ct
-        |  FROM c)
-        |SELECT doc_id, chunk_no, CAST(len(ct) AS INTEGER) AS n_chunk_tokens,
-        |       md5(array_to_string(ct, ' ')) AS chunk_hash
-        |FROM s ORDER BY doc_id, chunk_no""".stripMargin,
-    "t6_winnowing" ->
-      """WITH n AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(norm) < 5 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(generate_series(1, len(norm) - 4),
-        |                i -> md5(substr(norm, i, 5))) END AS grams
-        |  FROM n),
-        |s AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(grams) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(grams) - 3 < 1 THEN [list_min(grams)]
-        |         ELSE list_transform(generate_series(1, len(grams) - 3),
-        |                j -> list_min(grams[j:j+3])) END AS sel
-        |  FROM g),
-        |f AS (SELECT doc_id, list_distinct(sel) AS fps FROM s)
-        |SELECT doc_id, CAST(len(fps) AS INT) AS n_fp,
-        |       list_min(fps) AS fp_min, list_max(fps) AS fp_max
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "mm1_binary_metadata" ->
-      """SELECT doc_id, octet_length(encode(text)) AS byte_len, md5(text) AS payload_md5, source
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM agg, tot ORDER BY source""".stripMargin)),
+    CatalogEntry("t17_training_order", t17TrainingOrder,
+      "global training-order assignment",
+      Some {
+        val u = graft.functions.ColFns.pseudoUniformSql("doc_id", 17L)
+        s"""WITH d AS (SELECT doc_id, n_chars, $u AS u FROM documents),
+           |s AS (SELECT doc_id, n_chars, u,
+           |        CAST(least(7, floor(u * 8)) AS INTEGER) AS shard FROM d)
+           |SELECT shard, pos, doc_id, n_chars FROM (
+           |  SELECT shard, row_number() OVER (PARTITION BY shard
+           |           ORDER BY u ASC, doc_id ASC) AS pos, doc_id, n_chars
+           |  FROM s)
+           |ORDER BY shard, pos""".stripMargin
+      }),
+    CatalogEntry("sim_ivf_incremental", simIvfIncremental,
+      "IVF incremental appends served with the base index",
+      Some {
+        import graft.functions.ColFns
+        val u = ColFns.pseudoUniformSql("vec_id", 13L)
+        val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
+        val vc = Similarity.dotSql("a.v", "c.cv", DIM)
+        s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+           |cents AS (
+           |  SELECT list, cv FROM (
+           |    SELECT v AS cv,
+           |      row_number() OVER (ORDER BY $u ASC, vec_id ASC) AS list
+           |    FROM e WHERE vec_id % 5 <> 0)
+           |  WHERE list <= ${Similarity.scaleNListsSql("e WHERE vec_id % 5 <> 0")}),
+           |ranked AS (
+           |  SELECT a.vec_id, c.list, round(($cc - 2.0 * $vc), 6) AS rank_d
+           |  FROM (SELECT * FROM e WHERE vec_id % 5 = 0) a CROSS JOIN cents c),
+           |arn AS (SELECT *, row_number() OVER (PARTITION BY vec_id
+           |          ORDER BY rank_d ASC, list ASC) AS arn FROM ranked)
+           |SELECT vec_id, list, rank_d FROM arn WHERE arn = 1
+           |ORDER BY vec_id""".stripMargin
+      }),
+    CatalogEntry("mm1_binary_metadata", mm1BinaryMetadata,
+      "opaque binary columns with typed metadata",
+      Some("""SELECT doc_id, octet_length(encode(text)) AS byte_len, md5(text) AS payload_md5, source
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // Arrays.hashCode replay: fold(1)(31·acc + byte) in unsigned mod-2^32
     // arithmetic, re-signed at the end; trunc-toward-zero division and
     // floorMod mirror the JVM's int semantics. Bytes = ascii codes (the
     // corpus is single-byte; asserted by the octet_length check in
     // mm1 and the t4 ascii oracle).
-    "mm2_decode_features" ->
-      """WITH h AS (
+    CatalogEntry("mm2_decode_features", mm2DecodeFeatures,
+      "per-partition batch image decode (javax.imageio) + features",
+      Some("""WITH h AS (
         |  SELECT doc_id, octet_length(encode(text)) AS byte_len,
         |    list_reduce([CAST(1 AS BIGINT)] || list_transform(generate_series(1, len(text)),
         |      i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)),
@@ -3498,9 +3505,10 @@ object TextSim {
         |       ELSE CAST(((h32 % 1000) + 1000) % 1000 AS FLOAT) / CAST(1000.0 AS FLOAT) END AS f0,
         |  CASE WHEN byte_len = 0 THEN NULL
         |       ELSE CAST(((CAST(trunc(h32 / 8.0) AS BIGINT) % 1000) + 1000) % 1000 AS FLOAT) / CAST(1000.0 AS FLOAT) END AS f7
-        |FROM s ORDER BY media_id""".stripMargin,
-    "mm3_resize_plan" ->
-      """WITH h AS (
+        |FROM s ORDER BY media_id""".stripMargin)),
+    CatalogEntry("mm3_resize_plan", mm3ResizePlan,
+      "resize planning over image metadata",
+      Some("""WITH h AS (
         |  SELECT doc_id, octet_length(encode(text)) AS byte_len,
         |    list_reduce([CAST(1 AS BIGINT)] || list_transform(generate_series(1, len(text)),
         |      i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)),
@@ -3522,9 +3530,10 @@ object TextSim {
         |SELECT media_id, width, height, round(sc, 6) AS scale,
         |  greatest(CAST(round(width * sc) AS INT), 1) AS out_width,
         |  greatest(CAST(round(height * sc) AS INT), 1) AS out_height
-        |FROM r ORDER BY media_id""".stripMargin,
-    "mm4_frame_sample" ->
-      """WITH m AS (
+        |FROM r ORDER BY media_id""".stripMargin)),
+    CatalogEntry("mm4_frame_sample", mm4FrameSample,
+      "deterministic frame-sampling plan",
+      Some("""WITH m AS (
         |  SELECT doc_id AS media_id, octet_length(encode(text)) AS byte_len
         |  FROM documents),
         |f AS (
@@ -3533,14 +3542,10 @@ object TextSim {
         |  FROM m)
         |SELECT media_id, CAST(idx AS INT) AS frame_no,
         |       CAST(idx * 100 AS BIGINT) AS byte_offset
-        |FROM f ORDER BY media_id, frame_no""".stripMargin,
-    "sim_pq_codes" ->
-      Similarity.pqCodesSql("embeddings", "vec_id", "embedding", DIM),
-    "sim_pq_adc_topk" ->
-      Similarity.pqAdcTopKSql("embeddings", "vec_id", "embedding", DIM, k = 5,
-        nPlanesSql = Similarity.scaleNPlanesSql("embeddings")),
-    "sim_quantize_int8" ->
-      """WITH b AS (
+        |FROM f ORDER BY media_id, frame_no""".stripMargin)),
+    CatalogEntry("sim_quantize_int8", simQuantizeInt8,
+      "int8 embedding quantization",
+      Some("""WITH b AS (
         |  SELECT vec_id AS id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
@@ -3556,5 +3561,23 @@ object TextSim {
         |SELECT id, round(sc, 9) AS scale, CAST(len(qv) AS INT) AS n_dims,
         |  CAST(list_min(qv) AS INT) AS q_min, CAST(list_max(qv) AS INT) AS q_max,
         |  CAST(list_sum(qv) AS BIGINT) AS q_sum
-        |FROM q ORDER BY id""".stripMargin)
+        |FROM q ORDER BY id""".stripMargin)),
+    CatalogEntry("sim_pq_codes", simPqCodes,
+      "product-quantization codebook assignment",
+      Some(Similarity.pqCodesSql("embeddings", "vec_id", "embedding", DIM))),
+    CatalogEntry("sim_pq_adc_topk", simPqAdcTopK,
+      "PQ asymmetric-distance-computation top-k",
+      Some(Similarity.pqAdcTopKSql("embeddings", "vec_id", "embedding", DIM, k = 5,
+        nPlanesSql = Similarity.scaleNPlanesSql("embeddings")))),
+    CatalogEntry("f10_dot_product", f10DotProduct,
+      "native ArrayDotProduct Catalyst expression (codegen)",
+      Some {
+        val dotAB = Similarity.dotSql("ea", "eb", DIM)
+        val cosAB = Similarity.cosineSql("ea", "eb", DIM)
+        s"""WITH a AS (SELECT vec_id AS src, embedding AS ea FROM embeddings),
+           |b AS (SELECT vec_id - 1 AS src, embedding AS eb FROM embeddings),
+           |j AS (SELECT a.src, ea, eb FROM a JOIN b USING (src))
+           |SELECT src, round($dotAB, 6) AS dot, round($cosAB, 6) AS cos
+           |FROM j ORDER BY src""".stripMargin
+      }))
 }

@@ -1,15 +1,15 @@
 package graft.tools
 
 /** CATALOG.md generator — the catalog IS the engine's public query
-  * surface (257 entries), but discoverability was via source. This
-  * renders one line per `SparkEntry.queries` entry: id, oracle kind
-  * (hash = DuckDB hash-compare gate; rows-only = sanctioned twin-gated,
-  * SURVEY §7.4), owning catalog object, and a one-line contract
-  * (reference-script citations inline where the entry mirrors one).
+  * surface (260 entries), but discoverability was via source. This
+  * renders one line per `CatalogEntry` of `SparkEntry.modules`: id,
+  * oracle kind (hash = DuckDB hash-compare gate; rows-only = sanctioned
+  * twin-gated, SURVEY §7.4), owning catalog object, and the entry's
+  * one-line contract (reference-script citations inline where the entry
+  * mirrors one).
   *
-  * Drift is CI-enforced by CatalogDocSpec: a new entry without a
-  * contract line — or a stale committed CATALOG.md — fails the suite.
-  * Regenerate with `sbt "runMain graft.tools.CatalogDoc"`.
+  * Drift is CI-enforced by CatalogDocSpec: a stale committed CATALOG.md
+  * fails the suite. Regenerate with `sbt "runMain graft.tools.CatalogDoc"`.
   */
 object CatalogDoc {
 
@@ -26,7 +26,7 @@ object CatalogDoc {
     "Sampling & splits" -> (_.startsWith("r")),
     "SQL surface (TPC-H + extensions)" -> (_.startsWith("sql_")),
     "Graph algorithms" -> (n => n.startsWith("g")),
-    "ML lifecycle" -> (_.startsWith("m")),
+    "ML lifecycle" -> (n => n.startsWith("m") && !n.startsWith("mm")),
     "Deduplication" -> (_.startsWith("d")),
     "Text pipeline" -> (_.startsWith("t")),
     "Similarity & ANN" -> (_.startsWith("sim_")),
@@ -36,317 +36,15 @@ object CatalogDoc {
   private def sectionOf(name: String): String =
     sections.find(_._2(name)).map(_._1).getOrElse("Other")
 
-  // Multimodal's mm* would match "ML lifecycle"'s m* if order decided —
-  // it doesn't: explicit override map for the ambiguous prefixes.
-  private val sectionOverride: Map[String, String] = Map(
-    "mm1_binary_metadata" -> "Multimodal",
-    "mm2_decode_features" -> "Multimodal",
-    "mm3_resize_plan" -> "Multimodal",
-    "mm4_frame_sample" -> "Multimodal",
-    "q1_agg" -> "Aggregations & analytics")
-
-  /** One-line contract per catalog entry. Keys are drift-checked
-    * against SparkEntry.queries by CatalogDocSpec. */
-  val contracts: Map[String, String] = Map(
-    // Scans, sinks & lakehouse
-    "s1_csv_scan_normalize" -> "CSV scan: messy headers normalized to snake_case, cast to a declared schema (ref First_Data_injection.py:33)",
-    "s2_csv_badrow_filter" -> "CSV ingest with NOT-IN bad-row filter and value lowercasing (ref First_Data_injection.py:55)",
-    "s3_catalog_scan" -> "product-catalog ingest: header normalize, dropna, sku/design_no renames (ref First_Data_injection.py:84)",
-    "s4_parquet_sink_roundtrip" -> "parquet sink/source roundtrip preserves rows and schema exactly",
-    "s5_graphml_roundtrip" -> "GraphML sink + source roundtrip of the property graph",
-    "s6_graph_checkpoint" -> "graph checkpoint: node+edge tables saved and restored as a version",
-    "s8_history_roundtrip" -> "line-JSON metrics history sink/source roundtrip (model registry)",
-    "s10_schema_evolution" -> "mergeSchema read across writer generations that added a column",
-    "s11_orc_roundtrip" -> "ORC sink/source roundtrip with aggregate parity",
-    "s12_sorted_layout_pruning" -> "sorted file layout: min/max row-group stats prune a static predicate's scan",
-    "s13_small_file_compaction" -> "zero-shuffle coalesce compaction of micro-batch file debris, reader-invisible",
-    "s14_corrupt_records" -> "PERMISSIVE corrupt-record channel; full-row conversion so no bad line leaks",
-    "s15_zorder_layout" -> "Morton/z-order layout quantized from observed min/max for multi-column skipping",
-    "s16_cdc_merge" -> "batch CDC MERGE (U/D/I) via copy-on-write dynamic partition overwrite",
-    "s17_dynamic_pruning" -> "runtime dynamic partition pruning driven by a broadcast calendar-dim filter",
-    "s18_retention_vacuum" -> "TTL retention vacuum: expired dvid partitions dropped dir-by-dir",
-    "s19_atomic_publish" -> "atomic multi-table publish behind one version pointer; consistency readout",
-    "s20_manifest_vacuum" -> "manifest-fronted vacuum: commit-then-reclaim, every crash point reader-invisible",
-    "s21_time_travel" -> "AS-OF reads of two committed snapshots plus their relational diff",
-    "s22_merge_on_read" -> "merge-on-read deletion vectors: O(keys) tombstones anti-joined by readers, then materialized",
-    "s23_mor_fold_scheduler" -> "MOR fold scheduler: tombstone mass vs foldFrac decides serve-vs-rewrite; both branches one delete-truth oracle",
-    // Predicates & projections
-    "p1_dropna_any" -> "dropna(any): drop rows with any null",
-    "p2_dropna_subset" -> "dropna restricted to a column subset",
-    "p3_notin_filter" -> "NOT-IN predicate filter",
-    "p4_temporal_cutoff" -> "timestamp-cutoff predicate",
-    "p5_edge_time_filter" -> "edge-table time-window filter",
-    "p6_inactive_prune" -> "drop customers inactive for 730 days before the cutoff (ref Node2vec_algorithm_inscripton.py:57)",
-    "p7_valid_products" -> "keep edges whose product exists in the catalog",
-    "p8_label_predicate" -> "label-valued predicate filter",
-    "p9_dvid_predicate" -> "data-version (dvid) predicate scan of a versioned store",
-    "p10_projection_rename" -> "projection with column renames",
-    "p11_null_safe_eq" -> "null-safe equality (<=>) predicate",
-    // Joins
-    "j1_full_outer_enrich" -> "full-outer join enrichment with coalesced sides",
-    "j2_versioned_upsert" -> "last-writer-wins upsert via max-dvid window dedup",
-    "j3_two_hop_links" -> "customer-product-customer two-hop link join (ref knowledge_graph_creation.py)",
-    "j4_negative_sampling" -> "anti-join negative sampling at ~1:1 class ratio (ref xgboost_model_training.py:124)",
-    "j5_feature_lookup_join" -> "two-hop distinct pairs + broadcast feature-lookup joins on both sides",
-    "j6_purchased_exclusion" -> "anti-join exclusion of already-purchased products",
-    "j7_knn_topk" -> "exact brute-force cosine top-k KNN join (the ANN family's truth)",
-    "j8_community_join" -> "join node communities onto the edge table",
-    "j9_feature_injection" -> "per-fold feature injection join (ref update_features_after_every_fold.py)",
-    "j10_salted_skew_join" -> "hand-salted skew join: hot keys fanned across salt buckets",
-    "j10b_aqe_skew_join" -> "AQE OptimizeSkewedJoin twin: runtime skew split with its preconditions pinned",
-    "j11_asof_join" -> "as-of join, window formulation: last click before each purchase",
-    "j11b_asof_native" -> "native as-of join operator (custom LogicalPlan + Strategy + Exec)",
-    "j11c_asof_sql" -> "ASOF JOIN SQL syntax through the injected parser",
-    "j12_range_join" -> "interval/range join banded to bucket keys (flat under scale-up)",
-    "j13_bucketed_join" -> "bucketed co-located join planning with zero exchanges",
-    // Aggregations & analytics
-    "q1_agg" -> "flagship TPC-H Q1-style pricing-summary aggregate",
-    "a1_label_counts" -> "group-by label counts",
-    "a2_degree" -> "node degree aggregation (ref degree_analysis.py)",
-    "a3_degree_moments" -> "degree mean/stddev/skewness moments",
-    "a4_degree_percentile" -> "percent_rank over node degrees",
-    "a4b_percentileofscore_mean" -> "scipy percentileofscore tie-semantics twin of a4",
-    "a5_perlabel_zscore" -> "per-label z-score standardization",
-    "a6_percommunity_stats" -> "per-community aggregate statistics",
-    "a7_log_degree" -> "log-transformed degree feature",
-    "a8_recency_frequency" -> "recency/frequency (RFM) customer aggregates",
-    "a9_preferred_category" -> "per-customer preferred category by purchase mode",
-    "a10_similarity_stats" -> "similarity-score distribution statistics",
-    "a11_target_encoding" -> "target encoding with global-mean smoothing",
-    "a12_class_distribution" -> "label class distribution audit",
-    "a13_community_summary" -> "community size/composition summary",
-    "a14_timestamp_diagnostics" -> "timestamp coverage/gap diagnostics",
-    "a15_rollup" -> "hierarchical rollup (grouping sets) in one pass",
-    "a16_approx_sketches" -> "HLL distinct + approx-percentile sketches (estimates; twin a16b carries the gate)",
-    "a16b_sketch_bounds" -> "sketch error bounds gated across two data scales, incl. a KMV estimator row",
-    "a17_pivot" -> "pivot to wide per-category columns",
-    "a18_unpivot" -> "unpivot/melt back to long form",
-    "a19_exact_percentiles" -> "exact percentile aggregation",
-    "a20_cohort_retention" -> "cohort retention matrix",
-    "a22_robust_stats" -> "median/MAD robust statistics",
-    "a23_countmin_ngrams" -> "count-min sketch over corpus bigrams with the >=-exact guarantee gated",
-    "a25_observed_audit" -> "Dataset.observe metric audit (isolated session; serialization-safe)",
-    "a26_constraint_audit" -> "declarative constraint audit: nulls, ranges, FK domains",
-    "a27_feature_correlation" -> "Pearson correlation matrix with zero-variance guard",
-    // Windows & top-k
-    "w2_topn_by_score" -> "per-group top-N by score",
-    "w3_category_cap" -> "per-category cap re-rank (ref topk_recommandations_diverse_nodiscounts.py)",
-    "w5_limit_head" -> "deterministic limit/head",
-    "w7_rolling_window" -> "rolling window aggregate",
-    "w8_lag_lead" -> "lag/lead offset features",
-    "w9_gapfill" -> "calendar gap-fill via sequence + explode",
-    // Set operations
-    "u1_union_missing_columns" -> "union with missing-column alignment (unionByName allowMissing)",
-    "u2_set_difference" -> "set difference (EXCEPT)",
-    "u3_distinct_dedup" -> "distinct row dedup",
-    "u4_intersect" -> "set intersection",
-    "u5_except_all" -> "bag-semantics EXCEPT ALL",
-    // Scalar functions
-    "f1_string_normalize" -> "string normalization (trim/case/diacritics)",
-    "f5_multiformat_dates" -> "multi-format date parsing",
-    "f7_f8_date_math" -> "date add/diff calendar math",
-    "f10_dot_product" -> "native ArrayDotProduct Catalyst expression (codegen)",
-    "f11_interactions" -> "feature interaction terms",
-    "f12_f14_guards" -> "divide-by-zero / null guards matching both engines",
-    "f13_softmax" -> "numerically-stable per-group softmax",
-    "f15_category_codes" -> "stable integer category codes",
-    "f16_json_extract" -> "JSON field extraction",
-    "f17_date_trunc" -> "date_trunc calendar-bucket rollup",
-    // Sampling & splits
-    "r1_seeded_sample" -> "deterministic seeded sample via pseudo-uniform hash",
-    "r2_candidate_cap" -> "per-group candidate cap",
-    "r3_edge_dropout" -> "deterministic edge dropout",
-    "r4_stratified_split" -> "stratified train/validation split",
-    "r5_feature_noise" -> "hash-derived deterministic feature noise",
-    "r6_oversample" -> "minority-class oversampling",
-    "r6b_smote_interp" -> "SMOTE-style neighbor interpolation twin",
-    "r7_weighted_pick" -> "weighted sampling (ref took_recommandations_adamsampling_discount.py)",
-    "r8_temperature_mix" -> "temperature-weighted corpus mixing plan",
-    "r9_split_leakage" -> "train/eval split leakage audit over dup clusters",
-    "r10_cluster_split" -> "cluster-aware split: near-dups never straddle train/eval",
-    "r11_groupk_sample" -> "native BottomKByHash per-group k-sample aggregate",
-    // SQL surface
-    "sql_q2_min_cost_supplier" -> "TPC-H Q2: minimum-cost supplier",
-    "sql_q3_shipping_priority" -> "TPC-H Q3: shipping priority",
-    "sql_q4_order_priority" -> "TPC-H Q4: order priority counts",
-    "sql_q5_local_supplier" -> "TPC-H Q5: local supplier volume",
-    "sql_q6_forecast_revenue" -> "TPC-H Q6: forecast revenue change",
-    "sql_q7_volume_shipping" -> "TPC-H Q7: volume shipping between nations",
-    "sql_q8_market_share" -> "TPC-H Q8: national market share",
-    "sql_q9_product_profit" -> "TPC-H Q9: product-type profit",
-    "sql_q10_returned_items" -> "TPC-H Q10: returned-item reporting",
-    "sql_q11_important_stock" -> "TPC-H Q11: important stock identification",
-    "sql_q12_priority_shipping" -> "TPC-H Q12: shipping modes vs priority",
-    "sql_q13_order_distribution" -> "TPC-H Q13: customer order-count distribution",
-    "sql_q14_promo_revenue" -> "TPC-H Q14: promotion revenue share",
-    "sql_q15_top_supplier" -> "TPC-H Q15: top supplier by revenue",
-    "sql_q16_supplier_relation" -> "TPC-H Q16: parts/supplier relationship counts",
-    "sql_q17_small_quantity" -> "TPC-H Q17: small-quantity-order revenue",
-    "sql_q18_large_orders" -> "TPC-H Q18: large-volume customers",
-    "sql_q19_disjunctive_revenue" -> "TPC-H Q19: disjunctive-predicate revenue",
-    "sql_q20_part_promotion" -> "TPC-H Q20: potential part promotion",
-    "sql_q21_waiting_supplier" -> "TPC-H Q21: suppliers who kept orders waiting",
-    "sql_q22_dormant_customers" -> "TPC-H Q22: dormant-customer accounts",
-    "sql_extension_fns" -> "engine SQL functions registered via injected FunctionRegistry",
-    "sql_graph_2hop" -> "two-hop graph traversal in pure SQL",
-    "sql_revenue_rollup" -> "revenue rollup in SQL",
-    // Recommenders
-    "rec_q0_candidate_stage" -> "shared candidate-generation stage feeding every recommender",
-    "rec_q1_diverse" -> "top-k diverse recs, category-capped, no discount (ref topk_recommandations_diverse_nodiscounts.py)",
-    "rec_q2_softmax" -> "softmax-sampled recs with discount (ref took_recommandations_softmaxsampling_discount.py)",
-    "rec_q3_stochastic" -> "stochastic softmax sampling (ref topk_recommandations_stochasticsoftmaxsampling_discount.py)",
-    "rec_q4_adam" -> "Adam-sampling recs with discount (ref took_recommandations_adamsampling_discount.py)",
-    "rec_q5_enriched" -> "recs enriched with catalog attributes (ref category_enrichement.py)",
-    "rec_q6_discount_events" -> "event-aware discount recommendations",
-    // Graph algorithms
-    "g2_louvain_communities" -> "Louvain community sizes (ref Louvain_community_algorithm.py; twin g2b carries the gate)",
-    "g2b_modularity" -> "modularity gate over the shared Louvain partition",
-    "g3_node2vec_embeddings" -> "deterministic node2vec walks + embeddings (ref Node2vec_algorithm_inscripton.py)",
-    "g6_dvid_versioning" -> "graph mutation with dvid versioning",
-    "g7_scd2_intervals" -> "SCD2 validity intervals from the change history",
-    "g8_copurchase_projection" -> "bipartite-to-co-purchase graph projection",
-    "gx_connected_components" -> "connected components, hybrid dense-kernel/GraphX",
-    "gx_kcore" -> "k-core peeling, fixed synchronous rounds",
-    "gx_label_propagation" -> "deterministic synchronous label propagation",
-    "gx_pagerank" -> "PageRank, hybrid dense-kernel/GraphX",
-    "gx_ppr_recommend" -> "personalized-PageRank recommendations",
-    "gx_shortest_paths" -> "landmark BFS shortest paths",
-    "gx_triangles" -> "per-vertex triangle counts, hybrid dense-kernel/GraphX",
-    // ML lifecycle
-    "m0_training_corpus" -> "shared pair+feature training corpus builder",
-    "m1_gbt_link_metrics" -> "GBT link-prediction metrics (ref xgboost_model_training.py; twin m1b carries the gate)",
-    "m1b_gbt_deterministic" -> "GBT validation scores persisted; confusion + AUC recomputed from the bits",
-    "m2_multidate_discount" -> "discount vs no-discount LR over 4 simulated dates (ref xgboost_mode_training_plus_dynamic_discount.py)",
-    "m2b_multidate_deterministic" -> "both m2 models' scores persisted; per-model AUC recomputed relationally",
-    "m3b_incremental_policy" -> "incremental refit policy with model-registry roundtrip",
-    "m4_confusion_matrix" -> "confusion-matrix metric suite (twin m4b carries the gate)",
-    "m4b_metrics_deterministic" -> "metric math recomputed from persisted scores",
-    "m5_threshold_sweep" -> "decision-threshold sweep (twin m5b carries the gate)",
-    "m5b_sweep_deterministic" -> "threshold sweep recomputed from persisted scores",
-    "m6_compat_probe" -> "model artifact save/load compatibility probe",
-    "m7_mlp_metrics" -> "multi-tower MLP metrics (ref Neural_network_multi_towered_training.py; twin m7b)",
-    "m7b_mlp_deterministic" -> "MLP validation scores persisted; AUC + accuracy recomputed from the bits",
-    "m8_tower_scaling" -> "per-tower feature standardization",
-    "m9_calibration" -> "probability calibration bins",
-    "m10_class_weights" -> "class-weighted training comparison",
-    "m11_feature_importance" -> "feature importances (twin m11b carries the gate)",
-    "m11b_importance_ranked" -> "importance ranking recomputed under the hash gate",
-    "m12_adamw_loop" -> "AdamW training loop (twin m12b carries the gate)",
-    "m12b_adamw_deterministic" -> "AdamW loop state recomputed deterministically",
-    "m13_minibatch_stream" -> "streaming minibatch trainer (twin m13b carries the gate)",
-    "m13b_minibatch_deterministic" -> "streamed minibatch math recomputed deterministically",
-    "m14_tower_loop" -> "joint tower-net training loop (twin m14b carries the gate)",
-    "m14b_tower_deterministic" -> "tower-net loop recomputed deterministically",
-    "m15_minibatch_loop" -> "batch-512 minibatch loop (twin m15b carries the gate)",
-    "m15b_minibatch_deterministic" -> "batch-512 loop recomputed deterministically",
-    // Deduplication
-    "d1_exact_dedup" -> "exact dedup via content-hash groupBy",
-    "d2_minhash_lsh" -> "MinHash + banded LSH near-duplicate candidates",
-    "d3_simhash" -> "SimHash hamming-band near-duplicates",
-    "d4_ngram_jaccard" -> "n-gram Jaccard candidate verification",
-    "d5_embedding_neardup" -> "embedding-cosine near-duplicates",
-    "d6_dedup_clusters" -> "connected duplicate clusters with a canonical doc",
-    "d7_incremental_dedup" -> "incremental dedup against the prior accepted set",
-    "d8_fuzzy_match" -> "blocked fuzzy entity matching (block-bounded pair work)",
-    "d9_entity_clusters" -> "entity resolution clusters",
-    "d10_contamination" -> "eval-set contamination scan",
-    "d11_quality_dedup" -> "quality-aware keep-best dedup",
-    "d12_decontaminate" -> "remove eval-overlapping documents",
-    "d13_semantic_dedup" -> "semantic dedup bounded by trained IVF cells",
-    "d14_span_dedup" -> "k-token span dedup with rewrite payload",
-    // Text pipeline
-    "t1_language_id" -> "n-gram heuristic language identification",
-    "t2_quality_score" -> "length/punctuation/stopword quality scoring",
-    "t3_token_count" -> "whitespace token counting",
-    "t3b_bpe_tokens" -> "GPT-2-style regex pretokenizer unit counts",
-    "t4_fingerprint" -> "rolling-hash document fingerprints",
-    "t5_corpus_filter" -> "composed corpus filtering",
-    "t6_winnowing" -> "winnowing fingerprint selection",
-    "t7_chunking" -> "token chunking with declared overlap",
-    "t8_lang_confusion" -> "language-ID confusion audit",
-    "t9_top_bigrams" -> "top corpus bigrams",
-    "t10_tfidf" -> "TF-IDF weighting",
-    "t11_vocab_prune" -> "vocabulary pruning by document frequency",
-    "t12_pack_sequences" -> "sequence packing to a context length",
-    "t12b_pack_sharded" -> "sharded sequence packing twin",
-    "t13_quality_rules" -> "rule-based quality gate",
-    "t14_pii_redact" -> "PII pattern redaction",
-    "t15_repetition" -> "repetition-ratio scoring",
-    "t16_domain_mix" -> "domain mixing plan",
-    "t17_shuffle_shards" -> "deterministic shard shuffle",
-    "t17_training_order" -> "global training-order assignment",
-    "t18_quality_nb" -> "NB quality classifier: trained on half, served broadcast",
-    "t19_boilerplate_spans" -> "boilerplate span detection",
-    "t20_lm_perplexity" -> "n-gram LM perplexity scoring (trained-on-half discipline)",
-    "t21_token_budget" -> "token-budget prefix fill without a corpus-sized window",
-    "t22_bpe_merges" -> "BPE merge induction with vocab-size / min-pair-frequency stop rules",
-    "t22b_bpe_apply" -> "learned BPE merges applied back over the corpus",
-    "t23_curriculum_order" -> "curriculum ordering by quality band",
-    "t24_dataset_card" -> "dataset-card snapshot report (lang x source, dup, token stats)",
-    // Similarity & ANN
-    "sim_ann0_ivf_index" -> "the ONE shared IVF index build; oracle recomputes the build relationally",
-    "sim_lsh_topk" -> "LSH-bucketed ANN top-k",
-    "sim_ivf_topk" -> "IVF cell-bounded ANN top-k",
-    "sim_ivf_incremental" -> "IVF incremental appends served with the base index",
-    "sim_ivf_persisted" -> "ANN served from the persisted shared index artifact",
-    "sim_ivf_trained" -> "k-means-trained IVF centroids",
-    "sim_filtered_ivf" -> "filtered ANN: predicate applied before ranking",
-    "sim_ivf_deletes" -> "tombstone anti-join BEFORE ranking",
-    "sim_ivf_compaction" -> "exactly-once index compaction, reader-invisible",
-    "sim_pq_codes" -> "product-quantization codebook assignment",
-    "sim_pq_adc_topk" -> "PQ asymmetric-distance-computation top-k",
-    "sim_quantize_int8" -> "int8 embedding quantization",
-    "sim_recall_eval" -> "ANN recall@5 on a 1024-probe panel vs exact truth",
-    "sim_mmr_rerank" -> "MMR diversity re-rank of the ANN top-k",
-    // Streaming & incremental
-    "e1_event_windows" -> "hourly tumbling windows (batch formulation)",
-    "e2_sessionize" -> "gap-based sessionization via lag + running sum",
-    "e3_stream_windows" -> "streamed tumbling windows equal the batch truth",
-    "e4_stream_sessionize" -> "streamed sessionization",
-    "e5_stream_dedup" -> "streaming dropDuplicates under a watermark",
-    "e6_stream_static_join" -> "stream-static broadcast enrichment",
-    "e7_incremental_ingest" -> "dvid-append micro-batch ingest",
-    "e8_stream_interval_join" -> "stream-stream interval join",
-    "e9_funnel" -> "click-to-purchase funnel",
-    "e10_late_data_drop" -> "watermark late-data drop accounting",
-    "e11_stream_ingest_dedup" -> "streamed ingest + dedup equals the d7 batch computation",
-    "e12_stream_quality_gate" -> "streamed quality gate equals the batch rules",
-    "e13_session_windows" -> "native session_window aggregation",
-    "e14_stream_outer_join" -> "stream-stream outer join with a derived watermark cutoff",
-    "e15_incremental_agg_merge" -> "materialized-view maintenance via partial-aggregate partitions",
-    "e16_incremental_distinct" -> "mergeable KMV distinct sketches per batch, unioned at read",
-    "e17_idempotent_replay" -> "exactly-once under redelivery: partition-scoped overwrite keyed by batch",
-    "e18_checkpoint_resume" -> "checkpointed source resume reads only files that arrived while down",
-    "e19_stream_cdc_merge" -> "streamed CDC merge maintains the lakehouse table, restart-safe",
-    "e20_cdc_compact_serve" -> "post-merge zero-shuffle compaction of touched partitions, reader-invisible",
-    "e21_stream_mor_deletes" -> "streamed merge-on-read deletes: O(keys) tombstones per micro-batch, restart-safe, one materialize",
-    // Multimodal
-    "mm1_binary_metadata" -> "opaque binary columns with typed metadata",
-    "mm2_decode_features" -> "per-partition batch image decode (javax.imageio) + features",
-    "mm3_resize_plan" -> "resize planning over image metadata",
-    "mm4_frame_sample" -> "deterministic frame-sampling plan")
-
-  private val owners: Seq[(String, Set[String])] = Seq(
-    "Relational" -> graft.catalog.Relational.queries.keySet.toSet,
-    "Analytics" -> graft.catalog.Analytics.queries.keySet.toSet,
-    "TextSim" -> graft.catalog.TextSim.queries.keySet.toSet,
-    "Strategies" -> graft.catalog.Strategies.queries.keySet.toSet,
-    "GraphML" -> graft.catalog.GraphML.queries.keySet.toSet,
-    "ScaleOps" -> graft.catalog.ScaleOps.queries.keySet.toSet)
-
-  private def ownerOf(name: String): String =
-    owners.collectFirst { case (o, ks) if ks(name) => o }.getOrElse("?")
-
   def render(): String = {
-    val names = graft.SparkEntry.queries.keySet.toSeq
-    val oracles = graft.SparkEntry.oracleSql.keySet
-    val bySection = names.groupBy(n =>
-      sectionOverride.getOrElse(n, sectionOf(n)))
+    val rows = for (m <- graft.SparkEntry.modules; e <- m.entries)
+      yield (e, m.getClass.getSimpleName.stripSuffix("$"))
+    val bySection = rows.groupBy { case (e, _) => sectionOf(e.id) }
     val sb = new StringBuilder
     sb ++= "# Catalog — the engine's query surface\n\n"
     sb ++= ("Generated from `SparkEntry.queries` by `graft.tools.CatalogDoc`; " +
       "drift-checked by `CatalogDocSpec`. " +
-      s"${names.size} entries, ${names.count(oracles)} hash-gated " +
+      s"${rows.size} entries, ${rows.count(_._1.oracle.isDefined)} hash-gated " +
       "(DuckDB oracle compare), the rest rows-only by sanctioned design " +
       "(SURVEY §7.4) with a named hash-gated twin.\n\n")
     sb ++= ("Run one entry: `SparkEntry.queries(id)(spark, sfDir)`. " +
@@ -356,9 +54,9 @@ object CatalogDoc {
     sectionOrder.foreach { sec =>
       bySection.get(sec).foreach { entries =>
         sb ++= s"\n## $sec\n\n| id | oracle | owner | contract |\n|---|---|---|---|\n"
-        entries.sorted.foreach { n =>
-          val kind = if (oracles(n)) "hash" else "rows-only"
-          sb ++= s"| `$n` | $kind | ${ownerOf(n)} | ${contracts.getOrElse(n, "?")} |\n"
+        entries.sortBy(_._1.id).foreach { case (e, owner) =>
+          val kind = if (e.oracle.isDefined) "hash" else "rows-only"
+          sb ++= s"| `${e.id}` | $kind | $owner | ${e.contract} |\n"
         }
       }
     }
@@ -369,6 +67,6 @@ object CatalogDoc {
     val out = args.headOption.getOrElse("CATALOG.md")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       render().getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[catalogdoc] wrote $out (${contracts.size} contracts)")
+    println(s"[catalogdoc] wrote $out (${graft.SparkEntry.queries.size} entries)")
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hybrid-kernel leg measurement — the protocol behind SCALING.md's
@@ -27,19 +27,7 @@ object HybridSweep {
     // probes run in the ORDER GIVEN (so a cheap absorber can be put
     // first to soak the JVM/JIT warm-up — the Bench subset discipline)
     val only = args.drop(1).headOption.map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      // driver heap: pass -Xmx on the java command line (a builder conf
-      // cannot resize an already-started local JVM)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     def knn: DataFrame = graft.sim.KnnCache.topk(spark, sfDir, 5)
       .select(col("src").cast("string").as("src"),

@@ -1,16 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.graph.Louvain
 
 /** Scratch driver for Louvain convergence inspection (not part of the
   * engine surface). */
 object LouvainDebug {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
     import spark.implicits._
     val c1 = for (a <- 1 to 5; b <- 1 to 5 if a < b) yield (s"a$a", s"a$b", 1.0)
     val c2 = for (a <- 1 to 5; b <- 1 to 5 if a < b) yield (s"b$a", s"b$b", 1.0)

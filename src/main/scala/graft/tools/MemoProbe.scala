@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe (r14): prices the graph-memo materialization variants
   * against each other on one host — localCheckpoint (the pre-r14 memo),
   * columnar persist with serial counts (the r14 memo), and columnar
@@ -12,18 +10,11 @@ import org.apache.spark.sql.SparkSession
 object MemoProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def session(extra: Map[String, String]) = {
-      val b = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.ui.enabled", "false")
-      extra.foreach { case (k, v) => b.config(k, v) }
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+    // `compressed` is a runtime SQL conf, so the no-compress variant
+    // sets it on the fresh session rather than at build time
+    def session(compressed: Boolean = true) = {
+      val s = graft.core.GraftSession.local()
+      s.conf.set("spark.sql.inMemoryColumnarStorage.compressed", compressed)
       // warm-up shuffle so variant 1 doesn't absorb codegen startup
       s.range(100000).groupBy(org.apache.spark.sql.functions.pmod(
         org.apache.spark.sql.functions.col("id"),
@@ -39,7 +30,7 @@ object MemoProbe {
 
     for (round <- 1 to args.headOption.map(_.toInt).getOrElse(2)) {
       locally {
-        val s = session(Map.empty)
+        val s = session()
         val g = graft.graph.GraphBuilder.buildTpch(s, dir)
         time(s"r$round localCheckpoint(eager)") {
           g.nodes.localCheckpoint(true); g.edges.localCheckpoint(true)
@@ -47,7 +38,7 @@ object MemoProbe {
         s.stop()
       }
       locally {
-        val s = session(Map.empty)
+        val s = session()
         val g = graft.graph.GraphBuilder.buildTpch(s, dir)
         time(s"r$round persist+counts serial") {
           val n = g.nodes.persist(lvl); val e = g.edges.persist(lvl)
@@ -58,7 +49,7 @@ object MemoProbe {
         s.stop()
       }
       locally {
-        val s = session(Map.empty)
+        val s = session()
         val g = graft.graph.GraphBuilder.buildTpch(s, dir)
         time(s"r$round persist+counts parallel") {
           val n = g.nodes.persist(lvl); val e = g.edges.persist(lvl)
@@ -68,7 +59,7 @@ object MemoProbe {
         s.stop()
       }
       locally {
-        val s = session(Map("spark.sql.inMemoryColumnarStorage.compressed" -> "false"))
+        val s = session(compressed = false)
         val g = graft.graph.GraphBuilder.buildTpch(s, dir)
         time(s"r$round persist-nocompress serial") {
           val n = g.nodes.persist(lvl); val e = g.edges.persist(lvl)

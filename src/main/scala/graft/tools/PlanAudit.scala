@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative catalog queries so
   * the shuffle/broadcast/pushdown structure can be audited (the "is this
   * the plan you'd want at 100 TB" loop). */
@@ -10,12 +8,7 @@ object PlanAudit {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_agg", "p4_temporal_cutoff", "j5_feature_lookup_join",
         "j3_two_hop_links", "j7_knn_topk", "rec_q2_softmax")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names.foreach { n =>
       println(s"\n================= $n =================")

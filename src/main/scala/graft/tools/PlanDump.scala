@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for every catalog query (or a named
   * subset) to one file per query — the r14 optimization-round evidence
-  * trail (`plans/r14/<name>_<tag>.txt`). Session config mirrors
-  * graft.Bench so the captured plans are the benched plans.
+  * trail (`plans/r14/<name>_<tag>.txt`). The session comes from
+  * graft.core.GraftSession, as Bench's does, so the captured plans are
+  * the benched plans.
   *
   * Usage: PlanDump <outDir> <tag> [name1,name2,...]
   */
@@ -15,18 +14,7 @@ object PlanDump {
     val tag = args.lift(1).getOrElse("before")
     val only = args.lift(2).map(_.split(",").toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = graft.SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the rec_q1 candidate build (not part of the
@@ -8,13 +7,7 @@ import org.apache.spark.sql.functions._
 object RecProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("rec-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     def t[A](name: String)(f: => A): A = {
       val s = System.nanoTime(); val r = f
       println(f"[prof] $name%-28s ${(System.nanoTime() - s) / 1e9}%.2f s"); r

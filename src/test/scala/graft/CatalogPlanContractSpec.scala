@@ -151,23 +151,6 @@ class CatalogPlanContractSpec extends SparkSpec {
         val plan = df.queryExecution.executedPlan.toString
           .split("== Initial Plan ==")(0)
         swept += 1
-        // drain this entry's construction-time plans (flush the async
-        // bus first so attribution by position is exact)
-        org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-        var ev = ctorPlans.poll()
-        while (ev != null) {
-          val (func, cplan) = ev
-          if (cplan.contains("CartesianProduct"))
-            failures += s"$name: CartesianProduct in a construction-time plan ($func)"
-          if (cplan.contains("BroadcastNestedLoopJoin")) {
-            sawCtorBnlj += name
-            if (!bnljConstructionRegistered.contains(name))
-              failures += (s"$name: unregistered BroadcastNestedLoopJoin in a " +
-                s"construction-time plan ($func) — register the bounded build " +
-                "side or fix the join")
-          }
-          ev = ctorPlans.poll()
-        }
         if (plan.contains("CartesianProduct"))
           failures += s"$name: CartesianProduct in the final plan"
         if (plan.contains("SortMergeJoin")) {
@@ -186,6 +169,25 @@ class CatalogPlanContractSpec extends SparkSpec {
       } catch { case e: Throwable =>
         failures += s"$name: failed to execute: ${e.getClass.getName}: " +
           String.valueOf(e.getMessage).take(200)
+      } finally {
+        // drain this entry's construction-time plans — in `finally`, so
+        // an entry that throws never bills its plans to the next one
+        // (flush the async bus first so attribution by position is exact)
+        org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
+        var ev = ctorPlans.poll()
+        while (ev != null) {
+          val (func, cplan) = ev
+          if (cplan.contains("CartesianProduct"))
+            failures += s"$name: CartesianProduct in a construction-time plan ($func)"
+          if (cplan.contains("BroadcastNestedLoopJoin")) {
+            sawCtorBnlj += name
+            if (!bnljConstructionRegistered.contains(name))
+              failures += (s"$name: unregistered BroadcastNestedLoopJoin in a " +
+                s"construction-time plan ($func) — register the bounded build " +
+                "side or fix the join")
+          }
+          ev = ctorPlans.poll()
+        }
       }
     }
     spark.listenerManager.unregister(listener)
