@@ -226,9 +226,7 @@ object TextSim extends CatalogModule {
         .foreach(java.nio.file.Files.delete)
       finally walk.close()
     }
-    def lap[T](tag: String)(f: => T): T =
-      graft.core.Debug.lap("GRAFT_E11_DEBUG", tag)(f)
-    val signed = lap("signatures")(bandSignatures(spark, dir))
+    val signed = bandSignatures(spark, dir)
     val isArrival = pmod(col("doc_id"), lit(3)) === 0
     // ONE persisted signature artifact — band signatures + shingle sets
     // for every doc; each micro-batch derives its store/arrival views
@@ -236,7 +234,7 @@ object TextSim extends CatalogModule {
     // few fat files: the store is re-scanned by every micro-batch and
     // the drops are file-sized anyway — 32 shards of a 16-byte-row
     // frame is pure open/footer overhead
-    lap("signed-write")(signed.coalesce(4).write.parquet(s"$base/signed"))
+    signed.coalesce(4).write.parquet(s"$base/signed")
     val arr = Tables.documents(spark, dir).filter(isArrival).select("doc_id")
     // ONE job writes both drops: partitionBy splits rows into src/drop=K
     // by VALUE regardless of task placement (the hash repartition merely
@@ -244,11 +242,9 @@ object TextSim extends CatalogModule {
     // both in one task — layout and stream semantics don't depend on it);
     // the recursive stream glob reads the result identically to two
     // separate writes
-    lap("drops-write") {
-      arr.withColumn("drop", pmod(col("doc_id"), lit(2)))
-        .repartition(2, col("drop"))
-        .write.partitionBy("drop").parquet(s"$base/src")
-    }
+    arr.withColumn("drop", pmod(col("doc_id"), lit(2)))
+      .repartition(2, col("drop"))
+      .write.partitionBy("drop").parquet(s"$base/src")
     // cloned session for isolation, shuffle partitions pinned to the
     // corpus-adaptive width (see streamWidth): low enough that sf0.1's
     // batch-sized joins don't pay 32 near-empty tasks per exchange
@@ -283,8 +279,7 @@ object TextSim extends CatalogModule {
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        val tB = System.nanoTime()
+      .foreachBatch { (b: DataFrame, _: Long) =>
         // join-side hints are MANDATORY here, not advisory: streaming
         // disables AQE, so the static planner sees only file-size
         // estimates, while the relational twin d7 gets runtime stats.
@@ -316,12 +311,10 @@ object TextSim extends CatalogModule {
             coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
           .withColumn("kept", (col("n_dups") === 0).cast("int"))
         result.coalesce(1).write.mode("append").parquet(out)
-        if (sys.env.contains("GRAFT_E11_DEBUG"))
-          println(f"[e11] batch $bid: ${(System.nanoTime() - tB) / 1e9}%.2f s")
         ()
       }
       .start()
-    lap("stream-drain")(q.awaitTermination())
+    q.awaitTermination()
     // the mounted store served its session; release its block-manager
     // storage so a long bench JVM doesn't carry the shingle arrays
     // until GC (the result below reads only the written parquet)

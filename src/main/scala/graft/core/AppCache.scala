@@ -135,9 +135,6 @@ object AppCache {
     // total over DISTINCT rdds (two entries may share one frame)
     var total = refs.keys.map(memBytes.getOrElse(_, 0L)).sum
     var freed = 0L; var n = 0
-    if (sys.env.contains("GRAFT_TRIM_DEBUG")) ents.foreach(e =>
-      System.err.println(s"[trim] key=${e.key} rdds=${e.rdds.map(_._1)} " +
-        s"bytes=${e.bytes} touch=${e.touch}"))
     for (e <- ents.sortBy(_.touch) if total > budgetBytes && e.bytes > 0) {
       e.cache.asInstanceOf[ConcurrentHashMap[Any, Any]].remove(e.key)
       lastTouch.remove(new IdKey(e.cache, e.key))

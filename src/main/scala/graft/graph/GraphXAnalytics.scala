@@ -144,8 +144,7 @@ object GraphXAnalytics {
     * state with a co-partitioned left join. State checkpoints keep the
     * (vid, W) layout; the previous round's blocks are released inline. */
   private def hashMinPhase(spark: SparkSession, edgesSym: DataFrame, W: Int,
-                           maxRounds: Int, tag: String,
-                           debug: Boolean): (DataFrame, Boolean) = {
+                           maxRounds: Int): (DataFrame, Boolean) = {
     val serLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val cand1 = edgesSym.groupBy("src").agg(min("dst").as("m"))
       .withColumnRenamed("src", "vid")
@@ -159,7 +158,6 @@ object GraphXAnalytics {
     var live = !frontier.isEmpty
     var r = 1
     while (live && (maxRounds <= 0 || r < maxRounds)) {
-      val t0 = System.nanoTime()
       val offers = edgesSym
         .join(frontier.withColumnRenamed("vid", "src")
           .hint("shuffle_hash"), "src")
@@ -178,9 +176,6 @@ object GraphXAnalytics {
       frontier = state.filter(col("ch")).select("vid", "lbl")
       live = !frontier.isEmpty
       org.apache.spark.sql.GraftColumnBridge.releaseCheckpoint(prev)
-      if (debug) System.err.println(
-        f"[$tag] round ${r + 1} changed=${frontier.count()} " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2f")
       r += 1
     }
     (state.select("vid", "lbl"), !live)
@@ -201,12 +196,11 @@ object GraphXAnalytics {
     * rounds before contracting is never worth it; depth ≥ 3 runs to
     * fixpoint instead (termination guarantee for adversarial chains). */
   private def ccSolve(spark: SparkSession, edgesSym: DataFrame, W: Int,
-                      depth: Int, debug: Boolean): DataFrame = {
+                      depth: Int): DataFrame = {
     val (s, conv) = hashMinPhase(spark, edgesSym, W,
-      maxRounds = if (depth < 3) 2 else 0, tag = s"cc$depth", debug = debug)
+      maxRounds = if (depth < 3) 2 else 0)
     if (conv) s
     else {
-      val t0 = System.nanoTime()
       val bySrc = edgesSym
         .join(s.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
         .select(col("dst"), col("lbl").as("la"))
@@ -218,10 +212,7 @@ object GraphXAnalytics {
         .repartition(W, col("src"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val qEdgeCount = qEdges.count()
-      if (debug) System.err.println(
-        f"[cc$depth] contract qEdges=$qEdgeCount " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2f")
-      val solved = ccSolve(spark, qEdges, W, depth + 1, debug)
+      val solved = ccSolve(spark, qEdges, W, depth + 1)
       val qMap = solved.select(col("vid").as("lbl"), col("lbl").as("q"))
       // labels with no cross-label edge never enter the quotient and
       // keep themselves (left join + coalesce)
@@ -283,7 +274,7 @@ object GraphXAnalytics {
         // each and rounds 3-7 still scanned the full edge table
         // (sf10 probe: 77 s of rounds + 50 s edge build/seed = parity
         // with Pregel). This version attacks the total offer MASS:
-        //   * ONE unified (key, shuffleP) hash layout for edges AND
+        //   * ONE unified (key, W) hash layout for edges AND
         //     state. The edge table is symmetric (both directions), so
         //     the seed round — min over neighbors — is a groupBy on the
         //     edge table's own partition key: zero exchange, and every
@@ -301,8 +292,8 @@ object GraphXAnalytics {
         // Correctness: parity with the dense union-find is asserted in
         // GraphXEnrichSpec (forced-low gate), incl. a multi-wave path
         // graph that exercises the contraction.
-        val W = spark.sessionState.conf.numShufflePartitions
-        val ccDebug = sys.env.contains("GRAFT_SP_DEBUG")
+        // mass-derived partition count: the PageRank/shortest-paths rule
+        val W = edgeParts(spark.sparkContext, 2L * g.edges.count())
         // one memo scan: explode both directions instead of a 2-scan
         // union (the probe priced the build at 30 s of the 113 s entry)
         val edgesSym = g.edges
@@ -314,7 +305,7 @@ object GraphXAnalytics {
           .repartition(W, col("src"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         edgesSym.count() // materialize before the rounds
-        val labels = ccSolve(spark, edgesSym, W, depth = 0, debug = ccDebug)
+        val labels = ccSolve(spark, edgesSym, W, depth = 0)
         edgesSym.unpersist(blocking = false)
         labels.select(col("vid"), col("lbl").as("component_vid"))
     }
@@ -705,7 +696,7 @@ object GraphXAnalytics {
         // MemoryStore (jstack: 26/32 executor threads queued on
         // reserveUnrollMemoryForThisTask; still >45 min). A first
         // DataFrame cut kept a full |V|-row state table folded by
-        // full_outer join each round; the plan audit (tools.SpPlanCheck)
+        // full_outer join each round; its executed round plan
         // showed that costs two |E|-scale SORTS per round (min over a
         // struct compiles to SortAggregate, not HashAggregate) plus a
         // |V| re-exchange per round (a FullOuter shuffled join reports
@@ -782,13 +773,10 @@ object GraphXAnalytics {
             .repartition(shuffleP, col("vid")),
             serLevel, capStatsBytes = Some(1L << 40))
         val layers = scala.collection.mutable.ArrayBuffer[DataFrame](layer0)
-        // round telemetry for SCALING probes (stderr, opt-in)
-        val spDebug = sys.env.contains("GRAFT_SP_DEBUG")
         var frontier = layer0
         var live = !frontier.isEmpty
         var r = 0
         while (r < rounds && live) {
-          val t0 = System.nanoTime()
           val offers = edgesBoth
             .join(frontier.withColumnRenamed("vid", "src")
               .hint("shuffle_hash"), "src")
@@ -815,9 +803,6 @@ object GraphXAnalytics {
             .checkpointKeepingPartitioning(newly, serLevel,
               capStatsBytes = Some(1L << 40))
           live = !layerCk.isEmpty
-          if (spDebug) System.err.println(
-            f"[sp] round $r layer=${layerCk.count()} " +
-              f"wall=${(System.nanoTime() - t0) / 1e9}%.2f")
           if (live) layers += layerCk
           frontier = layerCk
           r += 1

@@ -139,8 +139,6 @@ object Louvain {
           .select(col("id"), col("next").as("community"))
       mapping = ckpt(mapping) // materialized by the composed-Q action
       val q = modularityFromParts(orig, mapping, resolution)
-      if (sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-        println(f"[louvain] level=$level composedQ=$q%.4f bestQ=$bestQ%.4f")
       if (q > bestQ + 1e-12) { bestQ = q; bestMapping = mapping }
       else if (level > 0) continue = false // coarsening stopped helping
       level += 1
@@ -351,8 +349,6 @@ object Louvain {
       // synchronous moves don't guarantee monotone modularity — keep the
       // best partition seen (evaluated on THIS level's materialized parts)
       val q = qOf(p, stats("intra"), stats("sq"), resolution)
-      if (sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-        println(f"[louvain]   iter=$iter q=$q%.4f moved=$moved")
       if (q > bestQ) { bestQ = q; bestComm = comm }
       iter += 1
     }

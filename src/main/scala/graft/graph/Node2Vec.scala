@@ -57,10 +57,7 @@ object Node2Vec {
   def walks(spark: SparkSession, edges: DataFrame, prm: Params,
             broadcastMaxNodes: Long = 2000000L): DataFrame = {
     val adj0 = neighborTable(edges).cache()
-    val tAdj = System.nanoTime()
     val nNodes = adj0.count()
-    if (sys.env.contains("GRAFT_N2V_DEBUG"))
-      println(f"[n2v] adjacency: ${(System.nanoTime() - tAdj) / 1e9}%.2f s ($nNodes nodes)")
     val adj = if (nNodes <= broadcastMaxNodes) broadcast(adj0) else adj0
 
     // initial state: numWalks walks per node; first hop is a uniform
@@ -125,11 +122,6 @@ object Node2Vec {
       if (step % 4 == 0)
         state = org.apache.spark.sql.GraftColumnBridge
           .localCheckpointClampedStats(state)
-      if (sys.env.contains("GRAFT_N2V_DEBUG")) {
-        val ts = System.nanoTime()
-        state = state.localCheckpoint(true)
-        println(f"[n2v] step $step: ${(System.nanoTime() - ts) / 1e9}%.2f s")
-      }
     }
     state.select(col("walk_id"), col("path").as("walk"))
   }
@@ -140,7 +132,6 @@ object Node2Vec {
                  prm: Params = Params()): DataFrame = {
     // materialize: Word2Vec makes several passes (vocab count + training)
     // and would otherwise replay the whole walk-join chain each time
-    val t0 = System.nanoTime()
     // Word2Vec consumes string "sentences"; the walk engine itself is
     // id-type-agnostic — feeding NUMERIC node ids keeps every
     // per-candidate lambda op (equality, array_contains, xxhash64) on
@@ -154,9 +145,6 @@ object Node2Vec {
       w0
     else w0.withColumn("walk", col("walk").cast("array<string>")))
       .localCheckpoint(true)
-    if (sys.env.contains("GRAFT_N2V_DEBUG"))
-      println(f"[n2v] walks: ${(System.nanoTime() - t0) / 1e9}%.2f s (${w.count()} walks)")
-    val t1 = System.nanoTime()
     val model = new Word2Vec()
       .setInputCol("walk").setOutputCol("vec")
       .setVectorSize(prm.dim).setWindowSize(prm.window)
@@ -164,8 +152,6 @@ object Node2Vec {
       .setMaxSentenceLength(prm.maxSentenceLength)
       .setNumPartitions(prm.w2vPartitions)
       .fit(w)
-    if (sys.env.contains("GRAFT_N2V_DEBUG"))
-      println(f"[n2v] w2v fit: ${(System.nanoTime() - t1) / 1e9}%.2f s")
     model.getVectors.select(
       col("word").as("id"),
       org.apache.spark.ml.functions.vector_to_array(col("vector"), "float32")

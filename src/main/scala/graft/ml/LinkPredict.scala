@@ -22,15 +22,6 @@ import graft.functions.ColFns
   */
 object LinkPredict {
 
-  private def timed[T](label: String)(body: => T): T =
-    if (!sys.env.contains("GRAFT_ML_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[ml] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   val featureNames: Seq[String] = Seq(
     "cust_frequency", "cust_recency", "acctbal",
     "part_popularity", "price", "discount", "bal_x_price")
@@ -49,8 +40,7 @@ object LinkPredict {
     // a dead one (same rule as the catalog-level caches)
     graft.core.AppCache.get(setCache,
       (spark.sparkContext.applicationId, dir, cap, month)) {
-      timed(s"trainingSet(cap=$cap)") {
-        trainingSet(spark, dir, cap, month).localCheckpoint(true) } }
+      trainingSet(spark, dir, cap, month).localCheckpoint(true) }
 
   /** M2: the discount model's multi-date training corpus — one slice per
     * simulated month with the discount recomputed per date, unioned with
@@ -82,9 +72,8 @@ object LinkPredict {
     // (exact count for the cap fraction, the hash-capped positives, and
     // the anti-join's build side) — unchecked, each replays the
     // orders⋈lineitem join + distinct shuffle
-    val pos = timed("pos pairs") {
-      graft.graph.Links.purchasePairsNumeric(spark, dir)
-        .withColumn("label", lit(1.0)) }
+    val pos = graft.graph.Links.purchasePairsNumeric(spark, dir)
+      .withColumn("label", lit(1.0))
     val posN = pos.count()
     val posFrac = math.min(1.0, cap.toDouble / math.max(posN, 1L))
     val posCapped = pos.filter(
@@ -111,11 +100,10 @@ object LinkPredict {
     val negCand = custSel.crossJoin(partSel)
       .filter(ColFns.pseudoUniform(col("customer") * 977 + col("product"), 37L) <
         negFrac)
-    val neg = timed("neg anti-join") {
-      negCand.join(pos.select("customer", "product"),
-          Seq("customer", "product"), "left_anti")
-        .withColumn("label", lit(0.0))
-        .localCheckpoint(true) }
+    val neg = negCand.join(pos.select("customer", "product"),
+        Seq("customer", "product"), "left_anti")
+      .withColumn("label", lit(0.0))
+      .localCheckpoint(true)
 
     val pairs = posCapped.select("customer", "product", "label")
       .unionByName(neg.select("customer", "product", "label"))
@@ -169,16 +157,15 @@ object LinkPredict {
 
     // M10: balanced class weights — one aggregate job for both classes
     // (two filter().count() jobs would scan the cache twice)
-    val classCounts = timed("class counts") {
-      train.groupBy("label").count().collect()
-        .map(r => r.getDouble(0) -> r.getLong(1)).toMap }
+    val classCounts = train.groupBy("label").count().collect()
+      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
     val nPos = math.max(classCounts.getOrElse(1.0, 0L), 1L)
     val nNeg = math.max(classCounts.getOrElse(0.0, 0L), 1L)
     val total = (nPos + nNeg).toDouble
     val weighted = train.withColumn("w",
       when(col("label") === 1.0, total / (2.0 * nPos)).otherwise(total / (2.0 * nNeg)))
 
-    val (model: org.apache.spark.ml.Transformer, importances) = timed(s"fit $algo") { algo match {
+    val (model: org.apache.spark.ml.Transformer, importances) = algo match {
       case "gbt" =>
         val m = new GBTClassifier().setLabelCol("label").setFeaturesCol("features")
           .setWeightCol("w").setMaxIter(maxIter).setMaxDepth(maxDepth)
@@ -193,17 +180,17 @@ object LinkPredict {
             .setWeightCol("w").setMaxIter(lrMaxIter).setRegParam(0.01)
             .fit(weighted))
         (m, featureNames.zip(m.coefficients.toArray.map(math.abs)))
-    } }
+    }
 
     val p1 = org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1)
     val scoredTrain = model.transform(train)
     val scoredVal = model.transform(test)
-    val aucTrain = timed("auc train")(
-      Metrics.auc(scoredTrain, "label", p1, bounds = Some((0.0, 1.0))))
+    val aucTrain =
+      Metrics.auc(scoredTrain, "label", p1, bounds = Some((0.0, 1.0)))
     // val side: ROC + PR in one grouped pass (vs a Metrics.auc pass plus
     // MLlib's multi-stage BinaryClassificationMetrics pipeline)
-    val (aucVal, prVal) = timed("aucs val")(
-      Metrics.binaryAucs(scoredVal, "label", p1, bounds = Some((0.0, 1.0))))
+    val (aucVal, prVal) =
+      Metrics.binaryAucs(scoredVal, "label", p1, bounds = Some((0.0, 1.0)))
     val gap = aucTrain - aucVal
     val metrics = Map(
       "n_train" -> classCounts.values.sum.toDouble, "n_test" -> test.count().toDouble,

@@ -458,9 +458,6 @@ object TowerNet {
       var schedBest = 0.0; var plateau = 0
       val log = Seq.newBuilder[Epoch]
 
-      def lap[T](tag: String)(f: => T): T =
-        graft.core.Debug.lap("GRAFT_TOWER_DEBUG", tag)(f)
-
       /** One gradient job: per-partition partial sums, combined on the
         * driver in PARTITION-INDEX order (deterministic float fold). */
       def gradPass(w: Array[Double]): (Array[Double], Double) = {
@@ -534,7 +531,7 @@ object TowerNet {
       try {
         var epoch = 0
         while (epoch < epochs) {
-          val (grads, loss) = lap(s"grad e$epoch")(gradPass(params))
+          val (grads, loss) = gradPass(params)
           if (pendingAuc != null)
             bookkeep(epoch - 1, scala.concurrent.Await.result(
               pendingAuc, scala.concurrent.duration.Duration.Inf))
@@ -554,9 +551,7 @@ object TowerNet {
           }
           lastLoss = loss; lastNorm = norm; lastClipped = scale < 1.0
           val wSnap = params.clone() // frozen post-update snapshot
-          val e = epoch
-          pendingAuc = scala.concurrent.Future(
-            lap(s"auc e$e")(valAuc(wSnap)))(aucEc)
+          pendingAuc = scala.concurrent.Future(valAuc(wSnap))(aucEc)
           epoch += 1
         }
         if (pendingAuc != null)

@@ -71,8 +71,6 @@ object Recommend {
                  candidateCap: Int): DataFrame =
     graft.core.AppCache.get(candCache, (spark.sparkContext.applicationId,
         dir, customerFilter.toString, candidateCap)) {
-      def lap[T](tag: String)(f: => T): T =
-        graft.core.Debug.lap("GRAFT_REC_DEBUG", tag)(f)
       val cust = Tables.customer(spark, dir).filter(customerFilter)
         .select(col("c_custkey").as("customer"), col("c_acctbal").as("acctbal"))
       val parts = validProducts(Tables.part(spark, dir))
@@ -85,7 +83,7 @@ object Recommend {
       // queried slice, so the anti-join's build side shrinks from every
       // customer's history to the queried customers and broadcasts; the
       // big crossJoin side then avoids a shuffle entirely
-      val purchased = lap("pair-fill")(graft.graph.Links.purchasePairsNumeric(spark, dir))
+      val purchased = graft.graph.Links.purchasePairsNumeric(spark, dir)
         .join(broadcast(cust.select("customer")), Seq("customer"), "left_semi")
 
       // R2: deterministic candidate cap per customer (hash-ranked)
@@ -96,7 +94,7 @@ object Recommend {
       // falls back to the shuffled anti-join. The only driver-side count
       // is the queried slice itself; the product count rides the
       // expansion job as a broadcast 1-row aggregate.
-      val custN = lap("counts")(cust.count())
+      val custN = cust.count()
       val custBounded = custN <= 100000L
       val excl = if (custBounded) broadcast(purchased) else purchased
       // pre-filter by the SAME hash the cap window ranks on: only rows
@@ -149,9 +147,8 @@ object Recommend {
       // (derived from the executed plan, not asserted) — in both bounded
       // shapes that is hashpartitioning(customer), so the strategy
       // windows downstream stay exchange-free
-      lap("cand-materialize")(
-        org.apache.spark.sql.GraftColumnBridge.checkpointKeepingPartitioning(
-          capped.select("customer", "acctbal", "product", "category", "price")))
+      org.apache.spark.sql.GraftColumnBridge.checkpointKeepingPartitioning(
+        capped.select("customer", "acctbal", "product", "category", "price"))
     }
 
   /** Build/serve split for the serving path (the `sim_ivf_persisted`

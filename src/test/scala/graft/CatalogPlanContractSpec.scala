@@ -25,6 +25,8 @@ package graft
   * (each registered site is audited in the file's own comments — dense-
   * kernel gates with distributed fallbacks, audit-scale sinks, or
   * metadata-sized frames; see VERDICT r11 "anti-pattern sweep").
+  * Environment reads get the same kind of static census: every
+  * `sys.env` read is pinned as (file, variable).
   *
   * The sweep executes all 257 entries once (~2-3 min at sf0.001) — it
   * IS the judge's manual re-grep, promoted to CI.
@@ -232,8 +234,6 @@ class CatalogPlanContractSpec extends SparkSpec {
       "Louvain.scala:parts" -> (1, "graph constants m2/selfW, one 2-row readout per level"),
       "Louvain.scala:modularityFromParts" -> (1, "composed-Q scalars, one 2-row readout per level"),
       "Louvain.scala:localMoves" -> (1, "per-round convergence scalars, one 3-row readout per round"),
-      "LouvainDebug.scala:main" -> (1, "debug main, not a catalog path"),
-      "SpPlanCheck.scala:audit" -> (2, "plan-audit scratch driver, not a catalog path: materialize + inspect the executed round plan"),
       "Metrics.scala:aucDistributed" -> (1, "rank-AUC dense leg behind the 1M gate, histogram fallback"),
       "Metrics.scala:binaryAucsDistributed" -> (1, "same gate as aucDistributed, batched variant"),
       "ScaleOps.scala:drainDrop" -> (1, "foreachBatch audit sink, O(windows in horizon) not O(events)"),
@@ -250,34 +250,24 @@ class CatalogPlanContractSpec extends SparkSpec {
       "TowerNet.scala:toMat" -> (1, "model-sized parameter frame"),
       "TowerNet.scala:valAuc" -> (1, "validation scores for AUC (val-split-bounded)"))
     val defRe = """\bdef\s+(\w+)""".r
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val stream = java.nio.file.Files.walk(root)
-    val actual = try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val src = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          // LITERAL occurrence scan (an unquoted regex's dot/parens
-          // would also match collect-with-partial-function sites);
-          // enclosing def = nearest preceding `def name` — a heuristic,
-          // but a stable one: it only has to be deterministic for the
-          // census to pin sites
-          val defs = defRe.findAllMatchIn(src)
-            .map(m => (m.start, m.group(1))).toArray
-          var sites = List.empty[String]
-          var i = src.indexOf(".collect()")
-          while (i >= 0) {
-            val d = defs.takeWhile(_._1 < i).lastOption
-              .map(_._2).getOrElse("<toplevel>")
-            sites ::= s"${p.getFileName.toString}:$d"
-            i = src.indexOf(".collect()", i + 1)
-          }
-          sites
-        }
-        .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
-    } finally stream.close()
+    val actual = mainSources.flatMap { case (file, src) =>
+      // LITERAL occurrence scan (an unquoted regex's dot/parens
+      // would also match collect-with-partial-function sites);
+      // enclosing def = nearest preceding `def name` — a heuristic,
+      // but a stable one: it only has to be deterministic for the
+      // census to pin sites
+      val defs = defRe.findAllMatchIn(src)
+        .map(m => (m.start, m.group(1))).toArray
+      var sites = List.empty[String]
+      var i = src.indexOf(".collect()")
+      while (i >= 0) {
+        val d = defs.takeWhile(_._1 < i).lastOption
+          .map(_._2).getOrElse("<toplevel>")
+        sites ::= s"$file:$d"
+        i = src.indexOf(".collect()", i + 1)
+      }
+      sites
+    }.groupBy(identity).map { case (k, v) => k -> v.size }
     val want = registered.map { case (k, (n, _)) => k -> n }
     val missing = want.toSet -- actual.toSet
     val extra = actual.toSet -- want.toSet
@@ -285,5 +275,45 @@ class CatalogPlanContractSpec extends SparkSpec {
       "collect() census drifted — audit the new/removed/moved site, then " +
         s"update the registry.\n  unregistered or count-changed: ${extra.toSeq.sorted}" +
         s"\n  registered but gone/count-changed: ${missing.toSeq.sorted}")
+  }
+
+  test("environment reads are pinned: a new env knob must register here") {
+    // every `sys.env` read under src/main/scala as (file, variable); a
+    // read whose argument is not a string literal pins as <dynamic>, so
+    // an env-switched code path cannot hide behind a computed name
+    val registered = Set(
+      "GraftSession.scala" -> "SPARK_GRAFT_CPUS",
+      "Bench.scala" -> "SPARK_GRAFT_SF_DIR",
+      "Bench.scala" -> "SPARK_GRAFT_MEMO_BUDGET_MB",
+      "Bench.scala" -> "SPARK_GRAFT_RERUN_SEC",
+      "Bench.scala" -> "SPARK_GRAFT_COMMIT_BENCH",
+      "Verify.scala" -> "SPARK_GRAFT_MEMO_BUDGET_MB",
+      "DrainProbe.scala" -> "SPARK_GRAFT_SF_DIR",
+      "PlanDump.scala" -> "SPARK_GRAFT_SF_DIR")
+    val readRe =
+      """sys\.env(?:\.(?:getOrElse|get|contains|apply))?(?:\(\s*"(\w+)")?""".r
+    val actual = mainSources.flatMap { case (file, src) =>
+      readRe.findAllMatchIn(src)
+        .map(m => file -> Option(m.group(1)).getOrElse("<dynamic>"))
+    }.toSet
+    assert(actual === registered,
+      "env-read census drifted — review the knob, then update the registry." +
+        s"\n  unregistered: ${(actual -- registered).toSeq.sorted}" +
+        s"\n  registered but gone: ${(registered -- actual).toSeq.sorted}")
+  }
+
+  /** (file name, content) of every main source — the walk both static
+    * censuses scan. */
+  private def mainSources: Seq[(String, String)] = {
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> new String(
+          java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8))
+        .toList
+    } finally stream.close()
   }
 }

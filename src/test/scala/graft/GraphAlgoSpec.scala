@@ -58,7 +58,7 @@ class GraphAlgoSpec extends SparkSpec {
     // parity harness for the per-round job-count refactor: the forced
     // leg's OUTPUT (exact canonical partition) on a gate-crossing graph
     // is pinned; any cadence/fusion change to localMoves must reproduce
-    // it bit-for-bit (plus the round trace under GRAFT_LOUVAIN_DEBUG)
+    // it bit-for-bit
     val edges = cliqueRing
     val comm = Louvain.detect(spark, edges, maxIter = 8, seqMaxEdges = 0L)
       .cache()
