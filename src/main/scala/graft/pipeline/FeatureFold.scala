@@ -33,8 +33,10 @@ object FeatureFold {
     val emb = Node2Vec.embeddings(spark, edges.select("src", "dst"), n2v)
       .localCheckpoint(true)
 
-    // G4/J7: KNN similarity graph over the embeddings
-    val sim = Similarity.bruteForceTopK(emb, emb, "id", "embedding", knnK, symmetric = true)
+    // G4/J7: KNN similarity graph over the embeddings — exact top-k by
+    // the broadcast kernel (one map-only stage emitting n·k rows; node
+    // ids are strings, tie-broken in Spark's string order)
+    val sim = Similarity.bruteForceTopKBlocked(emb, emb, "id", "embedding", knnK)
       .select(col("src"), col("dst"), col("cos").as("weight"))
       .localCheckpoint(true)
 

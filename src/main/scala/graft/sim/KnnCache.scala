@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * similarity graph, sim_recall's ground truth) consume it —
   * materialize once per (app, inputs) and share.
   * The 100 TB analogue is a persisted similarity-edges table refreshed
-  * per injection fold (which FeatureFold writes); this cache is the
-  * in-session equivalent. applicationId keys every entry because the
+  * per injection fold (FeatureFold computes the fold's edges and returns
+  * them; nothing persists them yet); this cache is the in-session
+  * equivalent. applicationId keys every entry because the
   * values are localCheckpoint-backed — a fresh context in the same JVM
   * must never see a dead context's blocks.
   */

@@ -1,8 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Embedding similarity search (SURVEY §2.3 J7, §2.10 G4; plus the
   * LLM-pipeline ANN operators the 100 TB design point requires).
@@ -66,9 +67,11 @@ object Similarity {
       .drop("__u")
   }
 
-  /** J7/G4/W1: exact brute-force cosine top-k per source vector.
-    * The baseline ANN path; O(n²) cross join — correct but reserved for
-    * bounded candidate sets. At 100 TB use `lshTopK` below.
+  /** J7/G4/W1: exact brute-force cosine top-k per source vector, as an
+    * O(n²) non-equi join + `row_number` window. This is the reference
+    * formulation — the specs and the benchmark's `sim.knn` layer compare
+    * against it — not an engine path: the engine runs the same top-k
+    * through `bruteForceTopKBlocked`. At 100 TB use `lshTopK` below.
     *
     * `queries` and `corpus` both carry (idCol, vecCol). Self-matches are
     * excluded. Deterministic tie-break on neighbor id.
@@ -111,10 +114,17 @@ object Similarity {
   }
 
   /** Spark's round(_, 6): HALF_UP via BigDecimal, matching the Catalyst
-    * Round expression bit-for-bit. */
+    * Round expression bit-for-bit — including its pass-through of NaN
+    * and ±Infinity, which BigDecimal cannot represent. */
   private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** `a` sorts strictly before `b` under Spark's descending order on
+    * doubles: NaN above every value, NaN equal to NaN, -0.0 equal to 0.0. */
+  private def aboveDesc(a: Double, b: Double): Boolean =
+    if (a.isNaN) !b.isNaN else a > b
 
   /** Brute-force top-k as a broadcast kernel: the corpus (ids, vectors,
     * norms) is collected and broadcast — the same memory contract as a
@@ -125,65 +135,91 @@ object Similarity {
     * exchange and a map-only stage at any scale where brute force is
     * even admissible (corpus fits memory; otherwise lshTopK / ivfTopK).
     *
+    * Ids may be of any orderable non-binary type (bigint vec ids,
+    * string node ids) and must be unique and non-null; `src` and `dst`
+    * come out in that type. The corpus is collected in Spark's own order
+    * of the id column, so the corpus index IS the `dst asc` tie-break
+    * (Spark orders strings as binary UTF-8, not as Java's compareTo) and
+    * ranking runs on (cos desc, index asc) over primitive arrays; self
+    * is excluded by index. `cos` orders as Spark's descending sort does:
+    * NaN above every value, NaN equal to NaN, -0.0 equal to 0.0.
+    *
     * Bit-compatible with bruteForceTopK: same dot fold order, same
     * cos = dot/(qn·cn) expression, same (cos desc, id asc) tie-break,
-    * same HALF_UP rounding — asserted equal in SimilaritySpec.
+    * same HALF_UP rounding — asserted equal in SimilaritySpec. One
+    * deliberate difference: a zero-norm vector scores 0/0 = NaN here,
+    * where the window form's ANSI division raises DIVIDE_BY_ZERO.
     */
   def bruteForceTopKBlocked(queries: DataFrame, corpus: DataFrame,
                             idCol: String, vecCol: String, k: Int,
                             rankRounded: Boolean = false): DataFrame = {
     val sp = queries.sparkSession
-    import sp.implicits._
+    val idType = corpus.schema(idCol).dataType
+    // self-exclusion looks ids up by equals, which byte arrays lack
+    require(idType != BinaryType, s"bruteForceTopKBlocked: binary id column $idCol")
+    // Spark sorts the corpus in the one task that feeds the collect —
+    // its own order on the id type, without orderBy's range-sampling
+    // job and shuffle (the driver holds the whole corpus either way)
     val corpusRows = corpus
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val ids = corpusRows.map(_._1)
-    val vecs = corpusRows.map(_._2)
+      .select(col(idCol), col(vecCol).cast("array<double>"))
+      .coalesce(1).sortWithinPartitions(col(idCol)).collect()
+    val ids = corpusRows.map(_.get(0))
+    val vecs = corpusRows.map(_.getSeq[Double](1).toArray)
     val norms = vecs.map(v => math.sqrt(dotArr(v, v)))
-    val bc = sp.sparkContext.broadcast((ids, vecs, norms))
+    val index = ids.zipWithIndex.toMap
+    val bc = sp.sparkContext.broadcast((ids, vecs, norms, index))
     // spread the QUERY side before the O(|q|·|corpus|·dim) score map —
     // a single-file embeddings scan would otherwise run every dot
     // product in one task (the small-corpus file-layout trap; no-op
     // once the input has real splits)
+    val out = StructType(Seq(
+      StructField("src", idType, nullable = false),
+      StructField("rn", IntegerType, nullable = false),
+      StructField("dst", idType, nullable = false),
+      StructField("cos", DoubleType, nullable = false)))
+    // a typed map over the query plan, not an RDD: the output keeps the
+    // scan's size estimate, so joins over it still plan as broadcasts
     graft.core.Tables.spreadForMap(
-        queries.select(col(idCol).cast("long").as("__id"),
+        queries.select(col(idCol).cast(idType).as("__id"),
           col(vecCol).cast("array<double>").as("__v")), col("__id"))
-      .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val (cids, cvecs, cnorms) = bc.value
-        it.flatMap { case (src, qv) =>
+        val (cids, cvecs, cnorms, cindex) = bc.value
+        it.flatMap { row =>
+          val src = row.get(0)
+          val qv = row.getSeq[Double](1).toArray
           val qn = math.sqrt(dotArr(qv, qv))
+          val self = cindex.getOrElse(src, -1)
           val bestCos = new Array[Double](k)
-          val bestId = new Array[Long](k)
+          val bestIdx = new Array[Int](k)
           var filled = 0
           var j = 0
           while (j < cids.length) {
-            if (cids(j) != src) {
+            if (j != self) {
               val raw = dotArr(qv, cvecs(j)) / (qn * cnorms(j))
               // rankRounded: order by the 6-decimal value the query
               // emits, so near-equal cosines rank identically across
               // engines (ties resolve on id)
               val c = if (rankRounded) round6(raw) else raw
-              val id = cids(j)
-              // insertion position: ordered by (cos desc, id asc)
+              // insertion position under (cos desc, index asc): j only
+              // grows, so an equal cos never passes an earlier entry
               var pos = filled
-              while (pos > 0 && (c > bestCos(pos - 1) ||
-                (c == bestCos(pos - 1) && id < bestId(pos - 1)))) pos -= 1
+              while (pos > 0 && aboveDesc(c, bestCos(pos - 1))) pos -= 1
               if (pos < k) {
                 val upto = math.min(filled, k - 1)
                 var m = upto
                 while (m > pos) {
-                  bestCos(m) = bestCos(m - 1); bestId(m) = bestId(m - 1); m -= 1
+                  bestCos(m) = bestCos(m - 1); bestIdx(m) = bestIdx(m - 1); m -= 1
                 }
-                bestCos(pos) = c; bestId(pos) = id
+                bestCos(pos) = c; bestIdx(pos) = j
                 if (filled < k) filled += 1
               }
             }
             j += 1
           }
-          (0 until filled).map(r => (src, r + 1, bestId(r), round6(bestCos(r))))
+          (0 until filled).map(r =>
+            Row(src, r + 1, cids(bestIdx(r)), round6(bestCos(r))))
         }
-      }.toDF("src", "rn", "dst", "cos")
+      }(Encoders.row(out))
   }
 
   /** Threshold similarity self-join as a broadcast kernel (the blocked

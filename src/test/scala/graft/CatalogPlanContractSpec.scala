@@ -302,7 +302,18 @@ class CatalogPlanContractSpec extends SparkSpec {
         s"\n  registered but gone: ${(registered -- actual).toSeq.sorted}")
   }
 
-  /** (file name, content) of every main source — the walk both static
+  test("KNN census: no main source calls the n² window top-k") {
+    // bruteForceTopK is the reference formulation specs and perfbench
+    // compare against; the engine's exact top-k is bruteForceTopKBlocked
+    val callRe = """(?<!def )\bbruteForceTopK\(""".r
+    val callers = mainSources.flatMap { case (file, src) =>
+      callRe.findAllMatchIn(src).map(_ => file)
+    }
+    assert(callers.isEmpty,
+      s"bruteForceTopK( called from ${callers.sorted.mkString(", ")} — use bruteForceTopKBlocked")
+  }
+
+  /** (file name, content) of every main source — the walk the static
     * censuses scan. */
   private def mainSources: Seq[(String, String)] = {
     val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))

@@ -174,6 +174,14 @@ class PipelineArtifactsSpec extends SparkSpec {
     assert(fold.features.columns.toSet.intersect(
       Set("degree", "degree_z", "log_degree", "community", "embedding")).size === 5)
     assert(fold.communities.select("community").distinct().count() >= 1)
+    // the fold's KNN graph over string node ids equals the window
+    // formulation's on the same embeddings
+    val window = graft.sim.Similarity.bruteForceTopK(fold.embeddings, fold.embeddings,
+      "id", "embedding", 5, symmetric = true)
+      .select($"src", $"dst", $"cos".as("weight"))
+    def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    assert(edges(fold.simEdges) === edges(window))
   }
 
   test("S5: GraphML sink writes well-formed XML") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -83,14 +84,34 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("blocked kernel output is identical to the window formulation") {
-    val e = graft.core.Tables.embeddings(spark, sfDir)
-    val window = Similarity.bruteForceTopK(e, e, "vec_id", "embedding", 5,
-      symmetric = true).collect().map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val blocked = Similarity.bruteForceTopKBlocked(e, e, "vec_id", "embedding", 5)
-      .collect().map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(blocked === window) // exact: same dots, ranks, ties, rounding
+    val e = graft.core.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val nextId = e.agg(max("vec_id")).head().getLong(0) + 1
+    val dim = e.head().getSeq[Float](1).length
+    def withVector(v: Float) =
+      e.unionByName(Seq((nextId, Array.fill(dim)(v))).toDF("vec_id", "embedding"))
+    val inputs = Seq(
+      "bigint ids" -> e,
+      // lexical order disagrees with numeric order: v10 < v9
+      "string ids" -> e.select(concat(lit("v"), $"vec_id").as("vec_id"), $"embedding"),
+      // one vector under two ids: exact cosine ties resolve on dst
+      "duplicated vector" -> e.unionByName(e.orderBy("vec_id").limit(1)
+        .select(lit(nextId).as("vec_id"), $"embedding")),
+      // NaN cosines, which Spark's descending sort ranks above every value
+      "NaN vector" -> withVector(Float.NaN))
+    def rows(df: DataFrame) = df.collect().map(r => (r.get(0), r.getInt(1), r.get(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
+    def kernel(in: DataFrame) =
+      rows(Similarity.bruteForceTopKBlocked(in, in, "vec_id", "embedding", 5))
+    inputs.foreach { case (name, in) =>
+      val window = rows(Similarity.bruteForceTopK(in, in, "vec_id", "embedding", 5,
+        symmetric = true))
+      // exact: same dots, ranks, ties, rounding
+      assert(kernel(in) === window, s"$name: kernel differs from the window formulation")
+    }
+    // a zero vector's cosines are 0/0 = NaN, the NaN vector's exactly;
+    // the window form is no reference there, as ANSI division by a zero
+    // norm raises DIVIDE_BY_ZERO
+    assert(kernel(withVector(0.0f)) === kernel(withVector(Float.NaN)))
   }
 
   test("int8 quantization: range bounded, max magnitude hits ±127, scale positive") {
