@@ -26,13 +26,9 @@ object GraphML extends CatalogModule {
 
   // The seeded Louvain partition is a deterministic pure function of the
   // dir — detect once per (app, dir) and share between g2 (histogram)
-  // and g2b (modularity gate). Keyed by applicationId so a fresh
-  // context in the same JVM never sees a dead checkpointed plan.
-  private val louvainCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  // and g2b (modularity gate).
   private def louvainPartition(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(louvainCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "graphml.louvain", dir) {
       Louvain.detect(spark, simEdges(spark, dir), maxIter = 8).localCheckpoint(true) }
 
   // G2: Louvain communities on the similarity graph → community sizes
@@ -122,12 +118,7 @@ object GraphML extends CatalogModule {
 
   // Deterministic training is memoized per (app, dir, algo) within the
   // JVM — a model registry, so m1/m11 (and bench re-runs) share one fit
-  // instead of re-training per catalog entry. The applicationId key
-  // matters: m1b/m11b persist the result's localCheckpoint-backed
-  // frames, and a fresh context in the same JVM must never see a
-  // TrainResult holding a dead context's checkpoint blocks.
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), LinkPredict.TrainResult]()
+  // instead of re-training per catalog entry.
   // cap 20000 matches the MLP entry so every trainer shares ONE
   // materialized corpus per dir
   // 4 trees × depth 3 (vs the library's 10 × 5 default): the catalog
@@ -137,8 +128,7 @@ object GraphML extends CatalogModule {
   // reached well before either budget. The m3b precedent: fewer passes,
   // same attested invariants, roughly half the jobs.
   private def fit(spark: SparkSession, dir: String, algo: String): LinkPredict.TrainResult =
-    graft.core.AppCache.get(trained,
-      (spark.sparkContext.applicationId, dir, algo)) {
+    graft.core.AppCache.memo(spark, "graphml.fit", dir, algo) {
       LinkPredict.train(spark, LinkPredict.trainingSetCached(spark, dir, cap = 20000), algo,
         maxIter = 4, maxDepth = 3) }
 
@@ -227,11 +217,8 @@ object GraphML extends CatalogModule {
   // in PipelineArtifactsSpec.
   // the 15-epoch trajectory is a deterministic pure function of the dir —
   // fit once per (app, dir) and share between m12 (rows) and m12b (gate)
-  private val m12Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), graft.ml.AdamWTrainer.Result]()
   private def m12Fit(spark: SparkSession, dir: String): graft.ml.AdamWTrainer.Result =
-    graft.core.AppCache.get(m12Cache,
-      (spark.sparkContext.applicationId, dir))(
+    graft.core.AppCache.memo(spark, "graphml.m12Fit", dir)(
       // 10 epochs: enough to exercise improvement and checkpointing
       // (the sf-scale trajectory improves monotonically, so the plateau
       // halving never fires at 15 either — m12b's sched_ok invariant
@@ -321,11 +308,8 @@ object GraphML extends CatalogModule {
   // divergence that m7 (flat MLlib MLP, right loop missing) and m12
   // (right loop, linear model) each approximated from one side; the
   // trajectory and its m14b gate are exactly m12/m12b's.
-  private val m14Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), graft.ml.TowerNet.Result]()
   private def m14Fit(spark: SparkSession, dir: String): graft.ml.TowerNet.Result =
-    graft.core.AppCache.get(m14Cache,
-      (spark.sparkContext.applicationId, dir))(
+    graft.core.AppCache.memo(spark, "graphml.m14Fit", dir)(
       graft.ml.TowerNet.train(
         LinkPredict.trainingSetCached(spark, dir, cap = 20000), epochs = 10))
 
@@ -354,11 +338,8 @@ object GraphML extends CatalogModule {
   // m12/m14 are the full-batch forms, m13 the stream form). Per-epoch
   // log: mean batch loss, val AUC, last step's norm/clip. Rows-only;
   // m15b is the hash-gated trajectory-invariant twin.
-  private val m15Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), graft.ml.TowerNet.Result]()
   private def m15Fit(spark: SparkSession, dir: String): graft.ml.TowerNet.Result =
-    graft.core.AppCache.get(m15Cache,
-      (spark.sparkContext.applicationId, dir))(
+    graft.core.AppCache.memo(spark, "graphml.m15Fit", dir)(
       graft.ml.TowerNet.trainMinibatch(
         LinkPredict.trainingSetCached(spark, dir, cap = 20000), epochs = 10))
 
@@ -389,11 +370,8 @@ object GraphML extends CatalogModule {
   // the minibatch trajectory is a deterministic pure function of the
   // dir — run once per (app, dir) and share between m13 (rows) and its
   // hash-gated twin m13b
-  private val m13Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), graft.ml.AdamWTrainer.StreamResult]()
   private def m13Fit(spark: SparkSession, dir: String): graft.ml.AdamWTrainer.StreamResult =
-    graft.core.AppCache.get(m13Cache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "graphml.m13Fit", dir) {
       val tag = graft.core.Artifacts.dirTag(dir)
       // 2 epochs × 3 shards: enough steps to show descent + epoch replay;
       // every extra shard is another per-step barrier (the cost the entry
@@ -574,12 +552,9 @@ object GraphML extends CatalogModule {
   // The m2 pair of LR fits and the m7 MLP fit are deterministic pure
   // functions of the dir — memoize per (app, dir) so the rows-only
   // entries and their deterministic twins (m2b/m7b) share one fit.
-  private val m2Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (LinkPredict.TrainResult, LinkPredict.TrainResult)]()
   private def m2Fits(spark: SparkSession, dir: String)
       : (LinkPredict.TrainResult, LinkPredict.TrainResult) =
-    graft.core.AppCache.get(m2Cache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "graphml.m2Fits", dir) {
       // lrMaxIter = 5: measured convergence point on the 4-month corpus —
       // auc_val/overfit_gap stable to 4+ decimals at 5/6/8/10/15 iters.
       // The two fits share the materialized base corpus and run as
@@ -589,8 +564,8 @@ object GraphML extends CatalogModule {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      // build the shared cached base before forking (computeIfAbsent in
-      // trainingSetCached would otherwise serialize the twins anyway)
+      // build the shared cached base before forking (the memo's build
+      // lock in trainingSetCached would otherwise serialize the twins anyway)
       LinkPredict.multiDateTrainingSet(spark, dir, withDiscount = true)
       val fWith = Future(LinkPredict.train(spark,
         LinkPredict.multiDateTrainingSet(spark, dir, withDiscount = true), "lr",
@@ -601,11 +576,8 @@ object GraphML extends CatalogModule {
       (Await.result(fWith, Duration.Inf), Await.result(fNo, Duration.Inf))
     }
 
-  private val m7Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), graft.ml.MultiTower.Result]()
   private def m7Fit(spark: SparkSession, dir: String): graft.ml.MultiTower.Result =
-    graft.core.AppCache.get(m7Cache,
-      (spark.sparkContext.applicationId, dir))(
+    graft.core.AppCache.memo(spark, "graphml.m7Fit", dir)(
       // 12 L-BFGS passes (vs the library's 40 default): m7b's gate
       // recomputes metric math from the persisted scores whatever the
       // fit depth, and separability is reached well before 12 — the

@@ -58,11 +58,8 @@ object TextSim extends CatalogModule {
   // the near-dup cluster map (doc → canonical component label) is
   // shared by D6 (keep-one) and D11 (keep-best) — one CC pass per
   // (app, dir), checkpoint-backed like every memo cache
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def dedupClusterMap(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(clusterCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.dedupClusters", dir) {
       val emb = Tables.embeddings(spark, dir)
       val pairs = graft.sim.KnnCache.neardupPairs(spark, dir, minCos = 0.4)
       // checkpoint-backed inputs (pairs memo) + a pure projection of the
@@ -128,11 +125,8 @@ object TextSim extends CatalogModule {
   // one signature table serves banding AND verification for D7's
   // incremental check and R9's split-leakage report — materialized once
   // per (app, dir): it feeds three joins per consumer
-  private val signedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def bandSignatures(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(signedCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.bandSignatures", dir) {
       // conditional spread before the expensive shingle/md5/minhash
       // map: no-op when the scan already has enough splits (100 TB),
       // a doc_id exchange when the corpus is one file (see spreadForMap)
@@ -424,13 +418,9 @@ object TextSim extends CatalogModule {
   // primitive for the reference's customer-identity drift (SURVEY
   // §7.4 trap 5 — dvid≥2 injections mint new ids for the same human,
   // second_third_and_forth_data_injection.py:76-77). The materialized
-  // pair table is shared with d9's resolution step; the cache is keyed
-  // by (app, dir) so a fresh session never sees a dead checkpoint.
-  private val fuzzyPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  // pair table is shared with d9's resolution step.
   private def d8FuzzyMatch(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(fuzzyPairCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.d8FuzzyPairs", dir) {
       graft.text.Dedup.fuzzyBlockedPairs(
         Tables.customer(spark, dir).select(col("c_custkey"), col("c_name")),
         "c_custkey", "c_name")
@@ -484,11 +474,8 @@ object TextSim extends CatalogModule {
   // top-k (probes 3) and near-dup pairs (probes 2) ride the same index
   // build, the memo holding the k·maxRank-bounded table checkpointed.
   // Same economics as sharedIvfIndex, for the un-persisted formulation.
-  private val ivfRankedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def ivfRanked(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(ivfRankedCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.ivfRanked", dir) {
       // corpus-adaptive nlist (≈√n, floor 16): a fixed 16 made per-query
       // serve work linear in the corpus — sim_ivf_topk's all-vector
       // probe batch went 2.3 s → 31.7 s for 10× data (sf0.1→sf1) and
@@ -933,11 +920,8 @@ object TextSim extends CatalogModule {
   // the learned merge table is a pure function of the dir — compute
   // once per (app, dir) and share between t22 (the table itself) and
   // t22b (applying it back to the corpus)
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def t22BpeMerges(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(bpeCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.bpeMerges", dir) {
       bpeMerges(spark, dir, nMerges = 8, denseMaxVocab = 2000000L)
         .localCheckpoint(true)
     }
@@ -1345,15 +1329,12 @@ object TextSim extends CatalogModule {
   /** Contaminated (train_doc, bench_doc, n_shared) pairs — the core of
     * D10, factored so D12 can compose the decontaminated corpus from
     * the same gram pipeline. Memoized per (app, dir) like the other
-    * shared kernels (`bpeCache`, `fuzzyPairCache`): d10 and d12 are one
+    * shared kernels (`t22BpeMerges`, `d8FuzzyMatch`): d10 and d12 are one
     * report + one enforcement over the SAME pair table, so the
     * gram-hash pipeline — the expensive side — runs once and d12
     * collapses to an anti-join against the checkpointed pairs. */
-  private val contaminationCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def contaminationPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.core.AppCache.get(contaminationCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.contaminationPairs", dir) {
       contaminationPairsPlan(spark, dir).localCheckpoint(true)
     }
   // private[graft]: PlanShapeSpec audits the RAW pipeline plan (the
@@ -1704,12 +1685,9 @@ object TextSim extends CatalogModule {
   // and e12's oracle-twin spec) — train once, mount everywhere. The
   // doc-level priors fold into the token-level aggregate
   // (countDistinct over doc_id) so setup is ONE job + the weight table.
-  private val nbModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, Double, Double)]()
   private def nbQualityModel(spark: SparkSession, dir: String)
       : (DataFrame, Double, Double) =
-    graft.core.AppCache.get(nbModelCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.nbModel", dir) {
     val lab = Tables.documents(spark, dir).select(col("doc_id"),
       TextAnalysis.tokens(col("text")).as("toks"),
       qualityWeakLabel(col("text")).as("weak_label"))
@@ -1875,11 +1853,8 @@ object TextSim extends CatalogModule {
   // one rides it — and the staging entry sim_ann0_ivf_index sorts
   // before all consumers so in a name-ordered suite the build cost
   // lands there, hash-gated on its own.
-  private val ivfIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
   private def sharedIvfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.core.AppCache.get(ivfIndexCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "textsim.ivfIndex", dir) {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
           col("label"))

@@ -2,71 +2,59 @@ package graft.core
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Shared discipline for the session-scoped memo caches: every value is
-  * (or holds) a localCheckpoint-backed frame, so keys lead with
-  * `sparkContext.applicationId` — a fresh context in the same JVM must
-  * never see a dead context's checkpoint blocks. `get` additionally
-  * evicts entries from dead contexts on the way in: only one context is
-  * live per JVM at a time, so any entry keyed by a different
-  * applicationId is unreachable garbage (a long-lived JVM cycling
-  * SparkContexts — test harnesses — would otherwise accumulate plans
-  * referencing dead blocks indefinitely).
+import org.apache.spark.sql.SparkSession
+
+/** The session memo: one table of built values, keyed by a short
+  * literal name per call site plus that site's key arguments
+  * (`memo(spark, "graph.tpch", dir) { … }`).
+  *
+  * App-switch rule: every value is (or holds) a localCheckpoint- or
+  * cache-backed frame, and a fresh SparkContext in the same JVM must
+  * never see a dead context's blocks. Only one context is live per JVM,
+  * so the table remembers the applicationId it was filled under and
+  * each call compares it with the live one; on a mismatch the WHOLE
+  * table is cleared (a JVM cycling contexts — test harnesses — would
+  * otherwise keep dead plans referenced).
+  *
+  * Builds run outside the map's lock. Builds nest (Louvain's build asks
+  * for the KNN memo, a model fit for the training-set memo), and a
+  * build run inside `computeIfAbsent` that touches the same map is a
+  * recursive update (JDK 17: IllegalStateException or a hang). So the
+  * map holds only a small slot per key; the build runs under the slot's
+  * own lock, which builds a key once under concurrent requests. A build
+  * that throws stores nothing and the next request builds again.
+  *
+  * Trim contract: see [[trimToBudget]]; [[allCachedValues]] lists the
+  * built values only.
   */
 object AppCache {
-  // Every cache that ever flows through `get` self-registers here, so
-  // the serialization-hygiene audit can enumerate ALL memoized values
-  // (not just the ones a spec author remembered) and prove none pins a
-  // session — the round-9 Observation/trainingSummary bug class.
-  //
-  // IDENTITY semantics are load-bearing: ConcurrentHashMap inherits
-  // CONTENTS-based equals/hashCode from AbstractMap, so a plain
-  // keySet would (a) reject a new cache as a "duplicate" of any other
-  // map that happened to be empty at registration time — that cache's
-  // memos then silently never trimmed — and (b) re-add the same map
-  // after its contents (and hash) changed, duplicating it in every
-  // enumeration. Both observed (SerializationHygieneSpec's columnar
-  // trim test caught (a); the trim debug listing showed (b)).
-  private val registry = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[ConcurrentHashMap[_, _], java.lang.Boolean]()))
+  private final class Slot {
+    @volatile var value: Option[Any] = None
+    @volatile var touch: Long = 0L
+  }
+  private val table = new ConcurrentHashMap[(String, Seq[Any]), Slot]()
+  private val tick = new java.util.concurrent.atomic.AtomicLong()
+  @volatile private var liveApp: String = null
 
-  // r14: LRU bookkeeping for the budget trim (SCALING sf10 addendum
-  // #3: 260 entries' app-lifetime checkpoint memos BECAME the heap at
-  // sf10 — GC thrash, g3 ~8× — because nothing ever evicted them).
-  // Keys pair the cache BY IDENTITY with the entry key — the map's
-  // contents-based hash would strand every touch record the moment
-  // the map mutates.
-  private final class IdKey(val m: AnyRef, val k: Any) {
-    override def hashCode: Int =
-      System.identityHashCode(m) * 31 + (if (k == null) 0 else k.hashCode)
-    override def equals(o: Any): Boolean = o match {
-      case other: IdKey => (other.m eq m) && other.k == k
-      case _ => false
+  /** The memoized value of `build` under (`name`, `key`) for the live
+    * application; `name` is a literal unique to the call site. */
+  def memo[V](spark: SparkSession, name: String, key: Any*)(build: => V): V = {
+    val app = spark.sparkContext.applicationId
+    if (app != liveApp) synchronized {
+      if (app != liveApp) { table.clear(); liveApp = app }
+    }
+    val slot = table.computeIfAbsent((name, key.toList), _ => new Slot)
+    slot.touch = tick.incrementAndGet()
+    slot.synchronized {
+      if (slot.value.isEmpty) slot.value = Some(build)
+      slot.value.get.asInstanceOf[V]
     }
   }
-  private val tick = new java.util.concurrent.atomic.AtomicLong()
-  private val lastTouch = new ConcurrentHashMap[IdKey, java.lang.Long]()
 
-  /** `key` must lead with the current applicationId. */
-  def get[K <: Product, V](cache: ConcurrentHashMap[K, V], key: K)(mk: => V): V = {
-    registry.add(cache)
-    val app = key.productElement(0)
-    cache.keySet.removeIf(k => k.productElement(0) != app)
-    lastTouch.put(new IdKey(cache, key), tick.incrementAndGet())
-    cache.computeIfAbsent(key, _ => mk)
-  }
-
-  // a synchronizedSet must be manually locked around iteration
-  private def cachesSnapshot: Seq[ConcurrentHashMap[_, _]] = {
-    import scala.jdk.CollectionConverters._
-    registry.synchronized { registry.asScala.toSeq }
-  }
-
-  /** Audit surface: a snapshot of every value currently memoized in any
-    * registered cache. */
+  /** Audit surface: a snapshot of every value currently memoized. */
   def allCachedValues: Seq[Any] = {
     import scala.jdk.CollectionConverters._
-    cachesSnapshot.flatMap(_.values.asScala.toSeq)
+    table.values.asScala.toSeq.flatMap(_.value)
   }
 
   private def framesOf(v: Any): Seq[org.apache.spark.sql.DataFrame] =
@@ -84,15 +72,14 @@ object AppCache {
     * frame). Accounts only memory-RESIDENT block bytes (disk-spilled
     * checkpoint blocks don't pressure the heap); while the total
     * exceeds `budgetBytes`, least-recently-touched entries are dropped
-    * from their maps and their checkpoint RDDs unpersisted — refcounted
+    * from the table and their checkpoint RDDs unpersisted — refcounted
     * across entries first, because two memos may legitimately share
     * one checkpointed frame and a shared RDD must outlive its last
     * reference (a localCheckpoint cannot recompute). A re-request
     * simply rebuilds: correctness is untouched, the memo just stops
     * being app-lifetime once it stops fitting. Returns
     * (entriesEvicted, bytesReleased). */
-  def trimToBudget(spark: org.apache.spark.sql.SparkSession,
-                   budgetBytes: Long): (Int, Long) = {
+  def trimToBudget(spark: SparkSession, budgetBytes: Long): (Int, Long) = {
     import scala.jdk.CollectionConverters._
     val memBytes = spark.sparkContext.getRDDStorageInfo
       .map(i => i.id -> i.memSize).toMap
@@ -103,13 +90,13 @@ object AppCache {
     // because unpersisting the columnar-buffer RDD directly would pin
     // its storage level at NONE and the "evict = rebuild on demand"
     // contract would silently become "never cached again".
-    final case class Ent(cache: ConcurrentHashMap[_, _], key: Any,
+    final case class Ent(key: (String, Seq[Any]), slot: Slot,
                          rdds: Seq[(Int, () => Unit)], bytes: Long,
                          touch: Long)
     val sc = spark.sparkContext
-    val ents = cachesSnapshot.flatMap { c =>
-      c.entrySet.asScala.toSeq.map { e =>
-        val rdds = framesOf(e.getValue)
+    val ents = table.entrySet.asScala.toSeq.flatMap { e =>
+      e.getValue.value.map { v =>
+        val rdds = framesOf(v)
           .flatMap { f =>
             val ck = org.apache.spark.sql.GraftColumnBridge
               .checkpointRddId(f).map { id =>
@@ -122,9 +109,9 @@ object AppCache {
               })
           }
           .distinctBy(_._1)
-        Ent(c, e.getKey, rdds,
+        Ent(e.getKey, e.getValue, rdds,
           rdds.map { case (id, _) => memBytes.getOrElse(id, 0L) }.sum,
-          Option(lastTouch.get(new IdKey(c, e.getKey))).map(_.longValue).getOrElse(0L))
+          e.getValue.touch)
       }
     }
     // refcount each RDD across ALL entries (evicted or not): release
@@ -136,8 +123,7 @@ object AppCache {
     var total = refs.keys.map(memBytes.getOrElse(_, 0L)).sum
     var freed = 0L; var n = 0
     for (e <- ents.sortBy(_.touch) if total > budgetBytes && e.bytes > 0) {
-      e.cache.asInstanceOf[ConcurrentHashMap[Any, Any]].remove(e.key)
-      lastTouch.remove(new IdKey(e.cache, e.key))
+      table.remove(e.key, e.slot)
       e.rdds.foreach { case (id, release) =>
         refs(id) -= 1
         if (refs(id) == 0) {

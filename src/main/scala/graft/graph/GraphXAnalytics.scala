@@ -28,19 +28,16 @@ object GraphXAnalytics {
   // The (hash → id) translation table is consumed by every algorithm in
   // this file. For graphs built by a memoized builder (cacheToken set —
   // checkpoint-backed, app-lifetime frames) the distinct is computed
-  // once, checkpoint-materialized, and shared under (appId, token).
+  // once, checkpoint-materialized, and shared under the token.
   // Token-less graphs (ad-hoc per-invocation builds like the dedup
   // cluster graphs) are computed fresh and NEVER cached: an
   // identity-hash key would retain their plans/arrays for the app's
   // lifetime and a recycled hash could alias a different graph.
-  private val vmCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   private def vertexMap(g: PropertyGraph): DataFrame = {
     def mk = g.nodes.select(col("id"), xxhash64(col("id")).as("vid")).distinct()
     g.cacheToken match {
       case Some(tok) =>
-        graft.core.AppCache.get(vmCache,
-          (g.nodes.sparkSession.sparkContext.applicationId, tok)) {
+        graft.core.AppCache.memo(g.nodes.sparkSession, "graphx.vertexMap", tok) {
           // checkpoint before caching: the memo's value must be a
           // materialized frame (AppCache's invariant), not a lazy plan
           // whose distinct re-executes at every downstream action
@@ -56,13 +53,11 @@ object GraphXAnalytics {
     * distributed GraphX path). CC, PageRank and the landmark BFS all
     * relax over exactly these arrays; before this memo each re-ran the
     * same count + collect + sort/dedup against the same memoized graph. */
-  private val arrCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Option[(Array[Long], Array[Long], Array[Long])]]()
   private def edgeArrays(g: PropertyGraph, seqMaxEdges: Long)
       : Option[(Array[Long], Array[Long], Array[Long])] = g.cacheToken match {
     case Some(tok) =>
-      graft.core.AppCache.get(arrCache,
-        (g.edges.sparkSession.sparkContext.applicationId, tok, seqMaxEdges)) {
+      graft.core.AppCache.memo(g.edges.sparkSession, "graphx.edgeArrays",
+          tok, seqMaxEdges) {
         collectEdgeArrays(g, seqMaxEdges)
       }
     case None => collectEdgeArrays(g, seqMaxEdges)

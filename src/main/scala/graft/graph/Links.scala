@@ -30,12 +30,9 @@ object Links {
   // caches (GraphBuilder.fromTpch, KnnCache). The graph-id view is a
   // pure projection over it (no extra shuffle); its equivalence to the
   // 2-hop edge traversal is pinned by GraphLinksSpec and by j3's oracle.
-  private val posNumCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
   def purchasePairsNumeric(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame =
-    graft.core.AppCache.get(posNumCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "graph.purchasePairs", dir) {
       val o = graft.core.Tables.orders(spark, dir)
       val li = graft.core.Tables.lineitem(spark, dir)
       o.join(li, col("o_orderkey") === col("l_orderkey"))

@@ -116,7 +116,6 @@ object Louvain {
     val edges0 = ckpt(edges1) // materialized by the gate count below
     if (edges0.count() <= seqMaxEdges)
       return detectSequential(spark, edges0, resolution)
-    try {
     val orig = parts(edges0, checkpoint = true) // composed-Q evaluation basis
     var mapping: DataFrame = null // original id -> current community
     var bestMapping: DataFrame = null
@@ -157,12 +156,11 @@ object Louvain {
         curParts = parts(cur, checkpoint = true)
       }
     }
-    // canonical labels: min member id per community (evaluated by the
-    // caller, outside the AQE-off window — bestMapping is materialized)
+    // canonical labels: min member id per community (a lazy plan the
+    // caller evaluates — bestMapping is materialized)
     val canon = bestMapping.groupBy("community").agg(min("id").as("canon"))
     bestMapping.join(canon, "community")
       .select(col("id"), col("canon").as("community"))
-    } finally ()
   }
 
   /** Exact classic Louvain on the driver for graphs under the hybrid

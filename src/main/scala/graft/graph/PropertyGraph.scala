@@ -42,11 +42,8 @@ object GraphBuilder {
     * catalog operators consume the graph, and each would otherwise
     * re-scan and re-transform the four source tables.
     */
-  private val tpchCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), PropertyGraph]()
   def fromTpch(spark: SparkSession, dir: String): PropertyGraph =
-    graft.core.AppCache.get(tpchCache,
-      (spark.sparkContext.applicationId, dir)) {
+    graft.core.AppCache.memo(spark, "graph.tpch", dir) {
       val g = buildTpch(spark, dir)
       // COLUMNAR cache for the app-lifetime memo — the sf10 probes
       // retired both checkpoint variants in turn: values-mode blocks

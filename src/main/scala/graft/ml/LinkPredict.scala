@@ -31,15 +31,9 @@ object LinkPredict {
     * (dir, cap, month), and several catalog operators — GBT, LR sweep,
     * MLP, multi-date — consume the same corpus. Materializing once keeps
     * iterative trainers (L-BFGS/GBT passes) off the join plan. */
-  private val setCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), DataFrame]()
   def trainingSetCached(spark: SparkSession, dir: String, cap: Int = 50000,
                         month: Int = 12): DataFrame =
-    // applicationId in the key: the value is a localCheckpoint-backed
-    // frame, and a fresh context in the same JVM must not see blocks of
-    // a dead one (same rule as the catalog-level caches)
-    graft.core.AppCache.get(setCache,
-      (spark.sparkContext.applicationId, dir, cap, month)) {
+    graft.core.AppCache.memo(spark, "ml.trainingSet", dir, cap, month) {
       trainingSet(spark, dir, cap, month).localCheckpoint(true) }
 
   /** M2: the discount model's multi-date training corpus — one slice per

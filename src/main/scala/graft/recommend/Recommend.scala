@@ -65,12 +65,10 @@ object Recommend {
   /** Candidate generation (P7 ∖ J6 + R2 cap) is strategy-independent, so
     * the materialized frame is memoized per (dir, filter, cap) within the
     * session — the four Q* strategies differ only downstream of it. */
-  private val candCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int), DataFrame]()
   def candidates(spark: SparkSession, dir: String, customerFilter: Column,
                  candidateCap: Int): DataFrame =
-    graft.core.AppCache.get(candCache, (spark.sparkContext.applicationId,
-        dir, customerFilter.toString, candidateCap)) {
+    graft.core.AppCache.memo(spark, "recommend.candidates",
+        dir, customerFilter.toString, candidateCap) {
       val cust = Tables.customer(spark, dir).filter(customerFilter)
         .select(col("c_custkey").as("customer"), col("c_acctbal").as("acctbal"))
       val parts = validProducts(Tables.part(spark, dir))

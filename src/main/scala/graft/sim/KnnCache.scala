@@ -6,22 +6,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exact brute-force top-k is a deterministic pure function of
   * (sfDir, k, ranking), and four catalog operators (J7, A10, G2's
   * similarity graph, sim_recall's ground truth) consume it —
-  * materialize once per (app, inputs) and share.
+  * materialize once per session and inputs, and share.
   * The 100 TB analogue is a persisted similarity-edges table refreshed
   * per injection fold (FeatureFold computes the fold's edges and returns
   * them; nothing persists them yet); this cache is the in-session
-  * equivalent. applicationId keys every entry because the
-  * values are localCheckpoint-backed — a fresh context in the same JVM
-  * must never see a dead context's blocks.
+  * equivalent.
   */
 object KnnCache {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Boolean), DataFrame]()
-
   def topk(spark: SparkSession, dir: String, k: Int = 5,
            rankRounded: Boolean = false): DataFrame =
-    graft.core.AppCache.get(cache,
-      (spark.sparkContext.applicationId, dir, k, rankRounded)) {
+    graft.core.AppCache.memo(spark, "sim.knnTopk", dir, k, rankRounded) {
         val e = graft.core.Tables.embeddings(spark, dir)
         // blocked kernel: bit-identical to bruteForceTopK (asserted in
         // SimilaritySpec) without the n² pair shuffle
@@ -30,14 +24,10 @@ object KnnCache {
           .localCheckpoint(true)
       }
 
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Double), DataFrame]()
-
   /** The near-dup pair table (threshold cosine self-join), shared by the
     * pair-report operator (D5) and the cluster-resolution operator (D6). */
   def neardupPairs(spark: SparkSession, dir: String, minCos: Double): DataFrame =
-    graft.core.AppCache.get(pairCache,
-      (spark.sparkContext.applicationId, dir, minCos)) {
+    graft.core.AppCache.memo(spark, "sim.neardupPairs", dir, minCos) {
         val e = graft.core.Tables.embeddings(spark, dir)
         Similarity.thresholdJoinBlocked(e, "vec_id", "embedding", minCos)
           .localCheckpoint(true)

@@ -521,18 +521,13 @@ object Similarity {
     s"(SELECT greatest(4, CAST(ceil(log2(CAST(count(*) AS DOUBLE)/32)) AS INTEGER)) FROM $from)"
 
   /** DuckDB mirror of `lshBucket` with a DATA-DEPENDENT plane count:
-    * the fixed-p mirror below unrolls one sign-bit term per plane, so
-    * its structure pins p at SQL-build time; this form folds the same
-    * per-(plane, dim) closed-form component inside nested list
-    * lambdas, letting `nPlanesSql` be a scalar subquery
-    * ([[scaleNPlanesSql]]). Fold order over dims is list order — the
-    * same left-to-right the unrolled form and the Spark expression
-    * use (verified bucket-for-bucket against the unrolled mirror). */
+    * `nPlanesSql` may be a scalar subquery ([[scaleNPlanesSql]]).
+    * Each projection sums over dims left to right, the same order the
+    * Spark expression uses. */
   def lshBucketSqlDynamic(vec: String, dim: Int, nPlanesSql: String): String = {
     require(dim <= maxLshDim, s"dim=$dim exceeds the plane matrix width")
-    // all maxPlanes sign-bit terms unrolled with the SAME projection
-    // arithmetic as the fixed-p mirror (left-assoc + chain — the shape
-    // whose Spark parity is already pinned), each term gated on the
+    // all maxPlanes sign-bit terms unrolled with the Spark expression's
+    // projection arithmetic (left-assoc + chain), each term gated on the
     // runtime plane count. Lambda-free on purpose: DuckDB lambdas
     // cannot capture a correlated outer column, so the old
     // closed-form-in-lambda trick cannot read an embedded constant
@@ -551,28 +546,14 @@ object Similarity {
       s"here; see Similarity.maxPlanes') AS BIGINT) ELSE 0 END)"
     val bits = (0 until maxPlanes).map { j =>
       val proj = (0 until dim).map { i =>
+        // string→double parse is correctly rounded in DuckDB, unlike a
+        // wide DECIMAL literal converted to double
         val comp = planeComponent(j, i)
         s"CAST(list_extract($vec,${i + 1}) AS DOUBLE)*CAST('$comp' AS DOUBLE)"
       }.mkString("(", " + ", ")")
       s"(CASE WHEN ($nPlanesSql) > $j AND $proj >= 0 THEN ${1L << j} ELSE 0 END)"
     }
     (guard +: bits).mkString("CAST((", " + ", ") AS BIGINT)")
-  }
-
-  /** DuckDB mirror of `lshBucket`. */
-  def lshBucketSql(vec: String, dim: Int, nPlanes: Int): String = {
-    require(nPlanes <= maxPlanes && dim <= maxLshDim,
-      s"nPlanes=$nPlanes/dim=$dim exceed the ${maxPlanes}x$maxLshDim plane matrix")
-    val bits = (0 until nPlanes).map { j =>
-      val proj = (0 until dim).map { i =>
-        // string→double parse is correctly rounded in DuckDB, unlike a
-        // wide DECIMAL literal converted to double
-        val comp = planeComponent(j, i)
-        s"CAST(list_extract($vec,${i + 1}) AS DOUBLE)*CAST('$comp' AS DOUBLE)"
-      }.mkString("(", " + ", ")")
-      s"(CASE WHEN $proj >= 0 THEN ${1L << j} ELSE 0 END)"
-    }
-    bits.mkString("(", " + ", ")")
   }
 
   /** ANN top-k restricted to LSH bucket collisions. Same output shape as

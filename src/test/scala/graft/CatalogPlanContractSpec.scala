@@ -26,7 +26,8 @@ package graft
   * kernel gates with distributed fallbacks, audit-scale sinks, or
   * metadata-sized frames; see VERDICT r11 "anti-pattern sweep").
   * Environment reads get the same kind of static census: every
-  * `sys.env` read is pinned as (file, variable).
+  * `sys.env` read is pinned as (file, variable), and the session memo
+  * is pinned to AppCache's one table with a literal name per call site.
   *
   * The sweep executes all 257 entries once (~2-3 min at sf0.001) — it
   * IS the judge's manual re-grep, promoted to CI.
@@ -311,6 +312,30 @@ class CatalogPlanContractSpec extends SparkSpec {
     }
     assert(callers.isEmpty,
       s"bruteForceTopK( called from ${callers.sorted.mkString(", ")} — use bruteForceTopKBlocked")
+  }
+
+  test("memo census: one memo table, one literal name per call site") {
+    // the session memo lives in AppCache alone: no other main source
+    // keeps a map of its own
+    val mapFiles = mainSources.collect {
+      case (file, src) if file != "AppCache.scala" &&
+        src.contains("ConcurrentHashMap") => file
+    }
+    assert(mapFiles.isEmpty,
+      s"ConcurrentHashMap outside AppCache: ${mapFiles.sorted.mkString(", ")} — use AppCache.memo")
+    // every AppCache.memo( call names its entry with a string literal,
+    // and no two call sites share a name
+    val callRe = """AppCache\.memo(?:\[[^\]]*\])?\(\s*[^,]+,\s*(?:"([^"]*)")?""".r
+    val names = mainSources.flatMap { case (file, src) =>
+      callRe.findAllMatchIn(src).map(m => file -> Option(m.group(1)))
+    }
+    assert(names.nonEmpty, "no AppCache.memo( call found — the census is vacuous")
+    val unnamed = names.collect { case (file, None) => file }
+    assert(unnamed.isEmpty,
+      s"AppCache.memo( without a literal name in ${unnamed.sorted.mkString(", ")}")
+    val dup = names.flatMap(_._2).groupBy(identity).collect {
+      case (n, uses) if uses.size > 1 => n }
+    assert(dup.isEmpty, s"memo names used by more than one call site: ${dup.toSeq.sorted}")
   }
 
   /** (file name, content) of every main source — the walk the static

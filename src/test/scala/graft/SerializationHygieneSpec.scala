@@ -148,39 +148,42 @@ class SerializationHygieneSpec extends SparkSpec {
     assert(bos.size() > 0)
   }
 
+  private def memoized(v: AnyRef): Boolean =
+    graft.core.AppCache.allCachedValues.exists(_.asInstanceOf[AnyRef] eq v)
+
   test("AppCache.trimToBudget evicts checkpoint memos; a re-get rebuilds cleanly") {
-    import java.util.concurrent.ConcurrentHashMap
-    val cache = new ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-    val app = spark.sparkContext.applicationId
+    import graft.core.AppCache
     var builds = 0
     def mk(n: Int) = { builds += 1
       spark.range(n).toDF("id").localCheckpoint(true) }
-    val a = graft.core.AppCache.get(cache, (app, "trim_a"))(mk(5000))
-    graft.core.AppCache.get(cache, (app, "trim_b"))(mk(7000))
+    def getA = AppCache.memo(spark, "test.trimA")(mk(5000))
+    val a = getA
+    val b = AppCache.memo(spark, "test.trimB")(mk(7000))
     val rddA = org.apache.spark.sql.GraftColumnBridge.checkpointRddId(a).get
     assert(spark.sparkContext.getPersistentRDDs.contains(rddA))
+    assert(memoized(a) && memoized(b))
     // budget 0: every resident memo in the app must go (incl. other
     // suites' — by contract they rebuild on their next get)
-    val (nEv, _) = graft.core.AppCache.trimToBudget(spark, 0L)
+    val (nEv, _) = AppCache.trimToBudget(spark, 0L)
     assert(nEv >= 2, s"expected both memos evicted, got $nEv")
-    assert(cache.isEmpty, "evicted entries still in the map")
+    assert(!memoized(a) && !memoized(b), "evicted entries still memoized")
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddA),
       "evicted memo's checkpoint RDD still persisted")
-    // a re-request is a plain rebuild — correctness unaffected
-    val a2 = graft.core.AppCache.get(cache, (app, "trim_a"))(mk(5000))
+    // a re-request is a plain rebuild, exactly once — correctness unaffected
+    val a2 = getA
+    assert(getA eq a2)
     assert(builds === 3)
     assert(a2.count() === 5000L)
-    // and a trim UNDER budget is a no-op
-    val (n2, _) = graft.core.AppCache.trimToBudget(spark, Long.MaxValue)
+    // and a trim UNDER budget is a no-op: nothing evicted, no rebuild
+    val (n2, _) = AppCache.trimToBudget(spark, Long.MaxValue)
     assert(n2 === 0)
-    assert(cache.size === 1)
+    assert(memoized(a2))
+    assert(getA eq a2)
+    assert(builds === 3)
   }
 
   test("trimToBudget evicts COLUMNAR-cached memos via the CacheManager; the cache re-fills on next use") {
-    import java.util.concurrent.ConcurrentHashMap
-    val cache = new ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-    val app = spark.sparkContext.applicationId
-    val df = graft.core.AppCache.get(cache, (app, "trim_cols")) {
+    val df = graft.core.AppCache.memo(spark, "test.trimCols") {
       val d = spark.range(20000).toDF("id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       d.count(); d
@@ -191,6 +194,7 @@ class SerializationHygieneSpec extends SparkSpec {
       i.id == rddId.get && i.memSize > 0), "buffers not materialized")
     val (nEv, _) = graft.core.AppCache.trimToBudget(spark, 0L)
     assert(nEv >= 1)
+    assert(!memoized(df), "evicted entry still memoized")
     // the CacheManager entry must be gone (a fresh plan no longer
     // resolves to an InMemoryRelation)…
     val stillCached = org.apache.spark.sql.GraftColumnBridge
@@ -218,5 +222,55 @@ class SerializationHygieneSpec extends SparkSpec {
       i.id == rdd2.get && (i.memSize > 0 || i.diskSize > 0)),
       "re-persist after eviction did not re-cache")
     df2.unpersist(blocking = false)
+  }
+
+  test("AppCache.memo: nested builds, one build per key under concurrency, a failed build stores nothing") {
+    import graft.core.AppCache
+    import java.util.concurrent.atomic.AtomicInteger
+    // a build that requests other memos (Louvain -> KNN, fit -> training
+    // set) completes, and all values are memoized; 200 nested keys make
+    // some land in the outer key's bin or resize the table mid-build
+    val outerBuilds = new AtomicInteger; val innerBuilds = new AtomicInteger
+    def inner(i: Int) = AppCache.memo(spark, "test.nestInner", i) {
+      innerBuilds.incrementAndGet(); s"inner$i" }
+    def outer = AppCache.memo(spark, "test.nestOuter") {
+      outerBuilds.incrementAndGet(); (0 until 200).map(inner).mkString(",") }
+    val o = outer
+    assert(outer eq o)
+    assert((0 until 200).map(inner).mkString(",") === o)
+    assert(outerBuilds.get === 1 && innerBuilds.get === 200)
+    assert(memoized(o) && memoized(inner(0)))
+
+    // two threads requesting one key: the build runs once, both see it
+    val builds = new AtomicInteger
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val threads = (1 to 2).map { _ =>
+      val t = new Thread(() => {
+        go.await()
+        results.add(AppCache.memo(spark, "test.concurrent") {
+          builds.incrementAndGet(); Thread.sleep(300); new Object })
+      })
+      t.start(); t
+    }
+    go.countDown()
+    threads.foreach(_.join(60000))
+    assert(results.size === 2)
+    assert(builds.get === 1)
+    val arr = results.toArray
+    assert(arr(0) eq arr(1))
+
+    // a build that throws leaves no entry; the next request builds
+    val attempts = new AtomicInteger
+    val before = AppCache.allCachedValues.size
+    intercept[IllegalStateException] {
+      AppCache.memo[String](spark, "test.throws") {
+        attempts.incrementAndGet(); throw new IllegalStateException("build failed") }
+    }
+    assert(AppCache.allCachedValues.size === before)
+    val v = AppCache.memo(spark, "test.throws") { attempts.incrementAndGet(); "rebuilt" }
+    assert(v === "rebuilt" && attempts.get === 2)
+    assert(AppCache.memo(spark, "test.throws")("unused") === "rebuilt")
+    assert(attempts.get === 2)
   }
 }
