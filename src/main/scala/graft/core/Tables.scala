@@ -8,10 +8,62 @@ import org.apache.spark.sql.functions._
   * Every operator in the engine is exercised against these tables; the
   * same parquet files are registered in DuckDB by the correctness driver,
   * so column names and types here are load-bearing.
+  *
+  * Building a loader's frame starts no Spark job: the schema comes from
+  * [[parquet]], which reads the footer on the driver.
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    * Spark infers a parquet schema from ONE footer — a
+    * `_common_metadata` or `_metadata` summary file if the path has
+    * one, else the first data file in path order — but reads it in a
+    * one-task Spark job, so every table read paid a job (46 of the ~162
+    * jobs of one lifecycle pass read a single footer each). This reads
+    * the same footer on the driver, converts it with Spark's own
+    * `readSchemaFromFooter` and converter, and hands the schema to the
+    * reader. Partition columns (the dvid store's `dvid=N` dirs) are not
+    * in the footer; the reader still infers them from the directory
+    * names and appends them last, as plain inference does. Falls back to
+    * plain inference when `spark.sql.parquet.mergeSchema` is on (which
+    * reads every footer) and when the path holds no data file. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val footerFile =
+      if (conf.isParquetSchemaMergingEnabled ||
+          !root.getFileSystem(hadoopConf).exists(root)) None
+      else {
+        // Spark's listing (hidden and staging files skipped, partition
+        // dirs walked) in Spark's inference order: summaries first,
+        // then the first data file by path
+        val files = new InMemoryFileIndex(spark, Seq(root), Map.empty, None)
+          .allFiles().sortBy(_.getPath.toString)
+        val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+          ParquetFileWriter.PARQUET_METADATA_FILE)
+        summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+          .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      }
+    footerFile match {
+      case Some(f) =>
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(conf))).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "nation")

@@ -2,23 +2,42 @@ package graft.graph
 
 import org.apache.spark.ml.feature.Word2Vec
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 import graft.functions.ColFns
+import graft.plans.WeightedStepPick
 
 /** node2vec (SURVEY §2.10 G3): biased second-order random walks +
   * skip-gram embeddings (MLlib Word2Vec), replacing the reference's
   * node2vec library (Node2vec_algorithm_inscripton.py:40-48,
   * Fast_node2vec_algorithm.py:22-35).
   *
-  * Walk engine design (SURVEY §7.4 trap 2): walk state is a DataFrame
-  * (walk_id, step, prev, cur, prev_nbrs); each step joins state with the
-  * adjacency table once — the p/q bias needs prev's neighbor set, which
-  * is *carried along* in the state instead of re-joined (one shuffle per
-  * step, not two). Steps are O(walkLen) shuffles by design — the
-  * documented trade-off vs a GraphX Pregel loop; at 100 TB you bound
-  * walkLen (the reference's "fast" profile uses 20) and pre-partition
-  * adjacency by node so every step's join is co-partitioned.
+  * Walk engine design (SURVEY §7.4 trap 2): a walk's state is
+  * (walk_id, prev, cur, prev_nbrs, path) — the p/q bias needs prev's
+  * neighbor set, which is *carried along* in the state instead of
+  * re-joined. Two physical shapes, one pick routine
+  * ([[graft.plans.WeightedStepPick]]), so both produce the same walks,
+  * row for row and partition for partition:
+  *   - adjacency within the broadcast budget (`broadcastMaxNodes`):
+  *     the adjacency is broadcast as an id → sorted-neighbors table and
+  *     ONE mapPartitions over the start rows walks every step of every
+  *     walk in memory — one stage, no per-step join, no checkpoint.
+  *     A dataflow round per step (Pregelix's superstep) buys nothing
+  *     when every task holds the whole graph.
+  *   - above the budget: each step joins state with the adjacency once
+  *     (one co-partitioned shuffle per step, the 100 TB path; bound
+  *     walkLen — the reference's "fast" profile uses 20), with a
+  *     lineage checkpoint every fourth step.
+  * The string-id step used to pick through a higher-order lambda inside
+  * the step's select, whose `prev` resolved to that select's own output
+  * alias `cur AS prev` (Spark resolves lateral aliases inside lambda
+  * bodies): the return step never got 1/p and was weighed as an outward
+  * step, 1/q. Both id types now take the WeightedStepPick expression,
+  * whose arguments sit outside any lambda and resolve to the joined
+  * input.
   *
   * All randomness is hash-based (walk id × step), so walks are exactly
   * reproducible regardless of partitioning or retries.
@@ -46,24 +65,22 @@ object Node2Vec {
   }
 
   /** Generate biased second-order walks. Returns (walk_id, walk) with
-    * walk = array of node ids.
-    *
-    * Physical shape: when the adjacency fits the broadcast budget
-    * (`broadcastMaxNodes`), every step joins state↔adjacency as a
-    * map-only broadcast hash join — zero shuffles across the whole walk,
-    * the expressions (and therefore the walks) are bit-identical to the
-    * shuffle path. Above the budget each step is one co-partitioned
-    * shuffle join (the 100 TB path). */
+    * walk = array of node ids (long or string). The start rows — every
+    * node × numWalks, first hop a uniform deterministic pick among its
+    * neighbors — fix the output's partitions and row order; both walk
+    * shapes keep them (Word2Vec's repartition depends on them). A walk
+    * that reaches a node without neighbors is dropped. */
   def walks(spark: SparkSession, edges: DataFrame, prm: Params,
             broadcastMaxNodes: Long = 2000000L): DataFrame = {
     val adj0 = neighborTable(edges).cache()
+    val idType = adj0.schema("src").dataType
+    require(idType == LongType || idType == StringType,
+      s"node2vec node ids must be bigint or string, got $idType")
     val nNodes = adj0.count()
-    val adj = if (nNodes <= broadcastMaxNodes) broadcast(adj0) else adj0
 
-    // initial state: numWalks walks per node; first hop is a uniform
-    // deterministic pick among neighbors. Broadcast the tiny range side —
-    // broadcasting adj here would make the output inherit the range's
-    // 1-2 partitions and serialize every later step on a 32-core box.
+    // Broadcast the tiny range side — broadcasting adj here would make
+    // the output inherit the range's 1-2 partitions and serialize every
+    // walk on a 32-core box.
     val starts = adj0.crossJoin(
         broadcast(spark.range(prm.numWalks.toLong).toDF("walk_no")))
       .withColumn("walk_id", concat_ws("#", col("src"), col("walk_no")))
@@ -72,46 +89,76 @@ object Node2Vec {
     val firstIdx = (floor(
       ColFns.pseudoUniform(xxhash64(col("walk_id")), prm.seed) *
         size(col("nbrs"))).cast("int") + 1)
-    var state = starts.select(
+    val start = starts.select(
       col("walk_id"),
       col("src").as("prev"),
       element_at(col("nbrs"), firstIdx).as("cur"),
       col("nbrs").as("prev_nbrs"),
       array(col("src"), element_at(col("nbrs"), firstIdx)).as("path"))
 
-    val longIds = adj0.schema("nbrs").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
+    if (nNodes <= broadcastMaxNodes) walkInMemory(spark, adj0, start, prm)
+    else walkJoined(adj0, start, prm)
+  }
+
+  /** Steps 2..walkLength-1 of every walk in one mapPartitions over the
+    * start rows, against a broadcast id → sorted-neighbors table. */
+  private def walkInMemory(spark: SparkSession, adj: DataFrame, start: DataFrame,
+                           prm: Params): DataFrame = {
+    val idType = adj.schema("src").dataType
+    val table = new java.util.HashMap[Any, ArrayData]()
+    adj.queryExecution.toRdd.map(_.copy()).collect()
+      .foreach(r => table.put(r.get(0, idType), r.getArray(1)))
+    val bc = spark.sparkContext.broadcast(table)
+    // the start path holds two ids even when walkLength < 2, as in the chain
+    val (len, invP, invQ, seed) =
+      (math.max(prm.walkLength, 2), 1.0 / prm.p, 1.0 / prm.q, prm.seed)
+    val rows = start.queryExecution.toRdd.mapPartitions { it =>
+      val nbrsOf = bc.value
+      it.flatMap { row =>
+        val r = row.copy()
+        val walkId = r.getUTF8String(0)
+        // xxhash64(walk_id, step) as the builtin chains it (seed 42)
+        val idHash = XXH64.hashUnsafeBytes(
+          walkId.getBaseObject, walkId.getBaseOffset, walkId.numBytes, 42L)
+        val path = new Array[Any](len)
+        path(0) = r.get(1, idType)
+        path(1) = r.get(2, idType)
+        var prev = path(0)
+        var prevNbrs = r.getArray(3)
+        var step = 2
+        var alive = true
+        while (alive && step < len) {
+          val cur = path(step - 1)
+          val nbrs = if (cur == null) null else nbrsOf.get(cur)
+          if (nbrs == null) alive = false
+          else {
+            val i = if (prev == null) -1 else WeightedStepPick.pickIndex(nbrs, prevNbrs,
+              prev, XXH64.hashInt(step, idHash), invP, invQ, seed)
+            path(step) = if (i < 0) null else nbrs.get(i, idType)
+            prev = cur
+            prevNbrs = nbrs
+            step += 1
+          }
+        }
+        if (alive) Some(InternalRow(walkId, new GenericArrayData(path))) else None
+      }
     }
+    // a step's pick may be null (a neighbor-less node), as in the chain
+    val walkType = if (len > 2) ArrayType(idType, containsNull = true)
+      else start.schema("path").dataType
+    org.apache.spark.sql.GraftColumnBridge.fromInternalRows(spark, rows, StructType(Seq(
+      start.schema("walk_id"), start.schema("path").copy(name = "walk", dataType = walkType))))
+  }
+
+  /** One join of state with the adjacency per step (above the budget). */
+  private def walkJoined(adj: DataFrame, start: DataFrame, prm: Params): DataFrame = {
+    var state = start
     for (step <- 2 until prm.walkLength) {
       val joined = state.join(adj.withColumnRenamed("src", "cur"), Seq("cur"), "inner")
-      // candidate weight α: back to prev → 1/p; neighbor of prev → 1;
-      // else → 1/q  (Grover & Leskovec 2016). Weighted pick via the
-      // exponential-race trick — argmin(-ln(u_c)/w_c) — which is O(deg)
-      // per step instead of an O(deg²) prefix-sum scan, and needs only a
-      // per-candidate deterministic hash. Long-id graphs take the custom
-      // WeightedStepPick expression (one tight primitive loop + binary
-      // search over the sorted prev_nbrs); other id types take the
-      // equivalent higher-order-function tree, which HOF-interprets a
-      // lambda per candidate.
-      val picked =
-        if (longIds)
-          graft.plans.expressions.weighted_step_pick(
-            col("nbrs"), col("prev_nbrs"), col("prev"),
-            xxhash64(col("walk_id"), lit(step)),
-            1.0 / prm.p, 1.0 / prm.q, prm.seed)
-        else {
-          val keyed = transform(col("nbrs"), c => {
-            val w = when(c === col("prev"), lit(1.0 / prm.p))
-              .when(array_contains(col("prev_nbrs"), c), lit(1.0))
-              .otherwise(lit(1.0 / prm.q))
-            val u = ColFns.pseudoUniform(
-              xxhash64(col("walk_id"), lit(step), c), prm.seed)
-            struct((-log(u + lit(1e-12)) / w).as("key"), c.as("pick"))
-          })
-          array_min(keyed).getField("pick")
-        }
+      val picked = graft.plans.expressions.weighted_step_pick(
+        col("nbrs"), col("prev_nbrs"), col("prev"),
+        xxhash64(col("walk_id"), lit(step)),
+        1.0 / prm.p, 1.0 / prm.q, prm.seed)
       state = joined.select(
         col("walk_id"),
         col("cur").as("prev"),
@@ -129,22 +176,18 @@ object Node2Vec {
   /** Walks → skip-gram embeddings via MLlib Word2Vec. Returns
     * (id, embedding ArrayType(Float)). */
   def embeddings(spark: SparkSession, edges: DataFrame,
-                 prm: Params = Params()): DataFrame = {
-    // materialize: Word2Vec makes several passes (vocab count + training)
-    // and would otherwise replay the whole walk-join chain each time
-    // Word2Vec consumes string "sentences"; the walk engine itself is
-    // id-type-agnostic — feeding NUMERIC node ids keeps every
-    // per-candidate lambda op (equality, array_contains, xxhash64) on
-    // longs instead of UTF8Strings (~2× per-step cost), so callers map
-    // label↔number around this boundary and we cast once here.
-    val w0 = walks(spark, edges, prm)
-    val w = (if (w0.schema("walk").dataType ==
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, true) ||
-        w0.schema("walk").dataType ==
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, false))
-      w0
-    else w0.withColumn("walk", col("walk").cast("array<string>")))
-      .localCheckpoint(true)
+                 prm: Params = Params(),
+                 broadcastMaxNodes: Long = 2000000L): DataFrame = {
+    // Word2Vec consumes string "sentences"; the walk engine takes long
+    // or string ids (long ids hash and compare as primitives), so
+    // callers may map label↔number around this boundary and we cast
+    // once here. Materialize: Word2Vec makes several passes (vocab
+    // count + training) and would otherwise replay the walks each time.
+    val w0 = walks(spark, edges, prm, broadcastMaxNodes)
+    val w = (w0.schema("walk").dataType match {
+      case ArrayType(StringType, _) => w0
+      case _ => w0.withColumn("walk", col("walk").cast("array<string>"))
+    }).localCheckpoint(true)
     val model = new Word2Vec()
       .setInputCol("walk").setOutputCol("vec")
       .setVectorSize(prm.dim).setWindowSize(prm.window)

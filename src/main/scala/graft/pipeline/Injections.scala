@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.{Concurrent, Tables}
 import graft.graph.PropertyGraph
 
 /** dvid-versioned incremental graph storage (SURVEY §2.10 G6, §2.12):
@@ -16,17 +17,24 @@ import graft.graph.PropertyGraph
   */
 object Injections {
 
-  def append(g: PropertyGraph, graphDir: String): Unit = {
-    g.nodes.write.mode(SaveMode.Append).partitionBy("dvid")
-      .parquet(s"$graphDir/nodes")
-    g.edges.write.mode(SaveMode.Append).partitionBy("dvid")
-      .parquet(s"$graphDir/edges")
-  }
+  /** Append one injection's nodes and edges. The two writes are
+    * independent, so they run as two concurrent jobs: one table's
+    * straggler tail no longer leaves the cores idle while the other
+    * waits its turn. */
+  def append(g: PropertyGraph, graphDir: String): Unit =
+    Concurrent.both(
+      g.nodes.write.mode(SaveMode.Append).partitionBy("dvid")
+        .parquet(s"$graphDir/nodes"),
+      g.edges.write.mode(SaveMode.Append).partitionBy("dvid")
+        .parquet(s"$graphDir/edges"))
 
+  /** The store as a graph. Loading starts no Spark job: the schemas
+    * come from the parquet footers on the driver ([[Tables.parquet]]),
+    * and `dvid` is inferred from the partition directory names. */
   def load(spark: SparkSession, graphDir: String): PropertyGraph =
     PropertyGraph(
-      spark.read.parquet(s"$graphDir/nodes"),
-      spark.read.parquet(s"$graphDir/edges"))
+      Tables.parquet(spark, s"$graphDir/nodes"),
+      Tables.parquet(spark, s"$graphDir/edges"))
 
   /** Small-file compaction for one table of the store: every dvid
     * partition is rewritten into one file (hash-partitioning by dvid

@@ -214,18 +214,24 @@ case class ArrayMd5(child: Expression)
     copy(child = c)
 }
 
-/** The node2vec walk step's weighted candidate pick for LONG node ids —
-  * replaces `array_min(transform(nbrs, c -> struct(-ln(u)/w, c)))`,
-  * whose lambda tree evaluates interpreted per candidate (higher-order
-  * functions are CodegenFallback). Exponential-race semantics are
-  * preserved exactly: weight = 1/p when c == prev, 1 when c ∈
-  * prev_nbrs, else 1/q (Grover & Leskovec 2016); u is the engine's
-  * hash-based pseudo-uniform over XXH64(c, baseHash), with baseHash =
-  * xxhash64(walk_id, step) computed once per row by the (codegen'd)
-  * builtin — identical chaining to xxhash64(walk_id, step, c).
-  * `prevNbrs` MUST be sorted ascending (Node2Vec.neighborTable sorts),
-  * turning the membership test into a binary search: the per-step cost
-  * is O(deg·log deg) primitive ops in one tight loop.
+/** The node2vec walk step's weighted candidate pick for LONG and
+  * STRING node ids (Grover & Leskovec 2016), by exponential race:
+  * candidate c ∈ nbrs gets weight w = 1/p when c == prev, 1 when
+  * c ∈ prevNbrs, else 1/q; its draw is u = the engine's pseudo-uniform
+  * over XXH64(c, baseHash), with baseHash = xxhash64(walk_id, step)
+  * computed once per row by the (codegen'd) builtin — identical
+  * chaining to xxhash64(walk_id, step, c): hashLong for longs,
+  * hashUnsafeBytes for strings. The pick is argmin −ln(u + 1e−12)/w,
+  * ties broken on c in Spark's order (numeric; UTF-8 binary): O(deg)
+  * per step instead of an O(deg²) prefix-sum scan, in one tight loop
+  * instead of a lambda interpreted per candidate. `prevNbrs` MUST be
+  * sorted ascending in that order (Node2Vec.neighborTable sorts),
+  * turning the membership test into a binary search.
+  *
+  * [[WeightedStepPick.pickIndex]] is the routine; the expression (one
+  * row per walk per step, the distributed walk) and Node2Vec's
+  * in-memory walk kernel both call it, so the two walk shapes pick
+  * identically by construction.
   */
 case class WeightedStepPick(nbrs: Expression, prevNbrs: Expression,
     prev: Expression, baseHash: Expression,
@@ -233,64 +239,108 @@ case class WeightedStepPick(nbrs: Expression, prevNbrs: Expression,
     extends Expression with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(nbrs, prevNbrs, prev, baseHash)
-  override def dataType: DataType = LongType
+  override def dataType: DataType = prev.dataType
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def arrLong(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
+    val id = prev.dataType
+    def arrOfId(t: DataType) = t match {
+      case ArrayType(e, _) => e == id
       case _ => false
     }
-    if (arrLong(nbrs.dataType) && arrLong(prevNbrs.dataType) &&
-        prev.dataType == LongType && baseHash.dataType == LongType)
+    if ((id == LongType || id == StringType) && arrOfId(nbrs.dataType) &&
+        arrOfId(prevNbrs.dataType) && baseHash.dataType == LongType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"WeightedStepPick needs (array<long>, array<long>, long, long), got " +
+      s"WeightedStepPick needs (array<t>, array<t>, t, long) with t long or string, got " +
         s"(${nbrs.dataType}, ${prevNbrs.dataType}, ${prev.dataType}, ${baseHash.dataType})")
   }
 
   override def eval(input: InternalRow): Any = {
     val ns = nbrs.eval(input).asInstanceOf[ArrayData]
-    if (ns == null || ns.numElements() == 0) return null
-    val ps = prevNbrs.eval(input).asInstanceOf[ArrayData]
-    val pvBoxed = prev.eval(input)
-    val h0Boxed = baseHash.eval(input)
-    if (pvBoxed == null || h0Boxed == null) return null
-    val pv = pvBoxed.asInstanceOf[Long]
-    val h0 = h0Boxed.asInstanceOf[Long]
-    val pArr = if (ps == null) Array.emptyLongArray else ps.toLongArray()
-    var bestKey = Double.PositiveInfinity
-    var bestPick = Long.MaxValue
-    var found = false
-    var i = 0
-    val n = ns.numElements()
-    while (i < n) {
-      val c = ns.getLong(i)
-      val w =
-        if (c == pv) invP
-        else if (java.util.Arrays.binarySearch(pArr, c) >= 0) 1.0
-        else invQ
-      val h = XXH64.hashLong(c, h0)
-      // the engine's pseudo-uniform (ColFns.pseudoUniform), inlined on
-      // primitives: pmod(pmod(h,999983)·2654435761 + seed·40503, 1000003)/1000003
-      val m1 = ((h % 999983L) + 999983L) % 999983L
-      val mixed = ((m1 * 2654435761L + seed * 40503L) % 1000003L + 1000003L) % 1000003L
-      val u = mixed.toDouble / 1000003.0
-      // StrictMath.log: Spark's Log expression uses it, keeping this
-      // path bit-identical to the HOF formulation on the same inputs
-      val key = -java.lang.StrictMath.log(u + 1e-12) / w
-      if (key < bestKey || (key == bestKey && c < bestPick)) {
-        bestKey = key; bestPick = c; found = true
-      }
-      i += 1
-    }
-    if (found) bestPick else null
+    val pv = prev.eval(input)
+    val h0 = baseHash.eval(input)
+    if (ns == null || pv == null || h0 == null) return null
+    val i = WeightedStepPick.pickIndex(ns,
+      prevNbrs.eval(input).asInstanceOf[ArrayData], pv, h0.asInstanceOf[Long],
+      invP, invQ, seed)
+    if (i < 0) null else ns.get(i, dataType)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): WeightedStepPick =
     copy(nbrs = newChildren(0), prevNbrs = newChildren(1),
       prev = newChildren(2), baseHash = newChildren(3))
+}
+
+object WeightedStepPick {
+
+  /** Index in `nbrs` of the step's pick, -1 when `nbrs` is empty. `prev`
+    * is a java.lang.Long or a UTF8String (the id type follows it);
+    * a null `prevNbrs` is the empty set. */
+  def pickIndex(nbrs: ArrayData, prevNbrs: ArrayData, prev: Any, baseHash: Long,
+                invP: Double, invQ: Double, seed: Long): Int = {
+    val n = nbrs.numElements()
+    var best = -1
+    var bestKey = Double.PositiveInfinity
+    var i = 0
+    prev match {
+      case pv: UTF8String =>
+        while (i < n) {
+          val c = nbrs.getUTF8String(i)
+          val key = raceKey(c == pv, containsSorted(prevNbrs, c),
+            XXH64.hashUnsafeBytes(c.getBaseObject, c.getBaseOffset, c.numBytes, baseHash),
+            invP, invQ, seed)
+          if (best < 0 || key < bestKey ||
+              (key == bestKey && c.binaryCompare(nbrs.getUTF8String(best)) < 0)) {
+            best = i; bestKey = key
+          }
+          i += 1
+        }
+      case _ =>
+        val pv = prev.asInstanceOf[Long]
+        val ps = if (prevNbrs == null) Array.emptyLongArray else prevNbrs.toLongArray()
+        while (i < n) {
+          val c = nbrs.getLong(i)
+          val key = raceKey(c == pv, java.util.Arrays.binarySearch(ps, c) >= 0,
+            XXH64.hashLong(c, baseHash), invP, invQ, seed)
+          if (best < 0 || key < bestKey || (key == bestKey && c < nbrs.getLong(best))) {
+            best = i; bestKey = key
+          }
+          i += 1
+        }
+    }
+    best
+  }
+
+  /** −ln(u + 1e−12)/w for the candidate whose XXH64 is `h`. */
+  private def raceKey(isPrev: Boolean, inPrevNbrs: Boolean, h: Long,
+                      invP: Double, invQ: Double, seed: Long): Double = {
+    val w = if (isPrev) invP else if (inPrevNbrs) 1.0 else invQ
+    // the engine's pseudo-uniform (ColFns.pseudoUniform), inlined on
+    // primitives: pmod(pmod(h,999983)·2654435761 + seed·40503, 1000003)/1000003
+    val m1 = ((h % 999983L) + 999983L) % 999983L
+    val mixed = ((m1 * 2654435761L + seed * 40503L) % 1000003L + 1000003L) % 1000003L
+    val u = mixed.toDouble / 1000003.0
+    // StrictMath.log: Spark's Log expression uses it, keeping this
+    // routine bit-identical to the SQL formulation on the same inputs
+    -java.lang.StrictMath.log(u + 1e-12) / w
+  }
+
+  /** Binary search of a UTF-8-binary-sorted string array. */
+  private def containsSorted(sorted: ArrayData, c: UTF8String): Boolean = {
+    if (sorted == null) return false
+    var lo = 0
+    var hi = sorted.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val cmp = sorted.getUTF8String(mid).binaryCompare(c)
+      if (cmp < 0) lo = mid + 1
+      else if (cmp > 0) hi = mid - 1
+      else return true
+    }
+    false
+  }
 }
 
 /** Whitespace-token hit counts against K lexicons in ONE pass over the

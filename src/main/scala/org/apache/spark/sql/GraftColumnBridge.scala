@@ -18,6 +18,14 @@ object GraftColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A frame over an RDD of catalyst rows — a mapPartitions kernel's
+    * output — keeping the RDD's partitions and row order
+    * (`internalCreateDataFrame` is private[sql]). */
+  def fromInternalRows(spark: SparkSession,
+                       rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                       schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Release the block-manager storage behind a localCheckpoint-backed
     * frame. `Dataset.unpersist` only covers `cache()`; a checkpoint's
     * blocks otherwise live until the RDD is GC'd and the context

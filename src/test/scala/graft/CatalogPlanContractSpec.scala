@@ -29,7 +29,7 @@ package graft
   * `sys.env` read is pinned as (file, variable), and the session memo
   * is pinned to AppCache's one table with a literal name per call site.
   *
-  * The sweep executes all 257 entries once (~2-3 min at sf0.001) — it
+  * The sweep executes all 260 entries once (~2-3 min at sf0.001) — it
   * IS the judge's manual re-grep, promoted to CI.
   */
 class CatalogPlanContractSpec extends SparkSpec {
@@ -235,6 +235,7 @@ class CatalogPlanContractSpec extends SparkSpec {
       "Louvain.scala:parts" -> (1, "graph constants m2/selfW, one 2-row readout per level"),
       "Louvain.scala:modularityFromParts" -> (1, "composed-Q scalars, one 2-row readout per level"),
       "Louvain.scala:localMoves" -> (1, "per-round convergence scalars, one 3-row readout per round"),
+      "Node2Vec.scala:walkInMemory" -> (1, "adjacency for the broadcast walk kernel, behind broadcastMaxNodes"),
       "Metrics.scala:aucDistributed" -> (1, "rank-AUC dense leg behind the 1M gate, histogram fallback"),
       "Metrics.scala:binaryAucsDistributed" -> (1, "same gate as aucDistributed, batched variant"),
       "ScaleOps.scala:drainDrop" -> (1, "foreachBatch audit sink, O(windows in horizon) not O(events)"),

@@ -112,6 +112,82 @@ class GraphAlgoSpec extends SparkSpec {
     assert(w1 === w2)
   }
 
+  /** The clique ring with long ids (clique c, node n → 100·c + n). */
+  private def cliqueRingLongs = {
+    val intra = for (c <- 0 until 8; a <- 0 until 12; b <- 0 until 12 if a < b)
+      yield (100L * c + a, 100L * c + b)
+    val bridges = for (c <- 0 until 8) yield (100L * c, 100L * ((c + 1) % 8) + 1)
+    (intra ++ bridges).toDF("src", "dst")
+  }
+
+  /** A strongly biased walk: returning (1/p) and outward (1/q) steps
+    * weigh far from the in-neighborhood weight 1. */
+  private val biased = Node2Vec.Params(numWalks = 3, walkLength = 8, p = 4.0, q = 0.25, dim = 8)
+
+  test("node2vec string-id walks follow the p/q rule at every step, in both walk shapes") {
+    // regression: the string-id step picked through a lambda whose prev
+    // resolved to the step select's own output alias (cur AS prev), so
+    // the return step weighed 1/q instead of 1/p. Every step of every
+    // walk is re-derived here from its path, with the rule evaluated in
+    // a select whose lambda names no output alias.
+    import graft.functions.ColFns
+    val edges = cliqueRing.select("src", "dst")
+    val nb = Node2Vec.neighborTable(edges)
+    val len = biased.walkLength
+    for (budget <- Seq(0L, 2000000L)) {
+      val w = Node2Vec.walks(spark, edges, biased, budget)
+      assert(w.count() === 96 * biased.numWalks)
+      val steps = w.select($"walk_id", $"walk",
+          explode(sequence(lit(2), lit(len - 1))).as("s"))
+        .select($"walk_id", $"s",
+          element_at($"walk", $"s" - 1).as("p_id"),
+          element_at($"walk", $"s").as("c_id"),
+          element_at($"walk", $"s" + 1).as("actual"))
+        .join(nb.select($"src".as("c_id"), $"nbrs".as("c_nbrs")), "c_id")
+        .join(nb.select($"src".as("p_id"), $"nbrs".as("p_nbrs")), "p_id")
+      def pick(weighted: Boolean) = array_min(transform($"c_nbrs", c => {
+        val wt =
+          if (!weighted) lit(1.0)
+          else when(c === $"p_id", lit(1.0 / biased.p))
+            .when(array_contains($"p_nbrs", c), lit(1.0))
+            .otherwise(lit(1.0 / biased.q))
+        val u = ColFns.pseudoUniform(xxhash64($"walk_id", $"s", c), biased.seed)
+        struct((-log(u + lit(1e-12)) / wt).as("key"), c.as("pick"))
+      })).getField("pick")
+      val checked = steps.select($"walk_id", $"s", $"actual",
+          pick(weighted = true).as("expected"), pick(weighted = false).as("uniform"))
+        .cache()
+      assert(checked.count() === 96 * biased.numWalks * (len - 2))
+      // the rule is not vacuous here: a uniform walk would differ
+      assert(checked.filter($"expected" =!= $"uniform").count() > 0)
+      val bad = checked.filter(!($"actual" <=> $"expected")).orderBy("walk_id", "s")
+        .limit(3).collect()
+      assert(bad.isEmpty, s"budget $budget: steps off the p/q rule: ${bad.toSeq}")
+      checked.unpersist()
+    }
+  }
+
+  test("node2vec: the in-memory walk kernel equals the join chain, row for row in each partition") {
+    for (edges <- Seq(cliqueRing.select("src", "dst"), cliqueRingLongs)) {
+      val kernel = Node2Vec.walks(spark, edges, biased)
+      val chain = Node2Vec.walks(spark, edges, biased, broadcastMaxNodes = 0L)
+      assert(kernel.schema === chain.schema)
+      val k = kernel.rdd.glom().collect().map(_.toSeq).toSeq
+      val c = chain.rdd.glom().collect().map(_.toSeq).toSeq
+      assert(k.map(_.size) === c.map(_.size), "partition sizes differ")
+      assert(k === c, "walks differ")
+      // Word2Vec repartitions by row position, so equal layouts give
+      // equal embeddings. One training partition: with several, MLlib
+      // merges float partials in task-completion order and two fits of
+      // the same walks already differ.
+      val one = biased.copy(w2vPartitions = 1)
+      val ek = Node2Vec.embeddings(spark, edges, one).orderBy("id").collect().toSeq
+      val ec = Node2Vec.embeddings(spark, edges, one, broadcastMaxNodes = 0L)
+        .orderBy("id").collect().toSeq
+      assert(ek === ec, "embeddings differ")
+    }
+  }
+
   test("node2vec embeddings have requested dimension and cover all nodes") {
     val edges = twoCliques.select("src", "dst")
     val emb = Node2Vec.embeddings(spark, edges,

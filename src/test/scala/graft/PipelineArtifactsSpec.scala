@@ -142,6 +142,67 @@ class PipelineArtifactsSpec extends SparkSpec {
     assert(pruned.count() === 1)
   }
 
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("Tables.parquet: Spark's inferred schema and rows, and no Spark job to build a frame") {
+    import graft.core.Tables
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val loaders = Seq[(String, (SparkSession, String) => DataFrame)](
+      "region" -> Tables.region, "nation" -> Tables.nation,
+      "customer" -> Tables.customer, "supplier" -> Tables.supplier,
+      "part" -> Tables.part, "orders" -> Tables.orders,
+      "lineitem" -> Tables.lineitem, "events" -> Tables.events,
+      "documents" -> Tables.documents, "embeddings" -> Tables.embeddings)
+    loaders.foreach { case (name, load) =>
+      var built: DataFrame = null
+      assert(jobsDuring { built = load(spark, sfDir) } === 0,
+        s"building Tables.$name started a Spark job")
+      val path = s"$sfDir/$name.parquet"
+      val inferred = spark.read.parquet(path)
+      val viaFooter = Tables.parquet(spark, path)
+      assert(viaFooter.schema === inferred.schema, name)
+      assert(sortedRows(viaFooter) === sortedRows(inferred), name)
+    }
+    // nanosAsLong reads ts as long; the loader still yields a timestamp
+    assert(Tables.events(spark, sfDir).schema("ts").dataType ===
+      org.apache.spark.sql.types.TimestampType)
+
+    // the dvid store: partition column inferred from the dirs, last
+    val dir = s"$tmp/footer_store"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    Injections.append(PropertyGraph(
+      Seq(("n1", "Customer", 1.5, 1)).toDF("id", "label", "weight", "dvid"),
+      Seq(("n1", "n2", 1)).toDF("src", "dst", "dvid")), dir)
+    Injections.append(PropertyGraph(
+      Seq(("n3", "Product", 2.5, 2)).toDF("id", "label", "weight", "dvid"),
+      Seq(("n2", "n3", 2)).toDF("src", "dst", "dvid")), dir)
+    var loaded: PropertyGraph = null
+    assert(jobsDuring { loaded = Injections.load(spark, dir) } === 0,
+      "loading the store started a Spark job")
+    Seq("nodes" -> loaded.nodes, "edges" -> loaded.edges).foreach { case (t, df) =>
+      val inferred = spark.read.parquet(s"$dir/$t")
+      assert(df.schema === inferred.schema, t)
+      assert(df.schema.fieldNames.last === "dvid", t)
+      assert(sortedRows(df) === sortedRows(inferred), t)
+    }
+    assert(loaded.nodes.count() === 2)
+  }
+
   test("G6: compaction rewrites each dvid partition to one file, content unchanged") {
     val dir = s"$tmp/compact/orders"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$tmp/compact"))

@@ -722,6 +722,33 @@ class ScaleMechanicsSpec extends SparkSpec {
     assert(both.filter($"hof" =!= $"fast").count() === 0)
   }
 
+  test("WeightedStepPick on string ids is bit-identical to the HOF walk-step formulation") {
+    import graft.functions.ColFns
+    def id(c: org.apache.spark.sql.Column) = concat(lit("n"), c.cast("string"))
+    // array_sort orders strings UTF-8-binary, as neighborTable does
+    val df = spark.range(500).toDF("i")
+      .withColumn("walk_id", concat($"i".cast("string"), lit("#1")))
+      .withColumn("prev", id($"i" % 7))
+      .withColumn("nbrs", array_distinct(array_sort(
+        array(id($"i" % 11), id($"i" % 7), id($"i" % 5 + 20), id($"i" % 3 + 40)))))
+      .withColumn("prev_nbrs", array_sort(array(id($"i" % 11), id($"i" % 13 + 5))))
+    val step = 4; val p = 2.0; val q = 0.5; val seed = 7L
+    val keyed = transform($"nbrs", c => {
+      val w = when(c === $"prev", lit(1.0 / p))
+        .when(array_contains($"prev_nbrs", c), lit(1.0))
+        .otherwise(lit(1.0 / q))
+      val u = ColFns.pseudoUniform(xxhash64($"walk_id", lit(step), c), seed)
+      struct((-log(u + lit(1e-12)) / w).as("key"), c.as("pick"))
+    })
+    val both = df.select(
+      array_min(keyed).getField("pick").as("hof"),
+      graft.plans.expressions.weighted_step_pick(
+        $"nbrs", $"prev_nbrs", $"prev",
+        xxhash64($"walk_id", lit(step)), 1.0 / p, 1.0 / q, seed).as("fast"))
+    assert(both.filter(!($"hof" <=> $"fast")).count() === 0)
+    assert(both.filter($"fast".isNull).count() === 0)
+  }
+
   test("spreadForMap: exchanges a narrow scan, is a NO-OP on a well-split input") {
     // the single-file corpus (the small-SF trap): one partition in,
     // shuffle-width partitions out — the expensive map kernel above it
