@@ -215,9 +215,9 @@ object GraphML extends CatalogModule {
   // pos_weight class balance, best-AUC checkpointing). Rows-only (the
   // trajectory is model-coupled); the loop invariants are spec-asserted
   // in PipelineArtifactsSpec.
-  // the 15-epoch trajectory is a deterministic pure function of the dir —
+  // the 10-epoch trajectory is a deterministic pure function of the dir —
   // fit once per (app, dir) and share between m12 (rows) and m12b (gate)
-  private def m12Fit(spark: SparkSession, dir: String): graft.ml.AdamWTrainer.Result =
+  private def m12Fit(spark: SparkSession, dir: String): graft.ml.TrainLoop.Result =
     graft.core.AppCache.memo(spark, "graphml.m12Fit", dir)(
       // 10 epochs: enough to exercise improvement and checkpointing
       // (the sf-scale trajectory improves monotonically, so the plateau
@@ -227,9 +227,13 @@ object GraphML extends CatalogModule {
       graft.ml.AdamWTrainer.train(
         LinkPredict.trainingSetCached(spark, dir, cap = 20000), epochs = 10))
 
-  private def m12AdamwLoop(spark: SparkSession, dir: String): DataFrame = {
+  private def m12AdamwLoop(spark: SparkSession, dir: String): DataFrame =
+    trajectoryRows(spark, m12Fit(spark, dir))
+
+  /** The m12/m14/m15 rows: a loop trajectory rounded at 1e-6. */
+  private def trajectoryRows(spark: SparkSession,
+                             r: graft.ml.TrainLoop.Result): DataFrame = {
     import spark.implicits._
-    val r = m12Fit(spark, dir)
     r.epochs.map(e => (e.epoch, math.round(e.trainLoss * 1e6) / 1e6,
         math.round(e.aucVal * 1e6) / 1e6, e.lr,
         math.round(e.gradNorm * 1e6) / 1e6, if (e.clipped) 1 else 0,
@@ -248,24 +252,19 @@ object GraphML extends CatalogModule {
   // to the plateau scheduler only); the LR is lr0·0.5^halvings with a
   // non-decreasing integer halving count; best_auc/best_epoch are the
   // max and its first argmax. The fit is model-coupled; this math is not.
-  private def m12bAdamwDeterministic(spark: SparkSession, dir: String): DataFrame = {
-    val r = m12Fit(spark, dir)
-    trajectoryGate(spark, dir, "m12_trajectory",
-      r.epochs.map(e => (e.epoch, e.trainLoss, e.aucVal, e.lr, e.gradNorm,
-        if (e.clipped) 1 else 0, if (e.improved) 1 else 0)),
-      r.bestEpoch, r.bestAuc)
-  }
+  private def m12bAdamwDeterministic(spark: SparkSession, dir: String): DataFrame =
+    trajectoryGate(spark, dir, "m12_trajectory", m12Fit(spark, dir))
 
-  /** The m12b gate, shared verbatim with m14b: persist a trajectory at
-    * full precision and re-derive every loop invariant relationally
-    * from the persisted bits (both engines run the same math). */
+  /** The m12b gate, shared with m14b/m15b: persist a trajectory at full
+    * precision and re-derive every loop invariant relationally from the
+    * persisted bits (both engines run the same math). */
   private def trajectoryGate(spark: SparkSession, dir: String, name: String,
-      rows: Seq[(Int, Double, Double, Double, Double, Int, Int)],
-      bestEpoch: Int, bestAuc: Double): DataFrame = {
+                             r: graft.ml.TrainLoop.Result): DataFrame = {
     import spark.implicits._
     val persisted = artifact(spark, dir, name,
-      rows.map(t => (t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-          bestEpoch, bestAuc))
+      r.epochs.map(e => (e.epoch, e.trainLoss, e.aucVal, e.lr, e.gradNorm,
+          if (e.clipped) 1 else 0, if (e.improved) 1 else 0,
+          r.bestEpoch, r.bestAuc))
         .toDF("epoch", "train_loss", "auc_val", "lr", "grad_norm",
           "clipped", "improved", "best_epoch", "best_auc"))
     val wPrev = graft.functions.ColFns.boundedGlobal(col("epoch"))(col("epoch"))
@@ -308,29 +307,16 @@ object GraphML extends CatalogModule {
   // divergence that m7 (flat MLlib MLP, right loop missing) and m12
   // (right loop, linear model) each approximated from one side; the
   // trajectory and its m14b gate are exactly m12/m12b's.
-  private def m14Fit(spark: SparkSession, dir: String): graft.ml.TowerNet.Result =
+  private def m14Fit(spark: SparkSession, dir: String): graft.ml.TrainLoop.Result =
     graft.core.AppCache.memo(spark, "graphml.m14Fit", dir)(
       graft.ml.TowerNet.train(
         LinkPredict.trainingSetCached(spark, dir, cap = 20000), epochs = 10))
 
-  private def m14TowerLoop(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val r = m14Fit(spark, dir)
-    r.epochs.map(e => (e.epoch, math.round(e.trainLoss * 1e6) / 1e6,
-        math.round(e.aucVal * 1e6) / 1e6, e.lr,
-        math.round(e.gradNorm * 1e6) / 1e6, if (e.clipped) 1 else 0,
-        if (e.improved) 1 else 0))
-      .toDF("epoch", "train_loss", "auc_val", "lr", "grad_norm",
-        "clipped", "improved")
-  }
+  private def m14TowerLoop(spark: SparkSession, dir: String): DataFrame =
+    trajectoryRows(spark, m14Fit(spark, dir))
 
-  private def m14bTowerDeterministic(spark: SparkSession, dir: String): DataFrame = {
-    val r = m14Fit(spark, dir)
-    trajectoryGate(spark, dir, "m14_trajectory",
-      r.epochs.map(e => (e.epoch, e.trainLoss, e.aucVal, e.lr, e.gradNorm,
-        if (e.clipped) 1 else 0, if (e.improved) 1 else 0)),
-      r.bestEpoch, r.bestAuc)
-  }
+  private def m14bTowerDeterministic(spark: SparkSession, dir: String): DataFrame =
+    trajectoryGate(spark, dir, "m14_trajectory", m14Fit(spark, dir))
 
   // M15: the reference's LITERAL loop — shuffled batch-512 minibatches,
   // one AdamW step per batch, on the tower net (the last §7.4 loop
@@ -338,29 +324,16 @@ object GraphML extends CatalogModule {
   // m12/m14 are the full-batch forms, m13 the stream form). Per-epoch
   // log: mean batch loss, val AUC, last step's norm/clip. Rows-only;
   // m15b is the hash-gated trajectory-invariant twin.
-  private def m15Fit(spark: SparkSession, dir: String): graft.ml.TowerNet.Result =
+  private def m15Fit(spark: SparkSession, dir: String): graft.ml.TrainLoop.Result =
     graft.core.AppCache.memo(spark, "graphml.m15Fit", dir)(
       graft.ml.TowerNet.trainMinibatch(
         LinkPredict.trainingSetCached(spark, dir, cap = 20000), epochs = 10))
 
-  private def m15MinibatchLoop(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val r = m15Fit(spark, dir)
-    r.epochs.map(e => (e.epoch, math.round(e.trainLoss * 1e6) / 1e6,
-        math.round(e.aucVal * 1e6) / 1e6, e.lr,
-        math.round(e.gradNorm * 1e6) / 1e6, if (e.clipped) 1 else 0,
-        if (e.improved) 1 else 0))
-      .toDF("epoch", "train_loss", "auc_val", "lr", "grad_norm",
-        "clipped", "improved")
-  }
+  private def m15MinibatchLoop(spark: SparkSession, dir: String): DataFrame =
+    trajectoryRows(spark, m15Fit(spark, dir))
 
-  private def m15bMinibatchDeterministic(spark: SparkSession, dir: String): DataFrame = {
-    val r = m15Fit(spark, dir)
-    trajectoryGate(spark, dir, "m15_trajectory",
-      r.epochs.map(e => (e.epoch, e.trainLoss, e.aucVal, e.lr, e.gradNorm,
-        if (e.clipped) 1 else 0, if (e.improved) 1 else 0)),
-      r.bestEpoch, r.bestAuc)
-  }
+  private def m15bMinibatchDeterministic(spark: SparkSession, dir: String): DataFrame =
+    trajectoryGate(spark, dir, "m15_trajectory", m15Fit(spark, dir))
 
   // M13: the minibatch-stream AdamW demo — the one documented M9
   // divergence (full-batch step vs the reference's batch-512 loop)
@@ -371,16 +344,14 @@ object GraphML extends CatalogModule {
   // dir — run once per (app, dir) and share between m13 (rows) and its
   // hash-gated twin m13b
   private def m13Fit(spark: SparkSession, dir: String): graft.ml.AdamWTrainer.StreamResult =
-    graft.core.AppCache.memo(spark, "graphml.m13Fit", dir) {
-      val tag = graft.core.Artifacts.dirTag(dir)
+    graft.core.AppCache.memo(spark, "graphml.m13Fit", dir)(
       // 2 epochs × 3 shards: enough steps to show descent + epoch replay;
       // every extra shard is another per-step barrier (the cost the entry
       // demonstrates), so the demo stays small by design
       graft.ml.AdamWTrainer.trainMinibatchStream(spark,
         LinkPredict.trainingSetCached(spark, dir, cap = 20000),
         epochs = 2, nBatches = 3,
-        stageDir = s"/tmp/graft_stream/m13_${spark.sparkContext.applicationId}_$tag")
-    }
+        stageDir = ScaleOps.freshStagingDir(spark, "m13", dir).toString))
 
   private def m13MinibatchStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

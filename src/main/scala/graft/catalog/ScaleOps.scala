@@ -382,8 +382,8 @@ object ScaleOps extends CatalogModule {
     * apps' leftover roots for the same entry are reaped age-gated (a
     * LIVE concurrent app's freshly-modified dir is never touched — the
     * reapStaleWhere contract). */
-  private def freshStagingDir(spark: SparkSession, name: String,
-                              dir: String): java.nio.file.Path = {
+  private[graft] def freshStagingDir(spark: SparkSession, name: String,
+                                     dir: String): java.nio.file.Path = {
     val base = java.nio.file.Paths.get(stagingRoot(spark, name, dir))
     val mine = base.getFileName.toString
     graft.core.Artifacts.reapStaleWhere("/tmp/graft_stream",

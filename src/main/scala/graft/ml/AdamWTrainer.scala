@@ -2,316 +2,146 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.ColFns
 
-/** The reference's neural TRAINING-LOOP semantics, data-parallel on
-  * Spark (SURVEY §2.11 M9/M10; reference
-  * Neural_network_multi_towered_training.py:703-790):
+/** The reference's training loop ([[TrainLoop]]: AdamW lr 0.02,
+  * clip 1.0, ReduceLROnPlateau, pos_weight, strict-best checkpoint)
+  * driving a LINEAR scorer over the engine's standardized link
+  * features, data-parallel on Spark. [[TowerNet]] drives the same loop
+  * with the reference's tower architecture.
   *
-  *  - AdamW (lr 0.02, weight_decay 1e-4, torch-default β/ε), decoupled
-  *    decay exactly as optim.AdamW (line 710)
-  *  - global gradient-norm clipping at 1.0 (clip_grad_norm_, line 732)
-  *  - ReduceLROnPlateau mode=max factor=0.5 on validation AUC
-  *    (line 711), patience scaled to the engine's epoch budget
-  *  - class imbalance via BCEWithLogitsLoss pos_weight (M10, line 709)
-  *  - best-AUC checkpoint + restore (lines 716-787), optional early stop
-  *
-  * The MODEL is a linear scorer over the engine's standardized link
-  * features — the tower-architecture divergence stays documented at
-  * MultiTower (SURVEY §7.4); this closes the optimizer/schedule/
-  * checkpoint-semantics divergence, which a user porting the reference
-  * NN hits first. Remaining documented divergence: one FULL-BATCH
-  * gradient step per epoch replaces the reference's batch-512
-  * minibatch loop (line 726) — per-epoch minibatching would serialize
-  * hundreds of tiny barriers per epoch on a cluster; the data-parallel
-  * shape keeps one aggregate per step, so "epoch" here ≡ one step. The 100 TB shape:
+  * `train` takes one FULL-BATCH gradient step per epoch where the
+  * reference loops over batch-512 minibatches (line 726): per-epoch
+  * minibatching would serialize hundreds of tiny barriers per epoch on
+  * a cluster, so "epoch" here ≡ one step; `trainMinibatchStream` and
+  * `TowerNet.trainMinibatch` are the minibatch forms. The 100 TB shape:
   * each epoch's gradient is ONE aggregate pass over the cached corpus
   * (per-feature sum-reductions, map-side combined), the model is a
-  * per-epoch broadcast of d+1 doubles, and the optimizer state
-  * (2(d+1) doubles) lives on the driver — the classic data-parallel
-  * layout where nothing per-row ever leaves the executors.
+  * per-epoch broadcast of d+1 doubles, and the optimizer state lives on
+  * the driver — the classic data-parallel layout where nothing per-row
+  * ever leaves the executors.
   */
 object AdamWTrainer {
 
-  /** The broadcast-weights plumbing shared by `train` and the minibatch
-    * stream: one schema, one 1-row frame factory, one logit expression.
-    * A single definition keeps the frame's column names and the logit's
-    * col("w$i") references from ever drifting apart between the two
-    * training paths. */
-  private final case class WeightModel(features: Seq[String]) {
+  private final val Lr0 = 0.02
+  private final val Seed = 47L
+
+  /** The linear model over the flat parameter layout [w0..w_{d-1}, b]
+    * as a broadcast 1-row frame (w0..w_{d-1}, wb), NOT literals baked
+    * into the expressions: literal weights change every step, so each
+    * step's plans would miss the whole-stage codegen cache and pay a
+    * fresh janino compile per job — the dominant cost of the loop on a
+    * small corpus. As data the weights keep every plan source identical
+    * (one compile, cache hits thereafter). This is also the honest
+    * 100 TB shape: the model ships to executors as a broadcast row,
+    * never as code. One definition keeps the frame's column names and
+    * the logit's col("w$i") references from drifting apart. */
+  private final case class WeightModel(d: Int) {
     val schema: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.StructType(
-        (features.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"w$i", org.apache.spark.sql.types.DoubleType, nullable = false)) :+
-          org.apache.spark.sql.types.StructField(
-            "wb", org.apache.spark.sql.types.DoubleType, nullable = false)).toArray)
+        (0 to d).map(i => org.apache.spark.sql.types.StructField(
+          if (i < d) s"w$i" else "wb", org.apache.spark.sql.types.DoubleType,
+          nullable = false)).toArray)
     def frame(s: org.apache.spark.sql.SparkSession,
-              w: Array[Double], b: Double): DataFrame =
+              params: Array[Double]): DataFrame =
       s.createDataFrame(java.util.Collections.singletonList(
-        org.apache.spark.sql.Row.fromSeq(w.toSeq :+ b)), schema)
-    def logit: Column = features.indices
+        org.apache.spark.sql.Row.fromSeq(params.toSeq)), schema)
+    val logit: Column = (0 until d)
       .map(i => col(s"x$i") * col(s"w$i"))
       .foldLeft(col("wb"): Column)(_ + _)
+    val prob: Column = lit(1.0) / (lit(1.0) + exp(-logit))
+
+    /** Gradient sums in the parameter layout, then the loss sum and the
+      * row count. dL/dz for BCEWithLogits with pos_weight pw is
+      * (1−y)·σ(z) − pw·y·(1−σ(z)); the loss is the numerically-stable
+      * max(z,0) − z·y + log(1+e^{−|z|}), positive term scaled by pw. */
+    def gradAggs(posWeight: Double): Seq[Column] = {
+      val g = (lit(1.0) - col("y")) * prob -
+        lit(posWeight) * col("y") * (lit(1.0) - prob)
+      val perRow = (lit(1.0) + (lit(posWeight) - 1.0) * col("y")) *
+        (greatest(logit, lit(0.0)) - logit * col("y") +
+          log1p(exp(-abs(logit))))
+      (0 until d).map(i => sum(g * col(s"x$i")).as(s"g$i")) ++
+        Seq(sum(g).as("gb"), sum(perRow).as("loss"), count(lit(1)).as("n"))
+    }
+
+    /** Exact val-split ROC-AUC of the model at `params`. */
+    def valAuc(valDf: DataFrame, params: Array[Double]): Double =
+      Metrics.auc(valDf.crossJoin(broadcast(frame(valDf.sparkSession, params)))
+        .select(col("y").as("label"), prob.as("p")), "label", col("p"))
   }
 
-  /** `gradNorm` is the PRE-clip total norm — what torch's
-    * clip_grad_norm_ returns and the reference would log; `clipped`
-    * marks epochs where the norm exceeded max_norm and the applied
-    * gradient was rescaled to it. */
-  final case class Epoch(epoch: Int, trainLoss: Double, aucVal: Double,
-                         lr: Double, gradNorm: Double, clipped: Boolean,
-                         improved: Boolean)
-  final case class Result(weights: Array[Double], bias: Double,
-                          epochs: Seq[Epoch], bestAuc: Double, bestEpoch: Int)
-
-  /** `data`: rows with `label` (0/1 double) and the numeric feature
-    * columns `features`. Standardization is computed on the train split
-    * only (the reference fits scalers on train, line 807 `scalers`). */
-  def train(data: DataFrame, features: Seq[String] = LinkPredict.featureNames,
-            epochs: Int = 40, lr0: Double = 0.02, weightDecay: Double = 1e-4,
-            clipNorm: Double = 1.0, lrPatience: Int = 5, lrFactor: Double = 0.5,
-            earlyStop: Int = Int.MaxValue, seed: Long = 47L): Result = {
-    val d = features.size
-    val split = data.coalesce(8).withColumn("part",
-      when(ColFns.pseudoUniform(
-        xxhash64(col("customer"), col("product")), seed) < 0.8, "train")
-        .otherwise("val"))
-    // train-split moments for standardization (guard σ=0 → 1)
-    val momAgg = features.flatMap(c =>
-      Seq(avg(col(c)).as(s"mu_$c"), stddev_pop(col(c)).as(s"sd_$c")))
-    val mom = split.filter(col("part") === "train").agg(momAgg.head, momAgg.tail: _*).head()
-    val mu = features.indices.map(i => mom.getDouble(2 * i)).toArray
-    val sd = features.indices.map { i =>
-      val s = mom.getDouble(2 * i + 1); if (s > 0) s else 1.0
-    }.toArray
-    val xCols = features.zipWithIndex.map { case (c, i) =>
-      ((col(c) - mu(i)) / sd(i)).as(s"x$i")
-    }
-    val frame = split.select(xCols ++ Seq(col("label").as("y"), col("part")): _*)
-      .cache()
-    val trainDf = frame.filter(col("part") === "train")
-    val valDf = frame.filter(col("part") === "val")
+  /** The standardized split of `data` (label + LinkPredict.featureNames)
+    * cached as (x$i, y, part, extra…), handed to `body` as
+    * (train rows, val rows, pos_weight). */
+  private def withSplit[T](data: DataFrame, extra: Column*)(
+      body: (DataFrame, DataFrame, Double) => T): T = {
+    val (split, xCols) = TrainLoop.standardize(data, 8, Seed)
+    val frame = split.select(
+      xCols ++ Seq(col("label").as("y"), col("part")) ++ extra: _*).cache()
     try {
-      val nPos = trainDf.filter(col("y") === 1.0).count().toDouble
-      val nNeg = trainDf.count().toDouble - nPos
-      val posWeight = if (nPos > 0) nNeg / nPos else 1.0
-
-      val w = new Array[Double](d)
-      var b = 0.0
-      val mW = new Array[Double](d + 1) // AdamW first moments (last = bias)
-      val vW = new Array[Double](d + 1) // second moments
-      val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
-      var lr = lr0
-      var bestAuc = 0.0
-      var bestEpoch = -1
-      var bestW: Array[Double] = w.clone(); var bestB = b
-      // the plateau scheduler tracks its OWN best with the 1e-4
-      // threshold (torch ReduceLROnPlateau semantics: threshold affects
-      // the LR schedule, never checkpointing)
-      var schedBest = 0.0
-      var plateau = 0; var sinceBest = 0
-      val log = Seq.newBuilder[Epoch]
-
-      // the per-epoch model is a broadcast 1-row frame (w0..w_{d-1}, wb),
-      // NOT literals baked into the expressions: literal weights change
-      // every epoch, so each epoch's plans would miss the whole-stage
-      // codegen cache and pay a fresh janino compile per job — the
-      // dominant cost of the loop on a small corpus. As data the weights
-      // keep every epoch's plan source identical (one compile, 2·epochs
-      // cache hits); the arithmetic (x_i·w_i, same fold order) is
-      // bit-identical either way. This is also the honest 100 TB shape:
-      // the model ships to executors as a broadcast row, never as code.
-      val ss = data.sparkSession
-      val wm = WeightModel(features)
-      def weightFrame: DataFrame = wm.frame(ss, w, b)
-      def logit: Column = wm.logit
-
-      // Pipelined evaluation (same shape as TowerNet.train): epoch e's
-      // val-AUC job and epoch e+1's gradient job both depend only on
-      // epoch e's post-update weights, so the AUC runs on a side
-      // thread while the next gradient pass runs inline. Bookkeeping
-      // (strict-best checkpoint, plateau scheduler, early stop) is
-      // awaited before the next UPDATE — the first point its result is
-      // read — so the trajectory is bit-identical. When the awaited
-      // AUC triggers early stop, the speculatively computed gradient
-      // row is discarded: exactly the epochs the sequential loop ran
-      // are logged and applied.
-      val aucPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-        (r: Runnable) => {
-          val th = new Thread(r, "adamw-val-auc"); th.setDaemon(true); th
-        })
-      val aucEc = scala.concurrent.ExecutionContext.fromExecutorService(aucPool)
-      var lastLoss = 0.0; var lastNorm = 0.0; var lastClipped = false
-      var stopped = false
-      def bookkeep(e: Int, auc: Double): Unit = {
-        val improved = auc > bestAuc
-        if (improved) {
-          bestAuc = auc; bestEpoch = e; bestW = w.clone(); bestB = b
-          sinceBest = 0
-        } else sinceBest += 1
-        if (auc > schedBest + 1e-4) { schedBest = auc; plateau = 0 }
-        else plateau += 1
-        if (plateau > lrPatience) { lr *= lrFactor; plateau = 0 }
-        log += Epoch(e, lastLoss, auc, lr, lastNorm, lastClipped, improved)
-        if (sinceBest >= earlyStop) stopped = true
-      }
-      var pendingAuc: scala.concurrent.Future[Double] = null
-      try {
-      var epoch = 0
-      while (epoch < epochs && !stopped) {
-        // one distributed pass: per-feature gradient sums + loss
-        val z = logit
-        val p = lit(1.0) / (lit(1.0) + exp(-z))
-        // dL/dz for BCEWithLogits with pos_weight pw:
-        //   (1−y)·σ(z) − pw·y·(1−σ(z))
-        val g = (lit(1.0) - col("y")) * p -
-          lit(posWeight) * col("y") * (lit(1.0) - p)
-        // numerically-stable BCE: max(z,0) − z·y + log(1+e^{−|z|}),
-        // positive term scaled by pw (the BCEWithLogitsLoss identity)
-        val perRow = (lit(1.0) + (lit(posWeight) - 1.0) * col("y")) *
-          (greatest(z, lit(0.0)) - z * col("y") + log1p(exp(-abs(z))))
-        val aggs = features.indices.map(i => sum(g * col(s"x$i")).as(s"g$i")) ++
-          Seq(sum(g).as("gb"), sum(perRow).as("loss"), count(lit(1)).as("n"))
-        val row = trainDf.crossJoin(broadcast(weightFrame))
-          .agg(aggs.head, aggs.tail: _*).head()
-        if (pendingAuc != null) {
-          bookkeep(epoch - 1, scala.concurrent.Await.result(
-            pendingAuc, scala.concurrent.duration.Duration.Inf))
-          pendingAuc = null
-        }
-        if (stopped) {
-          // early stop fired on the awaited AUC: the sequential loop
-          // would never have started this epoch — discard its gradient
-        } else {
-        val n = row.getLong(d + 2).toDouble
-        val grads = (0 until d).map(i => row.getDouble(i) / n).toArray
-        val gradB = row.getDouble(d) / n
-        val loss = row.getDouble(d + 1) / n
-
-        // clip_grad_norm_(max_norm=1.0): one global norm over all params
-        val norm = math.sqrt(grads.map(x => x * x).sum + gradB * gradB)
-        val scale = if (norm > clipNorm) clipNorm / norm else 1.0
-        val t = epoch + 1
-        val bc1 = 1.0 - math.pow(beta1, t)
-        val bc2 = 1.0 - math.pow(beta2, t)
-        def step(i: Int, grad: Double, prev: Double): Double = {
-          val gc = grad * scale
-          mW(i) = beta1 * mW(i) + (1 - beta1) * gc
-          vW(i) = beta2 * vW(i) + (1 - beta2) * gc * gc
-          // decoupled decay: wd applies to the PARAMETER, not the grad
-          prev - lr * (mW(i) / bc1 / (math.sqrt(vW(i) / bc2) + eps) +
-            weightDecay * prev)
-        }
-        // optim.AdamW decays every parameter in the group — the
-        // reference passes model.parameters() wholesale, bias included
-        for (i <- 0 until d) w(i) = step(i, grads(i), w(i))
-        b = step(d, gradB, b)
-
-        // checkpoint on STRICT improvement (reference keeps the best
-        // model whenever val AUC beats the running best; the 1e-4
-        // threshold belongs to the scheduler only) — so bestAuc is
-        // exactly max(aucVal) and `improved` is exactly
-        // auc > running-max-of-previous, a pure window expression the
-        // m12b twin recomputes relationally in both engines; both live
-        // in `bookkeep`, which consumes this future just before the
-        // next update
-        lastLoss = loss; lastNorm = norm; lastClipped = scale < 1.0
-        val wf = weightFrame // frozen post-update snapshot for the side job
-        pendingAuc = scala.concurrent.Future(
-          Metrics.auc(valDf.crossJoin(broadcast(wf))
-            .select(col("y").as("label"),
-              (lit(1.0) / (lit(1.0) + exp(-logit))).as("p")), "label", col("p"),
-            bounds = Some((0.0, 1.0))))(aucEc)
-        }
-        epoch += 1
-      }
-      if (pendingAuc != null)
-        bookkeep(epoch - 1, scala.concurrent.Await.result(
-          pendingAuc, scala.concurrent.duration.Duration.Inf))
-      // restore the best checkpoint (reference line 787)
-      Result(bestW, bestB, log.result(), bestAuc, bestEpoch)
-      } finally aucEc.shutdown()
+      val trainDf = frame.filter(col("part") === "train")
+      val nPos = trainDf.filter(col("y") === 1.0).count()
+      body(trainDf, frame.filter(col("part") === "val"),
+        TrainLoop.posWeight(trainDf.count(), nPos))
     } finally frame.unpersist()
+  }
+
+  /** `data`: rows with `label` (0/1 double) and LinkPredict.featureNames.
+    * Each epoch's gradient is one aggregate over the train split
+    * against the broadcast weight row. */
+  def train(data: DataFrame, epochs: Int = 40,
+            earlyStop: Int = Int.MaxValue): TrainLoop.Result = {
+    val d = LinkPredict.featureNames.size
+    val wm = WeightModel(d)
+    withSplit(data) { (trainDf, valDf, posWeight) =>
+      val aggs = wm.gradAggs(posWeight)
+      TrainLoop.fullBatch(new Array[Double](d + 1), epochs, Lr0, earlyStop) { w =>
+        val row = trainDf.crossJoin(broadcast(wm.frame(data.sparkSession, w)))
+          .agg(aggs.head, aggs.tail: _*).head()
+        val n = row.getLong(d + 2).toDouble
+        (Array.tabulate(d + 1)(i => row.getDouble(i) / n), row.getDouble(d + 1) / n)
+      }(wm.valAuc(valDf, _))
+    }
   }
 
   /** `gstep` is the optimizer's global step counter AFTER this update —
     * the t used for Adam bias correction; `n` the micro-batch row
     * count. Both are persisted by the m13b gate, which re-derives them
     * relationally (t ≡ row ordinal over (epoch, step); n ≡ the same
-    * shard's size in every epoch's replay). */
-  /** `fp` is an order-independent content fingerprint of the
-    * micro-batch (bit_xor of per-row xxhash64 over the feature/label
-    * columns — xor, not a sum, so ANSI mode can never overflow): the
-    * m13b replay gate asserts it — not just the row count — is
-    * constant per step across epochs, so equal-sized shards visited in
-    * different orders can never satisfy the invariant vacuously. */
+    * shard's size in every epoch's replay). `fp` is an
+    * order-independent content fingerprint of the micro-batch (bit_xor
+    * of per-row xxhash64 over the feature/label columns — xor, not a
+    * sum, so ANSI mode can never overflow): the m13b replay gate
+    * asserts it — not just the row count — is constant per step across
+    * epochs, so equal-sized shards visited in different orders can
+    * never satisfy the invariant vacuously. */
   final case class Step(epoch: Int, step: Int, gstep: Int, trainLoss: Double,
                         gradNorm: Double, clipped: Boolean, n: Long, fp: Long)
-  final case class StreamResult(weights: Array[Double], bias: Double,
-                                steps: Seq[Step], aucVal: Double)
+  final case class StreamResult(params: Array[Double], steps: Seq[Step],
+                                aucVal: Double)
 
-  /** M9 minibatch-fidelity demo (closing the one divergence `train`
-    * documents): the SAME AdamW/clip/pos_weight update rule driven by
-    * MINIBATCH steps delivered as a file stream — the standardized train
-    * split is sharded into `nBatches` hash-keyed files, each epoch is
-    * one `Trigger.AvailableNow` run with `maxFilesPerTrigger=1`, and
-    * every micro-batch is one optimizer step (`foreachBatch` computes
-    * the batch gradient; the driver holds the optimizer state exactly
-    * as `train` does). Batch order is deterministic: one file per
-    * shard, named AND modification-stamped in shard order, so both of
-    * the file source's candidate orderings agree. What the entry makes
-    * visible is the COST of minibatch fidelity at scale: nBatches
-    * barriers per epoch versus `train`'s single aggregate — the reason
-    * the full-batch shape is the default (SURVEY §7.4).
+  /** M9 minibatch-fidelity demo: the SAME AdamW/clip/pos_weight update
+    * rule driven by MINIBATCH steps delivered as a file stream — the
+    * standardized train split is sharded into `nBatches` hash-keyed
+    * files under `stageDir` (wiped first), each epoch is one
+    * `Trigger.AvailableNow` run with `maxFilesPerTrigger=1`, and every
+    * micro-batch is one optimizer step (`foreachBatch` computes the
+    * batch gradient; the driver holds the optimizer state exactly as
+    * `train` does). Batch order is deterministic: one file per shard,
+    * named AND modification-stamped in shard order, so both of the file
+    * source's candidate orderings agree. What the entry makes visible
+    * is the COST of minibatch fidelity at scale: nBatches barriers per
+    * epoch versus `train`'s single aggregate — the reason the
+    * full-batch shape is the default (SURVEY §7.4).
     */
   def trainMinibatchStream(spark: org.apache.spark.sql.SparkSession,
-                           data: DataFrame,
-                           features: Seq[String] = LinkPredict.featureNames,
-                           epochs: Int = 2, nBatches: Int = 8,
-                           lr0: Double = 0.02, weightDecay: Double = 1e-4,
-                           clipNorm: Double = 1.0, seed: Long = 47L,
+                           data: DataFrame, epochs: Int = 2, nBatches: Int = 8,
                            stageDir: String): StreamResult = {
-    val d = features.size
-    val split = data.coalesce(8).withColumn("part",
-      when(ColFns.pseudoUniform(
-        xxhash64(col("customer"), col("product")), seed) < 0.8, "train")
-        .otherwise("val"))
-    val momAgg = features.flatMap(c =>
-      Seq(avg(col(c)).as(s"mu_$c"), stddev_pop(col(c)).as(s"sd_$c")))
-    val mom = split.filter(col("part") === "train").agg(momAgg.head, momAgg.tail: _*).head()
-    val mu = features.indices.map(i => mom.getDouble(2 * i)).toArray
-    val sd = features.indices.map { i =>
-      val s = mom.getDouble(2 * i + 1); if (s > 0) s else 1.0
-    }.toArray
-    val xCols = features.zipWithIndex.map { case (c, i) =>
-      ((col(c) - mu(i)) / sd(i)).as(s"x$i")
-    }
-    val bid = pmod(xxhash64(col("customer"), col("product"), lit(seed)), lit(nBatches))
-    val frame = split.select(xCols ++ Seq(col("label").as("y"), col("part"),
-      bid.cast("int").as("bid")): _*).cache()
-    try {
-      val trainDf = frame.filter(col("part") === "train")
-      val valDf = frame.filter(col("part") === "val")
-      val nPos = trainDf.filter(col("y") === 1.0).count().toDouble
-      val nNeg = trainDf.count().toDouble - nPos
-      val posWeight = if (nPos > 0) nNeg / nPos else 1.0
-
-      val base = java.nio.file.Paths.get(stageDir)
-      // reap dead runs' staging dirs sharing this prefix (age-gated)
-      Option(base.getParent).foreach { p =>
-        val name = base.getFileName.toString
-        val prefix = name.indexOf('_') match {
-          case -1 => name case i => name.substring(0, i + 1)
-        }
-        graft.core.Artifacts.reapStale(p.toString, prefix, stageDir)
-      }
-      if (java.nio.file.Files.exists(base)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(base)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-        finally walk.close()
-      }
+    val d = LinkPredict.featureNames.size
+    val wm = WeightModel(d)
+    val bid = pmod(xxhash64(col("customer"), col("product"), lit(Seed)), lit(nBatches))
+    withSplit(data, bid.cast("int").as("bid")) { (trainDf, valDf, posWeight) =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stageDir))
       val src = s"$stageDir/src"
       val t0 = System.currentTimeMillis() - 3600000
       // ONE shuffle+write job stages every shard: hash-routing on bid
@@ -334,19 +164,13 @@ object AdamWTrainer {
       }
       val batchSchema = trainDf.drop("part", "bid").schema
 
-      val w = new Array[Double](d); var b = 0.0
-      val mW = new Array[Double](d + 1); val vW = new Array[Double](d + 1)
-      val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
-      var t = 0
+      val params = new Array[Double](d + 1)
+      val opt = new TrainLoop.AdamW(d + 1)
       val log = Seq.newBuilder[Step]
-      // weights as a broadcast 1-row frame, not literals: every
-      // micro-batch step's plan stays source-identical, so the per-step
-      // aggregate compiles once and hits the codegen cache thereafter
-      // (see the same pattern in `train`)
-      val wm = WeightModel(features)
-      def weightFrame(s: org.apache.spark.sql.SparkSession): DataFrame =
-        wm.frame(s, w, b)
-      def logitCol: Column = wm.logit
+      // bit_xor, not sum: order-independent like sum, but immune to
+      // ANSI long-overflow on full-range hashes
+      val aggs = wm.gradAggs(posWeight) :+ expr("bit_xor(rh)").as("fp")
+      val rowHash = xxhash64(((0 until d).map(i => col(s"x$i")) :+ col("y")): _*)
       // one cloned session per trainer: the stream's shuffle-partition
       // pin must not leak into the shared session
       val ss = spark.newSession()
@@ -360,43 +184,14 @@ object AdamWTrainer {
           .writeStream
           .outputMode("append")
           .foreachBatch { (mb: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val z = logitCol
-            val p = lit(1.0) / (lit(1.0) + exp(-z))
-            val g = (lit(1.0) - col("y")) * p -
-              lit(posWeight) * col("y") * (lit(1.0) - p)
-            val perRow = (lit(1.0) + (lit(posWeight) - 1.0) * col("y")) *
-              (greatest(z, lit(0.0)) - z * col("y") + log1p(exp(-abs(z))))
-            // bit_xor, not sum: order-independent like sum, but immune
-            // to ANSI long-overflow on full-range hashes
-            val rowHash = xxhash64(
-              (features.indices.map(i => col(s"x$i")) :+ col("y")): _*)
-            val aggs = features.indices.map(i => sum(g * col(s"x$i")).as(s"g$i")) ++
-              Seq(sum(g).as("gb"), sum(perRow).as("loss"), count(lit(1)).as("n"),
-                expr("bit_xor(rh)").as("fp"))
-            val row = mb.crossJoin(broadcast(weightFrame(mb.sparkSession)))
+            val row = mb.crossJoin(broadcast(wm.frame(mb.sparkSession, params)))
               .withColumn("rh", rowHash)
               .agg(aggs.head, aggs.tail: _*).head()
             val n = row.getLong(d + 2).toDouble
             if (n > 0) {
-              val grads = (0 until d).map(i => row.getDouble(i) / n).toArray
-              val gradB = row.getDouble(d) / n
-              val loss = row.getDouble(d + 1) / n
-              val norm = math.sqrt(grads.map(x => x * x).sum + gradB * gradB)
-              val scale = if (norm > clipNorm) clipNorm / norm else 1.0
-              t += 1
-              val bc1 = 1.0 - math.pow(beta1, t)
-              val bc2 = 1.0 - math.pow(beta2, t)
-              def step(i: Int, grad: Double, prev: Double): Double = {
-                val gc = grad * scale
-                mW(i) = beta1 * mW(i) + (1 - beta1) * gc
-                vW(i) = beta2 * vW(i) + (1 - beta2) * gc * gc
-                prev - lr0 * (mW(i) / bc1 / (math.sqrt(vW(i) / bc2) + eps) +
-                  weightDecay * prev)
-              }
-              for (i <- 0 until d) w(i) = step(i, grads(i), w(i))
-              b = step(d, gradB, b)
-              log += Step(epoch, stepInEpoch, t, loss, norm, scale < 1.0, n.toLong,
-                row.getLong(d + 3))
+              opt.step(params, Array.tabulate(d + 1)(i => row.getDouble(i) / n), Lr0)
+              log += Step(epoch, stepInEpoch, opt.steps, row.getDouble(d + 1) / n,
+                opt.gradNorm, opt.clipped, n.toLong, row.getLong(d + 3))
               stepInEpoch += 1
             }
           }
@@ -406,12 +201,7 @@ object AdamWTrainer {
           .start()
         q.awaitTermination()
       }
-      val auc = Metrics.auc(
-        valDf.crossJoin(broadcast(weightFrame(spark)))
-          .select(col("y").as("label"),
-            (lit(1.0) / (lit(1.0) + exp(-logitCol))).as("p")), "label", col("p"),
-        bounds = Some((0.0, 1.0)))
-      StreamResult(w, b, log.result(), auc)
-    } finally frame.unpersist()
+      StreamResult(params, log.result(), wm.valAuc(valDf, params))
+    }
   }
 }

@@ -77,7 +77,7 @@ object Metrics {
 
   /** Exact Mann–Whitney numerator terms from an ascending histogram:
     * (Σ npos·avg_rank, Σ npos, Σ n). */
-  private def rankStats(asc: Array[(Double, Long, Double)]): (Double, Double, Long) = {
+  private[ml] def rankStats(asc: Array[(Double, Long, Double)]): (Double, Double, Long) = {
     var before = 0L; var rankPos = 0.0; var np = 0.0; var nTot = 0L
     asc.foreach { case (_, n, npos) =>
       rankPos += npos * (before + (n + 1.0) / 2.0)
@@ -86,7 +86,7 @@ object Metrics {
     (rankPos, np, nTot)
   }
 
-  private def finishRoc(rankPos: Double, np: Double, nn: Double): Double =
+  private[ml] def finishRoc(rankPos: Double, np: Double, nn: Double): Double =
     if (np == 0 || nn == 0) 0.0
     else (rankPos - np * (np + 1.0) / 2.0) / (np * nn)
 

@@ -1,26 +1,23 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.ColFns
 
-/** The reference's multi-tower ARCHITECTURE trained jointly with its
-  * own loop semantics — the piece `MultiTower` (MLlib flat-MLP) and
-  * `AdamWTrainer` (linear scorer) each approximated from one side
-  * (reference `Neural_network_multi_towered_training.py:62-150` for
-  * the model, `:703-790` for the loop):
+/** The reference's multi-tower ARCHITECTURE trained jointly by the
+  * reference's loop ([[TrainLoop]]: AdamW, clip 1.0, ReduceLROnPlateau,
+  * pos_weight, strict-best checkpoint) — the model `MultiTower`
+  * (MLlib flat-MLP) approximates, driven by the loop [[AdamWTrainer]]
+  * runs on a linear scorer (reference
+  * `Neural_network_multi_towered_training.py:62-150` for the model,
+  * `:703-790` for the loop):
   *
   *   per tower t: z_t = relu(W1_t x_t + b1_t)   (its own hidden layer)
   *   head:        logit = w2 · concat(z_1..z_5) + b2
   *
   * trained end-to-end — head gradients flow THROUGH the tower layers
   * (∂L/∂W1_t = δ_t ⊗ x_t with δ_t = g · w2_t · 1[pre_t > 0]), which is
-  * what separates a tower network from per-tower stacking. Loop
-  * semantics are AdamWTrainer's, re-stated here verbatim so the two
-  * trajectories stay independently auditable: AdamW (torch defaults,
-  * decoupled decay on every parameter), global grad-norm clip at 1.0,
-  * ReduceLROnPlateau(max, 0.5, threshold 1e-4), BCEWithLogits
-  * pos_weight, strict-best checkpoint + restore.
+  * what separates a tower network from per-tower stacking.
   *
   * Size-scaled divergences (documented, same §7.4 rule as MultiTower's
   * hidden sizes): tower widths are 4 units against the engine's 7
@@ -32,8 +29,8 @@ import graft.functions.ColFns
   *
   * The 100 TB shape is MLlib's own (LogisticRegression/LinearSVC train
   * the same way): the standardized corpus is cached ONCE as a matrix of
-  * primitive rows, every epoch is one job of per-partition closed-form
-  * partial gradient sums (69 doubles + loss per partition — nothing
+  * primitive rows, every gradient is one job of per-partition
+  * closed-form partial sums (69 doubles + loss per partition — nothing
   * per-row ever leaves the executors), and the driver combines partials
   * IN PARTITION-INDEX ORDER, which makes the float trajectory
   * bit-reproducible run-over-run (stronger than treeAggregate's
@@ -60,11 +57,7 @@ object TowerNet {
     "tw_derived" -> Seq("bal_x_price"))
   val hidden = 4
 
-  final case class Epoch(epoch: Int, trainLoss: Double, aucVal: Double,
-                         lr: Double, gradNorm: Double, clipped: Boolean,
-                         improved: Boolean)
-  final case class Result(params: Array[Double], epochs: Seq[Epoch],
-                          bestAuc: Double, bestEpoch: Int, nParams: Int)
+  private final val Seed = 61L
 
   // ---- flat parameter layout: for each tower (in declared order):
   // W1 row-major (j, i), then b1; after all towers: w2 (tower order),
@@ -95,9 +88,9 @@ object TowerNet {
     * standardized row, accumulating gradient sums into `acc`
     * (layout-ordered, `acc(P)` = loss sum). Static layout tables are
     * computed once on the driver and ship inside the task closure. */
-  private final class RowKernel(val features: Seq[String],
-                                val posWeight: Double) extends Serializable {
-    private val fIdx = features.zipWithIndex.toMap
+  private final class RowKernel(val posWeight: Double) extends Serializable {
+    private val nf = LinkPredict.featureNames.size
+    private val fIdx = LinkPredict.featureNames.zipWithIndex.toMap
     // per tower: feature indices into the row; layout offset of its W1
     val towerFeat: Array[Array[Int]] =
       towers.map { case (_, fs) => fs.map(fIdx).toArray }.toArray
@@ -137,10 +130,14 @@ object TowerNet {
       lg + w(w2Offset + nUnits)
     }
 
+    /** (σ(logit), label) of one row — the validation score. */
+    def scored(w: Array[Double], a: Array[Double],
+               pre: Array[Double]): (Double, Double) =
+      (1.0 / (1.0 + math.exp(-forward(w, a, pre))), a(nf))
+
     /** One row's contribution to the gradient/loss sums. */
     def accumulate(w: Array[Double], a: Array[Double],
                    pre: Array[Double], acc: Array[Double]): Unit = {
-      val nf = features.size
       val y = a(nf)
       val lg = forward(w, a, pre)
       val sig = 1.0 / (1.0 + math.exp(-lg))
@@ -169,23 +166,21 @@ object TowerNet {
   }
 
   /** Exact tie-aware Mann–Whitney ROC-AUC of collected (score, label)
-    * pairs — the driver leg of Metrics.auc's histogram math (average
-    * rank of a tied group = rows before it + (n+1)/2), applied to a
-    * bounded validation slice. */
+    * pairs: grouped into the ascending (s, n, npos) histogram that
+    * Metrics.auc finishes on the driver, and finished by the same rank
+    * math — applied to a bounded validation slice. */
   private[graft] def rankAuc(scored: Array[(Double, Double)]): Double = {
     val asc = scored.sortBy(_._1)
-    var i = 0; var before = 0L; var rankPos = 0.0; var np = 0.0
+    val hist = Array.newBuilder[(Double, Long, Double)]
+    var i = 0
     while (i < asc.length) {
       var j = i; var npos = 0.0
       while (j < asc.length && asc(j)._1 == asc(i)._1) { npos += asc(j)._2; j += 1 }
-      val n = j - i
-      rankPos += npos * (before + (n + 1.0) / 2.0)
-      before += n; np += npos
+      hist += ((asc(i)._1, (j - i).toLong, npos))
       i = j
     }
-    val nn = asc.length - np
-    if (np == 0 || nn == 0) 0.0
-    else (rankPos - np * (np + 1.0) / 2.0) / (np * nn)
+    val (rankPos, np, nTot) = Metrics.rankStats(hist.result())
+    Metrics.finishRoc(rankPos, np, nTot - np)
   }
 
   /** splitmix64 finalizer keyed by (row key, epoch): the deterministic
@@ -200,15 +195,105 @@ object TowerNet {
     z ^ (z >>> 31)
   }
 
+  /** The standardized split as cached primitive matrices, one
+    * (xxhash64(customer, product), [x0..x_{nf-1}, y]) pair per row:
+    * built once, every epoch job scans these deserialized arrays, never
+    * the source; the key orders the minibatch loop's shuffle. */
+  private final class Corpus(val train: RDD[(Long, Array[Double])],
+                             val valid: RDD[(Long, Array[Double])],
+                             val nTrain: Long, nPos: Long,
+                             spark: org.apache.spark.sql.SparkSession) {
+    val nVal: Long = valid.count()
+    val kernel = new RowKernel(TrainLoop.posWeight(nTrain, nPos))
+
+    /** One job: per-partition [gradient sums…, loss sum] over the
+      * matrix rows of `rows` at `w`, combined on the driver in
+      * PARTITION-INDEX order (deterministic float fold). */
+    def sums(rows: RDD[(Long, Array[Double])], w: Array[Double]): Array[Double] = {
+      val (k, p, wb) = (kernel, kernel.P, w.clone())
+      val tot = new Array[Double](p + 1)
+      rows.mapPartitionsWithIndex { (pi, it) =>
+        val acc = new Array[Double](p + 1)
+        val pre = new Array[Double](k.nUnits)
+        it.foreach { case (_, a) => k.accumulate(wb, a, pre, acc) }
+        Iterator((pi, acc))
+      }.collect().sortBy(_._1).foreach { case (_, acc) =>
+        var i = 0
+        while (i <= p) { tot(i) += acc(i); i += 1 }
+      }
+      tot
+    }
+
+    /** One validation scoring job + exact rank AUC. The collect is
+      * bounded by the val slice (audit-scale here); past the same
+      * driver bound Metrics.auc uses, fall back to its distributed
+      * two-level histogram on a scored frame. */
+    def valAuc(w: Array[Double]): Double = {
+      val (k, wb) = (kernel, w.clone())
+      val scoredRdd = valid.mapPartitions { it =>
+        val pre = new Array[Double](k.nUnits)
+        it.map { case (_, a) => k.scored(wb, a, pre) }
+      }
+      if (nVal <= 1000000) rankAuc(scoredRdd.collect())
+      else Metrics.auc(
+        spark.createDataFrame(
+          scoredRdd.map { case (p, y) => Row(y, p) },
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("label",
+              org.apache.spark.sql.types.DoubleType),
+            org.apache.spark.sql.types.StructField("p",
+              org.apache.spark.sql.types.DoubleType)))),
+        "label", col("p"))
+    }
+  }
+
+  /** Runs `body` on the standardized split of `data` (label +
+    * LinkPredict.featureNames), unpersisting its matrices after. */
+  private def withCorpus[T](data: DataFrame)(body: Corpus => T): T = {
+    val nf = LinkPredict.featureNames.size
+    val (split, xCols) = TrainLoop.standardize(data, 2, Seed)
+    val Seq(trainMat, valMat) = Seq("train", "val").map { part =>
+      split.filter(col("part") === part)
+        .select(xxhash64(col("customer"), col("product")).as("k") +:
+          xCols :+ col("label").as("y"): _*)
+        .rdd.map { r =>
+          val a = new Array[Double](nf + 1)
+          var i = 0
+          while (i <= nf) { a(i) = r.getDouble(i + 1); i += 1 }
+          (r.getLong(0), a)
+        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      // one pass materializes the train cache AND counts the classes
+      val (nTrain, nPos) = trainMat.mapPartitions { it =>
+        var n = 0L; var np = 0L
+        it.foreach { case (_, a) => n += 1; if (a(nf) == 1.0) np += 1 }
+        Iterator((n, np))
+      }.collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+      body(new Corpus(trainMat, valMat, nTrain, nPos, data.sparkSession))
+    } finally { trainMat.unpersist(); valMat.unpersist() }
+  }
+
+  /** Train on `data` (label + LinkPredict.featureNames) with the
+    * full-batch loop: one gradient job and one AdamW step per epoch. */
+  def train(data: DataFrame, epochs: Int = 10,
+            lr0: Double = 0.02): TrainLoop.Result =
+    withCorpus(data) { c =>
+      val p = c.kernel.P
+      TrainLoop.fullBatch(init(Seed), epochs, lr0, Int.MaxValue) { w =>
+        val tot = c.sums(c.train, w)
+        (tot.take(p).map(_ / c.nTrain), tot(p) / c.nTrain)
+      }(c.valAuc)
+    }
+
   /** The reference's LITERAL training loop — shuffled batch-512
     * minibatches with one AdamW step per batch
     * (`Neural_network_multi_towered_training.py:660,702-735`:
     * DataLoader(batch_size=512, shuffle=True); per batch zero_grad →
     * backward → clip(1.0) → step; per epoch mean batch loss, val AUC →
-    * ReduceLROnPlateau + strict-best checkpoint). This closes the one
-    * remaining §7.4 loop divergence: `train` above is the full-batch
-    * form, `AdamWTrainer.trainMinibatchStream` the stream form; this is
-    * the shuffled within-epoch iterator itself.
+    * ReduceLROnPlateau + strict-best checkpoint). `train` is the
+    * full-batch form, `AdamWTrainer.trainMinibatchStream` the stream
+    * form; this is the shuffled within-epoch iterator itself.
     *
     * Hybrid kernel, t22's discipline: at or under `denseMaxRows` the
     * standardized matrix is collected ONCE and the whole multi-epoch
@@ -223,342 +308,63 @@ object TowerNet {
     * Logged per epoch (trajectoryGate shape): mean batch loss, val
     * AUC, lr, and the LAST step's grad norm/clip flag. */
   def trainMinibatch(data: DataFrame, epochs: Int = 10, batchSize: Int = 512,
-                     lr0: Double = 0.02, weightDecay: Double = 1e-4,
-                     clipNorm: Double = 1.0, lrPatience: Int = 5,
-                     lrFactor: Double = 0.5, seed: Long = 61L,
-                     denseMaxRows: Long = 2000000L): Result = {
-    val features = LinkPredict.featureNames
-    val nf = features.size
-    val split = data.coalesce(2).withColumn("part",
-      when(ColFns.pseudoUniform(
-        xxhash64(col("customer"), col("product")), seed) < 0.8, "train")
-        .otherwise("val"))
-    val momAgg = features.flatMap(c =>
-      Seq(avg(col(c)).as(s"mu_$c"), stddev_pop(col(c)).as(s"sd_$c")))
-    val mom = split.filter(col("part") === "train")
-      .agg(momAgg.head, momAgg.tail: _*).head()
-    val mu = features.indices.map(i => mom.getDouble(2 * i)).toArray
-    val sd = features.indices.map { i =>
-      val s = mom.getDouble(2 * i + 1); if (s > 0) s else 1.0
-    }.toArray
-    val xCols = features.zipWithIndex.map { case (c, i) =>
-      ((col(c) - mu(i)) / sd(i)).as(s"x$i")
-    }
-    def toKeyed(part: String) = split.filter(col("part") === part)
-      .select(xxhash64(col("customer"), col("product")).as("k") +:
-        xCols :+ col("label").as("y"): _*)
-      .rdd.map { r =>
-        val a = new Array[Double](nf + 1)
-        var i = 0
-        while (i <= nf) { a(i) = r.getDouble(i + 1); i += 1 }
-        (r.getLong(0), a)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trainMat = toKeyed("train")
-    val valMat = toKeyed("val")
-    try {
-      val (nTrain, nPosL) = trainMat.mapPartitions { it =>
-        var n = 0L; var np = 0L
-        it.foreach { case (_, a) => n += 1; if (a(nf) == 1.0) np += 1 }
-        Iterator((n, np))
-      }.collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-      val nVal = valMat.count()
-      val posWeight =
-        if (nPosL > 0) (nTrain - nPosL).toDouble / nPosL else 1.0
-      val kernel = new RowKernel(features, posWeight)
-      val P = kernel.P
-
-      val params = init(seed)
-      val mW = new Array[Double](P); val vW = new Array[Double](P)
-      val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
-      var lr = lr0
-      var stepT = 0 // AdamW bias-correction counter: one per STEP
-      var lastLoss = 0.0; var lastNorm = 0.0; var lastClipped = false
-      /** One optimizer step from raw gradient SUMS over `n` rows. */
-      def applyStep(sums: Array[Double], n: Long): Unit = {
-        val norm = {
-          var s = 0.0; var i = 0
-          while (i < P) { val g = sums(i) / n; s += g * g; i += 1 }
-          math.sqrt(s)
-        }
-        val scale = if (norm > clipNorm) clipNorm / norm else 1.0
-        stepT += 1
-        val bc1 = 1.0 - math.pow(beta1, stepT)
-        val bc2 = 1.0 - math.pow(beta2, stepT)
-        var i = 0
-        while (i < P) {
-          val gc = (sums(i) / n) * scale
-          mW(i) = beta1 * mW(i) + (1 - beta1) * gc
-          vW(i) = beta2 * vW(i) + (1 - beta2) * gc * gc
-          params(i) = params(i) - lr * (mW(i) / bc1 /
-            (math.sqrt(vW(i) / bc2) + eps) + weightDecay * params(i))
-          i += 1
-        }
-        lastNorm = norm; lastClipped = scale < 1.0
-      }
-
+                     lr0: Double = 0.02,
+                     denseMaxRows: Long = 2000000L): TrainLoop.Result =
+    withCorpus(data) { c =>
+      val (kernel, p, nTrain) = (c.kernel, c.kernel.P, c.nTrain)
       val dense = nTrain <= denseMaxRows
       // dense kernel state: both matrices collected once, keyed
-      val trainArr = if (dense) trainMat.collect() else null
-      val valArr = if (dense) valMat.collect() else null
-
-      var bestAuc = 0.0; var bestEpoch = -1
-      var bestP: Array[Double] = params.clone()
-      var schedBest = 0.0; var plateau = 0
-      val log = Seq.newBuilder[Epoch]
-      var epoch = 0
-      while (epoch < epochs) {
-        val nBatches = ((nTrain + batchSize - 1) / batchSize).toInt
+      val trainArr = if (dense) c.train.collect() else null
+      val valArr = if (dense) c.valid.collect() else null
+      val params = init(Seed)
+      val opt = new TrainLoop.AdamW(p)
+      val sched = new TrainLoop.Schedule(params, lr0, Int.MaxValue)
+      val nBatches = ((nTrain + batchSize - 1) / batchSize).toInt
+      for (epoch <- 0 until epochs) {
         var lossSum = 0.0
+        // one optimizer step from [gradient sums…, loss sum] over n rows
+        def step(acc: Array[Double], n: Long): Unit = {
+          lossSum += acc(p) / n
+          opt.step(params, Array.tabulate(p)(i => acc(i) / n), sched.lr)
+        }
         if (dense) {
           val order = trainArr.sortBy { case (k, _) =>
-            (shuffleKey(k, epoch, seed), k)
+            (shuffleKey(k, epoch, Seed), k)
           }
           val pre = new Array[Double](kernel.nUnits)
-          var b = 0
-          while (b < nBatches) {
+          for (b <- 0 until nBatches) {
             val lo = b * batchSize
             val hi = math.min(lo + batchSize, nTrain.toInt)
-            val acc = new Array[Double](P + 1)
+            val acc = new Array[Double](p + 1)
             var i = lo
             while (i < hi) { kernel.accumulate(params, order(i)._2, pre, acc); i += 1 }
-            lossSum += acc(P) / (hi - lo)
-            applyStep(acc, hi - lo)
-            b += 1
+            step(acc, hi - lo)
           }
         } else {
           // distributed fallback: one deterministic re-sort per epoch,
           // then one bounded partial-sum job per batch — the exact same
           // batch walk at the price a per-step barrier costs
-          val e = epoch
-          val sorted = trainMat
-            .map { case (k, a) => ((shuffleKey(k, e, seed), k), a) }
+          val sorted = c.train
+            .map { case (k, a) => ((shuffleKey(k, epoch, Seed), k), a) }
             .sortBy(_._1).zipWithIndex()
-            .map { case (((_, _), a), idx) => (idx, a) }
+            .map { case ((_, a), idx) => (idx, a) }
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           sorted.count()
-          var b = 0
-          while (b < nBatches) {
+          for (b <- 0 until nBatches) {
             val lo = b.toLong * batchSize
             val hi = math.min(lo + batchSize, nTrain)
-            val wb = params.clone()
-            val partials = sorted
-              .filter { case (idx, _) => idx >= lo && idx < hi }
-              .mapPartitionsWithIndex { (pi, it) =>
-                val acc = new Array[Double](P + 1)
-                val pre = new Array[Double](kernel.nUnits)
-                it.foreach { case (_, a) => kernel.accumulate(wb, a, pre, acc) }
-                Iterator((pi, acc))
-              }.collect().sortBy(_._1)
-            val acc = new Array[Double](P + 1)
-            partials.foreach { case (_, pa) =>
-              var i = 0
-              while (i <= P) { acc(i) += pa(i); i += 1 }
-            }
-            lossSum += acc(P) / (hi - lo)
-            applyStep(acc, hi - lo)
-            b += 1
+            step(c.sums(sorted.filter { case (idx, _) => idx >= lo && idx < hi },
+              params), hi - lo)
           }
           sorted.unpersist()
         }
-        lastLoss = lossSum / nBatches
         // validation AUC on the post-epoch weights
         val auc = if (dense) {
           val pre = new Array[Double](kernel.nUnits)
-          rankAuc(valArr.map { case (_, a) =>
-            (1.0 / (1.0 + math.exp(-kernel.forward(params, a, pre))), a(nf))
-          })
-        } else {
-          val wb = params.clone()
-          val scoredRdd = valMat.mapPartitions { it =>
-            val pre = new Array[Double](kernel.nUnits)
-            it.map { case (_, a) =>
-              (1.0 / (1.0 + math.exp(-kernel.forward(wb, a, pre))), a(nf))
-            }
-          }
-          // bounded collect; past the driver bound ride Metrics.auc's
-          // distributed two-level histogram (same guard as train())
-          if (nVal <= 1000000) rankAuc(scoredRdd.collect())
-          else Metrics.auc(
-            data.sparkSession.createDataFrame(
-              scoredRdd.map { case (p, y) => Row(y, p) },
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("label",
-                  org.apache.spark.sql.types.DoubleType),
-                org.apache.spark.sql.types.StructField("p",
-                  org.apache.spark.sql.types.DoubleType)))),
-            "label", col("p"))
-        }
-        val improved = auc > bestAuc
-        if (improved) { bestAuc = auc; bestEpoch = epoch; bestP = params.clone() }
-        if (auc > schedBest + 1e-4) { schedBest = auc; plateau = 0 }
-        else plateau += 1
-        if (plateau > lrPatience) { lr *= lrFactor; plateau = 0 }
-        log += Epoch(epoch, lastLoss, auc, lr, lastNorm, lastClipped, improved)
-        epoch += 1
+          rankAuc(valArr.map { case (_, a) => kernel.scored(params, a, pre) })
+        } else c.valAuc(params)
+        sched.record(epoch, lossSum / nBatches, auc, params, opt)
       }
-      Result(bestP, log.result(), bestAuc, bestEpoch, P)
-    } finally { trainMat.unpersist(); valMat.unpersist() }
-  }
-
-  /** Train on `data` (label + LinkPredict.featureNames), AdamWTrainer's
-    * split/standardization/loop conventions. */
-  def train(data: DataFrame, epochs: Int = 10, lr0: Double = 0.02,
-            weightDecay: Double = 1e-4, clipNorm: Double = 1.0,
-            lrPatience: Int = 5, lrFactor: Double = 0.5,
-            seed: Long = 61L): Result = {
-    val features = LinkPredict.featureNames
-    val nf = features.size
-    val split = data.coalesce(2).withColumn("part",
-      when(ColFns.pseudoUniform(
-        xxhash64(col("customer"), col("product")), seed) < 0.8, "train")
-        .otherwise("val"))
-    val momAgg = features.flatMap(c =>
-      Seq(avg(col(c)).as(s"mu_$c"), stddev_pop(col(c)).as(s"sd_$c")))
-    val mom = split.filter(col("part") === "train")
-      .agg(momAgg.head, momAgg.tail: _*).head()
-    val mu = features.indices.map(i => mom.getDouble(2 * i)).toArray
-    val sd = features.indices.map { i =>
-      val s = mom.getDouble(2 * i + 1); if (s > 0) s else 1.0
-    }.toArray
-    val xCols = features.zipWithIndex.map { case (c, i) =>
-      ((col(c) - mu(i)) / sd(i)).as(s"x$i")
+      sched.result
     }
-    // cached primitive matrices: [x0..x_{nf-1}, y] per row — built once,
-    // every epoch job scans these deserialized arrays, never the source
-    def toMat(part: String) = split.filter(col("part") === part)
-      .select(xCols :+ col("label").as("y"): _*)
-      .rdd.map { r =>
-        val a = new Array[Double](nf + 1)
-        var i = 0
-        while (i <= nf) { a(i) = r.getDouble(i); i += 1 }
-        a
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trainMat = toMat("train")
-    val valMat = toMat("val")
-    try {
-      // one pass materializes the train cache AND counts the classes
-      val (nTrain, nPosL) = trainMat.mapPartitions { it =>
-        var n = 0L; var np = 0L
-        it.foreach { a => n += 1; if (a(nf) == 1.0) np += 1 }
-        Iterator((n, np))
-      }.collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-      val nVal = valMat.count()
-      val nPos = nPosL.toDouble
-      val nNeg = (nTrain - nPosL).toDouble
-      val posWeight = if (nPos > 0) nNeg / nPos else 1.0
-      val kernel = new RowKernel(features, posWeight)
-      val P = kernel.P
-
-      val params = init(seed)
-      val mW = new Array[Double](P); val vW = new Array[Double](P)
-      val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
-      var lr = lr0
-      var bestAuc = 0.0; var bestEpoch = -1
-      var bestP: Array[Double] = params.clone()
-      var schedBest = 0.0; var plateau = 0
-      val log = Seq.newBuilder[Epoch]
-
-      /** One gradient job: per-partition partial sums, combined on the
-        * driver in PARTITION-INDEX order (deterministic float fold). */
-      def gradPass(w: Array[Double]): (Array[Double], Double) = {
-        val wb = w.clone() // immutable snapshot into the closure
-        val partials = trainMat.mapPartitionsWithIndex { (pi, it) =>
-          val acc = new Array[Double](P + 1)
-          val pre = new Array[Double](kernel.nUnits)
-          it.foreach(a => kernel.accumulate(wb, a, pre, acc))
-          Iterator((pi, acc))
-        }.collect().sortBy(_._1)
-        val tot = new Array[Double](P + 1)
-        partials.foreach { case (_, acc) =>
-          var i = 0
-          while (i <= P) { tot(i) += acc(i); i += 1 }
-        }
-        (tot.take(P).map(_ / nTrain), tot(P) / nTrain)
-      }
-
-      /** One validation scoring job + exact rank AUC. The collect is
-        * bounded by the val slice (audit-scale here); past the same
-        * driver bound Metrics.auc uses, fall back to its distributed
-        * two-level histogram on a scored frame. */
-      def valAuc(w: Array[Double]): Double = {
-        val wb = w.clone()
-        val scoredRdd = valMat.mapPartitions { it =>
-          val pre = new Array[Double](kernel.nUnits)
-          it.map { a =>
-            val lg = kernel.forward(wb, a, pre)
-            (1.0 / (1.0 + math.exp(-lg)), a(nf))
-          }
-        }
-        if (nVal <= 1000000) rankAuc(scoredRdd.collect())
-        else Metrics.auc(
-          data.sparkSession.createDataFrame(
-            scoredRdd.map { case (p, y) => Row(y, p) },
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("label",
-                org.apache.spark.sql.types.DoubleType),
-              org.apache.spark.sql.types.StructField("p",
-                org.apache.spark.sql.types.DoubleType)))),
-          "label", col("p"))
-      }
-
-      // Pipelined evaluation: epoch e's val-AUC job and epoch e+1's
-      // gradient job both depend only on the post-update weights of
-      // epoch e — neither reads the other's result (the AUC feeds the
-      // LR scheduler and the best-checkpoint, both consumed at the
-      // NEXT update). So the AUC runs on a side thread while the next
-      // gradient pass runs inline, and is awaited just before its
-      // result is first needed. Per-epoch wall drops from
-      // grad+auc to max(grad, auc); the trajectory is bit-identical
-      // because every read still happens in the original order.
-      val aucPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-        (r: Runnable) => {
-          val th = new Thread(r, "towernet-val-auc"); th.setDaemon(true); th
-        })
-      val aucEc = scala.concurrent.ExecutionContext.fromExecutorService(aucPool)
-      // bookkeeping for epoch e, run once its AUC arrives: strict-best
-      // checkpoint (params still hold epoch e's post-update weights —
-      // the await precedes epoch e+1's update), plateau scheduler, log
-      var lastLoss = 0.0; var lastNorm = 0.0; var lastClipped = false
-      def bookkeep(e: Int, auc: Double): Unit = {
-        val improved = auc > bestAuc
-        if (improved) { bestAuc = auc; bestEpoch = e; bestP = params.clone() }
-        if (auc > schedBest + 1e-4) { schedBest = auc; plateau = 0 }
-        else plateau += 1
-        if (plateau > lrPatience) { lr *= lrFactor; plateau = 0 }
-        log += Epoch(e, lastLoss, auc, lr, lastNorm, lastClipped, improved)
-      }
-      var pendingAuc: scala.concurrent.Future[Double] = null
-      try {
-        var epoch = 0
-        while (epoch < epochs) {
-          val (grads, loss) = gradPass(params)
-          if (pendingAuc != null)
-            bookkeep(epoch - 1, scala.concurrent.Await.result(
-              pendingAuc, scala.concurrent.duration.Duration.Inf))
-          val norm = math.sqrt(grads.map(d => d * d).sum)
-          val scale = if (norm > clipNorm) clipNorm / norm else 1.0
-          val t = epoch + 1
-          val bc1 = 1.0 - math.pow(beta1, t)
-          val bc2 = 1.0 - math.pow(beta2, t)
-          var i = 0
-          while (i < P) {
-            val gc = grads(i) * scale
-            mW(i) = beta1 * mW(i) + (1 - beta1) * gc
-            vW(i) = beta2 * vW(i) + (1 - beta2) * gc * gc
-            params(i) = params(i) - lr * (mW(i) / bc1 /
-              (math.sqrt(vW(i) / bc2) + eps) + weightDecay * params(i))
-            i += 1
-          }
-          lastLoss = loss; lastNorm = norm; lastClipped = scale < 1.0
-          val wSnap = params.clone() // frozen post-update snapshot
-          pendingAuc = scala.concurrent.Future(valAuc(wSnap))(aucEc)
-          epoch += 1
-        }
-        if (pendingAuc != null)
-          bookkeep(epochs - 1, scala.concurrent.Await.result(
-            pendingAuc, scala.concurrent.duration.Duration.Inf))
-        Result(bestP, log.result(), bestAuc, bestEpoch, P)
-      } finally aucEc.shutdown()
-    } finally { trainMat.unpersist(); valMat.unpersist() }
-  }
 }

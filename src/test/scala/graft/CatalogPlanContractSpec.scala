@@ -246,11 +246,10 @@ class CatalogPlanContractSpec extends SparkSpec {
       "Similarity.scala:thresholdJoinBlocked" -> (1, "broadcast build side under the LSH/IVF switch"),
       "TextSim.scala:bpeMerges" -> (2, "BPE vocab dense kernel + bounded argmax/stop reads"),
       "TextSim.scala:t22bBpeApply" -> (1, "merge-table read for broadcast apply (|vocab| rows)"),
-      "TowerNet.scala:applyStep" -> (4, "per-partition gradient partials, ordered combine (model-sized)"),
-      "TowerNet.scala:gradPass" -> (1, "gradient partials (model-sized)"),
-      "TowerNet.scala:toKeyed" -> (1, "model-sized parameter frame"),
-      "TowerNet.scala:toMat" -> (1, "model-sized parameter frame"),
-      "TowerNet.scala:valAuc" -> (1, "validation scores for AUC (val-split-bounded)"))
+      "TowerNet.scala:sums" -> (1, "per-partition gradient partials, ordered combine (model-sized)"),
+      "TowerNet.scala:trainMinibatch" -> (2, "train/val matrices for the dense kernel behind the denseMaxRows gate, distributed fallback"),
+      "TowerNet.scala:valAuc" -> (1, "validation scores for AUC (val-split-bounded)"),
+      "TowerNet.scala:withCorpus" -> (1, "per-partition class counts (2 longs per partition)"))
     val defRe = """\bdef\s+(\w+)""".r
     val actual = mainSources.flatMap { case (file, src) =>
       // LITERAL occurrence scan (an unquoted regex's dot/parens
