@@ -666,7 +666,7 @@ object Analytics extends CatalogModule {
     graft.streaming.EventStream.runAvailableNow(spark, dir, df =>
         graft.streaming.EventStream.intervalJoinOuter(df)
           .select("purchase_id", "p_ts", "c_ts", "c_value"),
-        queryName = s"e14_oivj_${math.abs(dir.hashCode)}",
+        queryName = s"e14_oivj_${graft.core.Artifacts.dirTag(dir)}",
         shufflePartitions = Some(4))
       .filter(col("p_ts") < lit(e14Cutoff(spark, dir)))
       .groupBy("purchase_id")
@@ -723,7 +723,7 @@ object Analytics extends CatalogModule {
   private def e3StreamWindows(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStream.runAvailableNow(spark, dir,
         df => graft.streaming.EventStream.windowedCounts(df),
-        queryName = s"e3_win_${math.abs(dir.hashCode)}",
+        queryName = s"e3_win_${graft.core.Artifacts.dirTag(dir)}",
         mode = org.apache.spark.sql.streaming.OutputMode.Complete())
       .select(col("window_start"), col("event_type"), col("n"),
         round(col("total_value"), 4).as("total_value"))
@@ -742,7 +742,7 @@ object Analytics extends CatalogModule {
             col("user_id").cast("long"), col("event_type"),
             col("value").cast("double"))
             .as[graft.streaming.EventStream.Event]).toDF(),
-        queryName = s"e4_sess_${math.abs(dir.hashCode)}")
+        queryName = s"e4_sess_${graft.core.Artifacts.dirTag(dir)}")
       .orderBy("user_id", "session_start")
   }
 
@@ -756,7 +756,7 @@ object Analytics extends CatalogModule {
           df.select(col("ts"), col("user_id"), col("event_type")),
           Seq("user_id", "event_type"))
           .select("user_id", "event_type"),
-        queryName = s"e5_dedup_${math.abs(dir.hashCode)}")
+        queryName = s"e5_dedup_${graft.core.Artifacts.dirTag(dir)}")
       .orderBy("user_id", "event_type")
 
   // E6: stream–static enrichment join — the event stream joined per
@@ -767,7 +767,7 @@ object Analytics extends CatalogModule {
     graft.streaming.EventStream.runAvailableNow(spark, dir, df =>
         graft.streaming.EventStream.enrichedCounts(df,
           Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))),
-        queryName = s"e6_enrich_${math.abs(dir.hashCode)}",
+        queryName = s"e6_enrich_${graft.core.Artifacts.dirTag(dir)}",
         mode = org.apache.spark.sql.streaming.OutputMode.Complete())
       .select(col("c_nationkey"), col("n"), round(col("total_value"), 4).as("total_value"))
       .orderBy("c_nationkey")
@@ -835,7 +835,7 @@ object Analytics extends CatalogModule {
     graft.streaming.EventStream.runAvailableNow(spark, dir, df =>
         graft.streaming.EventStream.intervalJoin(df)
           .select("purchase_id", "p_user", "c_value"),
-        queryName = s"e8_ivj_${math.abs(dir.hashCode)}",
+        queryName = s"e8_ivj_${graft.core.Artifacts.dirTag(dir)}",
         // 4 partitions: the join keeps 4 state stores per partition and
         // this entry is a bounded correctness demo — 32 partitions of
         // store setup was 8× fixed cost for the same answer

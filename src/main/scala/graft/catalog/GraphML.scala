@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.graph.{GraphSql, Louvain, Node2Vec}
 import graft.ml.LinkPredict
 import graft.sim.Similarity
@@ -49,7 +49,7 @@ object GraphML extends CatalogModule {
     * the partition at the sf0.01 artifact path (the correctness gate's
     * SF — at other SFs the entry still runs, rows-only). */
   private def g2bModularity(spark: SparkSession, dir: String): DataFrame = {
-    val part = graft.core.Artifacts.write(spark, dir, "g2_partition",
+    val part = Artifacts.write(spark, dir, "g2_partition",
       louvainPartition(spark, dir))
     val e = simEdges(spark, dir)
       .select(col("src"), col("dst"),
@@ -261,7 +261,7 @@ object GraphML extends CatalogModule {
   private def trajectoryGate(spark: SparkSession, dir: String, name: String,
                              r: graft.ml.TrainLoop.Result): DataFrame = {
     import spark.implicits._
-    val persisted = artifact(spark, dir, name,
+    val persisted = Artifacts.write(spark, dir, name,
       r.epochs.map(e => (e.epoch, e.trainLoss, e.aucVal, e.lr, e.gradNorm,
           if (e.clipped) 1 else 0, if (e.improved) 1 else 0,
           r.bestEpoch, r.bestAuc))
@@ -351,7 +351,7 @@ object GraphML extends CatalogModule {
       graft.ml.AdamWTrainer.trainMinibatchStream(spark,
         LinkPredict.trainingSetCached(spark, dir, cap = 20000),
         epochs = 2, nBatches = 3,
-        stageDir = ScaleOps.freshStagingDir(spark, "m13", dir).toString))
+        stageDir = Artifacts.freshScratchDir(spark, "m13", dir)))
 
   private def m13MinibatchStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -375,7 +375,7 @@ object GraphML extends CatalogModule {
   private def m13bMinibatchDeterministic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val r = m13Fit(spark, dir)
-    val persisted = artifact(spark, dir, "m13_steps",
+    val persisted = Artifacts.write(spark, dir, "m13_steps",
       r.steps.map(s => (s.epoch, s.step, s.gstep, s.trainLoss, s.gradNorm,
           if (s.clipped) 1 else 0, s.n, s.fp))
         .toDF("epoch", "step", "gstep", "train_loss", "grad_norm", "clipped",
@@ -425,12 +425,7 @@ object GraphML extends CatalogModule {
   // (reference xgboost_training_for_big_data.py:512-660).
   private def m3bIncrementalPolicy(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = s"/tmp/graft_artifacts/${new java.io.File(dir).getName}"
-    val state = s"$root/m3_state_${spark.sparkContext.applicationId}"
-    // reap DEAD runs' registries only (age-gated — a live concurrent
-    // JVM's dir is freshly modified and must never be deleted mid-entry)
-    graft.core.Artifacts.reapStale(root, "m3_state_", state)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(state))
+    val state = Artifacts.freshScratchDir(spark, "m3_state", dir)
     val data = LinkPredict.trainingSetCached(spark, dir, cap = 20000)
     val runs = Seq(0, 1).map { i =>
       // lr at 5 iters: the ENTRY attests the accept/revert/SMOTE/probe
@@ -447,7 +442,7 @@ object GraphML extends CatalogModule {
         m("reverted").toInt,
         graft.ml.ModelRegistry.readHistory(s"$state/history.jsonl").length.toLong)
     }
-    val persisted = artifact(spark, dir, "m3_policy",
+    val persisted = Artifacts.write(spark, dir, "m3_policy",
       runs.toDF("run", "prev_exists", "n_pos", "n_neg", "imb_ratio",
         "smote_applied", "auc_train", "auc_val", "overfit_gap", "gate_pass",
         "probe_drop", "probe_alert", "accepted", "reverted", "history_len"))
@@ -492,7 +487,7 @@ object GraphML extends CatalogModule {
     val data = LinkPredict.trainingSetCached(spark, dir, cap = 20000)
     val trainSplit = data.filter(graft.functions.ColFns.pseudoUniform(
       xxhash64(col("customer"), col("product")), 41L) < 0.8)
-    val persisted = artifact(spark, dir, "m10_class_counts",
+    val persisted = Artifacts.write(spark, dir, "m10_class_counts",
       trainSplit.groupBy("label").agg(count(lit(1)).as("n_c")))
     val wAll = graft.functions.ColFns.boundedGlobal(col("label"))(col("label"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -510,7 +505,7 @@ object GraphML extends CatalogModule {
   private def m11bImportanceRanked(spark: SparkSession, dir: String): DataFrame = {
     val r = fit(spark, dir, "gbt")
     import spark.implicits._
-    val persisted = artifact(spark, dir, "m11_importances",
+    val persisted = Artifacts.write(spark, dir, "m11_importances",
       r.importances.toDF("feature", "importance"))
     persisted
       .withColumn("rank",
@@ -576,20 +571,12 @@ object GraphML extends CatalogModule {
   private def p1Col =
     org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1)
 
-  /** Persist a scored frame under the per-SF artifact root and read it
-    * back — both engines then compute metrics from the SAME parquet
-    * bits (the m4b technique applied to REAL model scores: the fit is
-    * model-coupled, the metric math from persisted scores is not). */
-  private def artifact(spark: SparkSession, dir: String, name: String,
-                       df: DataFrame): DataFrame =
-    graft.core.Artifacts.write(spark, dir, name, df)
-
   // M1b: the GBT's validation scores persisted, then the full metric
   // report (confusion at 0.5 + Mann–Whitney AUC) recomputed from the
   // persisted bits — hash-gated twin of the rows-only m1.
   private def m1bGbtDeterministic(spark: SparkSession, dir: String): DataFrame = {
     val r = fit(spark, dir, "gbt")
-    val persisted = artifact(spark, dir, "m1_scored",
+    val persisted = Artifacts.write(spark, dir, "m1_scored",
       r.scoredVal.select(col("label"), p1Col.as("p")))
     val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"),
       bounds = Some((0.0, 1.0)))
@@ -601,7 +588,7 @@ object GraphML extends CatalogModule {
   // model tag; per-model AUC recomputed relationally from the bits.
   private def m2bMultidateDeterministic(spark: SparkSession, dir: String): DataFrame = {
     val (withD, noD) = m2Fits(spark, dir)
-    val persisted = artifact(spark, dir, "m2_scored",
+    val persisted = Artifacts.write(spark, dir, "m2_scored",
       withD.scoredVal.select(lit("discount").as("model"), col("label"), p1Col.as("p"))
         .unionByName(
           noD.scoredVal.select(lit("no_discount").as("model"), col("label"), p1Col.as("p"))))
@@ -625,7 +612,7 @@ object GraphML extends CatalogModule {
   // M7b: the MLP's validation (label, p, prediction) persisted; AUC and
   // accuracy recomputed from the bits.
   private def m7bMlpDeterministic(spark: SparkSession, dir: String): DataFrame = {
-    val persisted = artifact(spark, dir, "m7_scored", m7Fit(spark, dir).scoredVal)
+    val persisted = Artifacts.write(spark, dir, "m7_scored", m7Fit(spark, dir).scoredVal)
     val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"),
       bounds = Some((0.0, 1.0)))
     persisted.agg(
@@ -647,8 +634,7 @@ object GraphML extends CatalogModule {
     val metrics = Tables.orders(spark, dir).groupBy("o_orderstatus")
       .agg(round(sum("o_totalprice"), 2).as("v"))
       .collect().map(r => s"total_${r.getString(0)}" -> r.getDouble(1)).toMap
-    val path = graft.catalog.Relational.tmpDir("s8_history", dir) + ".json"
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
+    val path = s"${Artifacts.freshScratchDir(spark, "s8_history", dir)}/history.json"
     graft.ml.ModelRegistry.appendHistory(path, metrics)
     graft.ml.ModelRegistry.appendHistory(path, metrics.map { case (k, v) => k -> (v + 1.0) })
     graft.ml.ModelRegistry.readHistory(path).zipWithIndex.flatMap { case (m, i) =>
@@ -671,8 +657,7 @@ object GraphML extends CatalogModule {
       col("o_totalprice").as("p"))
     val prevAuc = graft.ml.Metrics.auc(
       o.filter(pmod(col("o_orderkey"), lit(2)) === 0), "label", col("p"))
-    val path = graft.catalog.Relational.tmpDir("m6_history", dir) + ".json"
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
+    val path = s"${Artifacts.freshScratchDir(spark, "m6_history", dir)}/history.json"
     graft.ml.ModelRegistry.appendHistory(path, Map("auc_val" -> prevAuc))
     val prev = graft.ml.ModelRegistry.readHistory(path).last("auc_val")
     val newAuc = graft.ml.Metrics.auc(
@@ -1030,12 +1015,8 @@ object GraphML extends CatalogModule {
 
   private val m4bSql = metricsReportSql(detScoredCte, "150000.0")
 
-  // the persisted-scores artifact root the twin oracles read — written
-  // by the entries at the correctness gate's SF (sf0.01)
-  private def artifactSql(name: String): String = graft.core.Artifacts.sql(name)
-
   private def trajectoryGateSql(name: String): String =
-    s"""WITH t AS (SELECT * FROM ${artifactSql(name)}),
+    s"""WITH t AS (SELECT * FROM ${Artifacts.sql(name)}),
          |w AS (SELECT t.*,
          |    coalesce(max(auc_val) OVER (ORDER BY epoch
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0) AS prev_best,
@@ -1061,10 +1042,10 @@ object GraphML extends CatalogModule {
 
 
   private val m1bSql = metricsReportSql(
-    s"scored AS (SELECT label, p FROM ${artifactSql("m1_scored")})", "0.5")
+    s"scored AS (SELECT label, p FROM ${Artifacts.sql("m1_scored")})", "0.5")
 
   private val m2bSql =
-    s"""WITH sc AS (SELECT model, label, p FROM ${artifactSql("m2_scored")}),
+    s"""WITH sc AS (SELECT model, label, p FROM ${Artifacts.sql("m2_scored")}),
        |by_score AS (
        |  SELECT model, p AS s, count(*) AS n, sum(label) AS npos
        |  FROM sc GROUP BY model, p),
@@ -1084,7 +1065,7 @@ object GraphML extends CatalogModule {
        |FROM agg ORDER BY model""".stripMargin
 
   private val m7bSql =
-    s"""WITH sc AS (SELECT label, p, prediction FROM ${artifactSql("m7_scored")}),
+    s"""WITH sc AS (SELECT label, p, prediction FROM ${Artifacts.sql("m7_scored")}),
        |by_score AS (
        |  SELECT p AS s, count(*) AS n, sum(label) AS npos FROM sc GROUP BY p),
        |ranked AS (
@@ -1246,7 +1227,7 @@ object GraphML extends CatalogModule {
            |        FROM scored) WHERE rn <= 5),
            |adj AS (SELECT src, dst, w FROM knn UNION ALL SELECT dst, src, w FROM knn),
            |part AS (SELECT id, community
-           |         FROM read_parquet('/tmp/graft_artifacts/sf0.01/g2_partition/*.parquet')),
+           |         FROM ${Artifacts.sql("g2_partition")}),
            |ki AS (SELECT src, CAST(sum(w) AS BIGINT) AS k FROM adj GROUP BY src),
            |bycomm AS (
            |  SELECT p.community, count(*) AS size, CAST(sum(k.k) AS BIGINT) AS tot_w
@@ -1574,7 +1555,7 @@ object GraphML extends CatalogModule {
       "importance ranking recomputed under the hash gate",
       Some(s"""SELECT CAST(row_number() OVER (ORDER BY importance DESC, feature ASC) AS INT) AS rank,
          |  feature, round(importance, 6) AS importance
-         |FROM ${artifactSql("m11_importances")} ORDER BY rank""".stripMargin)),
+         |FROM ${Artifacts.sql("m11_importances")} ORDER BY rank""".stripMargin)),
     CatalogEntry("m12_adamw_loop", m12AdamwLoop,
       "AdamW training loop (twin m12b carries the gate)", None),
     CatalogEntry("m12b_adamw_deterministic", m12bAdamwDeterministic,
@@ -1592,7 +1573,7 @@ object GraphML extends CatalogModule {
       Some(trajectoryGateSql("m15_trajectory"))),
     CatalogEntry("m3b_incremental_policy", m3bIncrementalPolicy,
       "incremental refit policy with model-registry roundtrip",
-      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m3_policy")}),
+      Some(s"""WITH t AS (SELECT * FROM ${Artifacts.sql("m3_policy")}),
          |w AS (SELECT t.*,
          |    coalesce(sum(accepted) OVER (ORDER BY run
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS accepted_before,
@@ -1614,7 +1595,7 @@ object GraphML extends CatalogModule {
          |FROM w ORDER BY run""".stripMargin)),
     CatalogEntry("m10_class_weights", m10ClassWeights,
       "class-weighted training comparison",
-      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m10_class_counts")}),
+      Some(s"""WITH t AS (SELECT * FROM ${Artifacts.sql("m10_class_counts")}),
          |s AS (SELECT CAST(sum(n_c) AS BIGINT) AS total FROM t)
          |SELECT label, n_c,
          |  round(CAST(total AS DOUBLE) / (2.0 * n_c), 6) AS weight,
@@ -1624,7 +1605,7 @@ object GraphML extends CatalogModule {
       "streaming minibatch trainer (twin m13b carries the gate)", None),
     CatalogEntry("m13b_minibatch_deterministic", m13bMinibatchDeterministic,
       "streamed minibatch math recomputed deterministically",
-      Some(s"""WITH t AS (SELECT * FROM ${artifactSql("m13_steps")}),
+      Some(s"""WITH t AS (SELECT * FROM ${Artifacts.sql("m13_steps")}),
          |w AS (SELECT t.*,
          |    row_number() OVER (ORDER BY epoch, step) AS ord,
          |    min(n) OVER (PARTITION BY step) AS n_min,

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.functions.ColFns
 import graft.graph.Links
 
@@ -16,31 +16,13 @@ import graft.graph.Links
   */
 object Relational extends CatalogModule {
 
-  /** Staging root keyed by (entry, applicationId, input dir) — the
-    * stagingRoot discipline from ScaleOps: the s-family entries are
-    * multi-step read-modify-write over these dirs, so concurrent apps
-    * (same SF dir or not) must never share a store; dead apps'
-    * leftovers for the same entry are reaped age-gated. Exposed
-    * package-private so specs resolve the same path the entry used
-    * (one app per JVM: the applicationId matches). */
-  private[graft] def tmpDir(name: String, dir: String) = {
-    val appTag = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(s => graft.core.Artifacts.dirTag(s.sparkContext.applicationId))
-      .getOrElse("noapp")
-    val mine = s"${name}_${appTag}_${graft.core.Artifacts.dirTag(dir)}"
-    graft.core.Artifacts.reapStaleWhere("/tmp/graft_roundtrip",
-      n => n.startsWith(s"${name}_") && n != mine)
-    s"/tmp/graft_roundtrip/$mine"
-  }
-
   // S1: CSV scan + header normalization (First_Data_injection.py:33-43):
   // write customer with reference-style messy headers, re-ingest with the
   // snake_case normalizer, cast back to a declared schema.
   private def s1CsvScan(spark: SparkSession, dir: String): DataFrame = {
     val messy = Tables.customer(spark, dir)
       .toDF("C-CustKey", "C Name", "C NationKey", "C AcctBal", "C MktSegment")
-    val path = tmpDir("s1_customer_csv", dir)
+    val path = Artifacts.freshScratchDir(spark, "s1_customer_csv", dir)
     messy.write.mode("overwrite").option("header", "true").csv(path)
     val raw = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     val renamed = raw.toDF(raw.columns.map(ColFns.normalizeName): _*)
@@ -56,7 +38,7 @@ object Relational extends CatalogModule {
   private def s2CsvBadRows(spark: SparkSession, dir: String): DataFrame = {
     val messy = Tables.part(spark, dir)
       .toDF("P-PartKey", "P Name", "P Brand", "P Type", "P Size", "P RetailPrice")
-    val path = tmpDir("s2_part_csv", dir)
+    val path = Artifacts.freshScratchDir(spark, "s2_part_csv", dir)
     messy.write.mode("overwrite").option("header", "true").csv(path)
     val raw = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     val renamed = raw.toDF(raw.columns.map(ColFns.normalizeName): _*)
@@ -77,7 +59,7 @@ object Relational extends CatalogModule {
       .select(col("p_partkey"), col("p_name"), col("p_brand"),
         col("p_size"), col("p_type"))
       .toDF("SKU Code", "Design No.", "Brand", "Size", "Category")
-    val path = tmpDir("s3_catalog_csv", dir)
+    val path = Artifacts.freshScratchDir(spark, "s3_catalog_csv", dir)
     messy.write.mode("overwrite").option("header", "true").csv(path)
     graft.sources.ReferenceIngest.productCatalog(spark, path)
       .select(col("sku").cast("long").as("sku"), col("design_no"),
@@ -91,8 +73,7 @@ object Relational extends CatalogModule {
   // and attested by per-(label/type, dvid) histograms.
   private def s6GraphCheckpoint(spark: SparkSession, dir: String): DataFrame = {
     val g = graft.graph.GraphBuilder.fromTpch(spark, dir)
-    val path = tmpDir("s6_graph_checkpoint", dir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    val path = Artifacts.freshScratchDir(spark, "s6_graph_checkpoint", dir)
     graft.pipeline.Injections.append(g, path)
     val back = graft.pipeline.Injections.load(spark, path)
     back.nodes.groupBy("label", "dvid").agg(count(lit(1)).as("cnt"))
@@ -107,7 +88,7 @@ object Relational extends CatalogModule {
     val agg = Tables.orders(spark, dir).groupBy("o_orderstatus")
       .agg(round(sum("o_totalprice"), 2).as("total_price"),
         count(lit(1)).as("n_orders"))
-    val path = tmpDir("s4_orders_parquet", dir)
+    val path = Artifacts.freshScratchDir(spark, "s4_orders_parquet", dir)
     agg.write.mode("overwrite").parquet(path)
     spark.read.parquet(path).orderBy("o_orderstatus")
   }
@@ -123,7 +104,7 @@ object Relational extends CatalogModule {
       .agg(round(sum("l_quantity"), 2).as("sum_qty"),
         round(sum("l_extendedprice"), 2).as("sum_price"),
         count(lit(1)).as("n_lines"))
-    val path = tmpDir("s11_lineitem_orc", dir)
+    val path = Artifacts.freshScratchDir(spark, "s11_lineitem_orc", dir)
     agg.write.mode("overwrite").orc(path)
     spark.read.orc(path).orderBy("l_returnflag", "l_linestatus")
   }
@@ -140,7 +121,7 @@ object Relational extends CatalogModule {
   // year, PushedFilters the key range, and the scan's numOutputRows
   // collapses vs the same probe on an unsorted single-directory copy.
   private def s12SortedLayout(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("s12_lineitem_layout", dir)
+    val path = Artifacts.freshScratchDir(spark, "s12_lineitem_layout", dir)
     Tables.lineitem(spark, dir)
       .withColumn("ship_year", year(col("l_shipdate")))
       // range-partition on the sort key so each output file owns a
@@ -185,7 +166,7 @@ object Relational extends CatalogModule {
     (c - lit(lo)) * lit(65536L) / lit(hi - lo + 1)
 
   private def s15ZorderLayout(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("s15_lineitem_zorder", dir)
+    val path = Artifacts.freshScratchDir(spark, "s15_lineitem_zorder", dir)
     val li = Tables.lineitem(spark, dir)
     // normalize both keys into the 16-bit z domain by linear quantization
     // from BOTH observed bounds — one metadata-cheap aggregate job; at
@@ -231,7 +212,7 @@ object Relational extends CatalogModule {
   // reconstructs the merge relationally over the RAW table, so the hash
   // gate proves the partition-scoped rewrite equals the logical merge.
   private def s16CdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("s16_orders_cow", dir)
+    val path = Artifacts.freshScratchDir(spark, "s16_orders_cow", dir)
     val months = Seq("1996-03", "1996-04")
     // dynamic overwrite on an isolated session clone — the shared
     // session's conf is never mutated
@@ -290,24 +271,24 @@ object Relational extends CatalogModule {
   // bucketed-table discipline): the entry DEMONSTRATES the runtime
   // pruning probe, not the write, so in-session re-runs (tests, verify
   // after bench, bench reruns) pay only the probe
-  /** s17's staged layout paths — tmpDir is app-scoped (r13), so the
-    * memo can trust the on-disk layout for the app's lifetime even with
-    * a concurrent app over the SAME SF dir. Package-private so the DPP
-    * spec resolves the exact paths its entry staged. */
-  private[graft] def s17Paths(spark: SparkSession, dir: String): (String, String) =
-    (tmpDir("s17_lineitem_by_year", dir), tmpDir("s17_calendar_dim", dir))
   private def s17DynamicPruning(spark: SparkSession, dir: String): DataFrame = {
-    val (factPath, dimPath) = s17Paths(spark, dir)
-    graft.core.AppCache.memo(spark, "relational.s17Layouts", dir) {
-      val li = Tables.lineitem(spark, dir)
-        .withColumn("ship_year", year(col("l_shipdate")))
-      li.write.mode("overwrite").partitionBy("ship_year").parquet(factPath)
-      // the calendar dimension: one row per observed year, attributed
-      li.select(col("ship_year")).distinct()
-        .withColumn("era",
-          when(col("ship_year") >= 1996, lit("late")).otherwise(lit("early")))
-        .write.mode("overwrite").parquet(dimPath)
-    }
+    // scratch dirs are app-scoped, so the memo can trust the on-disk
+    // layout for the app's lifetime even with a concurrent app over the
+    // SAME SF dir
+    val (factPath, dimPath) =
+      graft.core.AppCache.memo(spark, "relational.s17Layouts", dir) {
+        val factPath = Artifacts.freshScratchDir(spark, "s17_lineitem_by_year", dir)
+        val dimPath = Artifacts.freshScratchDir(spark, "s17_calendar_dim", dir)
+        val li = Tables.lineitem(spark, dir)
+          .withColumn("ship_year", year(col("l_shipdate")))
+        li.write.partitionBy("ship_year").parquet(factPath)
+        // the calendar dimension: one row per observed year, attributed
+        li.select(col("ship_year")).distinct()
+          .withColumn("era",
+            when(col("ship_year") >= 1996, lit("late")).otherwise(lit("early")))
+          .write.parquet(dimPath)
+        (factPath, dimPath)
+      }
     val fact = spark.read.parquet(factPath)
     val cal = spark.read.parquet(dimPath).filter(col("era") === "late")
     fact.join(broadcast(cal), Seq("ship_year"))
@@ -335,8 +316,7 @@ object Relational extends CatalogModule {
   // vacuum dropped EXACTLY the expired versions (an over-delete loses
   // rows, an under-delete leaves dvids the full-store scan would add).
   private def s18RetentionVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val store = tmpDir("s18_events_versioned", dir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
+    val store = Artifacts.freshScratchDir(spark, "s18_events_versioned", dir)
     // four injected versions; retention keeps the newest two
     Tables.events(spark, dir)
       .withColumn("dvid", (pmod(col("event_id"), lit(4)) + 1).cast("int"))
@@ -404,8 +384,7 @@ object Relational extends CatalogModule {
   }
 
   private def s20ManifestVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpDir("s20_manifest_store", dir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = Artifacts.freshScratchDir(spark, "s20_manifest_store", dir)
     Tables.events(spark, dir)
       .withColumn("dvid", (pmod(col("event_id"), lit(4)) + 1).cast("int"))
       .write.partitionBy("dvid").parquet(s"$root/data")
@@ -495,15 +474,12 @@ object Relational extends CatalogModule {
   // pointer reader (s19) and the time-travel reader (s21) both consume
   // it — production's economics (one nightly publish, many readers),
   // the s17/j13/sharedIvfIndex staging discipline applied here
-  /** The shared store's path — app-scoped like j13's bucketed tables:
-    * the memo trusts the on-disk store for the app's lifetime, so a
-    * concurrent app must publish into its OWN root, never wipe this
-    * one. Package-private so specs resolve the same path. */
-  private[graft] def publishedRoot(spark: SparkSession, dir: String): String =
-    tmpDir("s19_published", dir)
   private def sharedPublishedRoot(spark: SparkSession, dir: String): String =
     graft.core.AppCache.memo(spark, "relational.s19Store", dir) {
-      val root = publishedRoot(spark, dir)
+      // app-scoped like j13's bucketed tables: the memo trusts the
+      // on-disk store for the app's lifetime, so a concurrent app
+      // publishes into its OWN root, never wipes this one
+      val root = Artifacts.freshScratchDir(spark, "s19_published", dir)
       publishVersions(spark, dir, root,
         Seq(1 -> "1996-01-01", 2 -> "1997-01-01"))
       root
@@ -572,8 +548,8 @@ object Relational extends CatalogModule {
   // gate: compaction must be invisible to every reader. File-count
   // collapse is asserted in ScaleMechanicsSpec.
   private def s13Compaction(spark: SparkSession, dir: String): DataFrame = {
-    val staged = tmpDir("s13_events_debris", dir)
-    val compacted = tmpDir("s13_events_compacted", dir)
+    val staged = Artifacts.freshScratchDir(spark, "s13_events_debris", dir)
+    val compacted = Artifacts.freshScratchDir(spark, "s13_events_compacted", dir)
     Tables.events(spark, dir).repartition(48)
       .write.mode("overwrite").parquet(staged)
     val target = math.max(1L, graft.sources.Compactor.dataBytes(spark, staged) / 4)
@@ -609,18 +585,11 @@ object Relational extends CatalogModule {
   // App-scoped staging + stale-sibling reaping (s17 discipline): the
   // entry is multi-step read-modify-write.
   private def s22MergeOnRead(spark: SparkSession, dir: String): DataFrame = {
-    val base = tmpDir("s22_mor", dir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = Artifacts.freshScratchDir(spark, "s22_mor", dir)
     // NOT underscore-prefixed: Spark's file listing hides `_`/`.` paths,
     // so an `_deletes` root can read as an empty source
     val store = s"$base/store"; val tomb = s"$base/tombstones"
-    // one order-year of store is enough to demonstrate every mechanic
-    // (12 partitions, 2 of them delete-touched); partition-dir count is
-    // what prices the staging write, not rows
-    val orders = Tables.orders(spark, dir)
-      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      .filter(col("o_month").startsWith("1996-"))
-      .select("o_orderkey", "o_totalprice", "o_month")
+    val orders = ScaleOps.orders1996(spark, dir)
     orders.write.partitionBy("o_month").parquet(store)
     // the delete batch: keys ≡ 0 mod 7 inside two months — written as
     // an O(|keys|) partitioned key set, NOT as a table rewrite (mod 7,
@@ -631,11 +600,7 @@ object Relational extends CatalogModule {
       .select("o_orderkey", "o_month")
       .write.partitionBy("o_month").parquet(tomb)
     def readout(table: DataFrame, phase: String) =
-      table.groupBy("o_month")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"),
-          sum(col("o_orderkey")).as("key_sum"))
-        .withColumn("phase", lit(phase))
+      ScaleOps.monthReadout(table).withColumn("phase", lit(phase))
     // touched partitions = the tombstone store's dirs — checked BEFORE
     // the read so an empty delete batch fails loudly, not as an
     // inscrutable schema-inference error on a file-less source
@@ -667,7 +632,7 @@ object Relational extends CatalogModule {
   // rows aggregate to exactly the raw table AND exactly 7 landed in
   // the corrupt bucket.
   private def s14CorruptRecords(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("s14_part_badcsv", dir)
+    val path = Artifacts.freshScratchDir(spark, "s14_part_badcsv", dir)
     Tables.part(spark, dir).select("p_partkey", "p_brand", "p_size")
       .write.mode("overwrite").csv(path)
     // 7 malformed lines, each failing a TYPED field parse (or quote
@@ -731,7 +696,7 @@ object Relational extends CatalogModule {
     val g = graft.graph.PropertyGraph(
       g0.nodes.filter(col("dvid") === 1), g0.edges.filter(col("dvid") === 1),
       cacheToken = Some(s"tpch-dvid1:$dir"))
-    val path = tmpDir("s5_graphml", dir)
+    val path = Artifacts.freshScratchDir(spark, "s5_graphml", dir)
     graft.sources.GraphMLSink.write(g, path)
     val back = graft.sources.GraphMLSource.read(spark, path)
     back.nodes.groupBy("label").agg(count(lit(1)).as("cnt"))
@@ -1053,7 +1018,7 @@ object Relational extends CatalogModule {
   // NULL for the new column (the append-only injection store's survival
   // rule: producers may add columns, never retype them).
   private def s10SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("s10_evolving", dir)
+    val path = Artifacts.freshScratchDir(spark, "s10_evolving", dir)
     val o = Tables.orders(spark, dir)
     o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
       .select(col("o_orderkey"), col("o_totalprice"))

@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.sim.Similarity
 
 /** Operator catalog, part 6: the scale-mechanics operators — the join
@@ -114,11 +114,10 @@ object ScaleOps extends CatalogModule {
     // app-scoped + dir-scoped: two Spark apps sharing one warehouse (or
     // a dir-hash collision) must not DROP/overwrite each other's tables
     // while the other app's memo still believes its tables are valid
-    val tag = graft.core.Artifacts.dirTag(spark.sparkContext.applicationId) + "_" +
-      graft.core.Artifacts.dirTag(dir)
+    val tag = Artifacts.scratchTag(spark, dir)
     graft.core.AppCache.memo(spark, "scaleops.j13Tables", dir) {
-      // cross-process hygiene, same age-gated policy as
-      // Artifacts.reapStale: dead apps' bucketed tables stop
+      // cross-process hygiene, the scratch dirs' age-gated policy
+      // (Artifacts.freshScratchDir): dead apps' bucketed tables stop
       // accumulating in the shared warehouse (each run otherwise leaves
       // two app-tagged copies of orders+lineitem behind), while a LIVE
       // concurrent app's tables are freshly modified and never touched.
@@ -127,7 +126,7 @@ object ScaleOps extends CatalogModule {
       val appHex = tag.takeWhile(_ != '_')
       val wh = new java.net.URI(
         spark.conf.get("spark.sql.warehouse.dir")).getPath
-      graft.core.Artifacts.reapStaleWhere(wh, name =>
+      Artifacts.reapStaleWhere(wh, name =>
         name.startsWith("j13_") && !name.contains(s"_${appHex}_"))
       val orders = Tables.orders(spark, dir)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -347,9 +346,7 @@ object ScaleOps extends CatalogModule {
   // the readback per-dvid histogram is the reference's injection
   // verification (fifth_data_injection.py:154-158) over a stream.
   private def e7IncrementalIngest(spark: SparkSession, dir: String): DataFrame = {
-    // staging root keyed by (app, input dir) so concurrent apps — even
-    // over the SAME SF dir — never clobber each other
-    val base = freshStagingDir(spark, "e7", dir)
+    val base = Artifacts.freshScratchDir(spark, "e7", dir)
     val ev = Tables.events(spark, dir)
     val store = s"$base/store"
     Seq(0, 1).foreach { i =>
@@ -360,42 +357,6 @@ object ScaleOps extends CatalogModule {
     spark.read.parquet(store)
       .groupBy("dvid", "event_type").agg(count(lit(1)).as("cnt"))
       .orderBy("dvid", "event_type")
-  }
-
-  /** THE path scheme for the e-family staging roots:
-    * /tmp/graft_stream/<name>_<appTag>_<dirTag>. App-tagged so two
-    * concurrent apps over the SAME SF dir never collide (the
-    * s17/s22/e10/j13 discipline — critical here because e19/e20 memoize
-    * this path per (app, dir) and trust its bytes for the app's
-    * lifetime); dir-tagged so one app's runs against different SFs don't
-    * either. One definition, shared with the specs that resolve the same
-    * staged files. */
-  private[graft] def stagingRoot(spark: SparkSession, name: String,
-                                 dir: String): String = {
-    val appTag = graft.core.Artifacts.dirTag(spark.sparkContext.applicationId)
-    s"/tmp/graft_stream/${name}_${appTag}_${graft.core.Artifacts.dirTag(dir)}"
-  }
-
-  /** Fresh per-(entry, app, input-dir) staging root under
-    * /tmp/graft_stream (scheme: [[stagingRoot]]): prior contents of OUR
-    * root are removed so every run starts from an empty store, and dead
-    * apps' leftover roots for the same entry are reaped age-gated (a
-    * LIVE concurrent app's freshly-modified dir is never touched — the
-    * reapStaleWhere contract). */
-  private[graft] def freshStagingDir(spark: SparkSession, name: String,
-                                     dir: String): java.nio.file.Path = {
-    val base = java.nio.file.Paths.get(stagingRoot(spark, name, dir))
-    val mine = base.getFileName.toString
-    graft.core.Artifacts.reapStaleWhere("/tmp/graft_stream",
-      n => n.startsWith(s"${name}_") && n != mine)
-    if (java.nio.file.Files.exists(base)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(base)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
-    base
   }
 
   // E15: incremental AGGREGATE maintenance — the materialized-view
@@ -414,7 +375,7 @@ object ScaleOps extends CatalogModule {
   // FULL RECOMPUTE over the raw table — the hash gate proves the
   // incremental path equals the from-scratch path.
   private def e15IncrementalAggMerge(spark: SparkSession, dir: String): DataFrame = {
-    val base = freshStagingDir(spark, "e15", dir)
+    val base = Artifacts.freshScratchDir(spark, "e15", dir)
     val state = s"$base/agg_state"
     // stage the three arrivals as real per-batch directories (one
     // partitioned write), so each ingest below genuinely reads ONLY its
@@ -464,7 +425,7 @@ object ScaleOps extends CatalogModule {
   private[graft] def e16Core(spark: SparkSession, dir: String, K: Int,
                              tag: String): DataFrame = {
     import graft.plans.expressions.{kmv_sketch, kmv_card}
-    val base = freshStagingDir(spark, tag, dir)
+    val base = Artifacts.freshScratchDir(spark, tag, dir)
     val state = s"$base/distinct_state"
     // staged per-batch dirs (e15's discipline): each ingest reads only
     // its own delta's files, never the corpus
@@ -553,7 +514,7 @@ object ScaleOps extends CatalogModule {
   // re-run: no dedup scan of the store, no transaction log, just
   // partition-scoped last-writer-wins keyed by batch identity.
   private def e17IdempotentReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = freshStagingDir(spark, "e17", dir)
+    val base = Artifacts.freshScratchDir(spark, "e17", dir)
     val ev = Tables.events(spark, dir)
     val store = s"$base/store"
     Seq(0, 1).foreach { i =>
@@ -586,7 +547,7 @@ object ScaleOps extends CatalogModule {
   // dvid per drain gives the store its version lineage for free
   // (batchId continues across restarts).
   private def e18CheckpointResume(spark: SparkSession, dir: String): DataFrame = {
-    val base = freshStagingDir(spark, "e18", dir)
+    val base = Artifacts.freshScratchDir(spark, "e18", dir)
     val ev = Tables.events(spark, dir)
     val src = s"$base/src"
     val store = s"$base/store"
@@ -663,7 +624,7 @@ object ScaleOps extends CatalogModule {
   // the memo; the `first` map keeps the honest cold wall.
   private def e19MergedStore(spark: SparkSession, dir: String): String =
     graft.core.AppCache.memo(spark, "scaleops.e19Store", dir) {
-    val base = freshStagingDir(spark, "e19", dir)
+    val base = Artifacts.freshScratchDir(spark, "e19", dir)
     val src = s"$base/changes"; val store = s"$base/store"
     val ckpt = s"$base/ckpt"
     val months = e19Months
@@ -704,18 +665,27 @@ object ScaleOps extends CatalogModule {
     store
   }
 
-  /** The CDC table's serve readout, shared verbatim by e19 (merged
-    * store) and e20 (compacted copy) so "compaction is reader-
-    * invisible" is proven on the exact same aggregate. */
-  private def cdcServe(spark: SparkSession, table: DataFrame): DataFrame =
+  /** The o_month readout every table-maintenance entry serves (s22,
+    * e19, e20, e21, s23): one aggregate, so "the maintenance is reader-
+    * invisible" is always proven on the exact same columns. */
+  private[graft] def monthReadout(table: DataFrame): DataFrame =
     table.groupBy("o_month")
       .agg(count(lit(1)).as("n_orders"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"),
         sum(col("o_orderkey")).as("key_sum"))
-      .orderBy("o_month")
+
+  /** One order-year of (o_orderkey, o_totalprice, o_month) — the store
+    * s22, e21 and s23 maintain: partition-dir count, not row mass,
+    * prices the staging write, so 12 month dirs demonstrate every
+    * mechanic. */
+  private[graft] def orders1996(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir)
+      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
+      .filter(col("o_month").startsWith("1996-"))
+      .select("o_orderkey", "o_totalprice", "o_month")
 
   private def e19StreamCdcMerge(spark: SparkSession, dir: String): DataFrame =
-    cdcServe(spark, spark.read.parquet(e19MergedStore(spark, dir)))
+    monthReadout(spark.read.parquet(e19MergedStore(spark, dir))).orderBy("o_month")
 
   // E20: CDC MERGE → COMPACT → SERVE — closing the maintenance loop the
   // e/s families leave at "merged": every copy-on-write merge rewrites
@@ -734,7 +704,7 @@ object ScaleOps extends CatalogModule {
   // partitions is asserted in ScaleMechanicsSpec.
   private def e20CdcCompactServe(spark: SparkSession, dir: String): DataFrame = {
     val store = e19MergedStore(spark, dir)
-    val serve = freshStagingDir(spark, "e20", dir).toString
+    val serve = Artifacts.freshScratchDir(spark, "e20", dir)
     var (inFiles, outFiles) = (0, 0)
     e19Months.foreach { m =>
       val part = s"$store/o_month=$m"
@@ -747,8 +717,8 @@ object ScaleOps extends CatalogModule {
     val compacted = spark.read.parquet(serve) // discovery re-derives o_month
     val untouched = spark.read.parquet(store)
       .filter(!col("o_month").isin(e19Months: _*))
-    cdcServe(spark, compacted.select(untouched.columns.map(col): _*)
-      .unionByName(untouched))
+    monthReadout(compacted.select(untouched.columns.map(col): _*)
+      .unionByName(untouched)).orderBy("o_month")
   }
 
   // E21: STREAMED MERGE-ON-READ DELETES — completes the table-
@@ -770,15 +740,10 @@ object ScaleOps extends CatalogModule {
   // readouts under ONE relational delete-truth oracle, so the hash
   // gate proves stream-MOR ≡ materialized ≡ truth.
   private def e21StreamMorDeletes(spark: SparkSession, dir: String): DataFrame = {
-    val base = freshStagingDir(spark, "e21", dir)
+    val base = Artifacts.freshScratchDir(spark, "e21", dir)
     val src = s"$base/delete_feed"; val store = s"$base/store"
     val tomb = s"$base/tombstones"; val ckpt = s"$base/ckpt"
-    // one order-year of store (the s22 scoping: partition-dir count,
-    // not row mass, prices the staging write; 12 dirs, 3 touched)
-    val orders = Tables.orders(spark, dir)
-      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      .filter(col("o_month").startsWith("1996-"))
-      .select("o_orderkey", "o_totalprice", "o_month")
+    val orders = orders1996(spark, dir)
     orders.write.partitionBy("o_month").parquet(store)
     def drain(): Unit = {
       val q = spark.readStream
@@ -811,11 +776,7 @@ object ScaleOps extends CatalogModule {
       "e21: the delete feed matched no rows at this SF — densify the predicates")
     val tombs = spark.read.parquet(tomb).select("o_orderkey").distinct()
     def readout(table: DataFrame, phase: String) =
-      table.groupBy("o_month")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"),
-          sum(col("o_orderkey")).as("key_sum"))
-        .withColumn("phase", lit(phase))
+      monthReadout(table).withColumn("phase", lit(phase))
     // checkpoint BEFORE the rewrite: a lazy MOR frame would re-read the
     // already-materialized store and gate vacuously
     val mor = readout(spark.read.parquet(store)
@@ -907,20 +868,14 @@ object ScaleOps extends CatalogModule {
       spark.read.parquet(store)
         .join(broadcast(tombs), Seq("o_orderkey"), "left_anti")
     }
-    served.groupBy("o_month")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"),
-        sum(col("o_orderkey")).as("key_sum"))
+    monthReadout(served)
       .withColumn("scenario", lit(scenario))
       .withColumn("branch", lit(if (fold) "fold" else "serve"))
   }
 
   private def s23MorFoldScheduler(spark: SparkSession, dir: String): DataFrame = {
-    val base = freshStagingDir(spark, "s23", dir)
-    val orders = Tables.orders(spark, dir)
-      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      .filter(col("o_month").startsWith("1996-"))
-      .select("o_orderkey", "o_totalprice", "o_month")
+    val base = Artifacts.freshScratchDir(spark, "s23", dir)
+    val orders = orders1996(spark, dir)
     def scenario(name: String,
                  deletePred: org.apache.spark.sql.Column): DataFrame = {
       val store = s"$base/${name}_store"
@@ -1003,21 +958,10 @@ object ScaleOps extends CatalogModule {
   // staged (half=ontime/late) event split, shared across e10 runs in a
   // session — values are PATHS (not frames)
   private def e10LateDataDrop(spark: SparkSession, dir: String): DataFrame = {
-    val tag = graft.core.Artifacts.dirTag(dir)
-    // applicationId in the path: two concurrent runs over the same sfDir
-    // (bench + test suite on a shared box) must not delete each other's
-    // checkpoint/out mid-stream — same rule as the memo caches. Dead
-    // runs' dirs are reaped age-gated so per-run paths don't accumulate.
-    val base = java.nio.file.Paths.get(
-      s"/tmp/graft_stream/e10_${spark.sparkContext.applicationId}_$tag")
-    graft.core.Artifacts.reapStale("/tmp/graft_stream", "e10_", base.toString)
-    if (java.nio.file.Files.exists(base)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(base)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    // app-scoped: two concurrent runs over the same sfDir (bench + test
+    // suite on a shared box) must not delete each other's checkpoint/out
+    // mid-stream
+    val base = Artifacts.freshScratchDir(spark, "e10", dir)
     val ev = Tables.events(spark, dir).select("event_id", "ts", "event_type", "value")
     // the split point needs only min/max(ts) — read them from the
     // parquet FOOTER statistics (what a planner does) instead of paying
@@ -1044,16 +988,7 @@ object ScaleOps extends CatalogModule {
     // still drains its own checkpoint from its own src.
     val evSchema = ev.schema
     val stagedBase = graft.core.AppCache.memo(spark, "scaleops.e10Staged", dir) {
-      val p = s"/tmp/graft_stream/e10staged_${spark.sparkContext.applicationId}_$tag"
-      graft.core.Artifacts.reapStale("/tmp/graft_stream", "e10staged_", p)
-      val pp = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(pp)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(pp)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-        finally walk.close()
-      }
+      val p = Artifacts.freshScratchDir(spark, "e10staged", dir)
       // no repartition: the source is a handful of partitions, each
       // writes at most one file per half — a map-only staging job
       ev.withColumn("half",

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.sim.Similarity
 import graft.text.{Dedup, TextAnalysis}
 
@@ -209,17 +209,7 @@ object TextSim extends CatalogModule {
   }
 
   private def e11StreamIngestDedup(spark: SparkSession, dir: String): DataFrame = {
-    val tag = graft.core.Artifacts.dirTag(dir)
-    val base = s"/tmp/graft_stream/e11_${spark.sparkContext.applicationId}_$tag"
-    graft.core.Artifacts.reapStale("/tmp/graft_stream", "e11_", base)
-    val basePath = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(basePath)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(basePath)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    val base = Artifacts.freshScratchDir(spark, "e11", dir)
     val signed = bandSignatures(spark, dir)
     val isArrival = pmod(col("doc_id"), lit(3)) === 0
     // ONE persisted signature artifact — band signatures + shingle sets
@@ -338,17 +328,7 @@ object TextSim extends CatalogModule {
   // this is the same ingest topology with a model where the signature
   // store was.
   private def e12StreamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val tag = graft.core.Artifacts.dirTag(dir)
-    val base = s"/tmp/graft_stream/e12_${spark.sparkContext.applicationId}_$tag"
-    graft.core.Artifacts.reapStale("/tmp/graft_stream", "e12_", base)
-    val basePath = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(basePath)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(basePath)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    val base = Artifacts.freshScratchDir(spark, "e12", dir)
     val (wt, lprior, defaultLw) = nbQualityModel(spark, dir)
     val arrivals = Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(3)) === 0)
@@ -1863,8 +1843,8 @@ object TextSim extends CatalogModule {
       // sim_ann0 build oracle mirrors this count
       val (cents, lists) =
         buildHashIvf(e, Similarity.scaleNLists(e.count()), extraCols = Seq("label"))
-      (artifact(spark, dir, "ivf0_centroids", cents),
-        artifact(spark, dir, "ivf0_lists", lists))
+      (Artifacts.write(spark, dir, "ivf0_centroids", cents),
+        Artifacts.write(spark, dir, "ivf0_lists", lists))
     }
 
   // The staging entry's own hash gate: per-list inventory of the
@@ -1974,7 +1954,7 @@ object TextSim extends CatalogModule {
     val before = ivfServe(centA, live, nProbe, k).localCheckpoint(true)
     // the nightly job: one keyed repartition so every inverted list is
     // a contiguous file run in the v2 artifact, tombstones folded in
-    val listB = artifact(spark, dir, "ivf_c_lists_v2",
+    val listB = Artifacts.write(spark, dir, "ivf_c_lists_v2",
       live.repartition(4, col("list")))
     // serving AFTER compaction carries no tombstone logic at all
     val after = ivfServe(centA, listB, nProbe, k).localCheckpoint(true)
@@ -2005,8 +1985,8 @@ object TextSim extends CatalogModule {
     // so the trained-vs-baseline recall comparison is like for like
     val nLists = Similarity.scaleNLists(e.count())
     val (cents0, lists0) = Similarity.trainedQuantizer(e, "vec_id", "v", nLists)
-    val centA = artifact(spark, dir, "ivf_t_centroids", cents0)
-    val listA = artifact(spark, dir, "ivf_t_lists",
+    val centA = Artifacts.write(spark, dir, "ivf_t_centroids", cents0)
+    val listA = Artifacts.write(spark, dir, "ivf_t_lists",
       lists0.select(col("list"), col("id").as("vec_id"), col("v"), col("nrm")))
     ivfServe(centA, listA, nProbe, k)
   }
@@ -2104,14 +2084,6 @@ object TextSim extends CatalogModule {
        |l0 AS MATERIALIZED (SELECT id, id AS lbl FROM verts),
        |$steps""".stripMargin
   }
-
-  // persisted-artifact plumbing — one shared definition of the path
-  // scheme (graft.core.Artifacts) keeps this catalog's writes and its
-  // oracles' reads in lockstep with the m-family twins'
-  private def artifact(spark: SparkSession, dir: String, name: String,
-                       df: DataFrame): DataFrame =
-    graft.core.Artifacts.write(spark, dir, name, df)
-  private def artifactSql(name: String): String = graft.core.Artifacts.sql(name)
 
   // ---- oracles ----
 
@@ -2276,8 +2248,8 @@ object TextSim extends CatalogModule {
         val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
         val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
         val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}),
+        s"""WITH cents AS (SELECT list, cv FROM ${Artifacts.sql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${Artifacts.sql("ivf0_lists")}),
            |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
            |pr AS (
            |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
@@ -2302,8 +2274,8 @@ object TextSim extends CatalogModule {
         val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
         val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
         val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
+        s"""WITH cents AS (SELECT list, cv FROM ${Artifacts.sql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${Artifacts.sql("ivf0_lists")}
            |          WHERE vec_id % 13 <> 0),
            |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
            |pr AS (
@@ -2331,8 +2303,8 @@ object TextSim extends CatalogModule {
         val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
         val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
         val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
-           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf0_lists")}
+        s"""WITH cents AS (SELECT list, cv FROM ${Artifacts.sql("ivf0_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${Artifacts.sql("ivf0_lists")}
            |          WHERE vec_id % 13 <> 0),
            |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
            |pr AS (
@@ -2356,8 +2328,8 @@ object TextSim extends CatalogModule {
         val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
         val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
         val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf_t_centroids")}),
-           |lists AS (SELECT list, vec_id, v, nrm FROM ${artifactSql("ivf_t_lists")}),
+        s"""WITH cents AS (SELECT list, cv FROM ${Artifacts.sql("ivf_t_centroids")}),
+           |lists AS (SELECT list, vec_id, v, nrm FROM ${Artifacts.sql("ivf_t_lists")}),
            |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn FROM lists WHERE vec_id % 7 = 0),
            |pr AS (
            |  SELECT q.src, q.qv, q.qn, c.list, ($cc - 2.0 * $qc) AS rank_d
@@ -2380,9 +2352,9 @@ object TextSim extends CatalogModule {
         val cc = Similarity.dotSql("c.cv", "c.cv", DIM)
         val qc = Similarity.dotSql("q.qv", "c.cv", DIM)
         val qd = Similarity.dotSql("p.qv", "l.v", DIM)
-        s"""WITH cents AS (SELECT list, cv FROM ${artifactSql("ivf0_centroids")}),
+        s"""WITH cents AS (SELECT list, cv FROM ${Artifacts.sql("ivf0_centroids")}),
            |lists AS (SELECT list, vec_id, v, nrm, label
-           |          FROM ${artifactSql("ivf0_lists")}),
+           |          FROM ${Artifacts.sql("ivf0_lists")}),
            |q AS (SELECT vec_id AS src, v AS qv, nrm AS qn, label AS ql
            |      FROM lists WHERE vec_id % 7 = 0),
            |pr AS (

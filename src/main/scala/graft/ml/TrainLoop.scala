@@ -55,16 +55,51 @@ object TrainLoop {
       when(ColFns.pseudoUniform(
         xxhash64(col("customer"), col("product")), seed) < 0.8, "train")
         .otherwise("val"))
-    val momAgg = features.flatMap(c =>
-      Seq(avg(col(c)).as(s"mu_$c"), stddev_pop(col(c)).as(s"sd_$c")))
-    val mom = split.filter(col("part") === "train")
-      .agg(momAgg.head, momAgg.tail: _*).head()
+    val mom = moments(split.filter(col("part") === "train")
+      .select(features.map(c => col(c).cast("double")): _*))
     val xCols = features.indices.map { i =>
-      val s = mom.getDouble(2 * i + 1)
-      ((col(features(i)) - mom.getDouble(2 * i)) / (if (s > 0) s else 1.0))
-        .as(s"x$i")
+      val (mu, s) = mom(i)
+      ((col(features(i)) - mu) / (if (s > 0) s else 1.0)).as(s"x$i")
     }
     (split, xCols)
+  }
+
+  /** Per-column (mean, population σ) of the double columns of `df`, nulls
+    * skipped. One job: a Welford (n, mean, M2) partial per partition,
+    * merged on the driver in PARTITION-INDEX order with the pairwise
+    * update `stddev_pop` uses — `avg`/`stddev_pop` merge their buffers
+    * in task-completion order, so their last bits move from call to
+    * call; these are bit-stable on the same partitions. */
+  private[graft] def moments(df: DataFrame): Seq[(Double, Double)] = {
+    val k = df.columns.length
+    val parts = df.rdd.mapPartitionsWithIndex { (pi, it) =>
+      val (n, mean, m2) = (new Array[Double](k), new Array[Double](k),
+        new Array[Double](k))
+      it.foreach { r =>
+        var j = 0
+        while (j < k) {
+          if (!r.isNullAt(j)) {
+            val delta = r.getDouble(j) - mean(j)
+            n(j) += 1
+            val deltaN = delta / n(j)
+            mean(j) += deltaN
+            m2(j) += delta * (delta - deltaN)
+          }
+          j += 1
+        }
+      }
+      Iterator((pi, n, mean, m2))
+    }.collect().sortBy(_._1)
+    (0 until k).map { j =>
+      val (n, mean, m2) = parts.foldLeft((0.0, 0.0, 0.0)) {
+        case ((na, ma, m2a), (_, nb, mb, m2b)) =>
+          val nn = na + nb(j)
+          val delta = mb(j) - ma
+          val deltaN = if (nn == 0) 0.0 else delta / nn
+          (nn, ma + deltaN * nb(j), m2a + m2b(j) + delta * deltaN * na * nb(j))
+      }
+      (mean, math.sqrt(m2 / n))
+    }
   }
 
   /** BCEWithLogitsLoss pos_weight = #neg / #pos over the train split. */

@@ -216,22 +216,13 @@ object EventStream {
     // tables (graft.tools.ScaleUp) are directories of part files —
     // stage either shape into one flat dir (micro-batch ingest of
     // dropped-in files is exactly the dvid-injection pattern anyway)
-    // delete-then-stage (the freshStagingDir discipline): a prior run's
-    // part files carry run-unique names, so REPLACE_EXISTING alone would
-    // leave stale files behind when the source dir is regenerated — the
-    // stream would silently ingest old+new and double its rows. App-
-    // scoped (the j13 rule): the wipe is destructive, so two concurrent
-    // apps over the same dir must never share a staged source.
-    val appTag = graft.core.Artifacts.dirTag(spark.sparkContext.applicationId)
-    val staged = java.nio.file.Paths.get(s"/tmp/graft_stream/${appTag}_$queryName")
-    org.apache.commons.io.FileUtils.deleteQuietly(staged.toFile)
+    // a fresh dir per run: a prior run's part files carry run-unique
+    // names, so REPLACE_EXISTING alone would leave stale files behind
+    // when the source dir is regenerated — the stream would silently
+    // ingest old+new and double its rows
+    val staged = java.nio.file.Paths.get(
+      graft.core.Artifacts.freshScratchDir(spark, queryName, dir))
     java.nio.file.Files.createDirectories(staged)
-    // dead apps' staged copies of THIS query's source stop accumulating
-    // (the e10staged_/e11/e12 discipline); age-gating keeps live
-    // concurrent apps' staging safe
-    graft.core.Artifacts.reapStaleWhere("/tmp/graft_stream",
-      n => n.endsWith(s"_$queryName") && !n.startsWith(appTag),
-      keepPath = staged.toString)
     val src0 = java.nio.file.Paths.get(s"$dir/events.parquet")
     if (java.nio.file.Files.isDirectory(src0)) {
       val l = java.nio.file.Files.list(src0)

@@ -249,7 +249,8 @@ class CatalogPlanContractSpec extends SparkSpec {
       "TowerNet.scala:sums" -> (1, "per-partition gradient partials, ordered combine (model-sized)"),
       "TowerNet.scala:trainMinibatch" -> (2, "train/val matrices for the dense kernel behind the denseMaxRows gate, distributed fallback"),
       "TowerNet.scala:valAuc" -> (1, "validation scores for AUC (val-split-bounded)"),
-      "TowerNet.scala:withCorpus" -> (1, "per-partition class counts (2 longs per partition)"))
+      "TowerNet.scala:withCorpus" -> (1, "per-partition class counts (2 longs per partition)"),
+      "TrainLoop.scala:moments" -> (1, "per-partition moment partials, ordered combine (3 doubles per column)"))
     val defRe = """\bdef\s+(\w+)""".r
     val actual = mainSources.flatMap { case (file, src) =>
       // LITERAL occurrence scan (an unquoted regex's dot/parens
@@ -336,6 +337,25 @@ class CatalogPlanContractSpec extends SparkSpec {
     val dup = names.flatMap(_._2).groupBy(identity).collect {
       case (n, uses) if uses.size > 1 => n }
     assert(dup.isEmpty, s"memo names used by more than one call site: ${dup.toSeq.sorted}")
+  }
+
+  test("/tmp census: every /tmp path the engine writes is built in core/Artifacts.scala") {
+    // lex each main source into comments and string literals (triple-
+    // quoted, plain, char) so that only LITERALS count: comments may
+    // name the scheme's paths
+    val tokenRe =
+      """(?s)"{3}.*?"{3}|"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)'|//[^\n]*|/\*.*?\*/""".r
+    val tmpLines = mainSources.flatMap { case (file, src) =>
+      tokenRe.findAllIn(src).filter(_.startsWith("\""))
+        .flatMap(_.linesIterator.filter(_.contains("/tmp/")))
+        .map(line => file -> line.trim)
+    }
+    val (home, elsewhere) = tmpLines.partition(_._1 == "Artifacts.scala")
+    assert(home.nonEmpty, "no /tmp literal found in Artifacts.scala — the census is vacuous")
+    if (elsewhere.nonEmpty)
+      fail("/tmp path built outside graft.core.Artifacts — use Artifacts." +
+        "scratchDir/freshScratchDir:\n" +
+        elsewhere.map { case (f, l) => s"  $f: $l" }.mkString("\n"))
   }
 
   /** (file name, content) of every main source — the walk the static

@@ -64,8 +64,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     // is directly observable; metrics read after execution.
     val ns = spark.newSession()
     ns.conf.set("spark.sql.adaptive.enabled", "false")
-    val layout = graft.catalog.Relational.tmpDir("s12_lineitem_layout", sfDir)
-    val flat = graft.catalog.Relational.tmpDir("s12_lineitem_flat", sfDir)
+    val layout = graft.core.Artifacts.scratchDir(spark, "s12_lineitem_layout", sfDir)
+    val flat = graft.core.Artifacts.freshScratchDir(spark, "s12_lineitem_flat", sfDir)
     graft.core.Tables.lineitem(ns, sfDir)
       .withColumn("ship_year", year(col("l_shipdate")))
       // coalesce(1): one file, interleaved orderkeys — every row group's
@@ -99,7 +99,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       direct.exceptAll(merged).count() === 0,
       "incremental merge diverged from the full recompute")
     // the refresh state is |groups|·|batches| rows — never corpus-sized
-    val base = graft.catalog.ScaleOps.stagingRoot(spark, "e15", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "e15", sfDir)
     val state = spark.read.parquet(s"$base/agg_state")
     val groups = direct.count()
     assert(state.count() === groups * 3,
@@ -128,8 +128,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     // scan surfaces strictly fewer rows. AQE off for observable scans.
     val ns = spark.newSession()
     ns.conf.set("spark.sql.adaptive.enabled", "false")
-    val zPath = graft.catalog.Relational.tmpDir("s15_lineitem_zorder", sfDir)
-    val oPath = graft.catalog.Relational.tmpDir("s15_lineitem_okeysort", sfDir)
+    val zPath = graft.core.Artifacts.scratchDir(spark, "s15_lineitem_zorder", sfDir)
+    val oPath = graft.core.Artifacts.freshScratchDir(spark, "s15_lineitem_okeysort", sfDir)
     graft.core.Tables.lineitem(ns, sfDir)
       .repartitionByRange(64, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
@@ -169,7 +169,7 @@ class ScaleMechanicsSpec extends SparkSpec {
   test("S16: CDC merge rewrites only the touched partitions, semantics exact") {
     val audit = graft.catalog.Relational.queries("s16_cdc_merge")(spark, sfDir)
     audit.collect()
-    val base = graft.catalog.Relational.tmpDir("s16_orders_cow", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "s16_orders_cow", sfDir)
     val dirs = new java.io.File(base).listFiles().filter(_.isDirectory)
       .map(d => d.getName -> d).toMap
     val affected = Seq("o_month=1996-03", "o_month=1996-04")
@@ -214,7 +214,7 @@ class ScaleMechanicsSpec extends SparkSpec {
   test("E17: replay leaves the idempotent store unchanged; append would double") {
     val audit = graft.catalog.ScaleOps.queries("e17_idempotent_replay")(spark, sfDir)
     audit.collect()
-    val base = graft.catalog.ScaleOps.stagingRoot(spark, "e17", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "e17", sfDir)
     val store = spark.read.parquet(s"$base/store")
     val ev = graft.core.Tables.events(spark, sfDir)
     // exactly-once despite the redelivery: full coverage, zero dupes
@@ -223,8 +223,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       "replay duplicated event ids")
     // the contrast that makes this non-vacuous: the APPEND-mode sink
     // under the same redelivery doubles the batch
-    val ctl = s"${base}_ctl"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ctl))
+    val ctl = graft.core.Artifacts.freshScratchDir(spark, "e17_spec_ctl", sfDir)
     val src1 = s"$base/src1"
     graft.streaming.EventStream.incrementalIngest(spark, src1, ctl, startDvid = 2)
     graft.streaming.EventStream.incrementalIngest(spark, src1, ctl, startDvid = 2)
@@ -241,7 +240,9 @@ class ScaleMechanicsSpec extends SparkSpec {
     // readable metrics; DPP is independent of AQE)
     val ns = spark.newSession()
     ns.conf.set("spark.sql.adaptive.enabled", "false")
-    val (s17Fact, s17Dim) = graft.catalog.Relational.s17Paths(spark, sfDir)
+    val (s17Fact, s17Dim) = (
+      graft.core.Artifacts.scratchDir(spark, "s17_lineitem_by_year", sfDir),
+      graft.core.Artifacts.scratchDir(spark, "s17_calendar_dim", sfDir))
     val probe = ns.read.parquet(s17Fact)
       .join(broadcast(ns.read.parquet(s17Dim)
         .filter(col("era") === "late")), Seq("ship_year"))
@@ -279,7 +280,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       "a reader could tell the phases apart — the MOR contract is broken")
     // the store holds exactly the non-deleted rows, and the tombstone
     // dir was retired by the materialization
-    val base = graft.catalog.Relational.tmpDir("s22_mor", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "s22_mor", sfDir)
     val store = spark.read.parquet(s"$base/store")
     val deletedPred = col("o_month").isin("1996-05", "1996-06") &&
       pmod(col("o_orderkey"), lit(7)) === 0
@@ -299,7 +300,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val audit = graft.catalog.ScaleOps.queries("e18_checkpoint_resume")(spark, sfDir)
     audit.collect()
     val store = spark.read.parquet(
-      s"${graft.catalog.ScaleOps.stagingRoot(spark, "e18", sfDir)}/store")
+      s"${graft.core.Artifacts.scratchDir(spark, "e18", sfDir)}/store")
     val ev = graft.core.Tables.events(spark, sfDir)
     // source-side exactly-once: full coverage, zero reprocessing
     assert(store.count() === ev.count(), "resume reprocessed or lost files")
@@ -323,7 +324,7 @@ class ScaleMechanicsSpec extends SparkSpec {
       r.getAs[String]("scenario") -> r.getAs[String]("branch")).toSet
     assert(branches === Set("purge" -> "fold", "trickle" -> "serve"),
       s"wrong decisions: $branches")
-    val base = graft.catalog.ScaleOps.stagingRoot(spark, "s23", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "s23", sfDir)
     // the physical contract the hash gate can't see: the trickle's
     // tombstones are still on disk (no rewrite was scheduled) and its
     // store still physically holds the deleted keys; the purge's
@@ -381,7 +382,7 @@ class ScaleMechanicsSpec extends SparkSpec {
   test("S18: vacuum reclaims exactly the expired versions, invisibly to the window") {
     val audit = graft.catalog.Relational.queries("s18_retention_vacuum")(spark, sfDir)
     assert(audit.count() > 0, "vacuum self-gate emptied the output")
-    val store = graft.catalog.Relational.tmpDir("s18_events_versioned", sfDir)
+    val store = graft.core.Artifacts.scratchDir(spark, "s18_events_versioned", sfDir)
     // the expired partition dirs are GONE, the retained ones intact
     for (d <- Seq(1, 2))
       assert(!new java.io.File(s"$store/dvid=$d").exists(), s"dvid=$d survived vacuum")
@@ -399,7 +400,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val rows = audit.collect()
     assert(rows.nonEmpty && rows.forall(r => r.getBoolean(3) && r.getBoolean(4)),
       "pointer read failed its own cross-table reconciliation")
-    val root = graft.catalog.Relational.publishedRoot(spark, sfDir)
+    val root = graft.core.Artifacts.scratchDir(spark, "s19_published", sfDir)
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/_CURRENT")).trim === "v=2",
       "publish did not flip the pointer")
@@ -426,8 +427,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     assert(reread.count() > 0, "reader over crash debris failed")
     // and a RE-PUBLISH self-heals over debris — exercised directly on a
     // spec-owned root (the shared store's memo deliberately skips it)
-    val specRoot = graft.catalog.Relational.tmpDir("s19_spec_republish", sfDir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(specRoot))
+    val specRoot = graft.core.Artifacts.freshScratchDir(spark, "s19_spec_republish", sfDir)
     spark.read.parquet(s"$root/v=2/by_customer").limit(1)
       .write.parquet(s"$specRoot/v=9/by_customer") // pre-seeded debris
     graft.catalog.Relational.publishVersions(spark, sfDir, specRoot,
@@ -442,7 +442,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     val out = graft.catalog.Relational.queries("s21_time_travel")(spark, sfDir)
     // the window is monotone: v2 extends v1, nothing can shrink
     assert(out.count() > 0 && out.filter($"orders_added" < 0).count() === 0)
-    val root = graft.catalog.Relational.publishedRoot(spark, sfDir)
+    val root = graft.core.Artifacts.scratchDir(spark, "s19_published", sfDir)
     // the pointer moved on to v2…
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/_CURRENT")).trim === "v=2")
@@ -465,8 +465,7 @@ class ScaleMechanicsSpec extends SparkSpec {
     assert(out.count() > 0, "s20 self-gate emptied the output")
 
     // crash-scenario construction on a spec-owned store
-    val root = graft.catalog.Relational.tmpDir("s20_spec_store", sfDir)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.core.Artifacts.freshScratchDir(spark, "s20_spec_store", sfDir)
     spark.range(100).toDF("event_id")
       .withColumn("dvid", (pmod($"event_id", lit(2)) + 1).cast("int"))
       .write.partitionBy("dvid").parquet(s"$root/data")
@@ -512,8 +511,8 @@ class ScaleMechanicsSpec extends SparkSpec {
     import graft.sources.Compactor
     // run the entry: stages 48-file debris, compacts, aggregates
     graft.catalog.Relational.queries("s13_small_file_compaction")(spark, sfDir).collect()
-    val staged = graft.catalog.Relational.tmpDir("s13_events_debris", sfDir)
-    val compacted = graft.catalog.Relational.tmpDir("s13_events_compacted", sfDir)
+    val staged = graft.core.Artifacts.scratchDir(spark, "s13_events_debris", sfDir)
+    val compacted = graft.core.Artifacts.scratchDir(spark, "s13_events_compacted", sfDir)
     assert(Compactor.dataFiles(spark, staged) === 48, "debris staging changed")
     val nOut = Compactor.dataFiles(spark, compacted)
     assert(nOut <= 6, s"tail not collapsed: $nOut files")

@@ -149,8 +149,8 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(pre === post,
       "merge→compact→serve diverged from merge→serve — compaction visible to a reader")
     // the touched partitions (the churn point) collapse to one file each
-    val e19 = graft.catalog.ScaleOps.stagingRoot(spark, "e19", dir)
-    val e20 = graft.catalog.ScaleOps.stagingRoot(spark, "e20", dir)
+    val e19 = graft.core.Artifacts.scratchDir(spark, "e19", dir)
+    val e20 = graft.core.Artifacts.scratchDir(spark, "e20", dir)
     Seq("1996-03", "1996-04").foreach { m =>
       val in = graft.sources.Compactor.dataFiles(spark,
         s"$e19/store/o_month=$m")
@@ -172,7 +172,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       "a reader could tell the phases apart — the streamed MOR contract is broken")
     // exactly-once across the restart AND idempotent key overlap: the
     // materialized store is raw-1996 minus the distinct deleted keys
-    val base = graft.catalog.ScaleOps.stagingRoot(spark, "e21", sfDir)
+    val base = graft.core.Artifacts.scratchDir(spark, "e21", sfDir)
     val raw = graft.core.Tables.orders(spark, sfDir)
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .filter(col("o_month").startsWith("1996-"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ml.{LinkPredict, TowerNet}
+import graft.ml.{LinkPredict, TowerNet, TrainLoop}
 
 class TowerNetSpec extends SparkSpec {
   import spark.implicits._
@@ -25,18 +25,40 @@ class TowerNetSpec extends SparkSpec {
       s"(a linear model caps at 0.5 — tower backprop is broken)")
   }
 
+  test("standardization moments: bit-identical per call, equal to avg/stddev_pop") {
+    val fs = LinkPredict.featureNames
+    val df = LinkPredict.trainingSet(spark, sfDir, cap = 1000)
+      .select(fs.map(c => col(c).cast("double")): _*).cache()
+    try {
+      val first = TrainLoop.moments(df)
+      (1 until 12).foreach(_ => assert(TrainLoop.moments(df) === first))
+      val aggs = fs.flatMap(c => Seq(avg(c), stddev_pop(c)))
+      val ref = df.agg(aggs.head, aggs.tail: _*).head()
+      first.zipWithIndex.foreach { case ((mu, sd), i) =>
+        val (refMu, refSd) = (ref.getDouble(2 * i), ref.getDouble(2 * i + 1))
+        // the mean to 1e-12 of the column's scale (a centred column's
+        // mean is ~0, where a relative bound means nothing)
+        assert(math.abs(mu - refMu) <= 1e-12 * math.max(math.abs(refMu), refSd),
+          s"${fs(i)}: mean $mu vs avg $refMu")
+        assert(math.abs(sd - refSd) <= 1e-12 * refSd,
+          s"${fs(i)}: σ $sd vs stddev_pop $refSd")
+      }
+    } finally df.unpersist()
+  }
+
   test("trajectory is deterministic and satisfies its own invariants") {
     val corpus = xorCorpus(1000).cache()
     val r1 = TowerNet.train(corpus, epochs = 12)
     val r2 = TowerNet.train(corpus, epochs = 12)
     // rerun on the same frame → same trajectory to ~ulp precision
-    // (seeded init, hash split, fixed per-partition fold order, and the
-    // gradient partials combine on the driver in partition-index order;
-    // the standardization moments are Spark's avg/stddev_pop, whose
-    // per-partition buffers merge in no fixed order, so σ — and every
-    // later bit — may differ in the last place between runs. Same
-    // contract as m12: the m14b gate re-derives from ONE persisted run,
-    // and the entry's outputs round at 1e-6)
+    // (seeded init, hash split, fixed per-partition fold order, and both
+    // the standardization moments and the gradient partials combine on
+    // the driver in partition-index order). Not bit for bit: the
+    // split's `coalesce` groups the cached corpus's partitions one way
+    // before its blocks are cached and another way after, so the two
+    // runs fold their rows in different orders. Same contract as m12:
+    // the m14b gate re-derives from ONE persisted run, and the entry's
+    // outputs round at 1e-6
     r1.epochs.zip(r2.epochs).foreach { case (a, b) =>
       assert(math.abs(a.trainLoss - b.trainLoss) < 1e-9)
       assert(math.abs(a.aucVal - b.aucVal) < 1e-9)
