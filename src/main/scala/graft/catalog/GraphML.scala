@@ -479,7 +479,7 @@ object GraphML extends CatalogModule {
   // reference's compute_class_weight('balanced') ≡ n/(2·n_c)
   // (Neural_network_multi_towered_training.py:647-649) recomputed
   // relationally from the persisted counts in both engines. This is the
-  // exact weight LinkPredict.train binds to weightCol (AdamWTrainer's
+  // exact weight LinkPredict.train puts on each row (AdamWTrainer's
   // pos_weight is the same balancing idea on its own split/seed —
   // nNeg/nPos, seed 47 — so its artifact would differ; M10's gate
   // lives here).
@@ -523,23 +523,13 @@ object GraphML extends CatalogModule {
     graft.core.AppCache.memo(spark, "graphml.m2Fits", dir) {
       // lrMaxIter = 5: measured convergence point on the 4-month corpus —
       // auc_val/overfit_gap stable to 4+ decimals at 5/6/8/10/15 iters.
-      // The two fits share the materialized base corpus and run as
-      // CONCURRENT job groups — each L-BFGS pass is a small job that
-      // underfills the 32 cores, so overlapping the twins roughly
-      // halves the pair's wall time.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // build the shared cached base before forking (the memo's build
-      // lock in trainingSetCached would otherwise serialize the twins anyway)
-      LinkPredict.multiDateTrainingSet(spark, dir, withDiscount = true)
-      val fWith = Future(LinkPredict.train(spark,
+      // The twins share the materialized base corpus.
+      (LinkPredict.train(spark,
         LinkPredict.multiDateTrainingSet(spark, dir, withDiscount = true), "lr",
-        lrMaxIter = 5))
-      val fNo = Future(LinkPredict.train(spark,
+        lrMaxIter = 5),
+       LinkPredict.train(spark,
         LinkPredict.multiDateTrainingSet(spark, dir, withDiscount = false), "lr",
         lrMaxIter = 5))
-      (Await.result(fWith, Duration.Inf), Await.result(fNo, Duration.Inf))
     }
 
   private def m7Fit(spark: SparkSession, dir: String): graft.ml.MultiTower.Result =
@@ -578,8 +568,7 @@ object GraphML extends CatalogModule {
     val r = fit(spark, dir, "gbt")
     val persisted = Artifacts.write(spark, dir, "m1_scored",
       r.scoredVal.select(col("label"), p1Col.as("p")))
-    val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"),
-      bounds = Some((0.0, 1.0)))
+    val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"))
     graft.ml.Metrics.confusion(persisted, "label", col("p"), 0.5)
       .withColumn("auc", round(lit(aucV), 6))
   }
@@ -613,8 +602,7 @@ object GraphML extends CatalogModule {
   // accuracy recomputed from the bits.
   private def m7bMlpDeterministic(spark: SparkSession, dir: String): DataFrame = {
     val persisted = Artifacts.write(spark, dir, "m7_scored", m7Fit(spark, dir).scoredVal)
-    val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"),
-      bounds = Some((0.0, 1.0)))
+    val aucV = graft.ml.Metrics.auc(persisted, "label", col("p"))
     persisted.agg(
       count(lit(1)).as("n_val"),
       sum(when(col("prediction") === col("label"), 1L).otherwise(0L)).as("n_correct"))

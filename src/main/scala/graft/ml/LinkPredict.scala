@@ -1,24 +1,28 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression}
+import org.apache.spark.ml.classification.GBTClassifier
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.ColFns
 
-/** Link-prediction training pipeline (SURVEY §2.11 M1–M11), MLlib-first:
+/** Link-prediction training pipeline (SURVEY §2.11 M1–M11): MLlib's
   * GBTClassifier stands in for XGBoost (parity target = interface +
-  * metric gates, SURVEY §7.4 trap 7), LogisticRegression for the fast
+  * metric gates, SURVEY §7.4 trap 7), logistic regression is the fast
   * path. Implements the reference's training *policy*: stratified split,
   * class weighting (M10), overfit gate (M3: train−val AUC gap ≤ 0.06
   * or revert), threshold sweep targeting F1 (M5), gain-style feature
   * importance (M11).
   *
   * Scale shape: feature assembly is broadcast joins of the pair table
-  * against per-node feature tables (J5); the training-set cap is a
-  * hash-thinned sample so the pipeline is constant-memory regardless of
-  * corpus size.
+  * against per-node feature tables (J5), and the training-set cap is a
+  * hash-thinned sample, so a trainer's corpus is bounded by the cap
+  * (rows per class and month slice), not by the data. That bound lets
+  * the LR fit run on the driver: one collect, then MLlib's objective
+  * and breeze L-BFGS in memory, yielding a real LogisticRegressionModel.
+  * GBT keeps MLlib's distributed fit.
   */
 object LinkPredict {
 
@@ -131,68 +135,191 @@ object LinkPredict {
 
   /** M1/M3/M4/M10: train + evaluate with the reference's policy gates.
     *
-    * The corpus is coalesced to a few fat partitions before the fit:
-    * iterative trainers (L-BFGS / GBT) run one job per pass, and on a
-    * cached sub-100k-row corpus per-task scheduling dominates compute —
-    * 32 (or 128, post-union) partitions × 25 LR iterations is thousands
-    * of no-op tasks. At real scale the partition count is the data's;
-    * this floor only kicks in when partitions are near-empty. */
+    * Both algorithms share the hash split (`isTrain`), the balanced
+    * class weights (M10) and the gate metrics, which are finished on the
+    * driver from one collect of scores.
+    *
+    *  - "lr" fits on the driver (`fitLogistic`): the corpus is collected
+    *    once, sorted by pair, and L-BFGS runs in memory — one job for the
+    *    whole fit and its metrics, where MLlib's estimator ran one job
+    *    per L-BFGS pass. The bound is the corpus: every caller passes a
+    *    hash-capped training set (≤ cap rows per class and month slice,
+    *    plus SMOTE's ≤ 3 synthetic rows per minority row).
+    *  - "gbt" keeps MLlib's distributed fit on a split coalesced to two
+    *    partitions: on a sub-100k-row corpus per-task scheduling, not
+    *    compute, dominates each tree-level job. */
   def train(spark: SparkSession, data: DataFrame,
             algo: String = "gbt", maxIter: Int = 10, seed: Long = 42L,
             maxDepth: Int = 5, lrMaxIter: Int = 15): TrainResult = {
-    val assembled = FeatureLayout
-      .assemble(data.coalesce(2), FeatureLayout.DiscountV1)
-      .withColumn("split",
-        when(ColFns.pseudoUniform(
-          xxhash64(col("customer"), col("product")), 41L) < 0.8, "train")
-          .otherwise("test"))
-    val train = assembled.filter(col("split") === "train").cache()
-    val test = assembled.filter(col("split") === "test").cache()
-
-    // M10: balanced class weights — one aggregate job for both classes
-    // (two filter().count() jobs would scan the cache twice)
-    val classCounts = train.groupBy("label").count().collect()
-      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    val nPos = math.max(classCounts.getOrElse(1.0, 0L), 1L)
-    val nNeg = math.max(classCounts.getOrElse(0.0, 0L), 1L)
-    val total = (nPos + nNeg).toDouble
-    val weighted = train.withColumn("w",
-      when(col("label") === 1.0, total / (2.0 * nPos)).otherwise(total / (2.0 * nNeg)))
-
-    val (model: org.apache.spark.ml.Transformer, importances) = algo match {
-      case "gbt" =>
-        val m = new GBTClassifier().setLabelCol("label").setFeaturesCol("features")
-          .setWeightCol("w").setMaxIter(maxIter).setMaxDepth(maxDepth)
-          .setStepSize(0.1).setSubsamplingRate(0.8).setSeed(seed)
-          .fit(weighted)
-        (ModelRegistry.stripSummary(m), featureNames.zip(m.featureImportances.toArray))
-      case "lr" =>
-        // summary-free before any transform: scoring closures must never
-        // drag the fit session (see ModelRegistry.stripSummary)
-        val m = ModelRegistry.stripSummary(
-          new LogisticRegression().setLabelCol("label").setFeaturesCol("features")
-            .setWeightCol("w").setMaxIter(lrMaxIter).setRegParam(0.01)
-            .fit(weighted))
-        (m, featureNames.zip(m.coefficients.toArray.map(math.abs)))
+    val assembled = FeatureLayout.assemble(data, FeatureLayout.DiscountV1)
+      .withColumn("split", when(isTrain, "train").otherwise("test"))
+    algo match {
+      case "gbt" => trainGbt(spark, assembled, maxIter, seed, maxDepth)
+      case "lr" => trainLr(spark, assembled, lrMaxIter)
     }
+  }
 
-    val p1 = org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1)
-    val scoredTrain = model.transform(train)
-    val scoredVal = model.transform(test)
-    val aucTrain =
-      Metrics.auc(scoredTrain, "label", p1, bounds = Some((0.0, 1.0)))
-    // val side: ROC + PR in one grouped pass (vs a Metrics.auc pass plus
-    // MLlib's multi-stage BinaryClassificationMetrics pipeline)
-    val (aucVal, prVal) =
-      Metrics.binaryAucs(scoredVal, "label", p1, bounds = Some((0.0, 1.0)))
+  /** The validation split's scored rows as a frame over driver-held
+    * rows: a memoized result must not read through the caller's
+    * corpus, whose checkpoint an AppCache trim may release. */
+  private def localFrame(spark: SparkSession, rows: Array[Row],
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The 80/20 split on a hash of the pair, so a pair's side never
+    * depends on partitioning (m10 persists the same split's counts). */
+  private val isTrain: Column =
+    ColFns.pseudoUniform(xxhash64(col("customer"), col("product")), 41L) < 0.8
+
+  /** M10: balanced class weights n / (2·n_c) for (positive, negative). */
+  private def classWeights(nPos: Long, nNeg: Long): (Double, Double) = {
+    val (p, n) = (math.max(nPos, 1L), math.max(nNeg, 1L))
+    val total = (p + n).toDouble
+    (total / (2.0 * p), total / (2.0 * n))
+  }
+
+  /** M3/M4 gate metrics from driver-side (p1, label) scores per split. */
+  private def gateMetrics(trainScores: Array[(Double, Double)],
+                          valScores: Array[(Double, Double)]): Map[String, Double] = {
+    val aucTrain = Metrics.rocPr(Metrics.driverHist(trainScores))._1
+    val (aucVal, prVal) = Metrics.rocPr(Metrics.driverHist(valScores))
     val gap = aucTrain - aucVal
-    val metrics = Map(
-      "n_train" -> classCounts.values.sum.toDouble, "n_test" -> test.count().toDouble,
+    Map(
+      "n_train" -> trainScores.length.toDouble, "n_test" -> valScores.length.toDouble,
       "auc_train" -> aucTrain, "auc_val" -> aucVal, "pr_auc_val" -> prVal,
       "overfit_gap" -> gap,
       // M3's acceptance gate: reject models that memorize
       "gate_pass" -> (if (gap <= 0.06) 1.0 else 0.0))
-    TrainResult(model, scoredVal, metrics, importances)
+  }
+
+  private def trainGbt(spark: SparkSession, assembled: DataFrame, maxIter: Int,
+                       seed: Long, maxDepth: Int): TrainResult = {
+    val train = assembled.coalesce(2).filter(col("split") === "train").cache()
+    val m = try {
+      // one aggregate job for both class counts
+      val counts = train.groupBy("label").count().collect()
+        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      val (wPos, wNeg) =
+        classWeights(counts.getOrElse(1.0, 0L), counts.getOrElse(0.0, 0L))
+      new GBTClassifier().setLabelCol("label").setFeaturesCol("features")
+        .setWeightCol("w").setMaxIter(maxIter).setMaxDepth(maxDepth)
+        .setStepSize(0.1).setSubsamplingRate(0.8).setSeed(seed)
+        .fit(train.withColumn("w", when(col("label") === 1.0, wPos).otherwise(wNeg)))
+    } finally train.unpersist()
+    val model = ModelRegistry.stripSummary(m)
+    // both splits scored by one transform, one collect
+    val scored = model.transform(assembled)
+    val (tr, va) = scored.collect().partition(_.getAs[String]("split") == "train")
+    def scores(rs: Array[Row]) = rs.map(r =>
+      (r.getAs[Vector]("probability")(1), r.getAs[Number]("label").doubleValue))
+    TrainResult(model, localFrame(spark, va, scored.schema),
+      gateMetrics(scores(tr), scores(va)),
+      featureNames.zip(m.featureImportances.toArray))
+  }
+
+  /** One collected corpus row of the driver LR fit. */
+  private final case class Obs(customer: Long, product: Long, label: Double,
+                               x: Vector, train: Boolean, row: Row)
+
+  private def obs(r: Row): Obs =
+    Obs(r.getAs[Number]("customer").longValue, r.getAs[Number]("product").longValue,
+      r.getAs[Number]("label").doubleValue, r.getAs[Vector]("features"),
+      r.getAs[String]("split") == "train", r)
+
+  /** Pair first, then label and features: a total row order no
+    * partition layout can change (a multi-month corpus holds each pair
+    * once per slice). The fit's float sums follow it, so the model and
+    * its metrics are bit-stable. */
+  private val obsOrder: Ordering[Obs] = new Ordering[Obs] {
+    def compare(a: Obs, b: Obs): Int = {
+      val c = java.lang.Long.compare(a.customer, b.customer)
+      if (c != 0) return c
+      val p = java.lang.Long.compare(a.product, b.product)
+      if (p != 0) return p
+      val l = java.lang.Double.compare(a.label, b.label)
+      if (l != 0) l else java.util.Arrays.compare(a.x.toArray, b.x.toArray)
+    }
+  }
+
+  private def trainLr(spark: SparkSession, assembled: DataFrame,
+                      lrMaxIter: Int): TrainResult = {
+    val (tr, va) = assembled.collect().map(obs).sorted(obsOrder).partition(_.train)
+    val (wPos, wNeg) = classWeights(tr.count(_.label == 1.0), tr.count(_.label == 0.0))
+    val (coef, intercept) = fitLogistic(tr.map(_.x.toArray), tr.map(_.label),
+      tr.map(o => if (o.label == 1.0) wPos else wNeg), regParam = 0.01, lrMaxIter)
+    val model = org.apache.spark.ml.GraftModelBridge
+      .logisticRegressionModel(Vectors.dense(coef), intercept)
+    // predictProbability is the arithmetic transform's probability
+    // column runs, on the same assembled vectors: bit-identical scores
+    def scores(os: Array[Obs]) = os.map(o => (model.predictProbability(o.x)(1), o.label))
+    TrainResult(model, model.transform(localFrame(spark, va.map(_.row), assembled.schema)),
+      gateMetrics(scores(tr), scores(va)), featureNames.zip(coef.map(math.abs)))
+  }
+
+  /** MLlib's binary LogisticRegression fit (standardization on, one
+    * intercept), run on the driver. Features are standardized by the
+    * weighted mean and the unbiased weighted σ, as MLlib's Summarizer
+    * computes them (a σ = 0 column drops out). The objective is the
+    * weighted log-loss over Σw plus regParam/2 · ‖β‖² on the standardized
+    * coefficients, with the intercept unpenalized. Breeze's
+    * LBFGS(maxIter, m = 10, tol = 1e-6), the optimizer MLlib calls,
+    * minimizes it from zero coefficients and the weighted label
+    * log-odds. Returns the coefficients on the original scale and the
+    * intercept. */
+  private def fitLogistic(x: Array[Array[Double]], y: Array[Double],
+                          w: Array[Double], regParam: Double,
+                          maxIter: Int): (Array[Double], Double) = {
+    import breeze.linalg.{DenseVector => BDV}
+    import breeze.optimize.{CachedDiffFunction, DiffFunction, LBFGS}
+    require(x.nonEmpty, "logistic fit on an empty train split")
+    val (n, d) = (x.length, x.head.length)
+    val wSum = w.sum
+    val wPos = y.indices.map(i => if (y(i) > 0) w(i) else 0.0).sum
+    val wNeg = wSum - wPos
+    // one class only: MLlib's constant-label answer, no optimization
+    if (wPos == 0 || wNeg == 0)
+      return (Array.fill(d)(0.0),
+        if (wPos == 0) Double.NegativeInfinity else Double.PositiveInfinity)
+    val mean = Array.tabulate(d)(j => x.indices.map(i => w(i) * x(i)(j)).sum / wSum)
+    val varDenom = wSum - w.map(v => v * v).sum / wSum
+    val std = Array.tabulate(d) { j =>
+      val m2 = x.indices.map(i => w(i) * (x(i)(j) - mean(j)) * (x(i)(j) - mean(j))).sum
+      if (varDenom > 0) math.sqrt(math.max(m2 / varDenom, 0.0)) else 0.0
+    }
+    val inv = std.map(s => if (s != 0) 1.0 / s else 0.0)
+    val z = x.map(r => Array.tabulate(d)(j => (r(j) - mean(j)) * inv(j)))
+    def log1pExp(v: Double) = if (v > 0) v + math.log1p(math.exp(-v)) else math.log1p(math.exp(v))
+    val loss = new DiffFunction[BDV[Double]] {
+      def calculate(beta: BDV[Double]): (Double, BDV[Double]) = {
+        val g = new Array[Double](d + 1)
+        var l = 0.0
+        var i = 0
+        while (i < n) {
+          val zi = z(i)
+          var m = beta(d)
+          var j = 0
+          while (j < d) { m += beta(j) * zi(j); j += 1 }
+          l += w(i) * (if (y(i) > 0) log1pExp(-m) else log1pExp(-m) + m)
+          val mult = w(i) * (1.0 / (1.0 + math.exp(-m)) - y(i))
+          j = 0
+          while (j < d) { g(j) += mult * zi(j); j += 1 }
+          g(d) += mult
+          i += 1
+        }
+        var reg = 0.0
+        var j = 0
+        while (j < d) { g(j) = g(j) / wSum + regParam * beta(j); reg += beta(j) * beta(j); j += 1 }
+        g(d) /= wSum
+        (l / wSum + 0.5 * regParam * reg, BDV(g))
+      }
+    }
+    val init = BDV.zeros[Double](d + 1)
+    init(d) = math.log(wPos / wNeg)
+    val beta = new LBFGS[BDV[Double]](maxIter, 10, 1e-6)
+      .minimizeAndReturnState(new CachedDiffFunction(loss), init).x
+    // back to the original scale: z = (x − μ)/σ folds μ into the intercept
+    (Array.tabulate(d)(j => if (std(j) != 0) beta(j) / std(j) else 0.0),
+      beta(d) - (0 until d).map(j => beta(j) * (inv(j) * mean(j))).sum)
   }
 
   /** R6 (full form): SMOTE-style interpolated oversampling — synthetic
@@ -286,12 +413,13 @@ object LinkPredict {
   /** M5: threshold sweep over scored validation output — one explode +
     * groupBy, no driver loop. Returns (threshold, tp, fp, fn, precision,
     * recall, f1) per threshold. */
-  def thresholdSweep(scored: DataFrame, thresholds: Seq[Double]): DataFrame = {
-    val p1 = org.apache.spark.ml.functions.vector_to_array(col("probability"))
-      .getItem(1)
+  def thresholdSweep(scored: DataFrame, thresholds: Seq[Double]): DataFrame =
     thresholdSweepScores(scored.select(col("label"), p1.as("p")),
       col("p"), thresholds)
-  }
+
+  /** probability[1] of a fitted classifier's output. */
+  private val p1: Column =
+    org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1)
 
   /** The same sweep over a plain score column (no MLlib vector coupling)
     * — lets the operator run on any (label, score) frame, which is also

@@ -90,14 +90,8 @@ object Metrics {
     if (np == 0 || nn == 0) 0.0
     else (rankPos - np * (np + 1.0) / 2.0) / (np * nn)
 
-  /** Exact ROC-AUC of `scoreCol` against a 0/1 `labelCol`.
-    *
-    * `bounds` is retained for source compatibility and ignored: the
-    * distributed fallback's bucketing is equi-depth (quantile
-    * boundaries from the histogram itself), which needs no a-priori
-    * range and survives any score distribution. */
-  def auc(scored: DataFrame, labelCol: String, scoreCol: Column,
-          bounds: Option[(Double, Double)] = None): Double =
+  /** Exact ROC-AUC of `scoreCol` against a 0/1 `labelCol`. */
+  def auc(scored: DataFrame, labelCol: String, scoreCol: Column): Double =
     aucBounded(scored, labelCol, scoreCol, MaxDriverHist)
 
   /** `driverBound` is a test seam (forces the distributed path with a
@@ -140,8 +134,8 @@ object Metrics {
     * MLlib's (0, p₁) starting point — exact over every distinct score
     * instead of MLlib's 1000-bin downsampling. Same two shapes as
     * `auc`. */
-  def binaryAucs(scored: DataFrame, labelCol: String, scoreCol: Column,
-                 bounds: Option[(Double, Double)] = None): (Double, Double) =
+  def binaryAucs(scored: DataFrame, labelCol: String,
+                 scoreCol: Column): (Double, Double) =
     binaryAucsBounded(scored, labelCol, scoreCol, MaxDriverHist)
 
   private[graft] def binaryAucsBounded(scored: DataFrame, labelCol: String,
@@ -149,25 +143,49 @@ object Metrics {
                                     driverBound: Int): (Double, Double) = {
     val byScore = histogram(scored, labelCol, scoreCol).cache()
     try takeHist(byScore, driverBound) match {
-      case Some(asc) =>
-        val (rankPos, np, nTot) = rankStats(asc)
-        if (np == 0 || np == nTot) return (0.0, 0.0)
-        // descending traversal builds the PR curve exactly as the
-        // reference's sweep does: first (highest-score) group seeds the
-        // (0, p₁) start, each later group closes one trapezoid
-        var cn = 0L; var cp = 0.0; var prevR = 0.0; var prevP = 0.0
-        var prAuc = 0.0; var first = true
-        asc.reverseIterator.foreach { case (_, n, npos) =>
-          cn += n; cp += npos
-          val recall = cp / np
-          val prec = cp / cn
-          if (first) { prevP = prec; first = false }
-          prAuc += (recall - prevR) * (prec + prevP) / 2.0
-          prevR = recall; prevP = prec
-        }
-        (finishRoc(rankPos, np, nTot - np), prAuc)
+      case Some(asc) => rocPr(asc)
       case None => binaryAucsDistributed(byScore)
     } finally byScore.unpersist()
+  }
+
+  /** ROC-AUC and PR-AUC of an ascending (s, n, npos) histogram on the
+    * driver; (0, 0) when one class is absent. */
+  private[graft] def rocPr(asc: Array[(Double, Long, Double)]): (Double, Double) = {
+    val (rankPos, np, nTot) = rankStats(asc)
+    if (np == 0 || np == nTot) return (0.0, 0.0)
+    // descending traversal builds the PR curve exactly as the
+    // reference's sweep does: first (highest-score) group seeds the
+    // (0, p₁) start, each later group closes one trapezoid
+    var cn = 0L; var cp = 0.0; var prevR = 0.0; var prevP = 0.0
+    var prAuc = 0.0; var first = true
+    asc.reverseIterator.foreach { case (_, n, npos) =>
+      cn += n; cp += npos
+      val recall = cp / np
+      val prec = cp / cn
+      if (first) { prevP = prec; first = false }
+      prAuc += (recall - prevR) * (prec + prevP) / 2.0
+      prevR = recall; prevP = prec
+    }
+    (finishRoc(rankPos, np, nTot - np), prAuc)
+  }
+
+  /** The tie-grouped ascending histogram of (score, label) pairs already
+    * on the driver — what `histogram` + `takeHist` build from a frame. */
+  private[graft] def driverHist(scored: Array[(Double, Double)]): Array[(Double, Long, Double)] = {
+    val asc = scored.sortBy(_._1)(Ordering.Double.TotalOrdering)
+    val out = Array.newBuilder[(Double, Long, Double)]
+    var i = 0
+    while (i < asc.length) {
+      // ties as Spark's grouping keys them: 0.0 = -0.0, NaN = NaN
+      val s = asc(i)._1
+      var j = i; var npos = 0.0
+      while (j < asc.length && (asc(j)._1 == s || asc(j)._1.isNaN && s.isNaN)) {
+        npos += asc(j)._2; j += 1
+      }
+      out += ((s, (j - i).toLong, npos))
+      i = j
+    }
+    out.result()
   }
 
   /** Distributed PR/ROC: per-bucket totals come to the driver once;

@@ -55,9 +55,9 @@ object MultiTower {
       .setMaxIter(maxIter).setSeed(seed).setBlockSize(128)
     val pipeline = new Pipeline().setStages((stages :+ concat :+ mlp).toArray)
 
-    // few fat partitions: L-BFGS runs maxIter jobs over the cached
-    // corpus, and per-task overhead dominates at this row count (same
-    // rationale as LinkPredict.train)
+    // few fat partitions: MLlib's L-BFGS runs one job per pass over the
+    // cached corpus, and at this row count per-task scheduling, not
+    // compute, dominates each pass
     val split = data.coalesce(2).withColumn("part",
       when(ColFns.pseudoUniform(xxhash64(col("customer"), col("product")), 43L) < 0.8,
         "train").otherwise("test"))
@@ -69,13 +69,13 @@ object MultiTower {
       val model = ModelRegistry.stripSummary(pipeline.fit(train))
       val scored = model.transform(test).cache()
       val p1 = org.apache.spark.ml.functions.vector_to_array(col("probability")).getItem(1)
-      val auc = Metrics.auc(scored, "label", p1, bounds = Some((0.0, 1.0)))
+      val auc = Metrics.auc(scored, "label", p1)
       // train-side AUC feeds the reference's overfit gate
       // (xgboost_training_for_big_data.py:523-529: reject when
       // train_auc - val_auc > 0.06) applied to the MLP approximation —
       // the same acceptance shape the reference imposes on its NN.
       val scoredTrain = model.transform(train)
-      val aucTrain = Metrics.auc(scoredTrain, "label", p1, bounds = Some((0.0, 1.0)))
+      val aucTrain = Metrics.auc(scoredTrain, "label", p1)
       val gap = aucTrain - auc
       val acc = scored.filter(col("prediction") === col("label")).count().toDouble /
         math.max(scored.count(), 1L)

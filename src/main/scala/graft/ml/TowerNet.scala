@@ -170,16 +170,7 @@ object TowerNet {
     * Metrics.auc finishes on the driver, and finished by the same rank
     * math — applied to a bounded validation slice. */
   private[graft] def rankAuc(scored: Array[(Double, Double)]): Double = {
-    val asc = scored.sortBy(_._1)
-    val hist = Array.newBuilder[(Double, Long, Double)]
-    var i = 0
-    while (i < asc.length) {
-      var j = i; var npos = 0.0
-      while (j < asc.length && asc(j)._1 == asc(i)._1) { npos += asc(j)._2; j += 1 }
-      hist += ((asc(i)._1, (j - i).toLong, npos))
-      i = j
-    }
-    val (rankPos, np, nTot) = Metrics.rankStats(hist.result())
+    val (rankPos, np, nTot) = Metrics.rankStats(Metrics.driverHist(scored))
     Metrics.finishRoc(rankPos, np, nTot - np)
   }
 

@@ -230,7 +230,8 @@ class CatalogPlanContractSpec extends SparkSpec {
       "GraphXAnalytics.scala:shortestPaths" -> (1, "hub id set (|hubs| rows, broadcast-bound)"),
       "GraphXAnalytics.scala:triangles" -> (1, "dense adjacency leg behind the 2.5M-edge gate"),
       "LinkPredict.scala:incrementalTrain" -> (1, "capped-corpus readout for the registry fit"),
-      "LinkPredict.scala:train" -> (1, "class counts (2 rows) for weighting"),
+      "LinkPredict.scala:trainGbt" -> (2, "class counts (2 rows) for weighting + the scored capped corpus for the driver metrics and the held validation frame"),
+      "LinkPredict.scala:trainLr" -> (1, "hash-capped corpus (≤ cap rows per class and slice) for the driver L-BFGS fit, its metrics and the held validation frame"),
       "Louvain.scala:detectSequential" -> (1, "dense leg behind its gate, distributed fallback in detect()"),
       "Louvain.scala:parts" -> (1, "graph constants m2/selfW, one 2-row readout per level"),
       "Louvain.scala:modularityFromParts" -> (1, "composed-Q scalars, one 2-row readout per level"),

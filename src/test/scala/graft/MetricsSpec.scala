@@ -46,6 +46,15 @@ class MetricsSpec extends SparkSpec {
       "label", col("s")) === 0.0)
   }
 
+  test("Metrics.driverHist + rocPr ≡ binaryAucs on tied scores") {
+    val pairs = (1 to 3000).map { i =>
+      val s = math.floor(((i * 7919L) % 1009) / 1009.0 * 50) / 50.0
+      (s, if ((i * 31L) % 7 < 2 + 3 * s) 1.0 else 0.0)
+    }.toArray
+    val want = Metrics.binaryAucs(pairs.toSeq.toDF("s", "label"), "label", col("s"))
+    assert(Metrics.rocPr(Metrics.driverHist(pairs)) === want)
+  }
+
   test("distributed AUC ≡ driver AUC on concentrated scores") {
     val exact = Metrics.aucBounded(concentrated, "label", col("s"), 1 << 20)
     val dist = Metrics.aucBounded(concentrated, "label", col("s"), 1000)

@@ -142,20 +142,6 @@ class PipelineArtifactsSpec extends SparkSpec {
     assert(pruned.count() === 1)
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 

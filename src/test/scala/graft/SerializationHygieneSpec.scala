@@ -14,19 +14,7 @@ import org.apache.spark.ml.classification.LogisticRegression
   * pins plan regressions.
   */
 class SerializationHygieneSpec extends SparkSpec {
-
-  private def syntheticCorpus(s: org.apache.spark.sql.SparkSession) = {
-    import s.implicits._
-    (1 to 600).map { i =>
-      val label = if (i % 3 == 0) 1.0 else 0.0
-      (i.toLong % 40, (i * 7).toLong % 60, label,
-        (i % 11).toDouble, (i % 17).toDouble, (i % 5).toDouble * 100.0,
-        (i % 13).toDouble, (i % 7).toDouble * 10.0, (i % 3).toDouble * 0.1,
-        (i % 19).toDouble / 19.0)
-    }.toDF("customer", "product", "label",
-      "cust_frequency", "cust_recency", "acctbal",
-      "part_popularity", "price", "discount", "bal_x_price")
-  }
+  import SerializationHygieneSpec.syntheticCorpus
 
   test("LR train+score survives a session whose ObservationManager is initialized") {
     // a dedicated child session so the shared test session stays clean
@@ -272,5 +260,22 @@ class SerializationHygieneSpec extends SparkSpec {
     assert(v === "rebuilt" && attempts.get === 2)
     assert(AppCache.memo(spark, "test.throws")("unused") === "rebuilt")
     assert(attempts.get === 2)
+  }
+}
+
+object SerializationHygieneSpec {
+  /** 600 rows: 120 (customer, product) pairs, each five times with
+    * different features; one positive in three. */
+  def syntheticCorpus(s: org.apache.spark.sql.SparkSession) = {
+    import s.implicits._
+    (1 to 600).map { i =>
+      val label = if (i % 3 == 0) 1.0 else 0.0
+      (i.toLong % 40, (i * 7).toLong % 60, label,
+        (i % 11).toDouble, (i % 17).toDouble, (i % 5).toDouble * 100.0,
+        (i % 13).toDouble, (i % 7).toDouble * 10.0, (i % 3).toDouble * 0.1,
+        (i % 19).toDouble / 19.0)
+    }.toDF("customer", "product", "label",
+      "cust_frequency", "cust_recency", "acctbal",
+      "part_popularity", "price", "discount", "bal_x_price")
   }
 }

@@ -8,6 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `f` runs. */
+  protected def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
 }
 
 object SparkSpec {
